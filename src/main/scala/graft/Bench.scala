@@ -129,45 +129,29 @@ object Bench {
 
   /** PromQL workload over a canary store (reference probes:
     * blackbox/performance_calculator.go:55-71). Every query plans a fresh
-    * pruned read — nothing is cached between timings. (private[graft]: the
-    * ProfileJobs measurement main attributes the same queries per-job.) */
-  private[graft] def canaryQueries(spark: SparkSession, store: String,
-                            prefix: String): Seq[(String, () => Long)] = Seq(
+    * pruned read — nothing is cached between timings. Explain prints the
+    * same plans. */
+  private[graft] def canaryFrames(spark: SparkSession, store: String,
+                                  prefix: String): Seq[(String, () => DataFrame)] = Seq(
     // instant selector: prunes to the single day the lookback touches
     s"${prefix}_instant" -> (() =>
-      storeBackedQuery(spark, store, """canary{instance_id="5"}""",
-        END, END, 1000L).count()),
+      storeBackedQuery(spark, store, """canary{instance_id="5"}""", END, END, 1000L)),
     // whole-store scan: every sample in the week through one aggregation
     s"${prefix}_count_over_time" -> (() =>
-      storeBackedQuery(spark, store, "sum(count_over_time(canary[1w]))",
-        END, END, 1000L).count()),
+      storeBackedQuery(spark, store, "sum(count_over_time(canary[1w]))", END, END, 1000L)),
     // range query over the last hour: prunes to one day, rate kernel
     s"${prefix}_rate_range" -> (() =>
       storeBackedQuery(spark, store, "sum by (instance_id) (rate(canary[5m]))",
-        END - 3600000L, END, 60000L).count()))
+        END - 3600000L, END, 60000L)))
+
+  private def canaryQueries(spark: SparkSession, store: String,
+                            prefix: String): Seq[(String, () => Long)] =
+    canaryFrames(spark, store, prefix).map { case (name, df) => name -> (() => df().count()) }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val storeRoot = sys.env.getOrElse("SPARK_GRAFT_BENCH_STORE", "target/bench-store")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      // the range kernels are TypedImperativeAggregates → ObjectHashAggregate,
-      // which silently falls back to SORT-based aggregation after 128 keys
-      // per partition (Spark's default). Neutral at this store's scale
-      // (measured), but at fleet scale — millions of (series, step) groups
-      // per partition — the fallback sorts the exploded window rows on
-      // every rate-family query; the kernel buffers hold only a window's
-      // samples, so a high threshold is cheap insurance.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     // warm up the JVM/codegen/readers so the first timed query isn't
     // charged for session startup; the engine warmups JIT the shared
     // selector/aggregation/join codegen stages (the reference is a
@@ -272,7 +256,8 @@ object Bench {
     // machine-independent signal that separates plan changes from box
     // weather round-over-round. Additions only: the headline line below
     // is byte-identical in shape to previous rounds.
-    Thread.sleep(1000) // drain the async listener bus before reading counts
+    // every job event must reach the listener before the counts are read
+    org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
     def countMap(of: String => Option[Long]): String =
       results.keys.toSeq.sorted.flatMap(k =>
         of(s"$benchGroupPrefix$k#2").map(v => s"\"" + k + "\":" + v))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection: prints `.explain("formatted")` for the named queries
   * (or a default headline set) so scan pushdown, broadcast choices, and
   * shuffle counts can be audited per round.
@@ -17,36 +15,20 @@ object Explain {
         "q_fn_histogram_quantile", "q_agg_quantile", "q_sim_topk", "q_sim_ivf",
         "q_dedup_minhash", "q_dedup_simhash_pairs", "q_dedup_exact",
         "q_mm_decode_real")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("ERROR")
     // canary gates live in Bench over the reusable bench store: resolve
     // their DataFrames here so the scan-ceiling plans are auditable too
-    val storeRoot = sys.env.getOrElse("SPARK_GRAFT_BENCH_STORE", "target/bench-store")
-    lazy val canaryDfs: Map[String, () => org.apache.spark.sql.DataFrame] = {
-      val end = 1704067200000L + (10080L - 1) * 60000L
-      def store(p: String) = s"$storeRoot/$p"
-      Map(
-        "canary10x_count_over_time" -> (() => Bench.storeBackedQuery(spark,
-          store("c10x"), "sum(count_over_time(canary[1w]))", end, end, 1000L)),
-        "canary10x_instant" -> (() => Bench.storeBackedQuery(spark,
-          store("c10x"), """canary{instance_id="5"}""", end, end, 1000L)),
-        "canary10x_rate_range" -> (() => Bench.storeBackedQuery(spark,
-          store("c10x"), "sum by (instance_id) (rate(canary[5m]))",
-          end - 3600000L, end, 60000L)))
-    }
+    // (building the store first, as Bench does, on a fresh checkout)
+    val store = sys.env.getOrElse("SPARK_GRAFT_BENCH_STORE", "target/bench-store") + "/c10x"
+    val canaryDfs = Bench.canaryFrames(spark, store, "canary10x").toMap
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries.get(n) match {
         case Some(fn) => fn(spark, sfDir).explain("formatted")
-        case None if canaryDfs.contains(n) => canaryDfs(n)().explain("formatted")
+        case None if canaryDfs.contains(n) =>
+          Bench.ensureStore(spark, store, Bench.N_SERIES * 10)
+          canaryDfs(n)().explain("formatted")
         case None => println(s"unknown query $n")
       }
     }

@@ -263,14 +263,10 @@ object Serve {
 
   def main(args: Array[String]): Unit = {
     val cfg = parse(args)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
+    // SPARK_MASTER points a deployment at a cluster; local otherwise
+    val builder = GraftSession.builder()
+    sys.env.get("SPARK_MASTER").foreach(builder.master)
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val handle = start(spark, cfg)
     println(s"""{"serving":"${if (cfg.tls.isDefined) "https" else "http"}","port":${handle.port},"store":"${cfg.storeDir}"}""")

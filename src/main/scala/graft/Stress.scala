@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pipeline-operator scale probe beyond the driver testdata: synthesizes a
@@ -21,21 +21,7 @@ object Stress {
     val vocab = sys.env.getOrElse("STRESS_VOCAB", "50000").toLong
     val tokensPerDoc = 200
     val dupPct = 5 // % of docs that are exact duplicates of an earlier doc
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      // same rationale as Bench: TypedImperativeAggregates (bottom-k
-      // heaps, range kernels) run as ObjectHashAggregate, which silently
-      // falls back to SORT-based aggregation past 128 distinct groups per
-      // partition — the 997-source probes would otherwise time a corpus
-      // sort instead of the k-bounded heap aggregation being measured
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
 
     // skewed vocabulary: token k for slot (doc, i) = xxhash64 mixed, then
     // squared-fraction skew so low ids dominate (Zipf-ish head)

@@ -47,7 +47,11 @@ object Selectors {
     * The pre-filter keeps the floor arithmetic in non-negative territory. */
   def explodeToSteps(points: DataFrame, grid: StepGrid, windowMs: Long,
                      tally: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    val bounded = points.where(col("t") >= grid.startMs - windowMs && col("t") <= grid.endMs)
+    // a one-step grid serves only its start: an end past it (a range with
+    // end - start < step, an unaligned subquery inner grid) must not admit
+    // later samples; an instant grid (end == start) keeps the same bound
+    val tMax = if (grid.nSteps == 1) grid.startMs else grid.endMs
+    val bounded = points.where(col("t") >= grid.startMs - windowMs && col("t") <= tMax)
     // the MaxSamples meter wraps the step column: it is evaluated exactly
     // once per (sample, window) row — the reference's per-step sample
     // accounting — inside the same codegen'd pipeline (no second scan),

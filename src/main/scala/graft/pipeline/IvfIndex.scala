@@ -1237,21 +1237,22 @@ object IvfIndex {
           .parquet(agedDirs.map(n => s"$gp/batch=$n"): _*)
         // SET-SEMANTICS dedup (a fold racing a fold, or a crash between a
         // fold's publish and its retire markers, exposes a vector in two
-        // batch dirs) on the KEYS, not the rows: within one generation
+        // batch dirs; an append whose input repeats a vec_id lands the
+        // copies in one) on the KEYS, not the rows: within one generation
         // `cid` determines (cell, ce, codes) — same quantizer, same
         // deterministic encode — so the old full-row distinct() shuffled
         // the embedding/code arrays only to compare keys (guide §2.3
         // "shuffle keys and metadata instead of payloads"). Pass 1 scans
-        // the two path columns + cid (column-pruned — no array pages
-        // decode) and finds cids present in >1 batch dir; in the common
-        // duplicate-free case the payload then moves source→fold with NO
-        // exchange at all, and otherwise the bounded loser set drops the
-        // extra copies via a broadcast anti-join. A loser set past the
-        // driver budget (mass duplication — repeatedly crashed folds)
-        // falls back to the full-row distinct.
+        // cid alone (column-pruned — no array pages decode) and finds cids
+        // with more than one row; in the common duplicate-free case the
+        // payload then moves source→fold with NO exchange at all, and
+        // otherwise only the bounded duplicated cids' rows go through a
+        // distinct (joined against a broadcast of the cid set). A
+        // duplicate set past the driver budget (mass duplication —
+        // repeatedly crashed folds) falls back to the full-row distinct.
         val copies = readAged()
-          .groupBy(col("cid")).agg(collect_set(col("batch")).as("bs"))
-          .where(size(col("bs")) > 1)
+          .groupBy(col("cid")).count()
+          .where(col("count") > 1)
           .take(MaxFoldDupProbe + 1)
         val folded =
           if (copies.length > MaxFoldDupProbe)
@@ -1259,16 +1260,11 @@ object IvfIndex {
           else if (copies.isEmpty)
             readAged().select(cols.map(col): _*)
           else {
-            // keeper = lexicographically smallest batch name
-            // (deterministic); every other (cid, batch) copy loses
-            val losers = copies.flatMap { r =>
-              r.getSeq[String](1).sorted.tail.map(b => (r.getLong(0), b))
-            }.toSeq
             import spark.implicits._
-            readAged()
-              .join(broadcast(losers.toDF("cid", "batch")),
-                Seq("cid", "batch"), "left_anti")
-              .select(cols.map(col): _*)
+            val dups = broadcast(copies.map(_.getLong(0)).toSeq.toDF("cid"))
+            val aged = readAged().select(cols.map(col): _*)
+            aged.join(dups, Seq("cid"), "left_anti")
+              .unionByName(aged.join(dups, Seq("cid")).select(cols.map(col): _*).distinct())
           }
         // scale-adaptive output sizing replaces the removed exchange's
         // AQE coalescing: merge scan partitions locally (no shuffle) to

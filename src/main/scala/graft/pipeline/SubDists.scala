@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * M×Ks) separate columns, each a `subDims`-term sum of literal-laden
   * `element_at` squares — at the gate shape that is a ~14 KB expression
   * tree PER COLUMN (the `x · x` square even duplicates the subtraction
-  * subtree), and ProfileJobs r14 measured the resulting Catalyst+Janino
+  * subtree), and a per-job profile measured the resulting Catalyst+Janino
   * work dominating every small-batch ADC/IMI search (1–2 s of driver time
   * per action); at production shape (M=16, Ks=256) it is 4096 columns.
   * One static call with the codebook riding the stage's reference array

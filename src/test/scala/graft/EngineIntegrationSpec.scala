@@ -2,29 +2,19 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Engine
 import graft.model.Points
 import graft.sources.PointsStore
+import graft.testkit.SharedSpark
 
 /** Full-path integration: events → points → day-partitioned store →
   * pruned read → PromQL evaluation, checked against evaluating the same
   * query on the un-persisted relation. Exercises the production storage
   * path (partition pruning + pushed filters) end-to-end. */
-class EngineIntegrationSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EngineIntegrationSpec extends AnyFunSuite with SharedSpark {
 
   test("store round-trip preserves query results and prunes partitions") {
     val pts = Points.eventsPoints(spark, "/root/testdata/sf0.001")

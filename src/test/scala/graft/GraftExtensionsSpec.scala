@@ -10,16 +10,17 @@ class GraftExtensionsSpec extends AnyFunSuite {
   // (Builder.applyExtensions), but also works when an earlier suite
   // already started the SparkContext — spark.sql.extensions is a STATIC
   // conf, silently ignored on a reused context, so the config form
-  // cannot be suite-order-robust in one JVM.
+  // cannot be suite-order-robust in one JVM. The shared session is put
+  // back as default and active, so no later suite runs on this one.
   private lazy val spark: SparkSession = {
+    val shared = graft.testkit.SharedSpark.session
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .withExtensions(new GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    try GraftSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+    finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
   }
 
   test("kernels are callable from plain SQL and match the Scala API") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
@@ -9,18 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Kernels
 import graft.promql.Parser
+import graft.testkit.SharedSpark
 
 /** Property tests (SURVEY §5 test plan: ScalaCheck for sanitizers/
   * matchers): ingest sanitization always yields legal names, duration
   * round-trips, quantile bounds/monotonicity. Deterministic seeds so runs
   * are reproducible. */
-class PropertySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PropertySpec extends AnyFunSuite with SharedSpark {
 
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(42L + i)))

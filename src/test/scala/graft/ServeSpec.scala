@@ -3,27 +3,19 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.PointsStore
+import graft.testkit.SharedSpark
 
 /** The runnable server glue: a live store served end-to-end — and the
   * FRESHNESS property that distinguishes a server from a notebook
   * snapshot: appends (direct or via remote-write ingest) are queryable
   * on the very next request, because the points relation and series
   * dictionary re-resolve per request. */
-class ServeSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ServeSpec extends AnyFunSuite with SharedSpark {
 
   private val schema = StructType(Seq(
     StructField("name", StringType), StructField("labels", MapType(StringType, StringType)),

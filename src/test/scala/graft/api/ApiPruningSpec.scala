@@ -3,10 +3,12 @@ package graft.api
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testkit.SharedSpark
 
 /** Per-query time-bounded store resolution on the serving path: every
   * /api/v1 query resolves the points relation pruned to the union of its
@@ -14,16 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * server day-prunes each request instead of listing the whole store.
   * The spec wires a RECORDING resolver and asserts the exact bounds each
   * route computes. */
-class ApiPruningSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ApiPruningSpec extends AnyFunSuite with SharedSpark {
 
   private val schema = StructType(Seq(
     StructField("name", StringType), StructField("labels", MapType(StringType, StringType)),

@@ -4,22 +4,16 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testkit.SharedSpark
 
 /** Blackbox probe calculators (reference: src/internal/blackbox/
   * reliability_calculator.go:48-144, performance_calculator.go:55-91) and
   * the /~/reload hook (reload_api.go). */
-class BlackboxSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BlackboxSpec extends AnyFunSuite with SharedSpark {
 
   private val schema = StructType(Seq(
     StructField("name", StringType), StructField("labels", MapType(StringType, StringType)),

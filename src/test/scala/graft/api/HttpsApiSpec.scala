@@ -3,11 +3,12 @@ package graft.api
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Scrape
+import graft.testkit.SharedSpark
 
 /** Transport security on the served API: HTTPS with CA verification,
   * optional mutual TLS, and bearer auth on every route — in particular the
@@ -15,16 +16,7 @@ import graft.sources.Scrape
   * listeners are mTLS, metric_store.go:318-411; the repo's scraper already
   * loads PEM client-side, this proves the server side end-to-end over real
   * sockets with openssl-generated certificates). */
-class HttpsApiSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HttpsApiSpec extends AnyFunSuite with SharedSpark {
 
   private val schema = StructType(Seq(
     StructField("name", StringType), StructField("labels", MapType(StringType, StringType)),

@@ -1,21 +1,16 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testkit.SharedSpark
 
 /** Pins [[CanonicalSubset]] (string-level keep/drop of a canonical label
   * string — the dictionary-path group-key/matching-sig filter) to the
   * parse-then-rebuild formulation it replaces: byte-identical output for
   * every build-produced canonical, including separator/escape bytes in
   * label text, empty maps, empty values, and all-dropped subsets. */
-class CanonicalSubsetSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CanonicalSubsetSpec extends AnyFunSuite with SharedSpark {
 
   private val maps: Seq[Map[String, String]] = Seq(
     Map.empty[String, String],

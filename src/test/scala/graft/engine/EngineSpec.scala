@@ -1,21 +1,13 @@
 package graft.engine
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.promql.Parser
+import graft.testkit.SharedSpark
 
-class EngineSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EngineSpec extends AnyFunSuite with SharedSpark {
 
   private val schema = StructType(Seq(
     StructField("name", StringType), StructField("labels", MapType(StringType, StringType)),
@@ -215,5 +207,25 @@ class EngineSpec extends AnyFunSuite {
     val fine = Engine.instantQuery(spark, p, "sum_over_time(m[2m:])", 120000L,
       defaultSubqueryStepMs = 30000L)
     assert(fine.collect().head.getAs[Double]("value") == 5.0)
+  }
+
+  private val T = 1704067200000L // a multiple of 60s
+  private def tAndT30 = pts(Seq(
+    Row("m", Map.empty[String, String], T, 1.0),
+    Row("m", Map.empty[String, String], T + 30000L, 2.0)))
+
+  test("a one-step range grid with end past start serves only its start") {
+    def byStep(end: Long) = Engine.rangeQuery(spark, tAndT30, "m", T, end, 60000L)
+      .collect().map(r => r.getAs[Long]("t") -> r.getAs[Double]("value")).toMap
+    // the aligned 2-step grid answers step T with the sample at T
+    assert(byStep(T + 60000L)(T) == 1.0)
+    // end - start < step: one step at T, which must not see the T+30s sample
+    assert(byStep(T + 30000L) == Map(T -> 1.0))
+  }
+
+  test("a subquery whose inner grid is one unaligned step serves only its start") {
+    // at T+30s the [1m:1m] inner grid is StepGrid(T, T+30s, 1m): one step, at T
+    val out = Engine.instantQuery(spark, tAndT30, "max_over_time(m[1m:1m])", T + 30000L)
+    assert(out.collect().map(_.getAs[Double]("value")).toSeq == Seq(1.0))
   }
 }

@@ -1,21 +1,14 @@
 package graft.engine
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Guards.{QueryLimits, QueryTimeoutException, TooManySamplesException}
+import graft.testkit.SharedSpark
 
-class GuardsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GuardsSpec extends AnyFunSuite with SharedSpark {
 
   private val schema = StructType(Seq(
     StructField("name", StringType), StructField("labels", MapType(StringType, StringType)),

@@ -1,16 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class CurationPipelineSpec extends AnyFunSuite {
+import graft.testkit.SharedSpark
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CurationPipelineSpec extends AnyFunSuite with SharedSpark {
 
   // each row exercises one filter; the English keepers are real prose so
   // langId / quality / repetition all pass them

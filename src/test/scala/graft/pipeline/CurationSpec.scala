@@ -1,17 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class CurationSpec extends AnyFunSuite {
+import graft.testkit.SharedSpark
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CurationSpec extends AnyFunSuite with SharedSpark {
 
   private lazy val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 

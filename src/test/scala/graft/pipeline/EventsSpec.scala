@@ -1,18 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class EventsSpec extends AnyFunSuite {
+import graft.testkit.SharedSpark
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EventsSpec extends AnyFunSuite with SharedSpark {
 
   private lazy val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
 

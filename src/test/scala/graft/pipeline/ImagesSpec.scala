@@ -1,17 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class ImagesSpec extends AnyFunSuite {
+import graft.testkit.SharedSpark
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ImagesSpec extends AnyFunSuite with SharedSpark {
 
   test("bilinear: identity geometry returns the source bytes") {
     val px = Array.tabulate(5 * 4 * 3)(i => ((i * 37 + 11) % 256).toByte)

@@ -2,21 +2,16 @@ package graft.pipeline
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testkit.SharedSpark
 
 /** Incremental dedup against the persisted signature index: the
   * continuous-ingest production shape — every arriving batch dedups
   * against everything already kept, survivors extend the index. */
-class IncrementalDedupSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IncrementalDedupSpec extends AnyFunSuite with SharedSpark {
 
   private def df(rows: Seq[(Long, String)]): DataFrame = {
     import spark.implicits._

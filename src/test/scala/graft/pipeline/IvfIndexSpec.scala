@@ -2,22 +2,16 @@ package graft.pipeline
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testkit.SharedSpark
 
 /** The incremental/appendable IVF index: cell-partitioned appends under
   * SigIndex's marker-manifest visibility, partition-pruned multi-batch
   * search, grace-windowed folds, and the centroid-drift retrain with its
   * atomic generation flip. */
-class IvfIndexSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IvfIndexSpec extends AnyFunSuite with SharedSpark {
 
   private lazy val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
   private val cents = Similarity.fixedCentroids(8, 64)
@@ -132,6 +126,19 @@ class IvfIndexSpec extends AnyFunSuite {
     finally IvfIndex.maxFoldDupProbeOverride.set(null)
     assert(IvfIndex.read(spark, dir2).count() == 75)
     assert(resultSet(IvfIndex.search(spark, dir2, q, 3, nProbe = 3)) == before)
+  }
+
+  test("compact's keyed fold collapses duplicate vectors inside one batch dir") {
+    // a batch whose input repeats vec_ids lands the copies in ONE batch
+    // dir; the fold must still keep one row per cid
+    val dir = freshIndex()
+    IvfIndex.append(emb.where(col("vec_id") < 30)
+      .union(emb.where(col("vec_id") < 10)), dir, "b0")
+    IvfIndex.append(emb.where(col("vec_id") >= 30 && col("vec_id") < 40), dir, "b1")
+    assert(IvfIndex.read(spark, dir).count() == 50)
+    IvfIndex.compact(spark, dir, graceMs = 0L)
+    assert(IvfIndex.read(spark, dir).count() == 40)
+    assert(IvfIndex.read(spark, dir).select("cid").distinct().count() == 40)
   }
 
   test("skew measures quantizer drift; maybeRetrain fires only past the threshold") {

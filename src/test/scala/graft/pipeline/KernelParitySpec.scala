@@ -1,8 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testkit.SharedSpark
 
 /** Parity guards for the native kernels: (1) the interpreted `eval` path
   * must agree with generated code — Spark silently falls back to
@@ -10,21 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * surface as wrong RESULTS, not an error; (2) the QualityScore kernel
   * must agree bit-for-bit with the column-expression formula it
   * replaced (the claim its scaladoc makes). */
-class KernelParitySpec extends AnyFunSuite {
-
-  // ansi=false like the engine's Verify/Bench sessions: the parity claim
-  // is against the expression form AS DEPLOYED (non-ANSI divide-by-zero
-  // is NULL; ANSI would make the empty-text case an error instead)
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.ansi.enabled", "false")
-    s
-  }
+class KernelParitySpec extends AnyFunSuite with SharedSpark {
 
   // adversarial text mix: prose, punctuation soup, unicode (incl. an
   // astral code point), repeated grams, empties, single tokens

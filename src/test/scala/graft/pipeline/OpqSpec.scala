@@ -2,22 +2,16 @@ package graft.pipeline
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testkit.SharedSpark
 
 /** Optimized Product Quantization (Ge et al., CVPR 2013): the learned
   * orthogonal rotation before the PQ subspace split — plumbing
   * equivalences, the distortion/recall lift on anisotropic data (the
   * case OPQ exists for), and the IvfIndex OPQ generation lifecycle. */
-class OpqSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OpqSpec extends AnyFunSuite with SharedSpark {
 
   private lazy val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 

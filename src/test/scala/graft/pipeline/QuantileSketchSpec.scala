@@ -1,17 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class QuantileSketchSpec extends AnyFunSuite {
+import graft.testkit.SharedSpark
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QuantileSketchSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

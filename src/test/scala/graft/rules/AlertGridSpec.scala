@@ -1,8 +1,10 @@
 package graft.rules
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testkit.SharedSpark
 
 /** Pins [[Rules.alertingTickGrid]] (one-plan ticks-as-data fold) to the
   * sequential per-tick [[Rules.alertingTick]] fold it replaces on the
@@ -11,16 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * gap restarts its `for:` window), and a seeded prior state (a run
   * reaching back to the first tick inherits the seed's `since`; a run
   * that does not, doesn't). */
-class AlertGridSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AlertGridSpec extends AnyFunSuite with SharedSpark {
 
   private val Min = 60000L
   private val T1 = 1704067200000L

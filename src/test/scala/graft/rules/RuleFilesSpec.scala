@@ -2,7 +2,9 @@ package graft.rules
 
 import org.scalatest.funsuite.AnyFunSuite
 
-class RuleFilesSpec extends AnyFunSuite {
+import graft.testkit.SharedSpark
+
+class RuleFilesSpec extends AnyFunSuite with SharedSpark {
 
   private val yaml =
     """groups:
@@ -42,10 +44,6 @@ class RuleFilesSpec extends AnyFunSuite {
   }
 
   test("parsed rules evaluate through the engine") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.ui.enabled", "false").getOrCreate()
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(

@@ -5,25 +5,17 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.util.concurrent.CopyOnWriteArrayList
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.HttpApi
+import graft.testkit.SharedSpark
 
 /** Rules CRUD over a real socket + alertmanager delivery against a local
   * stub server (reference behavior: metric_store_test.go:347 "Rules API",
   * acceptance multi-tenant alerting :1351). */
-class RulesApiSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RulesApiSpec extends AnyFunSuite with SharedSpark {
 
   private val schema = StructType(Seq(
     StructField("name", StringType), StructField("labels", MapType(StringType, StringType)),

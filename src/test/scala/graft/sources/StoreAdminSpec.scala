@@ -2,26 +2,19 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Points
+import graft.testkit.SharedSpark
 
 /** Admin surface over the store: delete_series as an MVCC day rewrite,
   * snapshot as a hard-linked consistent generation. Reference: the
   * vendored web/api/v1/api.go:400-406 admin routes over TSDB
   * Delete/Snapshot. */
-class StoreAdminSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StoreAdminSpec extends AnyFunSuite with SharedSpark {
 
   private val schema = StructType(Seq(
     StructField("name", StringType), StructField("labels", MapType(StringType, StringType)),

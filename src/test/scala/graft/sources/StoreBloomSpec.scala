@@ -4,11 +4,11 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Points
+import graft.testkit.SharedSpark
 
 /** Parquet bloom filters on (name, sig): the per-row-group series index
   * that keeps a lone-series selector from scanning a whole 100 TB day.
@@ -23,15 +23,7 @@ import graft.model.Points
   * Reference analog: TSM's per-file series-key index
   * (vendor/github.com/influxdata/influxdb/tsdb/engine/tsm1/DESIGN.md).
   */
-class StoreBloomSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StoreBloomSpec extends AnyFunSuite with SharedSpark {
 
   private val t0 = 1704067200000L
 
@@ -155,10 +147,10 @@ class StoreBloomSpec extends AnyFunSuite {
         counter.incrementAndGet()
     }
     def jobsDuring(f: => Unit): Int = {
-      org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
       counter.set(0)
       f
-      org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
       counter.get
     }
     spark.sparkContext.addSparkListener(listener)

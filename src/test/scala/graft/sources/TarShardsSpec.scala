@@ -1,20 +1,15 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testkit.SharedSpark
 
 /** WebDataset tar shards: byte-level round-trips, cross-validation in
   * both directions against the system GNU tar (our archives extract
   * there; its archives — including pax/long-name metadata entries —
   * parse here), and the Spark read/write surface end-to-end. */
-class TarShardsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TarShardsSpec extends AnyFunSuite with SharedSpark {
 
   private def sh(dir: java.io.File, cmd: String*): String = {
     val p = new ProcessBuilder(cmd: _*).directory(dir).redirectErrorStream(true).start()

@@ -1,18 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.testkit.SharedSpark
+
 /** WARC reader: record walk, concatenated-gzip members, HTTP body
   * extraction, and the corrupt-input contract. */
-class WarcSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WarcSpec extends AnyFunSuite with SharedSpark {
 
   private def resp(uri: String, body: String) =
     (Seq("WARC-Type" -> "response", "WARC-Target-URI" -> uri,

@@ -2,23 +2,16 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.rules.Rules
 import graft.sources.PointsStore
+import graft.testkit.SharedSpark
 
-class StreamingSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingSpec extends AnyFunSuite with SharedSpark {
 
   private val envSchema = StructType(Seq(
     StructField("source_id", StringType), StructField("timestamp", LongType),

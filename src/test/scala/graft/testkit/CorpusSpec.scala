@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,20 +18,10 @@ import graft.testkit.PromTestDsl._
   * per SURVEY §5. Each file is one test; a failure prints every
   * mismatching eval with its file line for triage.
   */
-class CorpusSpec extends AnyFunSuite {
+class CorpusSpec extends AnyFunSuite with SharedSpark {
 
   private val corpusDir =
     "/root/reference/vendor/github.com/prometheus/prometheus/promql/testdata"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("corpus")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    .config("spark.sql.ansi.enabled", "false") // PromQL needs IEEE ÷0 → ±Inf/NaN
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val schema = StructType(Seq(
     StructField("name", StringType), StructField("labels", MapType(StringType, StringType)),
