@@ -116,7 +116,8 @@ object Bench {
     * exact union of the query's selector windows (the same absolute-window
     * algebra the alerting sink uses), so the timed work includes the
     * pruned parquet scan with its pushed filters — the plan a 100 TB
-    * deployment would run. */
+    * deployment would run. The series dictionary is read only when the
+    * read is large enough for the slim plan ([[graft.engine.Engine.planChoice]]). */
   def storeBackedQuery(spark: SparkSession, store: String, promql: String,
                        startMs: Long, endMs: Long, stepMs: Long): DataFrame = {
     val grid = graft.engine.StepGrid(startMs, endMs, stepMs)

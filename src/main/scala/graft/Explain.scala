@@ -1,8 +1,15 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.FileIndex
+
+import graft.engine.Engine
+
 /** Plan inspection: prints `.explain("formatted")` for the named queries
   * (or a default headline set) so scan pushdown, broadcast choices, and
-  * shuffle counts can be audited per round.
+  * shuffle counts can be audited per round. A store-backed query first
+  * gets a `store plan:` line: the selector plan it took, the bytes of the
+  * store's point files it touches, and the plan threshold.
   *
   * Usage: runMain graft.Explain [sfDir] [queryName...]
   */
@@ -22,16 +29,38 @@ object Explain {
     // (building the store first, as Bench does, on a fresh checkout)
     val store = sys.env.getOrElse("SPARK_GRAFT_BENCH_STORE", "target/bench-store") + "/c10x"
     val canaryDfs = Bench.canaryFrames(spark, store, "canary10x").toMap
+    def show(df: DataFrame): Unit = {
+      storePlan(df).foreach(println)
+      df.explain("formatted")
+    }
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries.get(n) match {
-        case Some(fn) => fn(spark, sfDir).explain("formatted")
+        case Some(fn) => show(fn(spark, sfDir))
         case None if canaryDfs.contains(n) =>
           Bench.ensureStore(spark, store, Bench.N_SERIES * 10)
-          canaryDfs(n)().explain("formatted")
+          show(canaryDfs(n)())
         case None => println(s"unknown query $n")
       }
     }
     spark.stop()
+  }
+
+  /** The selector plan a store-backed query took, read off its own scans
+    * (slim when it reads the `_dict` sidecar), beside the rule's choice
+    * for the bytes of the store point files it touches. None when the
+    * query reads no store. */
+  private def storePlan(df: DataFrame): Option[String] = {
+    val indexes = Engine.fileIndexes(df.queryExecution.analyzed)
+    def inDir(pred: String => Boolean)(i: FileIndex) =
+      i.rootPaths.exists(p => p.getParent != null && pred(p.getParent.getName))
+    val points = indexes.filter(inDir(_.startsWith("date="))).distinctBy(_.rootPaths.toSet)
+    if (points.isEmpty) None
+    else {
+      val rule = Engine.PlanChoice(points.map(_.sizeInBytes).sum, Engine.planThreshold(df.sparkSession))
+      val slim = indexes.exists(inDir(_ == "_dict"))
+      Some(s"store plan: ${if (slim) "slim" else "full"}; rule: $rule" +
+        (if (slim != rule.slim) " (this query pins its plan)" else ""))
+    }
   }
 }

@@ -55,13 +55,17 @@ object SparkEntry {
     // §2.1+§2.2 full store round-trip on the series-dictionary layout:
     // append (persists _lc + the _dict sidecar) -> pruned read -> slim
     // instant evaluation (sig-only shuffle, canonical-string matcher,
-    // labels joined back from the dictionary at result size)
+    // labels joined back from the dictionary at result size); pinned to
+    // the slim plan, which a read this small would not choose, one byte
+    // below the read rather than at 0: a zero open cost would also shrink
+    // Spark's file splits and add a job to the dictionary probe
     "q_sel_dict_instant" -> ((s, dir) => {
       val tmp = java.nio.file.Files.createTempDirectory("graft_dict_store").toString
       graft.sources.PointsStore.append(Points.eventsPoints(s, dir), tmp)
       val stored = graft.sources.PointsStore.read(s, tmp, T_END - DAY, T_END)
-      graft.engine.Engine.instantQuery(s, stored, """click{par="1"}""", T_END,
-        lookbackMs = DAY, seriesDict = graft.sources.PointsStore.readDict(s, tmp))
+      graft.engine.Engine.withPlanThreshold(s, graft.engine.Engine.touchedBytes(stored) - 1)(
+        graft.engine.Engine.instantQuery(s, stored, """click{par="1"}""", T_END,
+          lookbackMs = DAY, seriesDict = graft.sources.PointsStore.readDict(s, tmp)))
         .select(col("name"), col("labels").getItem("user").as("user"),
           col("t"), col("value"))
     }),

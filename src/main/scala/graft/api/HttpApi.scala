@@ -55,7 +55,9 @@ final class HttpApi(spark: SparkSession, points: DataFrame,
                     /** (job, target) pairs for /api/v1/targets. */
                     scrapeTargets: () => Seq[(String, String)] = () => Nil,
                     /** Series dictionary of a store-backed points relation:
-                      * queries then run the slim sig-only path. A PROVIDER,
+                      * queries whose read is large enough
+                      * ([[graft.engine.Engine.planChoice]]) then run the slim
+                      * sig-only path, and only those call it. A PROVIDER,
                       * resolved per query (e.g. `() => PointsStore.readDict(
                       * spark, dir)`) — a dictionary snapshot pinned at
                       * construction would go stale as appends land, and the
@@ -760,7 +762,7 @@ final class HttpApi(spark: SparkSession, points: DataFrame,
               sels.map(selectorPredicate(_, useLc = lc)).reduce(_ || _))
             val rows = graft.engine.Selectors.instant(filtered, grid,
               lookbackMs,
-              seriesDict = seriesDict().filter(_ =>
+              seriesDict = Engine.dictFor(filtered, seriesDict()).filter(_ =>
                 filtered.columns.contains("sig"))).collect()
             def esc(s: String): String = s.flatMap {
               case '\\' => "\\\\"

@@ -1,6 +1,8 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.promql.Parser
@@ -12,8 +14,71 @@ import graft.promql.Parser
   *
   * Output schema: name STRING, labels MAP<STRING,STRING>, t LONG (epoch ms
   * of the evaluation step), value DOUBLE. Scalar results return (t, value).
+  *
+  * A series dictionary (`seriesDict`, [[graft.sources.PointsStore.readDict]])
+  * selects the slim plan, and only when [[planChoice]] says the read is
+  * large enough to repay it; the argument is by-name, so a query that will
+  * not use the dictionary never pays for reading it.
   */
 object Engine {
+
+  /** The Spark conf whose value is the plan threshold: Spark's own byte
+    * price for the fixed cost of opening one more file. */
+  private val PlanThresholdConf = "spark.sql.files.openCostInBytes"
+
+  /** Which selector plan a store read gets, and the numbers behind it.
+    * The series-dictionary ("slim") plan shuffles 8-byte sigs and joins
+    * the labels back at result size, but its dictionary scans, shuffles
+    * and broadcasts cost jobs on every query; the label-carrying ("full")
+    * plan reads the canonical label string with the points and runs fewer
+    * (3 jobs against 8 for a rate aggregation over a 2 MB read). The slim
+    * plan wins only once the read is large, so it is taken when the
+    * touched bytes exceed the threshold. */
+  final case class PlanChoice(touchedBytes: Long, thresholdBytes: Long) {
+    def slim: Boolean = touchedBytes > thresholdBytes
+    override def toString: String =
+      s"${if (slim) "slim (series dictionary)" else "full (labels)"} plan: " +
+        s"$touchedBytes bytes touched, threshold $thresholdBytes bytes ($PlanThresholdConf)"
+  }
+
+  /** The plan choice for a query over `points`, from the live files of
+    * the (already pruned) read. */
+  def planChoice(points: DataFrame): PlanChoice =
+    PlanChoice(touchedBytes(points), planThreshold(points.sparkSession))
+
+  /** The threshold in bytes, from the session's conf. */
+  def planThreshold(spark: SparkSession): Long =
+    org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get(PlanThresholdConf))
+
+  /** Bytes of the files behind `points`' file-source relations, from each
+    * relation's file index: the files were listed when the read was
+    * planned, so this runs no job and lists nothing. In-memory relations
+    * touch no files and count 0. */
+  def touchedBytes(points: DataFrame): Long =
+    fileIndexes(points.queryExecution.analyzed).map(_.sizeInBytes).sum
+
+  /** The file indexes of a plan's file-source relations. */
+  def fileIndexes(plan: LogicalPlan): Seq[FileIndex] =
+    plan.collectLeaves().collect { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location }
+
+  /** The dictionary a query over `points` runs with: `seriesDict` when the
+    * slim plan is chosen (and only then evaluated), else none. */
+  def dictFor(points: DataFrame, seriesDict: => Option[DataFrame]): Option[DataFrame] =
+    if (planChoice(points).slim) seriesDict else None
+
+  /** Evaluate `f` with the plan threshold at `bytes`: below a read's
+    * touched bytes, it pins that read's queries to the slim plan, for
+    * checks of the slim plan on stores smaller than the threshold. The
+    * choice is made when a query is built, so `f` must build the queries;
+    * running them may come later. The conf is session-wide while `f`
+    * runs, and it also sizes Spark's file splits for scans planned then. */
+  def withPlanThreshold[A](spark: SparkSession, bytes: Long)(f: => A): A = {
+    val prev = spark.conf.get(PlanThresholdConf)
+    spark.conf.set(PlanThresholdConf, bytes.toString)
+    try f finally spark.conf.set(PlanThresholdConf, prev)
+  }
 
   def rangeQuery(
       spark: SparkSession,
@@ -26,10 +91,10 @@ object Engine {
       defaultSubqueryStepMs: Long = 60000L,
       strictCollision: Boolean = true,
       sampleTally: Option[org.apache.spark.util.LongAccumulator] = None,
-      seriesDict: Option[DataFrame] = None): DataFrame = {
+      seriesDict: => Option[DataFrame] = None): DataFrame = {
     val ctx = EvalContext(spark, points, StepGrid(startMs, endMs, stepMs),
       lookbackMs, defaultSubqueryStepMs, sampleTally = sampleTally,
-      strictCollision = strictCollision, seriesDict = seriesDict)
+      strictCollision = strictCollision, seriesDict = dictFor(points, seriesDict))
     val ast = Parser.parse(promql)
     Compiler.eval(ast, ctx) match {
       case vv: VectorVal =>
@@ -67,7 +132,7 @@ object Engine {
       defaultSubqueryStepMs: Long = 60000L,
       strictCollision: Boolean = true,
       sampleTally: Option[org.apache.spark.util.LongAccumulator] = None,
-      seriesDict: Option[DataFrame] = None): DataFrame =
+      seriesDict: => Option[DataFrame] = None): DataFrame =
     rangeQuery(spark, points, promql, tsMs, tsMs, 1000L, lookbackMs,
       defaultSubqueryStepMs, strictCollision, sampleTally, seriesDict)
 

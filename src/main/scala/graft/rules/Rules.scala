@@ -353,10 +353,12 @@ object Rules {
   def batchedAlertingTick(spark: SparkSession, points: DataFrame,
                           rules: Seq[AlertingRule], state: DataFrame, tsMs: Long,
                           lookbackMs: Long = 300000L,
-                          seriesDict: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+                          seriesDict: => Option[DataFrame] = None): (DataFrame, DataFrame) = {
     require(rules.nonEmpty, "batched tick needs at least one rule")
+    // one plan choice (and at most one dictionary read) for all the rules
+    val dict = Engine.dictFor(points, seriesDict)
     val evals = rules.map { r =>
-      Engine.instantQuery(spark, points, r.expr, tsMs, lookbackMs, seriesDict = seriesDict)
+      Engine.instantQuery(spark, points, r.expr, tsMs, lookbackMs, seriesDict = dict)
         .select(lit(r.alert).as("alert"),
           Points.sigOf(col("name"), col("labels")).as("sig"),
           col("labels"), col("value"))
@@ -386,7 +388,7 @@ object Rules {
   def batchedPersistedTick(spark: SparkSession, points: DataFrame,
                            rules: Seq[AlertingRule], stateDir: String, tsMs: Long,
                            lookbackMs: Long = 300000L,
-                           seriesDict: Option[DataFrame] = None): DataFrame = {
+                           seriesDict: => Option[DataFrame] = None): DataFrame = {
     val st = loadBatchedState(spark, stateDir, rules, beforeTs = tsMs)
     val (newState, firing) = batchedAlertingTick(spark, points, rules, st, tsMs,
       lookbackMs, seriesDict)

@@ -148,12 +148,23 @@ object PointsStore {
     // cache is an intra-append intermediate (unpersisted before return),
     // bounded by the batch (micro-batch sized on the streaming path;
     // MEMORY_AND_DISK spills rather than OOMs on large backfill appends).
-    // Write ORDERING is unchanged: the dict job runs first and is what
-    // materializes the cache, so a crash between the writes still leaves
-    // the dict a superset of the data — the documented contract.
+    // The dict job runs first and is what materializes the cache.
+    //
+    // Both writes go to this append's OWN staging dir, and the part files
+    // move into the store afterwards, dict files first ([[publishStaged]]),
+    // so a crash at any point still leaves the dict a superset of the
+    // data — the documented contract. Two appends writing straight into
+    // one path would share Hadoop's `_temporary/0`, which the first job
+    // commit deletes under the other (a failed write, or an acknowledged
+    // one whose files vanished).
     val withLc = graft.model.Points.withCanonical(normalizeStale(points))
       .withColumn("date", to_date(timestamp_millis(col("t"))))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(points.sparkSession.sparkContext.hadoopConfiguration)
+    val stage = new org.apache.hadoop.fs.Path(root,
+      StagePrefix + java.util.UUID.randomUUID())
+    activeStages.add(stage.getName)
     try {
     // series-dictionary sidecar: sig -> (name, _lc, lastDay), one row per
     // series per batch (map-side partial dedup keeps the shuffle
@@ -166,8 +177,8 @@ object PointsStore {
     // dictionary entries with the data. Batches may repeat series;
     // [[readDict]] / [[compact]] dedup keeping max lastDay.
     //
-    // Written BEFORE the data so the dictionary is always a SUPERSET of
-    // the data's series: a crash between the two writes leaves dict
+    // Published BEFORE the data so the dictionary is always a SUPERSET of
+    // the data's series: a crash between the two leaves dict
     // entries whose data never arrived (harmless) — never data whose
     // series the dict-join would silently drop. Readers must take their
     // data snapshot before (or with) their dict snapshot for the same
@@ -175,7 +186,7 @@ object PointsStore {
     // first.
     withLc.groupBy(col("sig"), col("name"), col("_lc"))
       .agg(max(col("date")).as("lastDay"))
-      .write.mode(SaveMode.Append).parquet(s"$path/$DictDir")
+      .write.parquet(s"$stage/$DictDir")
     // `_sub`: per-row monotonic order WITHIN the batch (partition-major,
     // then row order — monotonically_increasing_id), computed BEFORE the
     // cluster sort so the stamp follows the row. When one append itself
@@ -197,10 +208,57 @@ object PointsStore {
       .write
       .options(bloomWriteOptions)
       .partitionBy("date")
-      .mode(SaveMode.Append)
-      .parquet(path)
-    } finally withLc.unpersist(blocking = false)
+      .parquet(s"$stage/$StagedData")
+    publishStaged(fs, stage, root)
+    } finally {
+      fs.delete(stage, true)
+      activeStages.remove(stage.getName)
+      withLc.unpersist(blocking = false)
+    }
   }
+
+  /** Per-append staging dirs under the store root: dot-prefixed, so no
+    * reader, listing or partition discovery sees them. */
+  private val StagePrefix = ".append-"
+  private val StagedData = "data"
+
+  /** Staging dirs of appends running in this JVM: the compaction sweep
+    * ([[sweepStages]]) never removes these, whatever its grace window. */
+  private val activeStages = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Move a staged append's part files into the store: the dictionary's
+    * first, so the dictionary stays a superset of the data at every
+    * instant, then each day's. Part file names carry the write job's id,
+    * so they never collide with another append's. Each move is one
+    * rename: a reader sees a file whole or not at all. */
+  private def publishStaged(fs: org.apache.hadoop.fs.FileSystem,
+                            stage: org.apache.hadoop.fs.Path,
+                            root: org.apache.hadoop.fs.Path): Unit = {
+    def moveParts(from: org.apache.hadoop.fs.Path, to: org.apache.hadoop.fs.Path): Unit = {
+      val parts = fs.listStatus(from).toSeq.filter(s => s.isFile && !isHidden(s.getPath.getName))
+      if (parts.nonEmpty) fs.mkdirs(to)
+      parts.foreach { s =>
+        val dst = new org.apache.hadoop.fs.Path(to, s.getPath.getName)
+        if (!fs.rename(s.getPath, dst))
+          throw new java.io.IOException(s"could not move ${s.getPath} to $dst")
+      }
+    }
+    moveParts(new org.apache.hadoop.fs.Path(stage, DictDir), new org.apache.hadoop.fs.Path(root, DictDir))
+    fs.listStatus(new org.apache.hadoop.fs.Path(stage, StagedData)).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
+      .foreach(d => moveParts(d.getPath, new org.apache.hadoop.fs.Path(root, d.getPath.getName)))
+  }
+
+  /** Remove staging dirs an append left behind (its process died before
+    * publishing): older than the grace window and not in flight in this
+    * JVM. An unpublished stage holds nothing a reader ever saw. */
+  private def sweepStages(fs: org.apache.hadoop.fs.FileSystem,
+                          root: org.apache.hadoop.fs.Path,
+                          now: Long, graceMs: Long): Unit =
+    fs.listStatus(root).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(StagePrefix) &&
+        now - s.getModificationTime >= graceMs && !activeStages.contains(s.getPath.getName))
+      .foreach(s => fs.delete(s.getPath, true))
 
   /** Keep the LAST row of each within-partition (date, sig, t) run — the
     * input is already clustered (date, name, sig, t, _sub), so duplicates
@@ -816,6 +874,7 @@ object PointsStore {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Nil
+    sweepStages(fs, root, System.currentTimeMillis(), graceMs)
     val days = fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
       .filter(s => onlyDay.forall(d => s.getPath.getName == s"date=$d"))

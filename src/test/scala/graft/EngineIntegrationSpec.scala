@@ -211,7 +211,7 @@ class EngineIntegrationSpec extends AnyFunSuite with SharedSpark {
     assert(cot.head.getAs[Double]("value") == (week * 2).toDouble)
   }
 
-  test("series-dictionary path: sig-only selector shuffle, labels joined back") {
+  test("series-dictionary path: sig-only selector shuffle, labels joined back")(withSlimPlan {
     val pts = Points.eventsPoints(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("dict_store").toString
     PointsStore.append(pts, dir)
@@ -324,9 +324,9 @@ class EngineIntegrationSpec extends AnyFunSuite with SharedSpark {
     assert(kernelShuffles.nonEmpty,
       s"expected the slim (sig, t, value) pre-explode kernel exchange; saw: " +
         rateShuffles.map(_.output.mkString("[", ",", "]")).mkString(" "))
-  }
+  })
 
-  test("series-dictionary path: binop and set-op exchanges carry no strings") {
+  test("series-dictionary path: binop and set-op exchanges carry no strings")(withSlimPlan {
     val pts = Points.eventsPoints(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("dict_binop").toString
     PointsStore.append(pts, dir)
@@ -385,9 +385,9 @@ class EngineIntegrationSpec extends AnyFunSuite with SharedSpark {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
-  }
+  })
 
-  test("series-dictionary path: aggregations and kernel chains stay slim end-to-end") {
+  test("series-dictionary path: aggregations and kernel chains stay slim end-to-end")(withSlimPlan {
     val pts = Points.eventsPoints(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("dict_agg").toString
     PointsStore.append(pts, dir)
@@ -458,7 +458,7 @@ class EngineIntegrationSpec extends AnyFunSuite with SharedSpark {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
-  }
+  })
 
   test("recording rule output persists and is queryable as a new series") {
     val pts = Points.eventsPoints(spark, "/root/testdata/sf0.001")

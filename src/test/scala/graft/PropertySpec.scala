@@ -94,7 +94,7 @@ class PropertySpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  test("slim dictionary path equals the full path on adversarial random stores") {
+  test("slim dictionary path equals the full path on adversarial random stores")(withSlimPlan {
     // END-TO-END property: random points with separator-bearing label
     // values are written through the real store, then a battery of query
     // shapes (matchers, aggregation, kernel chain, binop, set op, topk)
@@ -144,21 +144,25 @@ class PropertySpec extends AnyFunSuite with SharedSpark {
       "m1 or m2",
       "sum by (ka) (m1) / on(ka) sum by (ka) (m1)")
     for (q <- queries) {
-      def res(d: Option[org.apache.spark.sql.DataFrame]) =
-        Engine.instantQuery(spark, stored, q, tick, lookbackMs = 49 * 3600000L,
+      def res(d: Option[org.apache.spark.sql.DataFrame]) = {
+        val out = Engine.instantQuery(spark, stored, q, tick, lookbackMs = 49 * 3600000L,
           seriesDict = d)
-          .select(coalesce(col("name"), lit("")),
+        // the two sides must run different plans: only the slim one reads the dictionary
+        assert(readsDict(out.queryExecution.analyzed) == d.isDefined,
+          s"the ${if (d.isDefined) "slim" else "full"} side plans the wrong path for: $q")
+        out.select(coalesce(col("name"), lit("")),
             to_json(array_sort(map_entries(col("labels")))),
             col("t"), col("value"))
           .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
             // NaN-safe: primitive NaN != NaN breaks tuple/set equality
             java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSet
+      }
       val withDict = res(dict)
       val withoutDict = res(None)
       assert(withDict == withoutDict,
         s"slim path diverges for: $q\n  only-dict: ${(withDict -- withoutDict).take(4)}\n  only-full: ${(withoutDict -- withDict).take(4)}")
     }
-  }
+  })
 
   test("alternating-star components equal a union-find reference on random graphs") {
     import spark.implicits._

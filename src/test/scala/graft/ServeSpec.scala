@@ -242,4 +242,49 @@ class ServeSpec extends AnyFunSuite with SharedSpark {
       assert(get(handle.port, "/api/v1/query?query=up&time=60").contains("success"))
     } finally { handle.stop(); graft.engine.Guards.disableQueryLog() }
   }
+
+  test("serve: a small store's queries skip the series dictionary and answer as the slim plan does") {
+    val dir = java.nio.file.Files.createTempDirectory("serve_plan").toString
+    PointsStore.append(pts(
+      ("up", Map("job" -> "a", "i" -> "1"), 30000L, 1.0),
+      ("up", Map("job" -> "a", "i" -> "2"), 30000L, 2.0),
+      ("up", Map("job" -> "b", "i" -> "1"), 45000L, 4.0),
+      ("up", Map("job" -> "b", "i" -> "1"), 60000L, 8.0)), dir)
+    // did a finished query read the dictionary? from the session's query listener
+    val dictReads = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit =
+        if (readsDict(qe.analyzed)) dictReads.incrementAndGet()
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    val handle = Serve.start(spark, Serve.Config(storeDir = dir, port = 0,
+      maintenanceMs = 3600000L))
+    spark.listenerManager.register(listener)
+    def drain(): Unit =
+      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+    /** (result elements, sorted; did the request scan a `_dict` file) */
+    def served(q: String): (Seq[String], Boolean) = {
+      drain(); dictReads.set(0)
+      val body = get(handle.port,
+        s"/api/v1/query?query=${java.net.URLEncoder.encode(q, "UTF-8")}&time=60")
+      drain()
+      assert(body.contains("\"status\":\"success\""), body)
+      ("""\{"metric":\{[^}]*\},"value":\[[^\]]*\]\}""".r.findAllIn(body).toSeq.sorted,
+        dictReads.get > 0)
+    }
+    try {
+      for (q <- Seq("up", "up{job=\"a\"}", "sum by (job) (up)")) {
+        val (full, fullReadsDict) = served(q)
+        val (slim, slimReadsDict) = withSlimPlan(served(q))
+        assert(!fullReadsDict, s"$q: a small store's query read the series dictionary")
+        assert(slimReadsDict, s"$q: the pinned slim plan did not read the series dictionary")
+        assert(full.nonEmpty && full == slim, s"$q: full $full vs slim $slim")
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      handle.stop(); graft.engine.Guards.disableQueryLog()
+    }
+  }
 }

@@ -228,4 +228,38 @@ class EngineSpec extends AnyFunSuite with SharedSpark {
     val out = Engine.instantQuery(spark, tAndT30, "max_over_time(m[1m:1m])", T + 30000L)
     assert(out.collect().map(_.getAs[Double]("value")).toSeq == Seq(1.0))
   }
+
+  test("plan choice: the slim plan only past the threshold; the dictionary is read only then") {
+    // the rule itself, at Spark's default open cost
+    val threshold = 4L * 1024 * 1024
+    assert(!Engine.PlanChoice(threshold - 1, threshold).slim)
+    assert(!Engine.PlanChoice(threshold, threshold).slim)
+    assert(Engine.PlanChoice(threshold + 1, threshold).slim)
+    assert(Engine.planThreshold(spark) == threshold)
+    // in-memory points touch no files
+    assert(Engine.touchedBytes(pts(Seq(Row("m", Map("a" -> "1"), 1000L, 1.0)))) == 0L)
+
+    // on a store: the touched bytes are the pruned read's live files, and
+    // the by-name dictionary is evaluated exactly when the rule says slim
+    val dir = java.nio.file.Files.createTempDirectory("plan_choice").toString
+    graft.sources.PointsStore.append(pts(Seq(
+      Row("m", Map("a" -> "1"), 1000L, 1.0), Row("m", Map("a" -> "2"), 1000L, 2.0))), dir)
+    val stored = graft.sources.PointsStore.read(spark, dir, 0L, 2000L)
+    val bytes = Engine.touchedBytes(stored)
+    val onDisk = stored.inputFiles.map(f =>
+      new java.io.File(new java.net.URI(f)).length).sum
+    assert(bytes > 0 && bytes == onDisk)
+    def evaluations(threshold: Long): Int = {
+      var n = 0
+      val out = Engine.withPlanThreshold(spark, threshold)(
+        Engine.instantQuery(spark, stored, "m", 1000L, seriesDict = {
+          n += 1; graft.sources.PointsStore.readDict(spark, dir)
+        }))
+      assert(out.count() == 2)
+      assert(readsDict(out.queryExecution.analyzed) == (n > 0))
+      n
+    }
+    assert(evaluations(bytes) == 0)     // not past the threshold: full plan
+    assert(evaluations(bytes - 1) == 1) // one byte past it: slim plan
+  }
 }

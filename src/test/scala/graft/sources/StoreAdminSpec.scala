@@ -345,4 +345,44 @@ class StoreAdminSpec extends AnyFunSuite with SharedSpark {
     assert(PointsStore.compact(spark, dir, graceMs = 0L).nonEmpty)
     check("compacted")
   }
+
+  test("concurrent appends of disjoint batches all land and read back in full") {
+    val dir = Files.createTempDirectory("append_race").toString
+    val writers = 8
+    val perWriter = 50
+    def batch(w: Int) = Points.withSig(spark.createDataFrame(
+      spark.sparkContext.parallelize((0 until perWriter).map(i =>
+        Row("race", Map("writer" -> w.toString, "i" -> (i % 5).toString),
+          T0 + i * 60000L, w.toDouble)), 2), schema))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(writers)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val outcomes = try {
+      val futures = (0 until writers).map(w => pool.submit(
+        new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = { start.await(); PointsStore.append(batch(w), dir) }
+        }))
+      start.countDown()
+      futures.map(f => scala.util.Try(f.get()))
+    } finally pool.shutdown()
+    assert(outcomes.forall(_.isSuccess), outcomes.collect {
+      case scala.util.Failure(e) => e.getMessage }.mkString("; "))
+    val back = readAll(dir)
+    assert(back.count() == writers * perWriter)
+    assert(back.groupBy(col("labels")("writer")).count().count() == writers)
+    // the dictionary holds every series, and no staging dir is left
+    assert(PointsStore.readDict(spark, dir).get.count() == writers * 5)
+    assert(new java.io.File(dir).list().forall(n => !n.startsWith(".append-")))
+  }
+
+  test("compaction sweeps staging dirs an append left behind, after the grace window") {
+    val dir = seed()
+    val stale = new java.io.File(dir, ".append-crashed")
+    val fresh = new java.io.File(dir, ".append-recent")
+    Seq(stale, fresh).foreach(d => assert(new java.io.File(d, "_dict").mkdirs()))
+    val hourMs = 3600000L
+    assert(stale.setLastModified(System.currentTimeMillis() - 2 * hourMs))
+    PointsStore.compact(spark, dir, graceMs = hourMs)
+    assert(!stale.exists() && fresh.exists())
+    assert(readAll(dir).count() == 60)
+  }
 }

@@ -115,7 +115,7 @@ class StoreBloomSpec extends AnyFunSuite with SharedSpark {
     } finally rdr.close()
   }
 
-  test("lone-series selector pushes In(sig) to the scan and matches the semi-join result") {
+  test("lone-series selector pushes In(sig) to the scan and matches the semi-join result")(withSlimPlan {
     val dir = buildStore()
     val read = PointsStore.read(spark, dir, t0, t0 + 3600000L)
     val dict = PointsStore.readDict(spark, dir)
@@ -132,48 +132,54 @@ class StoreBloomSpec extends AnyFunSuite with SharedSpark {
     assert(rows.length == 1)
     assert(rows.head.getAs[Map[String, String]]("labels") == Map("instance" -> "42"))
     assert(rows.head.getAs[Double]("value") == 1.0)
-  }
+  })
 
   test("repeated lone-series selector plans without re-running the dict probe") {
     val dir = buildStore()
     val read = PointsStore.read(spark, dir, t0, t0 + 3600000L)
-    def query() = graft.engine.Engine.instantQuery(spark, read,
-      """fleet_metric{instance="41"}""", t0 + 180000L,
-      seriesDict = PointsStore.readDict(spark, dir))
-    val counter = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        counter.incrementAndGet()
+    // slim plan pinned one byte below this read rather than at 0: a zero
+    // open cost also splits the small dictionary into a partition per core,
+    // and the probe's take() would run a core-count-dependent number of jobs
+    graft.engine.Engine.withPlanThreshold(spark,
+        graft.engine.Engine.touchedBytes(read) - 1) {
+      def query() = graft.engine.Engine.instantQuery(spark, read,
+        """fleet_metric{instance="41"}""", t0 + 180000L,
+        seriesDict = PointsStore.readDict(spark, dir))
+      val counter = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          counter.incrementAndGet()
+      }
+      def jobsDuring(f: => Unit): Int = {
+        org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+        counter.set(0)
+        f
+        org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+        counter.get
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val cold = jobsDuring { query() } // pays the take(65) probe job
+        val warm = jobsDuring { query() } // memoized: same dict files, same selector
+        assert(warm == cold - 1,
+          s"expected the repeat to skip exactly the probe job (cold=$cold warm=$warm)")
+        // the memoized plan still ships the pushed In(sig) predicate
+        val plan = query().queryExecution.executedPlan.toString
+        assert(plan.replaceAll("\\s", "").matches("(?s).*PushedFilters:[^\\]]*sig.*"))
+        // a store mutation flips the dict file set and re-arms the probe
+        val extra = Points.withSig(spark.range(1L).select(
+          lit("fleet_metric").as("name"),
+          map(lit("instance"), lit("fresh")).as("labels"),
+          lit(t0).as("t"), lit(3.0).as("value")))
+        PointsStore.append(extra, dir)
+        val afterAppend = jobsDuring { query() }
+        // >= cold: the probe re-runs (take() may escalate through an extra
+        // job on the now-fragmented multi-file dict)
+        assert(afterAppend >= cold,
+          s"append must invalidate the probe cache (cold=$cold after=$afterAppend)")
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
-    def jobsDuring(f: => Unit): Int = {
-      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      counter.set(0)
-      f
-      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      counter.get
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val cold = jobsDuring { query() } // pays the take(65) probe job
-      val warm = jobsDuring { query() } // memoized: same dict files, same selector
-      assert(warm == cold - 1,
-        s"expected the repeat to skip exactly the probe job (cold=$cold warm=$warm)")
-      // the memoized plan still ships the pushed In(sig) predicate
-      val plan = query().queryExecution.executedPlan.toString
-      assert(plan.replaceAll("\\s", "").matches("(?s).*PushedFilters:[^\\]]*sig.*"))
-      // a store mutation flips the dict file set and re-arms the probe
-      val extra = Points.withSig(spark.range(1L).select(
-        lit("fleet_metric").as("name"),
-        map(lit("instance"), lit("fresh")).as("labels"),
-        lit(t0).as("t"), lit(3.0).as("value")))
-      PointsStore.append(extra, dir)
-      val afterAppend = jobsDuring { query() }
-      // >= cold: the probe re-runs (take() may escalate through an extra
-      // job on the now-fragmented multi-file dict)
-      assert(afterAppend >= cold,
-        s"append must invalidate the probe cache (cold=$cold after=$afterAppend)")
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("compacted rewrites keep the bloom filters") {

@@ -140,7 +140,8 @@ class CorpusSpec extends AnyFunSuite with SharedSpark {
   private def runEvalOnce(ev: Eval, points: DataFrame,
                           dict: Option[DataFrame], asRange: Boolean): Option[String] = {
     val attempt = Try {
-      val out =
+      // a store-backed eval (dict given) checks the slim plan
+      val out = withSlimPlan {
         if (asRange) {
           val step = 300000L
           Engine.rangeQuery(spark, points, ev.expr,
@@ -150,6 +151,7 @@ class CorpusSpec extends AnyFunSuite with SharedSpark {
           Engine.instantQuery(spark, points, ev.expr, ev.atMs,
             strictCollision = true, seriesDict = dict)
         }
+      }
       val rows = out.collect()
       if (asRange) {
         // keep only the final-step slice: vector/scalar rows have t ==
