@@ -99,13 +99,13 @@ object Stress {
           col("id").as("doc_id"),
           xxhash64(col("id")).as("bv"))
         .write.partitionBy("b").parquet(stage)
-      val f = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val root = new org.apache.hadoop.fs.Path(dir)
+      val f = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val log = new graft.sources.MarkerLog.BatchLog(f, root, "SigIndex", "batch-")
       val now = System.currentTimeMillis()
       (0 until n).foreach { i =>
-        f.rename(new org.apache.hadoop.fs.Path(stage, s"b=$i"),
-          new org.apache.hadoop.fs.Path(dir, s"batch-m$i"))
-        f.create(new org.apache.hadoop.fs.Path(dir, s"_live.$now.m$i"), false).close()
+        log.write(s"m$i")(f.rename(new org.apache.hadoop.fs.Path(stage, s"b=$i"), _))
+        log.mark(s"m$i", now)
       }
       f.delete(new org.apache.hadoop.fs.Path(stage), true)
       dir

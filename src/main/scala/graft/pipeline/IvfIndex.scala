@@ -1,12 +1,13 @@
 package graft.pipeline
 
+import graft.sources.MarkerLog
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Persisted, APPENDABLE IVF index — the ANN state a continuously-fed
-  * corpus searches and grows batch by batch, applying [[SigIndex]]'s
-  * marker-manifest discipline to [[Similarity.ivfBuild]]'s
+  * corpus searches and grows batch by batch, in [[Similarity.ivfBuild]]'s
   * cell-partitioned layout (which is rebuild-only):
   *
   * {{{
@@ -14,60 +15,39 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
   * dir/gen-<gid>/centroids/           the generation's coarse quantizer
   * dir/gen-<gid>/codebooks/           PQ codebooks (product-quantized mode)
   * dir/gen-<gid>/batch=<name>/cell=<i>/  one append, partitioned by cell
-  * dir/gen-<gid>/_live.<ts>.<name>    batch visibility markers
-  * dir/gen-<gid>/_seen.<ts>.<name>    folded-batch replay records
-  * dir/gen-<gid>/_slot.<seq>          writer-sequence claims
+  * dir/gen-<gid>/_live. _seen. _slot. the generation's batch log
   * }}}
+  *
+  * The commit protocol is [[MarkerLog]]'s: generations are a
+  * [[MarkerLog.VersionPointer]] (`_gen`), and each generation holds one
+  * [[MarkerLog.BatchLog]] — atomic publish, idempotent replay of a batch
+  * name, the sequential-writer slot guard
+  * ([[graft.sources.ConcurrentWriterException]]), publish-before-retire
+  * folds and grace vacuum. What is this index's own:
   *
   *  - APPEND assigns the batch against the CURRENT generation's fixed
   *    centroids (one codegen'd projection — the quantizer rides the
-  *    stage binary) and writes a fresh `batch=<name>/` directory
-  *    partitioned by cell, then publishes its marker with one atomic
-  *    create: a crashed append is invisible, concurrent readers see the
-  *    batch all-or-nothing, and a replayed `foreachBatch` name is
-  *    detected and skipped ([[SigIndex]]'s exact contract).
+  *    stage binary), writes it partitioned by cell, and re-checks the
+  *    generation both BEFORE and AFTER the marker create: an append that
+  *    lands while a retrain flips generations throws (withdrawing its
+  *    marker) rather than stranding the batch in a retired generation.
   *  - SEARCH probes `nProbe` cells via a literal cell-set predicate over
   *    the UNION of live batch directories: every batch root carries the
   *    same `cell=<i>` partition layout, so Catalyst partition pruning
   *    lists and scans only probed × live-batch directories — query cost
   *    tracks nProbe/k of the corpus REGARDLESS of how many appends built
-  *    it, the flat-probe property the SCALE anchors measure.
-  *  - COMPACT folds aged batches into one directory per generation
-  *    (bounding the batch-dir count a long stream accumulates) with
-  *    publish-before-retire ordering — a concurrent reader sees at worst
-  *    duplicate vectors, which SEARCH collapses with a (qid, cid)
-  *    dedup before ranking. Reader-grace vacuum as in
-  *    [[SigIndex.compact]].
+  *    it. A fold's publish-before-retire window can expose a vector
+  *    twice, which SEARCH collapses with a (qid, cid) dedup before
+  *    ranking.
   *  - RETRAIN is the drift story: when appends skew the cell histogram
-  *    (the coarse quantizer no longer balances the data — [[skew]]
-  *    measures max/mean occupancy), [[retrain]] trains fresh centroids
-  *    on a bounded sample of the live index, re-assigns every live
-  *    vector into a NEW generation directory (one fold batch), carries
-  *    the old generation's batch names forward as `_seen` records so
-  *    replay detection survives, and flips visibility with ONE atomic
-  *    `_gen` marker create. Readers planned against the old generation
-  *    keep its files (directories are only vacuumed after the reader
-  *    grace window); new readers resolve the new quantizer and layout.
-  *
-  * WRITER CONTRACT (same as [[SigIndex]]): appends, compactions and
-  * retrains are SEQUENTIAL per index — the streaming `foreachBatch`
-  * shape. The contract is ENFORCED, not just documented: every append
-  * claims the next monotonic `_slot.<seq>` of its GENERATION with a
-  * create-no-overwrite, so a second writer racing the same index fails
-  * loud ([[ConcurrentWriterException]]) instead of silently splitting
-  * survivors across kept-sets that never saw each other (the guard
-  * [[SigIndex.append]] carries, applied to the generation layout); and
-  * an append that lands while a retrain flips generations throws rather
-  * than stranding the batch in a retired generation — the generation is
-  * re-checked both BEFORE and AFTER the marker create (the post-create
-  * re-check withdraws the marker, closing the window where a flip lands
-  * between the pre-check and the create and the batch would otherwise
-  * be silently invisible to new-generation readers).
+  *    ([[skew]] measures max/mean occupancy), [[retrain]] trains fresh
+  *    centroids on a bounded sample of the live index, re-assigns every
+  *    live vector into a NEW generation, carries the old generation's
+  *    batch names forward as `_seen` records so replay detection
+  *    survives, and flips visibility with ONE `_gen` marker create.
   *
   * Reference for the IVF structure: Jégou/Douze/Schmid, "Product
-  * quantization for nearest neighbor search" (TPAMI 2011) §IV-A; the
-  * incremental visibility rules are this engine's store discipline
-  * ([[graft.sources.PointsStore]]), not a port of anything.
+  * quantization for nearest neighbor search" (TPAMI 2011) §IV-A.
   */
 object IvfIndex {
 
@@ -77,53 +57,8 @@ object IvfIndex {
     StructField("cid", LongType),
     StructField("ce", ArrayType(DoubleType))))
 
-  private val GenPrefix = "_gen."
-  private val MarkerPrefix = "_live."
-  private val SeenPrefix = "_seen."
-  private val SlotPrefix = "_slot."
   private val HistPrefix = "_hist."
   private val HistTmpPrefix = "_histtmp."
-
-  /** A second writer raced this index: the sequence slot this append
-    * computed for its generation was claimed by someone else first. */
-  final class ConcurrentWriterException(dir: String, seq: Long)
-    extends IllegalStateException(
-      s"IvfIndex at $dir: batch sequence slot $seq was claimed by a " +
-        "concurrent writer — appends must be sequential per index; this " +
-        "batch was NOT appended (its directory is an unmarked orphan)")
-
-  /** Test seam: runs ONCE between an append's slot read and its claim —
-    * the concurrent-writer window — then self-clears. */
-  private[pipeline] val appendTestHook =
-    new java.util.concurrent.atomic.AtomicReference[() => Unit](null)
-
-  /** Test seam: runs ONCE between an append's slot claim and its marker
-    * create — the retrain-flip window the post-create re-check closes —
-    * then self-clears. */
-  private[pipeline] val preMarkerTestHook =
-    new java.util.concurrent.atomic.AtomicReference[() => Unit](null)
-
-  private def maxSlot(f: org.apache.hadoop.fs.FileSystem, gp: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(gp)
-    if (!f.exists(root)) return -1L
-    f.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(SlotPrefix))
-      .flatMap(_.drop(SlotPrefix.length).toLongOption)
-      .foldLeft(-1L)(math.max)
-  }
-
-  private def claimSlot(f: org.apache.hadoop.fs.FileSystem, gp: String,
-                        seq: Long): Unit = {
-    val slot = new org.apache.hadoop.fs.Path(gp, s"$SlotPrefix$seq")
-    try f.create(slot, false).close()
-    catch {
-      // only an actually-taken slot is a contract violation; a transient
-      // I/O failure must surface as what it is, not as a phantom racer
-      case e: java.io.IOException =>
-        if (f.exists(slot)) throw new ConcurrentWriterException(gp, seq)
-        else throw e
-    }
-  }
 
   /** The sequence slot the NEXT append must claim — read this BEFORE
     * taking the kept-set snapshot a batch dedups against
@@ -139,35 +74,22 @@ object IvfIndex {
     * the higher slot and passes undetected — the guard is a tripwire for
     * uncoordinated writers, not a lock; sequential dispatch (the
     * `foreachBatch` shape) remains the contract. */
-  def nextAppendSeq(spark: SparkSession, dir: String): Long = {
-    val (_, gp) = requireGen(spark, dir)
-    maxSlot(fs(spark, dir), gp) + 1
-  }
+  def nextAppendSeq(spark: SparkSession, dir: String): Long =
+    batches(spark, requireGen(spark, dir)._2).nextSeq()
 
   private def fs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def stamped(prefix: String, n: String): Option[(Long, String)] = {
-    val rest = n.drop(prefix.length)
-    val dot = rest.indexOf('.')
-    if (!n.startsWith(prefix) || dot < 0) None
-    else rest.take(dot).toLongOption.map(ts => (ts, rest.substring(dot + 1)))
-  }
+  private def gens(spark: SparkSession, dir: String) =
+    new MarkerLog.VersionPointer(fs(spark, dir), new Path(dir), "_gen.", "gen-")
 
-  private def names(f: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-                    prefix: String): Seq[(Long, String)] =
-    if (!f.exists(root)) Nil
-    else f.listStatus(root).toSeq.map(_.getPath.getName)
-      .flatMap(stamped(prefix, _))
+  /** Generation `gp`'s batch log. */
+  private def batches(spark: SparkSession, gp: String) =
+    new MarkerLog.BatchLog(fs(spark, gp), new Path(gp), "IvfIndex", "batch=")
 
   /** The current generation id, by newest `_gen` marker. */
-  def currentGen(spark: SparkSession, dir: String): Option[Long] = {
-    val f = fs(spark, dir)
-    val gens = names(f, new org.apache.hadoop.fs.Path(dir), GenPrefix)
-      .flatMap { case (ts, gid) => gid.toLongOption.map(g => (ts, g)) }
-    if (gens.isEmpty) None else Some(gens.max._2)
-  }
+  def currentGen(spark: SparkSession, dir: String): Option[Long] =
+    gens(spark, dir).current.flatMap(_.toLongOption)
 
   private def genPath(dir: String, gid: Long): String = s"$dir/gen-$gid"
 
@@ -261,7 +183,7 @@ object IvfIndex {
     extends Coarse { def kEff: Int = halves(0).length * halves(1).length }
 
   private def coarseIn(spark: SparkSession, gp: String): Coarse = {
-    val p = new org.apache.hadoop.fs.Path(s"$gp/imicb")
+    val p = new Path(s"$gp/imicb")
     if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
       ImiCoarse(Similarity.readCodebooks(spark, p.toString))
     else FlatCoarse(centroidsIn(spark, gp))
@@ -322,7 +244,7 @@ object IvfIndex {
 
   private def codebooksIn(spark: SparkSession,
                           gp: String): Option[Array[Array[Array[Double]]]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$gp/codebooks")
+    val p = new Path(s"$gp/codebooks")
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
     else Some(Similarity.readCodebooks(spark, p.toString))
   }
@@ -334,19 +256,15 @@ object IvfIndex {
 
   /** Whether batch `name` already landed in the CURRENT generation —
     * live, folded, or carried forward across a retrain. */
-  def contains(spark: SparkSession, dir: String, name: String): Boolean = {
-    val (_, gp) = requireGen(spark, dir)
-    val f = fs(spark, dir)
-    val root = new org.apache.hadoop.fs.Path(gp)
-    names(f, root, MarkerPrefix).exists(_._2 == name) ||
-      names(f, root, SeenPrefix).exists(_._2 == name)
-  }
+  def contains(spark: SparkSession, dir: String, name: String): Boolean =
+    batches(spark, requireGen(spark, dir)._2).contains(name)
 
   /** Append `vectors` (vec_id, embedding) under batch `name`: assign each
     * vector to its nearest current-generation centroid and write the
     * batch partitioned by cell. Returns false when `name` already landed
-    * (idempotent replay). Throws [[ConcurrentWriterException]] when a
-    * second writer claimed this append's generation sequence slot first
+    * (idempotent replay). Throws
+    * [[graft.sources.ConcurrentWriterException]] when a second writer
+    * claimed this append's generation sequence slot first
     * (pass `seq` from [[nextAppendSeq]] to cover a kept-set read that
     * preceded this call), and [[IllegalStateException]] if a retrain
     * flipped generations while the batch was writing — in both cases the
@@ -393,66 +311,64 @@ object IvfIndex {
     // after the first attempt committed must not turn the replay into a
     // spurious failure — the marker carried across the flip, nothing is
     // written). The generation pin below guards NOT-landed batches only.
-    if (contains(spark, dir, name)) return false
+    val log = batches(spark, gp)
+    if (log.contains(name)) return false
     expectGen.filter(_ != gid).foreach(eg =>
       throw new IllegalStateException(
         s"IvfIndex append '$name' raced a retrain at $dir: the batch was " +
           s"assigned against generation $eg but the index is at $gid — " +
           "cell assignments are generation-specific; re-run the batch " +
           "against the new quantizer"))
-    val f = fs(spark, dir)
+    val f = log.fs
     // slot read FIRST (before the quantizer read — the start of this
     // append's view of the index), claim before the marker create
-    val next = seq.getOrElse(maxSlot(f, gp) + 1)
+    val next = seq.getOrElse(log.nextSeq())
     val cbs = codebooksIn(spark, gp)
     val rot = Similarity.readRotation(spark, gp)
     val assigned = mkAssigned(gp)
-    // a PQ generation also encodes AT APPEND TIME against its persisted
-    // codebooks (one more codegen'd projection in the same pass) — the
-    // code column is what [[searchPq]] scans; an OPQ generation rotates
-    // before the subspace split (codes live in the rotated space)
-    cbs.fold(assigned.select("cell", "cid", "ce"))(b =>
-        assigned.withColumn("codes",
-            Similarity.pqCodesCol(Similarity.rotatedCol(col("ce"), rot), b))
-          .select("cell", "cid", "ce", "codes"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$gp/batch=$name")
-    // an EMPTY batch (routine: every survivor of a semDeDup batch was a
-    // near-dup) publishes its marker WITHOUT a directory — a zero-row
-    // partitionBy write emits no parquet footer, which later reads could
-    // not parse; [[readBatch]]/[[read]] treat the missing directory as
-    // the empty relation. Emptiness is read OFF THE WRITTEN DIRECTORY
-    // (no cell= children) instead of a separate isEmpty pre-action,
-    // which cost one full extra pass over the batch's dedup lineage per
-    // append; a crash between the write and this delete leaves an
-    // unmarked orphan dir, exactly like a crash mid-write — [[compact]]
-    // sweeps it.
-    val outDir = new org.apache.hadoop.fs.Path(s"$gp/batch=$name")
-    val wroteRows = f.exists(outDir) && f.listStatus(outDir).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith("cell="))
-    if (wroteRows)
-      // the per-cell occupancy histogram rides along as a tiny sidecar
-      // (footer row counts of the just-written directory — no data pages
-      // decode): [[skew]] then prices quantizer drift from sidecar sums
-      // instead of scanning the index
-      writeHist(spark, f, gp, name)
-    else f.delete(outDir, true)
-    Option(appendTestHook.getAndSet(null)).foreach(_.apply())
+    log.write(name) { outDir =>
+      // a PQ generation also encodes AT APPEND TIME against its persisted
+      // codebooks (one more codegen'd projection in the same pass) — the
+      // code column is what [[searchPq]] scans; an OPQ generation rotates
+      // before the subspace split (codes live in the rotated space)
+      cbs.fold(assigned.select("cell", "cid", "ce"))(b =>
+          assigned.withColumn("codes",
+              Similarity.pqCodesCol(Similarity.rotatedCol(col("ce"), rot), b))
+            .select("cell", "cid", "ce", "codes"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(outDir.toString)
+      // an EMPTY batch (routine: every survivor of a semDeDup batch was a
+      // near-dup) publishes its marker WITHOUT a directory — a zero-row
+      // partitionBy write emits no parquet footer, which later reads could
+      // not parse; [[readBatch]]/[[read]] treat the missing directory as
+      // the empty relation. Emptiness is read OFF THE WRITTEN DIRECTORY
+      // (no cell= children) instead of a separate isEmpty pre-action,
+      // which cost one full extra pass over the batch's dedup lineage per
+      // append; a crash between the write and this delete leaves an
+      // unmarked orphan dir, exactly like a crash mid-write — [[compact]]
+      // sweeps it.
+      val wroteRows = f.exists(outDir) && f.listStatus(outDir).exists(st =>
+        st.isDirectory && st.getPath.getName.startsWith("cell="))
+      if (wroteRows)
+        // the per-cell occupancy histogram rides along as a tiny sidecar
+        // (footer row counts of the just-written directory — no data pages
+        // decode): [[skew]] then prices quantizer drift from sidecar sums
+        // instead of scanning the index
+        writeHist(spark, f, gp, name)
+      else f.delete(outDir, true)
+    }
     if (currentGen(spark, dir) != Some(gid))
       throw new IllegalStateException(
         s"IvfIndex append '$name' raced a retrain at $dir (generation " +
           s"moved past $gid) — re-run the batch against the new quantizer")
-    claimSlot(f, gp, next)
-    Option(preMarkerTestHook.getAndSet(null)).foreach(_.apply())
-    val marker = new org.apache.hadoop.fs.Path(gp,
-      s"$MarkerPrefix${System.currentTimeMillis()}.$name")
-    f.create(marker, false).close()
+    log.claim(next)
+    val marker = log.mark(name)
     // post-create re-check: a retrain that flipped between the pre-check
     // and the create would leave this marker in a RETIRED generation —
     // append would report success while new-generation readers never see
     // the batch. Withdraw the marker and fail loud instead.
     if (currentGen(spark, dir) != Some(gid)) {
-      f.delete(marker, false)
+      log.withdraw(marker)
       throw new IllegalStateException(
         s"IvfIndex append '$name' raced a retrain at $dir (generation " +
           s"moved past $gid after the marker create) — marker withdrawn; " +
@@ -467,9 +383,9 @@ object IvfIndex {
   def readBatch(spark: SparkSession, dir: String,
                 name: String): Option[DataFrame] = {
     val (_, gp) = requireGen(spark, dir)
-    val f = fs(spark, dir)
-    if (!names(f, new org.apache.hadoop.fs.Path(gp), MarkerPrefix).exists(_._2 == name)) None
-    else if (!f.exists(new org.apache.hadoop.fs.Path(s"$gp/batch=$name")))
+    val log = batches(spark, gp)
+    if (!log.isLive(name)) None
+    else if (!log.fs.exists(log.batchPath(name)))
       Some(emptyCells(spark))
     else
       Some(spark.read.option("basePath", gp)
@@ -483,8 +399,7 @@ object IvfIndex {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cellSchema)
 
   private def liveBatchNames(spark: SparkSession, gp: String): Seq[String] =
-    names(fs(spark, gp), new org.apache.hadoop.fs.Path(gp), MarkerPrefix)
-      .map(_._2).distinct
+    batches(spark, gp).live
 
   /** The live index relation (cell, cid, ce) — the union of the current
     * generation's marker-named batch directories. Every batch root shares
@@ -538,7 +453,7 @@ object IvfIndex {
     val f = fs(spark, gp)
     // empty batches land as marker-only (no directory) — skip them
     val live = liveBatchNames(spark, gp)
-      .filter(n => f.exists(new org.apache.hadoop.fs.Path(s"$gp/batch=$n")))
+      .filter(n => f.exists(new Path(s"$gp/batch=$n")))
     if (live.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
@@ -846,8 +761,8 @@ object IvfIndex {
     // fallback), never a torn prefix that would parse to wrong counts.
     // The tmp name uses its own prefix so no lister ever matches it;
     // [[compact]] sweeps any crash-orphaned tmp.
-    val tmp = new org.apache.hadoop.fs.Path(gp, s"$HistTmpPrefix$name")
-    val dst = new org.apache.hadoop.fs.Path(gp, s"$HistPrefix$name")
+    val tmp = new Path(gp, s"$HistTmpPrefix$name")
+    val dst = new Path(gp, s"$HistPrefix$name")
     val o = f.create(tmp, true)
     o.write(counts.toSeq.sorted.map { case (c, n) => s"$c $n" }.mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -858,7 +773,7 @@ object IvfIndex {
 
   private def readHist(f: org.apache.hadoop.fs.FileSystem, gp: String,
                        name: String): Option[Map[Int, Long]] = {
-    val p = new org.apache.hadoop.fs.Path(gp, s"$HistPrefix$name")
+    val p = new Path(gp, s"$HistPrefix$name")
     if (!f.exists(p)) None
     else try {
       val in = f.open(p)
@@ -881,7 +796,7 @@ object IvfIndex {
                              name: String): Map[Int, Long] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val f = fs(spark, gp)
-    val base = new org.apache.hadoop.fs.Path(s"$gp/batch=$name")
+    val base = new Path(s"$gp/batch=$name")
     f.listStatus(base).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
       .map { cd =>
@@ -908,7 +823,7 @@ object IvfIndex {
   private def cellCountsIn(spark: SparkSession, gp: String): Map[Int, Long] = {
     val f = fs(spark, gp)
     val live = liveBatchNames(spark, gp)
-      .filter(n => f.exists(new org.apache.hadoop.fs.Path(s"$gp/batch=$n")))
+      .filter(n => f.exists(new Path(s"$gp/batch=$n")))
     live.map(n => readHist(f, gp, n).getOrElse(scanCellCounts(spark, gp, n)))
       .foldLeft(Map.empty[Int, Long]) { (acc, m) =>
         m.foldLeft(acc) { case (a, (c, n)) => a.updated(c, a.getOrElse(c, 0L) + n) }
@@ -966,8 +881,8 @@ object IvfIndex {
               graceMs: Long = 15 * 60 * 1000L): Long = {
     val (gid, gp) = requireGen(spark, dir)
     val f = fs(spark, dir)
-    val root = new org.apache.hadoop.fs.Path(gp)
-    val liveMarks = names(f, root, MarkerPrefix)
+    val log = batches(spark, gp)
+    val liveMarks = log.liveStamped
     val newest = liveMarks.groupBy(_._2).map { case (n, xs) => n -> xs.map(_._1).max }
     val now = System.currentTimeMillis()
     val recent = newest.filter(_._2 > now - graceMs).keys.toSeq.sorted
@@ -1027,7 +942,7 @@ object IvfIndex {
         .parquet(paths: _*)
         .select(col("cid").as("vec_id"), col("ce").as("embedding"))
     val agedDirs = aged.filter(n =>
-      f.exists(new org.apache.hadoop.fs.Path(s"$gp/batch=$n")))
+      f.exists(new Path(s"$gp/batch=$n")))
     val fold: Seq[(String, Option[DataFrame], Long)] =
       if (agedDirs.isEmpty) Nil
       else Seq((s"fold${gid + 1}",
@@ -1039,12 +954,12 @@ object IvfIndex {
     // per-batch directory growth on a long stream)
     val recentBatches: Seq[(String, Option[DataFrame], Long)] = recent.map { n =>
       (n,
-        if (f.exists(new org.apache.hadoop.fs.Path(s"$gp/batch=$n")))
+        if (f.exists(new Path(s"$gp/batch=$n")))
           Some(rows(Seq(s"$gp/batch=$n")))
         else None, // marker-only empty batch stays marker-only
         newest(n))
     }
-    val carried = (names(f, root, SeenPrefix).map(_._2) ++ aged).distinct
+    val carried = (log.seenTimes.keys.toSeq ++ aged).distinct
     writeGen(spark, dir, gid + 1, coarse, newCbs, newRot,
       fold ++ recentBatches, carried)
     gid + 1
@@ -1063,127 +978,87 @@ object IvfIndex {
       Some(retrain(spark, dir, k, iters, trainLimit, graceMs))
     else None
 
+  /** Write generation `gid` and flip it current — a
+    * [[MarkerLog.VersionPointer]] flip, so the remnant of a crashed
+    * earlier attempt (a `gen-<gid>` no `_gen` marker names) is cleared
+    * first and a retry lands. */
   private def writeGen(spark: SparkSession, dir: String, gid: Long,
                        coarse: Coarse,
                        cbs: Option[Array[Array[Array[Double]]]],
                        rot: Option[Array[Array[Double]]],
-                       batches: Seq[(String, Option[DataFrame], Long)],
+                       batchesIn: Seq[(String, Option[DataFrame], Long)],
                        carriedNames: Seq[String]): Unit = {
-    val gp = genPath(dir, gid)
-    // quantizer state is a driver array — direct driver parquet writes
-    // ([[QuantizerFiles]]), no Spark job per file
-    def writeCbs(b: Array[Array[Array[Double]]], path: String): Unit =
-      QuantizerFiles.writeIntIntVec(spark, path,
-        for ((cb, mm) <- b.zipWithIndex.toSeq; (v, j) <- cb.zipWithIndex)
-          yield (mm, j, v))
-    coarse match {
-      case FlatCoarse(centroids) =>
-        QuantizerFiles.writeIntVec(spark, s"$gp/centroids", "cell", "c",
-          centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq)
-      case ImiCoarse(halves) => writeCbs(halves, s"$gp/imicb")
-    }
-    cbs.foreach(writeCbs(_, s"$gp/codebooks"))
-    rot.foreach(Similarity.writeRotation(spark, gp, _))
-    val f = fs(spark, dir)
-    val now = System.currentTimeMillis()
-    batches.foreach { case (name, vectors, markerTs) =>
-      vectors.foreach { vecs =>
-        val assigned = vecs.select(col("vec_id").as("cid"),
-            col("embedding").cast("array<double>").as("ce"))
-          .withColumn("cell", assignCol(coarse, col("ce")))
-        cbs.fold(assigned.select("cell", "cid", "ce"))(b =>
-            assigned.withColumn("codes",
-                Similarity.pqCodesCol(Similarity.rotatedCol(col("ce"), rot), b))
-              .select("cell", "cid", "ce", "codes"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$gp/batch=$name")
-        writeHist(spark, f, gp, name)
+    val flipped = gens(spark, dir).flip(gid.toString) { target =>
+      val gp = target.toString
+      // quantizer state is a driver array — direct driver parquet writes
+      // ([[QuantizerFiles]]), no Spark job per file
+      def writeCbs(b: Array[Array[Array[Double]]], path: String): Unit =
+        QuantizerFiles.writeIntIntVec(spark, path,
+          for ((cb, mm) <- b.zipWithIndex.toSeq; (v, j) <- cb.zipWithIndex)
+            yield (mm, j, v))
+      coarse match {
+        case FlatCoarse(centroids) =>
+          QuantizerFiles.writeIntVec(spark, s"$gp/centroids", "cell", "c",
+            centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq)
+        case ImiCoarse(halves) => writeCbs(halves, s"$gp/imicb")
       }
-      // markerTs preserves a carried batch's ORIGINAL publish time, so
-      // its fold-grace clock survives the generation flip
-      f.create(new org.apache.hadoop.fs.Path(gp,
-        s"$MarkerPrefix$markerTs.$name"), false).close()
+      cbs.foreach(writeCbs(_, s"$gp/codebooks"))
+      rot.foreach(Similarity.writeRotation(spark, gp, _))
+      val log = batches(spark, gp)
+      batchesIn.foreach { case (name, vectors, markerTs) =>
+        vectors.foreach { vecs =>
+          val assigned = vecs.select(col("vec_id").as("cid"),
+              col("embedding").cast("array<double>").as("ce"))
+            .withColumn("cell", assignCol(coarse, col("ce")))
+          log.write(name)(out =>
+            cbs.fold(assigned.select("cell", "cid", "ce"))(b =>
+                assigned.withColumn("codes",
+                    Similarity.pqCodesCol(Similarity.rotatedCol(col("ce"), rot), b))
+                  .select("cell", "cid", "ce", "codes"))
+              .write.mode("overwrite").partitionBy("cell")
+              .parquet(out.toString))
+          writeHist(spark, log.fs, gp, name)
+        }
+        // markerTs preserves a carried batch's ORIGINAL publish time, so
+        // its fold-grace clock survives the generation flip
+        log.mark(name, markerTs)
+      }
+      log.recordSeen(carriedNames)
     }
-    carriedNames.foreach { n =>
-      f.create(new org.apache.hadoop.fs.Path(gp, s"$SeenPrefix$now.$n"), false).close()
-    }
-    // the atomic visibility flip
-    f.create(new org.apache.hadoop.fs.Path(dir, s"$GenPrefix$now.$gid"), false).close()
+    if (!flipped) throw new IllegalStateException(
+      s"IvfIndex at $dir: generation $gid is already published — a " +
+        "concurrent retrain or init raced this one")
   }
 
   /** Freeze the CURRENT generation under `dir/snapshots/<name>/` — a
     * fully valid IvfIndex directory (its own `_gen` marker, the
-    * generation's centroids (and codebooks, when product-quantized),
-    * live batch directories with their markers, `_seen` records so
-    * replay detection survives, and the sequence-slot ledger so a
-    * restored pipeline continues the sequential-writer contract):
-    * search, append and retrain all work against a restored snapshot.
-    * Data directories hard-link with a copy fallback
-    * ([[graft.sources.PointsStore.snapshot]]'s recipe); marker/seen/slot
-    * files are ZERO-BYTE names, so the snapshot re-creates them from the
-    * captured listing instead of linking — a compact racing the snapshot
-    * can delete an aged marker between the capture listing and the copy,
-    * and a re-create cannot fail on the vanished source.
-    * Readers of the original never list `snapshots/`. */
+    * generation's quantizer files, and the batch log's captured state —
+    * [[MarkerLog.BatchLog.snapshotInto]]): search, append and retrain all
+    * work against a restored snapshot. Readers of the original never list
+    * `snapshots/`. */
   def snapshot(spark: SparkSession, dir: String): String = {
     val (gid, gp) = requireGen(spark, dir)
     val f = fs(spark, dir)
-    val name = SnapshotFiles.freshName()
-    val out = s"$dir/snapshots/$name"
-    def linkTree(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
-      SnapshotFiles.linkTree(spark, f, src, dst)
-    val ogp = new org.apache.hadoop.fs.Path(s"$out/gen-$gid")
-    f.mkdirs(ogp)
-    // ONE listing is the capture point (markers and dirs from the same
-    // view): a racing append is fully out, a racing compact cannot leave
-    // marker-less dirs, and retired directories outlive the race by the
-    // vacuum grace window
-    val entries = f.listStatus(new org.apache.hadoop.fs.Path(gp)).toSeq
-    val live = entries.map(_.getPath.getName)
-      .flatMap(n => stamped(MarkerPrefix, n)).map(_._2).toSet
-    // DIRECTORIES first: a compact racing a slower-than-grace snapshot can
-    // retire a batch directory between the capture listing and the copy —
-    // a vanished batch is skipped (partial copy removed) and its marker
-    // suppressed below, so the snapshot never claims a landed batch whose
-    // data it could not capture
-    val vanished = scala.collection.mutable.Set[String]()
-    entries.foreach { st =>
+    val name = MarkerLog.freshName()
+    val out = new Path(dir, s"snapshots/$name")
+    val ogp = new Path(out, s"gen-$gid")
+    val cap = batches(spark, gp).snapshotInto(ogp)
+    cap.entries.foreach { st =>
       val n = st.getPath.getName
       if (st.isDirectory && (n == "centroids" || n == "codebooks" ||
-          n == "rotation" || n == "imicb" ||
-          (n.startsWith("batch=") && live.contains(n.drop("batch=".length))))) {
-        try linkTree(st.getPath, new org.apache.hadoop.fs.Path(ogp, n))
-        catch {
-          case _: java.io.FileNotFoundException if n.startsWith("batch=") =>
-            f.delete(new org.apache.hadoop.fs.Path(ogp, n), true)
-            vanished += n.drop("batch=".length)
-        }
-      }
-    }
-    entries.foreach { st =>
-      val n = st.getPath.getName
-      if (st.isFile && (n.startsWith(SeenPrefix) || n.startsWith(SlotPrefix) ||
-          // markers only for the CAPTURED live set: an append racing the
-          // snapshot must be fully out, not a marker-without-directory
-          // (which would read as a landed EMPTY batch)
-          (n.startsWith(MarkerPrefix) &&
-            stamped(MarkerPrefix, n).exists(m =>
-              live.contains(m._2) && !vanished.contains(m._2)))))
-        f.create(new org.apache.hadoop.fs.Path(ogp, n), false).close()
+          n == "rotation" || n == "imicb"))
+        MarkerLog.linkTree(f, st.getPath, new Path(ogp, n))
       else if (st.isFile && n.startsWith(HistPrefix) &&
-          live.contains(n.drop(HistPrefix.length)) &&
-          !vanished.contains(n.drop(HistPrefix.length)))
+          cap.batches.contains(n.drop(HistPrefix.length)))
         // histogram sidecars CARRY CONTENT (unlike the zero-byte marker
-        // names) — copy them; a compact racing the snapshot can retire one
+        // names) — link them; a compact racing the snapshot can retire one
         // between the capture listing and this copy, and the restored
         // index then falls back to the per-batch repair scan, so a
         // vanished source is skipped, not fatal
-        try SnapshotFiles.link(spark, f, st.getPath,
-          new org.apache.hadoop.fs.Path(ogp, n))
+        try MarkerLog.link(f, st.getPath, new Path(ogp, n))
         catch { case _: java.io.FileNotFoundException => () }
     }
-    f.create(new org.apache.hadoop.fs.Path(out,
-      s"$GenPrefix${System.currentTimeMillis()}.$gid"), false).close()
+    gens(spark, dir).markInto(out, gid.toString)
     name
   }
 
@@ -1200,27 +1075,22 @@ object IvfIndex {
     new java.util.concurrent.atomic.AtomicReference[Integer](null)
 
   /** Fold aged live batches of the CURRENT generation into one directory
-    * (publish-before-retire, so concurrent readers see at worst duplicate
-    * vectors — harmless under search's (cos, cid) ranking), sweep retired
-    * and orphaned batch directories past the reader grace window, and
-    * vacuum RETIRED GENERATIONS whose `_gen` marker was superseded longer
-    * than the grace window ago. The [[SigIndex.compact]] discipline on
-    * the two-level layout. */
+    * and vacuum it ([[MarkerLog.BatchLog.compact]]), then vacuum RETIRED
+    * GENERATIONS superseded longer than the grace window ago and
+    * unmarked `gen-` remnants of crashed retrains
+    * ([[MarkerLog.VersionPointer.vacuum]]). */
   def compact(spark: SparkSession, dir: String,
               graceMs: Long = 15 * 60 * 1000L): Unit = {
-    val (gid, gp) = requireGen(spark, dir)
-    val f = fs(spark, dir)
-    val root = new org.apache.hadoop.fs.Path(gp)
-    val now = System.currentTimeMillis()
-    val cutoff = now - graceMs
-    val aged = names(f, root, MarkerPrefix)
-      .filter(_._1 <= cutoff).map(_._2).distinct
-    if (aged.length > 1) {
+    val (_, gp) = requireGen(spark, dir)
+    val log = batches(spark, gp)
+    val f = log.fs
+    def dropHist(n: String): Unit = f.delete(new Path(gp, s"$HistPrefix$n"), false)
+    // a crashed append can leave a histogram sidecar beside its orphan
+    // directory — it retires with the directory
+    val retired = log.compact(graceMs, onSweep = dropHist) { (aged, foldName) =>
       // marker-only EMPTY batches have no directory — they fold to their
       // `_seen` record alone
-      val agedDirs = aged.filter(n =>
-        f.exists(new org.apache.hadoop.fs.Path(s"$gp/batch=$n")))
-      val foldName = s"compact-${java.util.UUID.randomUUID().toString.take(8)}"
+      val agedDirs = aged.filter(n => f.exists(log.batchPath(n)))
       if (agedDirs.nonEmpty) {
         // a PQ generation's rows carry the code column — fold it verbatim
         // (codes are deterministic per (vector, generation codebooks), so
@@ -1228,13 +1098,13 @@ object IvfIndex {
         // existence check only (and against THIS call's generation
         // resolution, not a fresh one) — the codebook VALUES are not
         // needed to know the fold's column set
-        val pq = f.exists(new org.apache.hadoop.fs.Path(s"$gp/codebooks"))
+        val pq = f.exists(new Path(s"$gp/codebooks"))
         val cols =
           if (pq) Seq("cell", "cid", "ce", "codes")
           else Seq("cell", "cid", "ce")
         def readAged() = spark.read.option("basePath", gp)
           .schema(layoutSchema(withCodes = pq)) // no inference job
-          .parquet(agedDirs.map(n => s"$gp/batch=$n"): _*)
+          .parquet(agedDirs.map(n => log.batchPath(n).toString): _*)
         // SET-SEMANTICS dedup (a fold racing a fold, or a crash between a
         // fold's publish and its retire markers, exposes a vector in two
         // batch dirs; an append whose input repeats a vec_id lands the
@@ -1270,89 +1140,28 @@ object IvfIndex {
         // AQE coalescing: merge scan partitions locally (no shuffle) to
         // ~targetBytes outputs so the fold actually shrinks file counts
         val agedBytes = agedDirs.map(n =>
-          f.getContentSummary(new org.apache.hadoop.fs.Path(s"$gp/batch=$n"))
+          f.getContentSummary(log.batchPath(n))
             .getLength).sum
         val nOut = math.max(1, (agedBytes / FoldTargetBytes).toInt)
         folded.coalesce(nOut)
           .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$gp/batch=$foldName")
-      }
-      if (agedDirs.nonEmpty) {
+          .parquet(log.batchPath(foldName).toString)
         writeHist(spark, f, gp, foldName)
-        f.create(new org.apache.hadoop.fs.Path(root,
-          s"$MarkerPrefix${System.currentTimeMillis()}.$foldName"), false).close()
       }
-      aged.foreach { n =>
-        f.create(new org.apache.hadoop.fs.Path(root,
-          s"$SeenPrefix${System.currentTimeMillis()}.$n"), false).close()
-      }
-      f.listStatus(root).toSeq.map(_.getPath).foreach { p =>
-        if (stamped(MarkerPrefix, p.getName).exists(m => aged.contains(m._2)))
-          f.delete(p, false)
-      }
-      // histogram sidecars follow their markers: a retired batch's counts
-      // are no longer summed, so the sidecar retires with the marker
-      aged.foreach { n =>
-        f.delete(new org.apache.hadoop.fs.Path(root, s"$HistPrefix$n"), false)
-      }
+      agedDirs.nonEmpty
     }
+    // histogram sidecars follow their markers: a retired batch's counts
+    // are no longer summed, so the sidecar retires with the marker
+    retired.foreach(dropHist)
     // crash-orphaned histogram tmp files (a writeHist that died between
     // create and rename) sweep once past the grace window
-    f.listStatus(root).toSeq.foreach { st =>
+    val now = System.currentTimeMillis()
+    f.listStatus(new Path(gp)).toSeq.foreach { st =>
       if (st.isFile && st.getPath.getName.startsWith(HistTmpPrefix) &&
           st.getModificationTime <= now - graceMs)
         f.delete(st.getPath, false)
     }
-    // sequence-slot ledger of the current generation: only the MAX
-    // matters (the next append's predecessor) — fold the tail
-    val slots = f.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(SlotPrefix))
-      .flatMap(n => n.drop(SlotPrefix.length).toLongOption.map((_, n)))
-    if (slots.length > 1) {
-      val keep = slots.maxBy(_._1)._2
-      slots.filter(_._2 != keep).foreach { case (_, n) =>
-        f.delete(new org.apache.hadoop.fs.Path(root, n), false)
-      }
-    }
-    // reader-grace vacuum of retired/orphaned batch dirs (current gen);
-    // re-stamp `now` so _seen records the fold above just wrote age from
-    // their own creation, not from this call's start
-    val now2 = System.currentTimeMillis()
-    val seenTs = names(f, root, SeenPrefix)
-      .groupBy(_._2).map { case (n, xs) => n -> xs.map(_._1).min }
-    val live = liveBatchNames(spark, gp).toSet
-    if (f.exists(root)) f.listStatus(root).toSeq.foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("batch=")) {
-        val nm = n.drop("batch=".length)
-        if (!live.contains(nm)) {
-          val retiredPastGrace = seenTs.get(nm).exists(_ <= now2 - graceMs)
-          val orphanPastGrace =
-            !seenTs.contains(nm) && st.getModificationTime <= now2 - graceMs
-          if (retiredPastGrace || orphanPastGrace) {
-            f.delete(st.getPath, true)
-            // a crashed append can leave a histogram sidecar beside its
-            // orphan directory — it retires with the directory
-            f.delete(new org.apache.hadoop.fs.Path(root, s"$HistPrefix$nm"), false)
-          }
-        }
-      }
-    }
-    // retired generations: deletable once SUPERSEDED for the reader grace
-    // window — aged from the NEWER marker's timestamp (its age bounds the
-    // supersession age from below), never from the retired generation's
-    // own creation time, which says nothing about how recently readers
-    // could still have planned against it
-    val gens = names(f, new org.apache.hadoop.fs.Path(dir), GenPrefix)
-      .flatMap { case (ts, g) => g.toLongOption.map(x => (ts, x)) }
-    gens.foreach { case (ts, g) =>
-      val supersededLongEnough = gens.exists { case (nts, ng) =>
-        (nts > ts || (nts == ts && ng > g)) && now2 - nts >= graceMs
-      }
-      if (g != gid && supersededLongEnough) {
-        f.delete(new org.apache.hadoop.fs.Path(dir, s"$GenPrefix$ts.$g"), false)
-        f.delete(new org.apache.hadoop.fs.Path(genPath(dir, g)), true)
-      }
-    }
+    // retired generations, and remnants of crashed flips
+    gens(spark, dir).vacuum(graceMs)
   }
 }

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import graft.sources.MarkerLog
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -8,30 +10,12 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * continuously-fed 100 TB pipeline dedups each arriving batch against:
   * one row per (kept document, LSH bucket), `doc_id LONG, bv LONG`.
   *
-  * Visibility follows the engine's manifest discipline
-  * ([[graft.sources.PointsStore]]'s rule: a file is live only when a
-  * manifest names it), specialized to the index's append-only life:
-  * every append writes its rows to a fresh `batch-<name>/` directory and
-  * then publishes a tiny `_live.<ts>.<name>` marker naming it. Readers
-  * union exactly the marker-named directories, so
-  *
-  *  - a crashed append (directory written, marker not) is INVISIBLE —
-  *    no torn reads, the orphan is swept by the next [[compact]];
-  *  - concurrent appends never conflict — each publishes its own marker,
-  *    there is no shared manifest to CAS (append-only means the live set
-  *    only ever unions, so per-append delta markers replace the
-  *    read-modify-write manifest a rewriting store needs);
-  *  - a marker is one atomic create, so any reader sees a batch's rows
-  *    all-or-nothing.
-  *
-  * [[compact]] folds AGED live directories into one (bounding file count
-  * for a long-running stream) and is the only REWRITE: it publishes the
-  * folded directory's marker before retiring the old ones, so a
-  * concurrent reader sees at worst DUPLICATE signature rows — harmless
-  * by construction, every consumer here treats the index as a set. A
-  * grace window keeps recent batches un-folded (the streaming replay
-  * contract below), and folded names are recorded in `_seen.` markers
-  * so replay detection outlives the fold.
+  * The index is a [[MarkerLog.BatchLog]] of `batch-<name>/` parquet
+  * directories: appends publish atomically, a crashed append is invisible,
+  * a racing second writer fails loud ([[graft.sources.ConcurrentWriterException]]),
+  * and [[compact]] folds aged batches with publish-before-retire — a
+  * concurrent reader sees at worst DUPLICATE signature rows, harmless
+  * because every consumer here treats the index as a set.
   *
   * Streaming idempotence: the marker embeds the caller's batch name, so
   * a replayed `foreachBatch` can detect its own prior append (the
@@ -49,23 +33,15 @@ object SigIndex {
   val schema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("bv", LongType)))
 
-  private val MarkerPrefix = "_live."
-
-  /** Parse a `<prefix><ts>.<name>` marker file name — the ONE place the
-    * marker format is known (both `_live.` and `_seen.` share it). */
-  private def stamped(prefix: String, n: String): Option[(Long, String)] = {
-    if (!n.startsWith(prefix)) None
-    else {
-      val rest = n.drop(prefix.length)
-      val dot = rest.indexOf('.')
-      if (dot < 0) None
-      else rest.take(dot).toLongOption.map(ts => (ts, rest.substring(dot + 1)))
-    }
-  }
-
   private def fs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def pairs(spark: SparkSession, dir: String) =
+    new MarkerLog.BatchLog(fs(spark, dir), new Path(dir), "SigIndex", "batch-")
+
+  /** The decision ledger: `decled-<gen>/`, newest `_decled.` marker wins. */
+  private def ledger(spark: SparkSession, dir: String) =
+    new MarkerLog.VersionPointer(fs(spark, dir), new Path(dir), DecLedgerPrefix, "decled-")
 
   /** Parquet bloom on the bucket value — sized like the store's adaptive
     * blooms: small micro-batch files get small bitsets, compacted row
@@ -77,134 +53,45 @@ object SigIndex {
 
   /** Append `sigs` (doc_id, bv) under batch name `name` (any unique
     * token; a streaming caller passes `b<batchId>` for replay
-    * detection). Returns false when a marker for `name` already exists —
-    * the batch already landed, nothing is written.
+    * detection). Returns false when `name` already landed (live or
+    * folded) — nothing is written.
     *
     * WRITER-SEQUENCE GUARD: batches are contractually SEQUENTIAL per
     * index (the foreachBatch shape) — two writers racing the same index
     * would each dedup against a state missing the other's batch and
-    * silently keep one copy of a pair duplicated across them. The
-    * contract is now ENFORCED, not just documented: every append claims
-    * the next monotonic `_slot.<seq>` with a create-no-overwrite, so a
-    * second writer whose claim lands on an already-taken slot fails loud
-    * ([[ConcurrentWriterException]]) instead of splitting survivors; its
-    * batch directory is an unmarked orphan the next [[compact]] sweeps.
-    * A claim without a published marker (a crashed append) consumes the
-    * slot harmlessly — the next writer claims the successor. */
+    * silently keep one copy of a pair duplicated across them. Every
+    * append claims sequence slot `seq` (default: the next one), so a
+    * second writer fails loud instead of splitting survivors; its batch
+    * directory is an unmarked orphan the next [[compact]] sweeps. */
   def append(sigs: DataFrame, dir: String, name: String,
-             seq: Option[Long] = None): Boolean = {
-    val spark = sigs.sparkSession
-    val f = fs(spark, dir)
-    // a name already live OR already folded (_seen) must not re-land
-    if (contains(spark, dir, name)) return false
-    val next = seq.getOrElse(maxSlot(f, dir) + 1)
-    val out = new org.apache.hadoop.fs.Path(dir, s"batch-$name")
-    sigs.select("doc_id", "bv")
-      .write.options(bloomWriteOptions).mode("overwrite").parquet(out.toString)
-    Option(appendTestHook.getAndSet(null)).foreach(_.apply())
-    claimSlot(f, dir, next, name)
-    publish(f, dir, name)
-    true
-  }
+             seq: Option[Long] = None): Boolean =
+    pairs(sigs.sparkSession, dir).append(name, seq)(out =>
+      sigs.select("doc_id", "bv")
+        .write.options(bloomWriteOptions).mode("overwrite").parquet(out.toString))
 
-  /** Freeze the index's CURRENT state under `dir/snapshots/<name>/` —
-    * the admin-snapshot story ([[graft.sources.PointsStore.snapshot]])
-    * for the pipeline state: live batch directories hard-link (copy
-    * fallback); marker, `_seen` and `_slot` files are zero-byte names
-    * and are RE-CREATED from the capture listing (immune to a racing
-    * compact deleting an aged marker before the copy runs), so replay
-    * detection survives and a pipeline RESTORED onto the snapshot (it is
-    * a fully valid index directory) continues the sequential-writer
-    * ledger; `boiler-` decision sidecars ride along so line-dedup
-    * replays stay exactly-once against the snapshot.
-    * Readers of the original never see `snapshots/` (only `_live.`
-    * markers and `batch-` dirs are listed). Returns the snapshot name. */
+  /** Freeze the index's CURRENT state under `dir/snapshots/<name>/` — a
+    * fully valid index directory ([[MarkerLog.BatchLog.snapshotInto]]):
+    * replay detection survives, and a pipeline RESTORED onto the snapshot
+    * continues the sequential-writer ledger. `boiler-` decision sidecars
+    * and the decision ledger ride along so line-dedup replays stay
+    * exactly-once against the snapshot. Readers of the original never see
+    * `snapshots/`. Returns the snapshot name. */
   def snapshot(spark: SparkSession, dir: String): String = {
     val f = fs(spark, dir)
-    val name = SnapshotFiles.freshName()
-    val out = new org.apache.hadoop.fs.Path(dir, s"snapshots/$name")
-    f.mkdirs(out)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    def link(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
-      SnapshotFiles.link(spark, f, src, dst)
-    // ONE listing is the capture point: markers AND directories both come
-    // from it, so an append racing the snapshot is fully in or fully out,
-    // and a compact racing it cannot leave marker-less batch dirs (the
-    // fold marker and the aged markers it retires come from the same
-    // point-in-time view; retired DIRECTORIES outlive the race by the
-    // vacuum grace window, so links never dangle for a snapshot that
-    // completes within it)
-    val entries = f.listStatus(root).toSeq
-    val live = entries.map(_.getPath.getName)
-      .flatMap(stamped(MarkerPrefix, _)).map(_._2).toSet
-    // DIRECTORIES first: a compact racing the snapshot can retire one
-    // between the capture listing and the copy (grace-deleted decision
-    // sidecar, superseded ledger, aged batch under a zero/short grace) —
-    // a vanished source is skipped, and a vanished BATCH suppresses its
-    // marker below so the snapshot never claims a landed batch whose data
-    // it could not capture
-    val vanished = scala.collection.mutable.Set[String]()
-    entries.foreach { st =>
+    val name = MarkerLog.freshName()
+    val out = new Path(dir, s"snapshots/$name")
+    val cap = pairs(spark, dir).snapshotInto(out)
+    cap.entries.foreach { st =>
       val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith("batch-") &&
-          live.contains(n.drop("batch-".length))) {
-        if (!linkDirTolerant(f, st.getPath, new org.apache.hadoop.fs.Path(out, n), link))
-          vanished += n.drop("batch-".length)
-      }
-      else if (st.isDirectory &&
-          (n.startsWith(DecisionPrefix) || n.startsWith("decled-"))) {
-        // line-dedup decision sidecars and their fold ledger
-        // ([[Curation.dedupLinesIncremental]]) ride along: a batch
-        // replayed against the restored snapshot rewrites from its
-        // frozen decision, the exactly-once contract. A LEDGER dir that
-        // vanished mid-copy must also suppress its `_decled.` marker
-        // below — a restored currentLedger pointing at a missing
-        // directory would crash every replay's ledger fallback.
-        if (!linkDirTolerant(f, st.getPath, new org.apache.hadoop.fs.Path(out, n), link)
-            && n.startsWith("decled-"))
-          vanished += n
+      if (st.isDirectory && n.startsWith(DecisionPrefix))
+        MarkerLog.linkTreeTolerant(f, st.getPath, new Path(out, n))
+      else if (st.isFile) MarkerLog.stamped(DecFoldPrefix, n).foreach { case (ts, b) =>
+        MarkerLog.touchMarker(f, out, DecFoldPrefix, b, ts)
       }
     }
-    entries.foreach { st =>
-      val n = st.getPath.getName
-      val wanted =
-        stamped(MarkerPrefix, n).exists(m =>
-          live.contains(m._2) && !vanished.contains(m._2)) ||
-          n.startsWith(SeenPrefix) || n.startsWith(SlotPrefix) ||
-          n.startsWith(DecFoldPrefix) ||
-          (n.startsWith(DecLedgerPrefix) && stamped(DecLedgerPrefix, n)
-            .exists(m => !vanished.contains(s"decled-${m._2}")))
-      if (st.isFile && wanted)
-        // marker/seen/slot files are ZERO-BYTE names: re-create them from
-        // the captured listing instead of linking — a compact racing the
-        // snapshot deletes aged markers immediately at fold (only
-        // DIRECTORIES get the reader grace window), so the source can
-        // vanish between the capture listing and a link/copy
-        f.create(new org.apache.hadoop.fs.Path(out, n), false).close()
-    }
+    ledger(spark, dir).snapshotInto(out, cap.entries)
     name
   }
-
-  /** Link a directory's files into the snapshot, TOLERATING a source that
-    * a racing compact retired between the capture listing and this copy:
-    * a vanished directory was retired, hence not needed for a consistent
-    * snapshot — skip it (removing any partial copy) rather than failing
-    * the whole snapshot mid-copy. Returns false when the source
-    * vanished. */
-  private def linkDirTolerant(f: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path,
-      link: (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path) => Unit): Boolean =
-    try {
-      val files = f.listStatus(src).toSeq.filter(_.isFile)
-      f.mkdirs(dst)
-      files.foreach(p =>
-        link(p.getPath, new org.apache.hadoop.fs.Path(dst, p.getPath.getName)))
-      true
-    } catch {
-      case _: java.io.FileNotFoundException =>
-        f.delete(dst, true) // no partial copy survives a vanished source
-        false
-    }
 
   /** The index rows colliding with a batch's bucket set — the shared
     * scan-prune discipline of every incremental consumer: the batch's
@@ -236,87 +123,16 @@ object SigIndex {
     * uncoordinated writers, not a lock; sequential dispatch (the
     * `foreachBatch` shape) remains the contract. */
   def nextAppendSeq(spark: SparkSession, dir: String): Long =
-    maxSlot(fs(spark, dir), dir) + 1
-
-  /** A second writer raced this index: the sequence slot this append
-    * computed was claimed by someone else first. */
-  final class ConcurrentWriterException(dir: String, seq: Long)
-    extends IllegalStateException(
-      s"SigIndex at $dir: batch sequence slot $seq was claimed by a " +
-        "concurrent writer — appends must be sequential per index; this " +
-        "batch was NOT appended (its directory is an unmarked orphan)")
-
-  private val SlotPrefix = "_slot."
-
-  private def maxSlot(f: org.apache.hadoop.fs.FileSystem, dir: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    if (!f.exists(root)) return -1L
-    f.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(SlotPrefix))
-      .flatMap(_.drop(SlotPrefix.length).toLongOption)
-      .foldLeft(-1L)(math.max)
-  }
-
-  private def claimSlot(f: org.apache.hadoop.fs.FileSystem, dir: String,
-                        seq: Long, name: String): Unit = {
-    f.mkdirs(new org.apache.hadoop.fs.Path(dir))
-    val slot = new org.apache.hadoop.fs.Path(dir, s"$SlotPrefix$seq")
-    try f.create(slot, false).close()
-    catch {
-      // only an actually-taken slot is a contract violation; a transient
-      // I/O failure must surface as what it is, not as a phantom racer
-      case e: java.io.IOException =>
-        if (f.exists(slot)) throw new ConcurrentWriterException(dir, seq)
-        else throw e
-    }
-  }
-
-  /** Test seam: runs ONCE between an append's slot read and its claim —
-    * the concurrent-writer window — then self-clears. */
-  private[pipeline] val appendTestHook =
-    new java.util.concurrent.atomic.AtomicReference[() => Unit](null)
-
-  private def publish(f: org.apache.hadoop.fs.FileSystem, dir: String,
-                      name: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(dir,
-      s"$MarkerPrefix${System.currentTimeMillis()}.$name")
-    f.create(marker, false).close()
-  }
+    pairs(spark, dir).nextSeq()
 
   /** Live batch names, via the markers. */
-  def liveNames(spark: SparkSession, dir: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val f = fs(spark, dir)
-    if (!f.exists(root)) return Nil
-    f.listStatus(root).toSeq
-      .map(_.getPath.getName)
-      .flatMap(stamped(MarkerPrefix, _)).map(_._2)
-      .distinct
-  }
-
-  /** The marker file for batch `name`, when one exists. */
-  private def markerOf(spark: SparkSession, dir: String,
-                       name: String): Option[org.apache.hadoop.fs.Path] = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val f = fs(spark, dir)
-    if (!f.exists(root)) return None
-    f.listStatus(root).toSeq.map(_.getPath)
-      .find(p => stamped(MarkerPrefix, p.getName).exists(_._2 == name))
-  }
+  def liveNames(spark: SparkSession, dir: String): Seq[String] =
+    pairs(spark, dir).live
 
   /** Whether batch `name` has already landed: its `_live` marker exists,
     * or a `_seen` record says a compaction folded it. */
   def contains(spark: SparkSession, dir: String, name: String): Boolean =
-    markerOf(spark, dir, name).isDefined || seen(spark, dir, name)
-
-  private val SeenPrefix = "_seen."
-
-  private def seen(spark: SparkSession, dir: String, name: String): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val f = fs(spark, dir)
-    f.exists(root) && f.listStatus(root).exists(s =>
-      stamped(SeenPrefix, s.getPath.getName).exists(_._2 == name))
-  }
+    pairs(spark, dir).contains(name)
 
   /** The rows one batch appended — a replayed streaming batch derives
     * its survivor set from exactly these (the appended sigs ARE the
@@ -324,19 +140,22 @@ object SigIndex {
     * (never landed, or a compaction folded its rows into the combined
     * directory). */
   def readBatch(spark: SparkSession, dir: String,
-                name: String): Option[DataFrame] =
-    markerOf(spark, dir, name).map(_ =>
-      spark.read.schema(schema).parquet(s"$dir/batch-$name"))
+                name: String): Option[DataFrame] = {
+    val log = pairs(spark, dir)
+    if (!log.isLive(name)) None
+    else Some(spark.read.schema(schema).parquet(log.batchPath(name).toString))
+  }
 
   /** The live index relation — the union of marker-named directories;
     * empty (with schema) when nothing has landed. */
   def read(spark: SparkSession, dir: String): DataFrame = {
-    val names = liveNames(spark, dir)
+    val log = pairs(spark, dir)
+    val names = log.live
     if (names.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else
       spark.read.schema(schema)
-        .parquet(names.map(n => s"$dir/batch-$n"): _*)
+        .parquet(names.map(n => log.batchPath(n).toString): _*)
   }
 
   // ---- decision sidecars ---------------------------------------------------
@@ -347,7 +166,7 @@ object SigIndex {
   // long-running stream would accumulate one directory per batch forever
   // — so [[compact]] folds sidecars whose batch retired longer than
   // `decisionRetentionMs` ago into ONE ledger directory (`decled-<gen>/`,
-  // atomic `_decled.` marker flip, newest wins), and replay transparently
+  // a [[MarkerLog.VersionPointer]] flip), and replay transparently
   // falls back to the ledger: exactly-once survives the fold, directory
   // count stays bounded (recent sidecars + one ledger generation).
 
@@ -359,14 +178,10 @@ object SigIndex {
   def decisionPath(dir: String, name: String): String =
     s"$dir/$DecisionPrefix$name"
 
-  /** The current decision-ledger directory, by newest `_decled` marker. */
-  private def currentLedger(f: org.apache.hadoop.fs.FileSystem,
-                            dir: String): Option[String] = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    if (!f.exists(root)) return None
-    val gens = f.listStatus(root).toSeq.map(_.getPath.getName)
-      .flatMap(stamped(DecLedgerPrefix, _))
-    if (gens.isEmpty) None else Some(s"$dir/decled-${gens.max._2}")
+  /** The current decision-ledger directory. */
+  private def currentLedger(spark: SparkSession, dir: String): Option[String] = {
+    val led = ledger(spark, dir)
+    led.current.map(g => led.versionPath(g).toString)
   }
 
   /** Batch `name`'s frozen decision values: from its sidecar while the
@@ -379,10 +194,10 @@ object SigIndex {
   def readDecision(spark: SparkSession, dir: String,
                    name: String): Option[Array[Long]] = {
     val f = fs(spark, dir)
-    val side = new org.apache.hadoop.fs.Path(decisionPath(dir, name))
+    val side = new Path(decisionPath(dir, name))
     if (f.exists(side))
       Some(spark.read.parquet(side.toString).collect().map(_.getLong(0)))
-    else currentLedger(f, dir).flatMap { led =>
+    else currentLedger(spark, dir).flatMap { led =>
       // every folded sidecar contributed a NULL-bv sentinel row, so a
       // batch with an EMPTY decision set is still distinguishable from a
       // batch that never recorded one; a horizon-expired batch keeps ONE
@@ -420,17 +235,12 @@ object SigIndex {
                                    graceMs: Long, retentionMs: Long,
                                    horizonMs: Long): Unit = {
     val f = fs(spark, dir)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    if (!f.exists(root)) return
+    val root = new Path(dir)
     val now = System.currentTimeMillis()
-    val entries = f.listStatus(root).toSeq
-    val names = entries.map(_.getPath.getName)
-    val seenTs: Map[String, Long] = names.flatMap(stamped(SeenPrefix, _))
-      .groupBy(_._2).map { case (n, xs) => n -> xs.map(_._1).min }
-    val decFolded: Map[String, Long] = names.flatMap(stamped(DecFoldPrefix, _))
-      .groupBy(_._2).map { case (n, xs) => n -> xs.map(_._1).min }
-    val sidecars = names.filter(_.startsWith(DecisionPrefix))
-      .map(_.drop(DecisionPrefix.length))
+    val seenTs = pairs(spark, dir).seenTimes
+    val decFolded = MarkerLog.firstStamps(f, root, DecFoldPrefix)
+    val sidecars = f.listStatus(root).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith(DecisionPrefix)).map(_.drop(DecisionPrefix.length))
     val eligible = sidecars.filter(n => !decFolded.contains(n) &&
       seenTs.get(n).exists(_ <= now - retentionMs))
     // ledger names past the replay horizon collapse to tombstones (the
@@ -440,7 +250,7 @@ object SigIndex {
     val horizonCut = now - horizonMs
     val expired: Seq[String] =
       seenTs.filter(_._2 <= horizonCut).keys.toSeq.sorted
-    val priorLedger = currentLedger(f, dir).map { p =>
+    val priorLedger = currentLedger(spark, dir).map { p =>
       val raw = spark.read.parquet(p)
       val d = if (raw.columns.contains("exp")) raw // pre-horizon ledgers
         else raw.withColumn("exp", lit(false))
@@ -475,59 +285,26 @@ object SigIndex {
       // and the per-sidecar _decfold markers re-folds the same sidecars):
       // the decision SET shape survives the replay
       val all = all1.dropDuplicates("name", "bv", "exp")
-      val gen = SnapshotFiles.freshName()
-      all.repartition(1).write.mode("overwrite").parquet(s"$dir/decled-$gen")
-      f.create(new org.apache.hadoop.fs.Path(root,
-        s"$DecLedgerPrefix${System.currentTimeMillis()}.$gen"), false).close()
-      eligible.foreach { n =>
-        f.create(new org.apache.hadoop.fs.Path(root,
-          s"$DecFoldPrefix${System.currentTimeMillis()}.$n"), false).close()
-      }
+      ledger(spark, dir).flip(MarkerLog.freshName())(out =>
+        all.repartition(1).write.mode("overwrite").parquet(out.toString))
+      eligible.foreach(MarkerLog.touchMarker(f, root, DecFoldPrefix, _))
     }
     // grace-delayed sidecar deletion: a replay that resolved the sidecar
-    // before the fold keeps its files for the reader window. Re-list so
-    // markers created by THIS pass's fold age from a fresh clock (at
+    // before the fold keeps its files for the reader window. Re-read the
+    // markers so those THIS pass's fold created age from a fresh clock (at
     // grace 0 the fold and the sweep land in one maintenance tick).
     val now2 = System.currentTimeMillis()
-    val names2 = f.listStatus(root).toSeq.map(_.getPath.getName)
-    val decFolded2: Map[String, Long] = names2.flatMap(stamped(DecFoldPrefix, _))
-      .groupBy(_._2).map { case (n, xs) => n -> xs.map(_._1).min }
-    decFolded2.filter(_._2 <= now2 - graceMs).foreach { case (n, _) =>
-      f.delete(new org.apache.hadoop.fs.Path(decisionPath(dir, n)), true)
-      names2.filter(m => stamped(DecFoldPrefix, m).exists(_._2 == n)).foreach(m =>
-        f.delete(new org.apache.hadoop.fs.Path(root, m), false))
-    }
-    // superseded ledger generations vacuum once a strictly newer marker
-    // is itself older than the grace window; marker-LESS ledger dirs (a
-    // crash between the parquet write and the marker create) are orphans
-    // — correctly invisible to readers — swept once the DIRECTORY is
-    // older than the grace window (an in-flight fold's dir is younger)
-    val ledgers = f.listStatus(root).toSeq.map(_.getPath.getName)
-      .flatMap(stamped(DecLedgerPrefix, _)).sorted
-    val markedGens = ledgers.map(_._2).toSet
-    ledgers.zipWithIndex.foreach { case ((_, g), i) =>
-      val supersededLongEnough =
-        ledgers.drop(i + 1).exists { case (ts, _) => now2 - ts >= graceMs }
-      if (supersededLongEnough) {
-        f.delete(new org.apache.hadoop.fs.Path(dir, s"decled-$g"), true)
-        f.listStatus(root).toSeq.map(_.getPath.getName)
-          .filter(m => stamped(DecLedgerPrefix, m).exists(_._2 == g))
-          .foreach(m => f.delete(new org.apache.hadoop.fs.Path(root, m), false))
+    MarkerLog.firstStamps(f, root, DecFoldPrefix)
+      .filter(_._2 <= now2 - graceMs).foreach { case (n, _) =>
+        f.delete(new Path(decisionPath(dir, n)), true)
+        MarkerLog.dropMarkers(f, root, DecFoldPrefix, n)
       }
-    }
-    f.listStatus(root).toSeq.foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith("decled-") &&
-          !markedGens.contains(n.drop("decled-".length)) &&
-          st.getModificationTime <= now2 - graceMs)
-        f.delete(st.getPath, true)
-    }
+    ledger(spark, dir).vacuum(graceMs)
   }
 
-  /** Fold AGED live directories into one and retire the originals. The
-    * folded marker publishes FIRST, so a concurrent reader sees at worst
-    * duplicated rows (set semantics downstream make that harmless), never
-    * a gap; orphaned directories from crashed appends are swept too.
+  /** Fold AGED live directories into one and retire the originals
+    * ([[MarkerLog.BatchLog.compact]]: publish-before-retire, slot-ledger
+    * trim, grace vacuum of retired and orphaned directories).
     *
     * `graceMs` guards the streaming replay contract: only batches whose
     * marker is older than the grace window fold, so a replayed
@@ -536,8 +313,7 @@ object SigIndex {
     * after the grace window means the stream rolled back past a
     * long-committed checkpoint, and the folded batch is recorded in a
     * `_seen.<ts>.<name>` marker so the caller can fail loud instead of
-    * double-appending. The same grace discipline as the points store's
-    * compaction vacuum.
+    * double-appending.
     *
     * `decisionRetentionMs` bounds the DECISION-SIDECAR lifecycle
     * ([[decisionPath]]): sidecars of batches retired longer than the
@@ -554,81 +330,18 @@ object SigIndex {
               graceMs: Long = 15 * 60 * 1000L,
               decisionRetentionMs: Long = 24 * 3600 * 1000L,
               decisionReplayHorizonMs: Long = 7 * 24 * 3600 * 1000L): Unit = {
-    val f = fs(spark, dir)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    if (!f.exists(root)) return
-    compactPairs(spark, f, root, dir, graceMs)
+    if (!fs(spark, dir).exists(new Path(dir))) return
+    val log = pairs(spark, dir)
+    log.compact(graceMs) { (aged, foldName) =>
+      spark.read.schema(schema)
+        .parquet(aged.map(n => log.batchPath(n).toString): _*).distinct()
+        .write.options(bloomWriteOptions).mode("overwrite")
+        .parquet(log.batchPath(foldName).toString)
+      true
+    }
     // AFTER the pair fold: the `_seen` records it just wrote start the
     // decision-retention clock for the folded batches' sidecars
     foldDecisionSidecars(spark, dir, graceMs, decisionRetentionMs,
       decisionReplayHorizonMs)
-  }
-
-  private def compactPairs(spark: SparkSession,
-                           f: org.apache.hadoop.fs.FileSystem,
-                           root: org.apache.hadoop.fs.Path,
-                           dir: String, graceMs: Long): Unit = {
-    val cutoff = System.currentTimeMillis() - graceMs
-    // (publish ts, name) of every live marker
-    val aged = f.listStatus(root).toSeq
-      .map(_.getPath.getName)
-      .flatMap(stamped(MarkerPrefix, _))
-      .filter(_._1 <= cutoff)
-      .map(_._2).distinct
-    if (aged.length <= 1) return
-    val name = s"compact-${java.util.UUID.randomUUID().toString.take(8)}"
-    spark.read.schema(schema)
-      .parquet(aged.map(n => s"$dir/batch-$n"): _*).distinct()
-      .write.options(bloomWriteOptions).mode("overwrite")
-      .parquet(s"$dir/batch-$name")
-    publish(f, dir, name)
-    // record the folded names (replay detection survives the fold), then
-    // retire markers (NEW readers stop listing the old dirs). Data dirs
-    // are NOT deleted here — see the vacuum below.
-    aged.foreach { n =>
-      f.create(new org.apache.hadoop.fs.Path(dir,
-        s"$SeenPrefix${System.currentTimeMillis()}.$n"), false).close()
-    }
-    f.listStatus(root).toSeq.map(_.getPath).foreach { p =>
-      if (stamped(MarkerPrefix, p.getName).exists(m => aged.contains(m._2)))
-        f.delete(p, false)
-    }
-    // READER-GRACE vacuum (the points store's discipline): a retired
-    // directory is deleted only once its _seen record is older than
-    // graceMs — a reader that planned against the pre-fold live set
-    // (Spark scans lazily) keeps every file it references for the grace
-    // window. Unmarked orphans (crashed appends) sweep only when the
-    // DIRECTORY is older than graceMs, so an in-flight append (dir
-    // written, marker not yet published) is never deleted from under
-    // its publish.
-    val now = System.currentTimeMillis()
-    val seenTs: Map[String, Long] = f.listStatus(root).toSeq
-      .map(_.getPath.getName)
-      .flatMap(stamped(SeenPrefix, _))
-      .groupBy(_._2).map { case (n, xs) => n -> xs.map(_._1).min }
-    // sequence-slot ledger: only the MAX matters (the next append's
-    // predecessor) — fold the tail
-    val slots = f.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(SlotPrefix))
-      .flatMap(n => n.drop(SlotPrefix.length).toLongOption.map((_, n)))
-    if (slots.length > 1) {
-      val keep = slots.maxBy(_._1)._2
-      slots.filter(_._2 != keep).foreach { case (_, n) =>
-        f.delete(new org.apache.hadoop.fs.Path(dir, n), false)
-      }
-    }
-    val live = liveNames(spark, dir).toSet
-    f.listStatus(root).toSeq.foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("batch-")) {
-        val nm = n.drop("batch-".length)
-        if (!live.contains(nm)) {
-          val retiredPastGrace = seenTs.get(nm).exists(_ <= now - graceMs)
-          val orphanPastGrace =
-            !seenTs.contains(nm) && st.getModificationTime <= now - graceMs
-          if (retiredPastGrace || orphanPastGrace) f.delete(st.getPath, true)
-        }
-      }
-    }
   }
 }

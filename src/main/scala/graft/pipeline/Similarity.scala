@@ -625,8 +625,9 @@ object Similarity {
     *
     * State is tiny (≤ k × perCell rows) and flips atomically: each merge
     * writes a fresh `state-<gen>/` directory and publishes it with one
-    * `_state.<ts>.<gen>` marker create (newest wins); superseded state
-    * directories vacuum after `graceMs`. Scale shape: the heavy side is
+    * `_state.<ts>.<gen>` marker create (newest wins —
+    * [[graft.sources.MarkerLog.VersionPointer]]); superseded and unmarked
+    * state directories vacuum after `graceMs`. Scale shape: the heavy side is
     * the BATCH (one codegen'd assignment projection + one cell-keyed
     * window with WindowGroupLimit); the state side is quota-bounded.
     * Returns the updated kept set (vec_id, cell, rn). */
@@ -636,19 +637,10 @@ object Similarity {
                                  graceMs: Long = 15 * 60 * 1000L): DataFrame = {
     val spark = emb.sparkSession
     val root = new org.apache.hadoop.fs.Path(dir)
-    val f = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marks =
-      if (!f.exists(root)) Nil
-      else f.listStatus(root).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("_state."))
-        .flatMap { n =>
-          val rest = n.drop("_state.".length)
-          val dot = rest.indexOf('.')
-          if (dot < 0) None
-          else rest.take(dot).toLongOption.map(ts => (ts, rest.substring(dot + 1)))
-        }
-    val prev = marks.sorted.lastOption.map { case (_, g) =>
-      spark.read.parquet(s"$dir/state-$g")
+    val state = new graft.sources.MarkerLog.VersionPointer(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root, "_state.", "state-")
+    val prev = state.current.map { g =>
+      spark.read.parquet(state.versionPath(g).toString)
         .select(col("vec_id"), col("cell"), col("rk"))
     }
     val batch = emb
@@ -662,27 +654,9 @@ object Similarity {
     val kept = merged.withColumn("rn", row_number().over(w))
       .where(col("rn") <= perCell)
       .localCheckpoint() // one merge pass feeds the write AND the return
-    val gen = s"${System.currentTimeMillis()}-${java.lang.Long.toUnsignedString(System.nanoTime(), 36)}"
-    kept.write.mode("overwrite").parquet(s"$dir/state-$gen")
-    val publishedTs = System.currentTimeMillis()
-    f.create(new org.apache.hadoop.fs.Path(root,
-      s"_state.$publishedTs.$gen"), false).close()
-    // vacuum: a state is deletable once it has been SUPERSEDED for the
-    // reader grace window — i.e. some strictly newer marker (including
-    // the one just published) is itself older than graceMs (marker age
-    // bounds supersession age from below)
-    val now = System.currentTimeMillis()
-    val sorted = (marks :+ ((publishedTs, gen))).sorted
-    sorted.zipWithIndex.foreach { case ((_, g), i) =>
-      val supersededLongEnough =
-        sorted.drop(i + 1).exists { case (newerTs, _) => now - newerTs >= graceMs }
-      if (supersededLongEnough) {
-        f.delete(new org.apache.hadoop.fs.Path(root, s"state-$g"), true)
-        f.listStatus(root).toSeq.map(_.getPath.getName)
-          .filter(n => n.startsWith("_state.") && n.endsWith(s".$g"))
-          .foreach(n => f.delete(new org.apache.hadoop.fs.Path(root, n), false))
-      }
-    }
+    state.flip(graft.sources.MarkerLog.freshName())(out =>
+      kept.write.mode("overwrite").parquet(out.toString))
+    state.vacuum(graceMs)
     kept.select(col("vec_id"), col("cell"), col("rn"))
   }
 

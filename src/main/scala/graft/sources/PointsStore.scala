@@ -1302,7 +1302,7 @@ object PointsStore {
   def snapshot(spark: SparkSession, path: String): String = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val name = s"${System.currentTimeMillis()}-${java.lang.Long.toUnsignedString(System.nanoTime(), 36)}"
+    val name = MarkerLog.freshName()
     // the Prometheus admin-API contract places snapshots at
     // <data-dir>/snapshots/<name> (vendored api.go:1642-1676); readers
     // never touch it — every store path lists `date=` dirs explicitly
@@ -1319,19 +1319,8 @@ object PointsStore {
       // snapshot, which [[resolveTip]] treats as a root — still the tip
       val manifest = resolveTip(listManifests(fs, d.getPath))
         .map(e => new org.apache.hadoop.fs.Path(d.getPath, e.name))
-      for (f <- liveDayFiles(fs, d.getPath).map(new org.apache.hadoop.fs.Path(_)) ++ manifest) {
-        val dst = new org.apache.hadoop.fs.Path(out, f.getName)
-        val linked =
-          try {
-            java.nio.file.Files.createLink(
-              java.nio.file.Paths.get(dst.toUri.getPath),
-              java.nio.file.Paths.get(f.toUri.getPath))
-            true
-          } catch { case _: Throwable => false }
-        if (!linked)
-          org.apache.hadoop.fs.FileUtil.copy(fs, f, fs, dst, false,
-            spark.sparkContext.hadoopConfiguration)
-      }
+      for (f <- liveDayFiles(fs, d.getPath).map(new org.apache.hadoop.fs.Path(_)) ++ manifest)
+        MarkerLog.link(fs, f, new org.apache.hadoop.fs.Path(out, f.getName))
     }
     name
   }

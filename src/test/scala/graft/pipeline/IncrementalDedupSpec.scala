@@ -258,17 +258,17 @@ class IncrementalDedupSpec extends AnyFunSuite with SharedSpark {
     // the guard both appends would land and each could keep one copy of
     // a cross-batch duplicate pair.
     var racerRan = false
-    SigIndex.appendTestHook.set { () =>
+    graft.sources.MarkerLog.appendTestHook.set { () =>
       Dedup.incremental(df(Seq(
         20L -> "a racer document about glacial moraines and the stones they carry")),
         dir, name = "racer")
       racerRan = true
     }
-    val e = intercept[SigIndex.ConcurrentWriterException] {
+    val e = intercept[graft.sources.ConcurrentWriterException] {
       try Dedup.incremental(df(Seq(
         21L -> "writer A's document about river deltas and silt deposition")),
         dir, name = "wA").collect()
-      finally SigIndex.appendTestHook.set(null)
+      finally graft.sources.MarkerLog.appendTestHook.set(null)
     }
     assert(racerRan && e.getMessage.contains("concurrent writer"))
     // the loser's batch is an unmarked orphan: not visible, not 'landed'
@@ -306,7 +306,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SharedSpark {
     assert(Dedup.incremental(df(Seq(12L -> t3)), restored, name = "n4").count() == 0)
     // the slot ledger carried: a writer holding a PRE-restore sequence
     // fails loud instead of splitting survivors
-    intercept[SigIndex.ConcurrentWriterException] {
+    intercept[graft.sources.ConcurrentWriterException] {
       SigIndex.append(df(Seq(13L -> t3))
         .select(col("doc_id"), lit(1L).as("bv")), restored, "stale", seq = Some(0L))
     }

@@ -349,13 +349,13 @@ class IvfIndexSpec extends AnyFunSuite with SharedSpark {
     // without the guard both appends would land, each deduped against a
     // kept-set missing the other's survivors (the cross-batch split).
     var racerRan = false
-    IvfIndex.appendTestHook.set { () =>
+    graft.sources.MarkerLog.appendTestHook.set { () =>
       Similarity.semDeDupIncremental(vecDf(20L -> planeVec(120)), dir, "racer", 0.99)
       racerRan = true
     }
-    val e = intercept[IvfIndex.ConcurrentWriterException] {
+    val e = intercept[graft.sources.ConcurrentWriterException] {
       try Similarity.semDeDupIncremental(vecDf(21L -> planeVec(60)), dir, "wA", 0.99)
-      finally IvfIndex.appendTestHook.set(null)
+      finally graft.sources.MarkerLog.appendTestHook.set(null)
     }
     assert(racerRan && e.getMessage.contains("concurrent writer"))
     // the loser's batch is an unmarked orphan: not visible, not 'landed'
@@ -407,13 +407,13 @@ class IvfIndexSpec extends AnyFunSuite with SharedSpark {
     // the marker create: without the post-create re-check the marker
     // would land in the retired generation — append reports success,
     // new-generation readers never see the batch (a silent drop)
-    IvfIndex.preMarkerTestHook.set { () =>
+    graft.sources.MarkerLog.preMarkerTestHook.set { () =>
       IvfIndex.retrain(spark, dir, k = 8, iters = 1, trainLimit = 200)
     }
     val e = intercept[IllegalStateException] {
       try IvfIndex.append(
         emb.where(col("vec_id") >= 50 && col("vec_id") < 90), dir, "b1")
-      finally IvfIndex.preMarkerTestHook.set(null)
+      finally graft.sources.MarkerLog.preMarkerTestHook.set(null)
     }
     assert(e.getMessage.contains("raced a retrain"))
     // the marker was withdrawn: the batch is NOT landed in any generation
@@ -463,7 +463,7 @@ class IvfIndexSpec extends AnyFunSuite with SharedSpark {
       IvfIndex.read(spark, dir).count() + 10)
     // the slot ledger carried: a stale-seq writer (one that snapshotted
     // the PRE-restore state) fails loud instead of splitting survivors
-    intercept[IvfIndex.ConcurrentWriterException] {
+    intercept[graft.sources.ConcurrentWriterException] {
       IvfIndex.append(more, restored, "stale", seq = Some(0L))
     }
     // and the continued index answers exactly like a one-shot probe over
