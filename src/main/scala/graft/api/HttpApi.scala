@@ -574,7 +574,7 @@ final class HttpApi(spark: SparkSession, points: DataFrame,
     register("/api/v1/status/config", (ex: HttpExchange) => handle(ex)(_ =>
       s"""{"status":"success","data":{"yaml":${Json.str(configYaml())}}}"""))
     // GET /api/v1/status/walreplay (api.go:390): the parquet store has
-    // no WAL — appends are atomic-visible via the manifest discipline —
+    // no WAL — appends and rewrites are atomic-visible via the commit log —
     // so the honest answer is a completed zero-segment replay, the same
     // shape Prometheus reports once its WAL is done.
     register("/api/v1/status/walreplay", (ex: HttpExchange) => handle(ex)(_ =>

@@ -1035,31 +1035,31 @@ object IvfIndex {
     * generation's quantizer files, and the batch log's captured state —
     * [[MarkerLog.BatchLog.snapshotInto]]): search, append and retrain all
     * work against a restored snapshot. Readers of the original never list
-    * `snapshots/`. */
+    * `snapshots/`, and a crashed capture publishes none
+    * ([[MarkerLog.snapshot]]). */
   def snapshot(spark: SparkSession, dir: String): String = {
     val (gid, gp) = requireGen(spark, dir)
     val f = fs(spark, dir)
-    val name = MarkerLog.freshName()
-    val out = new Path(dir, s"snapshots/$name")
-    val ogp = new Path(out, s"gen-$gid")
-    val cap = batches(spark, gp).snapshotInto(ogp)
-    cap.entries.foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && (n == "centroids" || n == "codebooks" ||
-          n == "rotation" || n == "imicb"))
-        MarkerLog.linkTree(f, st.getPath, new Path(ogp, n))
-      else if (st.isFile && n.startsWith(HistPrefix) &&
-          cap.batches.contains(n.drop(HistPrefix.length)))
-        // histogram sidecars CARRY CONTENT (unlike the zero-byte marker
-        // names) — link them; a compact racing the snapshot can retire one
-        // between the capture listing and this copy, and the restored
-        // index then falls back to the per-batch repair scan, so a
-        // vanished source is skipped, not fatal
-        try MarkerLog.link(f, st.getPath, new Path(ogp, n))
-        catch { case _: java.io.FileNotFoundException => () }
+    MarkerLog.snapshot(f, new Path(dir)) { out =>
+      val ogp = new Path(out, s"gen-$gid")
+      val cap = batches(spark, gp).snapshotInto(ogp)
+      cap.entries.foreach { st =>
+        val n = st.getPath.getName
+        if (st.isDirectory && (n == "centroids" || n == "codebooks" ||
+            n == "rotation" || n == "imicb"))
+          MarkerLog.linkTree(f, st.getPath, new Path(ogp, n))
+        else if (st.isFile && n.startsWith(HistPrefix) &&
+            cap.batches.contains(n.drop(HistPrefix.length)))
+          // histogram sidecars CARRY CONTENT (unlike the zero-byte marker
+          // names) — link them; a compact racing the snapshot can retire one
+          // between the capture listing and this copy, and the restored
+          // index then falls back to the per-batch repair scan, so a
+          // vanished source is skipped, not fatal
+          try MarkerLog.link(f, st.getPath, new Path(ogp, n))
+          catch { case _: java.io.FileNotFoundException => () }
+      }
+      gens(spark, dir).markInto(out, gid.toString)
     }
-    gens(spark, dir).markInto(out, gid.toString)
-    name
   }
 
   /** Driver budget for [[compact]]'s duplicate-cid probe ([[SigIndex]]'s
@@ -1078,7 +1078,8 @@ object IvfIndex {
     * and vacuum it ([[MarkerLog.BatchLog.compact]]), then vacuum RETIRED
     * GENERATIONS superseded longer than the grace window ago and
     * unmarked `gen-` remnants of crashed retrains
-    * ([[MarkerLog.VersionPointer.vacuum]]). */
+    * ([[MarkerLog.VersionPointer.vacuum]]), and partial snapshots of
+    * crashed captures. */
   def compact(spark: SparkSession, dir: String,
               graceMs: Long = 15 * 60 * 1000L): Unit = {
     val (_, gp) = requireGen(spark, dir)
@@ -1161,7 +1162,8 @@ object IvfIndex {
           st.getModificationTime <= now - graceMs)
         f.delete(st.getPath, false)
     }
-    // retired generations, and remnants of crashed flips
+    // retired generations, remnants of crashed flips, partial snapshots
     gens(spark, dir).vacuum(graceMs)
+    MarkerLog.sweepSnapshots(f, new Path(dir), graceMs)
   }
 }

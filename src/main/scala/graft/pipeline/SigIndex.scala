@@ -75,22 +75,22 @@ object SigIndex {
     * continues the sequential-writer ledger. `boiler-` decision sidecars
     * and the decision ledger ride along so line-dedup replays stay
     * exactly-once against the snapshot. Readers of the original never see
-    * `snapshots/`. Returns the snapshot name. */
+    * `snapshots/`, and a crashed capture publishes none
+    * ([[MarkerLog.snapshot]]). Returns the snapshot name. */
   def snapshot(spark: SparkSession, dir: String): String = {
     val f = fs(spark, dir)
-    val name = MarkerLog.freshName()
-    val out = new Path(dir, s"snapshots/$name")
-    val cap = pairs(spark, dir).snapshotInto(out)
-    cap.entries.foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith(DecisionPrefix))
-        MarkerLog.linkTreeTolerant(f, st.getPath, new Path(out, n))
-      else if (st.isFile) MarkerLog.stamped(DecFoldPrefix, n).foreach { case (ts, b) =>
-        MarkerLog.touchMarker(f, out, DecFoldPrefix, b, ts)
+    MarkerLog.snapshot(f, new Path(dir)) { out =>
+      val cap = pairs(spark, dir).snapshotInto(out)
+      cap.entries.foreach { st =>
+        val n = st.getPath.getName
+        if (st.isDirectory && n.startsWith(DecisionPrefix))
+          MarkerLog.linkTreeTolerant(f, st.getPath, new Path(out, n))
+        else if (st.isFile) MarkerLog.stamped(DecFoldPrefix, n).foreach { case (ts, b) =>
+          MarkerLog.touchMarker(f, out, DecFoldPrefix, b, ts)
+        }
       }
+      ledger(spark, dir).snapshotInto(out, cap.entries)
     }
-    ledger(spark, dir).snapshotInto(out, cap.entries)
-    name
   }
 
   /** The index rows colliding with a batch's bucket set — the shared
@@ -304,7 +304,8 @@ object SigIndex {
 
   /** Fold AGED live directories into one and retire the originals
     * ([[MarkerLog.BatchLog.compact]]: publish-before-retire, slot-ledger
-    * trim, grace vacuum of retired and orphaned directories).
+    * trim, grace vacuum of retired and orphaned directories), and sweep
+    * the partial snapshots crashed captures left.
     *
     * `graceMs` guards the streaming replay contract: only batches whose
     * marker is older than the grace window fold, so a replayed
@@ -343,5 +344,6 @@ object SigIndex {
     // decision-retention clock for the folded batches' sidecars
     foldDecisionSidecars(spark, dir, graceMs, decisionRetentionMs,
       decisionReplayHorizonMs)
+    MarkerLog.sweepSnapshots(log.fs, log.root, graceMs)
   }
 }

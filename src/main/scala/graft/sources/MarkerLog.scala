@@ -22,7 +22,7 @@ final class ConcurrentWriterException(owner: String, dir: String, seq: Long)
   * Structured Streaming (SIGMOD 2018): a batch name that already has a
   * marker never lands twice.
   *
-  * Two shapes share the marker format, the grace window and the seam:
+  * Three shapes share the grace window and the seam:
   *
   *  - [[BatchLog]]: an append-only set of batch directories. `_live.<ts>.<n>`
   *    publishes batch `n`; `_slot.<seq>` claims make a racing second writer
@@ -34,13 +34,18 @@ final class ConcurrentWriterException(owner: String, dir: String, seq: Long)
   *  - [[VersionPointer]]: whole-state versions. The newest marker wins, a
   *    flip is one create, and a flip target no marker names is an orphan
   *    that is cleared before reuse.
+  *  - [[CommitLog]]: numbered commits `_commit.<n>` over one directory, the
+  *    offset log of Structured Streaming read the way Delta Lake reads its
+  *    table log: the highest number in one listing is the state, and commit
+  *    `n+1` is one [[createExclusive]], so of two writers that read tip `n`
+  *    exactly one publishes — the other learns it lost and re-reads.
   *
   * GRACE WINDOW: a reader plans against the live set lazily, so nothing it
   * may still scan is deleted early. A retired batch directory goes once its
-  * `_seen` record is older than the grace window, a superseded version once
-  * a NEWER marker is (the newer marker's age bounds the supersession age
-  * from below), and an unmarked directory once the directory itself is (an
-  * in-flight write is younger).
+  * `_seen` record is older than the grace window, a superseded version or
+  * commit once a NEWER one is (the newer one's age bounds the supersession
+  * age from below), and an unmarked directory once the directory itself is
+  * (an in-flight write is younger).
   *
   * Every file-system mutation passes [[step]] first — the one test seam. */
 private[graft] object MarkerLog {
@@ -93,7 +98,7 @@ private[graft] object MarkerLog {
 
   /** One file-system mutation the log is about to make: `op` is one of
     * write, claim, mark, withdraw, seen, retire, trim, sweep, clear, link,
-    * touch, mkdirs. */
+    * touch, mkdirs, stage, commit, unstage, move, publish. */
   final case class Step(op: String, path: Path)
 
   /** Test seam: sees every mutation BEFORE it runs; throwing from it is a
@@ -123,6 +128,59 @@ private[graft] object MarkerLog {
   private def touch(fs: FileSystem, p: Path, op: String = "touch"): Unit = step(op, p) {
     try fs.create(p, false).close()
     catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => () }
+  }
+
+  // ---- exclusive create -----------------------------------------------------
+
+  private def isLocal(fs: FileSystem): Boolean = fs.getUri.getScheme == "file"
+
+  private def nio(fs: FileSystem, p: Path): java.nio.file.Path =
+    java.nio.file.Paths.get(fs.makeQualified(p).toUri.getPath)
+
+  /** Marks a staged body: `.<target name>.stage-<uuid>`, hidden from every
+    * reader; [[CommitLog.vacuum]] sweeps the ones crashes leave. */
+  private val StageTag = ".stage-"
+
+  private def isStaged(name: String): Boolean = name.startsWith(".") && name.contains(StageTag)
+
+  /** Create `target` holding `body` unless it exists; true when this call
+    * created it. Exactly one of any number of racing callers wins — which
+    * Hadoop's `create(p, overwrite = false)` does NOT give on the local
+    * file system (its exists-check and open are two calls). Locally an
+    * empty body is one `O_EXCL` create, and a body is staged whole and then
+    * hard-linked to `target` (the link fails when `target` exists), so no
+    * reader ever opens a half-written target. Elsewhere the staged body is
+    * renamed onto `target`, a rename that refuses an existing destination
+    * (HDFS semantics). `op` names the publishing step. */
+  def createExclusive(fs: FileSystem, target: Path, body: Array[Byte], op: String): Boolean = {
+    def taken[A](f: => A): Boolean =
+      try { f; true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    val local = isLocal(fs)
+    if (local && body.isEmpty) step(op, target) {
+      fs.mkdirs(target.getParent)
+      taken(java.nio.file.Files.createFile(nio(fs, target)))
+    } else {
+      val staged = new Path(target.getParent,
+        s".${target.getName}$StageTag${java.util.UUID.randomUUID()}")
+      step("stage", staged) {
+        fs.mkdirs(target.getParent)
+        if (local) java.nio.file.Files.write(nio(fs, staged), body)
+        else {
+          val o = fs.create(staged, false)
+          try o.write(body) finally o.close()
+        }
+      }
+      val won = step(op, target) {
+        if (local) taken(java.nio.file.Files.createLink(nio(fs, target), nio(fs, staged)))
+        else fs.rename(staged, target) || {
+          if (fs.exists(target)) false
+          else throw new java.io.IOException(s"could not publish $staged as $target")
+        }
+      }
+      if (local || !won) step("unstage", staged)(fs.delete(staged, false))
+      won
+    }
   }
 
   // ---- snapshot plumbing --------------------------------------------------
@@ -172,6 +230,36 @@ private[graft] object MarkerLog {
     * directories came from, and the batch names whose data made it in. */
   final case class Capture(entries: Seq[FileStatus], batches: Set[String])
 
+  private val SnapshotsDir = "snapshots"
+
+  /** Take snapshot `name` of the store or index at `root` all-or-nothing:
+    * `capture` fills the hidden `snapshots/.<name>`, and one rename
+    * publishes it as `snapshots/<name>`. A crash leaves only the hidden
+    * directory, which no reader lists and [[sweepSnapshots]] removes.
+    * Returns the name. */
+  def snapshot(fs: FileSystem, root: Path, name: String = freshName())(
+      capture: Path => Unit): String = {
+    val staged = new Path(root, s"$SnapshotsDir/.$name")
+    val out = new Path(root, s"$SnapshotsDir/$name")
+    step("mkdirs", staged)(fs.mkdirs(staged))
+    capture(staged)
+    step("publish", out) {
+      if (!fs.rename(staged, out)) throw new java.io.IOException(s"could not publish $out")
+    }
+    name
+  }
+
+  /** Remove the hidden partial snapshots under `root` that crashed
+    * captures left, once older than `graceMs`. */
+  def sweepSnapshots(fs: FileSystem, root: Path, graceMs: Long): Unit = {
+    val now = System.currentTimeMillis()
+    listing(fs, new Path(root, SnapshotsDir)).foreach { st =>
+      if (st.isDirectory && st.getPath.getName.startsWith(".") &&
+          st.getModificationTime <= now - graceMs)
+        step("sweep", st.getPath)(fs.delete(st.getPath, true))
+    }
+  }
+
   // ---- batch log ----------------------------------------------------------
 
   /** An append-only log of batch directories `<dirPrefix><name>` in `root`,
@@ -210,21 +298,12 @@ private[graft] object MarkerLog {
     def write[A](name: String)(body: Path => A): A =
       step("write", batchPath(name))(body(batchPath(name)))
 
-    /** Claim slot `seq` with a create-no-overwrite: a slot someone else
+    /** Claim slot `seq` with one [[createExclusive]]: a slot someone else
       * took is a second writer ([[ConcurrentWriterException]]); a
       * transient I/O failure surfaces as what it is. */
-    def claim(seq: Long): Unit = {
-      val slot = new Path(root, s"$SlotPrefix$seq")
-      step("claim", slot) {
-        fs.mkdirs(root)
-        try fs.create(slot, false).close()
-        catch {
-          case e: java.io.IOException =>
-            if (fs.exists(slot)) throw new ConcurrentWriterException(owner, root.toString, seq)
-            else throw e
-        }
-      }
-    }
+    def claim(seq: Long): Unit =
+      if (!createExclusive(fs, new Path(root, s"$SlotPrefix$seq"), Array.emptyByteArray, "claim"))
+        throw new ConcurrentWriterException(owner, root.toString, seq)
 
     /** Publish batch `name`; `ts` is its publish time (a batch carried
       * across a generation flip keeps its original one). */
@@ -412,5 +491,71 @@ private[graft] object MarkerLog {
     /** Publish `name` as current in `out` (a snapshot's own pointer). */
     def markInto(out: Path, name: String): Unit =
       touchMarker(fs, out, markerPrefix, name)
+  }
+
+  // ---- commit log -----------------------------------------------------------
+
+  private val CommitPrefix = "_commit."
+
+  /** Commit `n` of a [[CommitLog]], published at `mtime`. */
+  final case class Commit(n: Long, path: Path, mtime: Long)
+
+  /** One listing of a [[CommitLog]]'s directory: its commits and every
+    * entry beside them. */
+  final case class CommitView(commits: Seq[Commit], entries: Seq[FileStatus]) {
+    /** The state: the highest-numbered commit. */
+    def tip: Option[Commit] = if (commits.isEmpty) None else Some(commits.maxBy(_.n))
+
+    /** The number the next commit takes. */
+    def next: Long = tip.fold(1L)(_.n + 1)
+  }
+
+  /** Numbered commits `_commit.<n>` in `dir`, each holding lines of text.
+    * A writer reads a [[CommitView]], does its work, and [[publish]]es the
+    * successor of the tip it read; when a racing writer took that number
+    * first, the publish fails and nothing forks. */
+  final class CommitLog(val fs: FileSystem, val dir: Path) {
+
+    def view(): CommitView = {
+      val es = try fs.listStatus(dir).toSeq
+               catch { case _: java.io.FileNotFoundException => Nil }
+      CommitView(es.flatMap { st =>
+        val n = st.getPath.getName
+        if (st.isFile && n.startsWith(CommitPrefix))
+          n.drop(CommitPrefix.length).toLongOption.map(Commit(_, st.getPath, st.getModificationTime))
+        else None
+      }, es)
+    }
+
+    /** The lines of commit file `p`. */
+    def read(p: Path): Seq[String] = {
+      val in = fs.open(p)
+      val text = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+                 finally in.close()
+      text.split("\n").toSeq.filter(_.nonEmpty)
+    }
+
+    /** Publish `lines` as the successor of `v`'s tip. False, publishing
+      * nothing, when another writer took that number first: `v` is stale. */
+    def publish(v: CommitView, lines: Seq[String]): Boolean =
+      createExclusive(fs, new Path(dir, s"$CommitPrefix${v.next}"),
+        lines.mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        "commit")
+
+    /** Delete commits superseded for `graceMs` (a newer commit is at least
+      * that old) and the staged bodies crashed publishes left. The tip
+      * never goes. A rewrite must finish within the grace window, as it
+      * must for its input files: the same clock retires them. */
+    def vacuum(v: CommitView, graceMs: Long): Unit = {
+      val now = System.currentTimeMillis()
+      v.commits.foreach { c =>
+        if (v.commits.exists(d => d.n > c.n && d.mtime <= now - graceMs))
+          step("retire", c.path)(fs.delete(c.path, false))
+      }
+      v.entries.foreach { st =>
+        if (st.isFile && isStaged(st.getPath.getName) && st.getModificationTime <= now - graceMs)
+          step("sweep", st.getPath)(fs.delete(st.getPath, false))
+      }
+    }
   }
 }

@@ -222,7 +222,7 @@ object PointsStore {
   private val StagePrefix = ".append-"
   private val StagedData = "data"
 
-  /** Staging dirs of appends running in this JVM: the compaction sweep
+  /** Staging dirs of appends and rewrites running in this JVM: the sweep
     * ([[sweepStages]]) never removes these, whatever its grace window. */
   private val activeStages = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -249,16 +249,20 @@ object PointsStore {
       .foreach(d => moveParts(d.getPath, new org.apache.hadoop.fs.Path(root, d.getPath.getName)))
   }
 
-  /** Remove staging dirs an append left behind (its process died before
-    * publishing): older than the grace window and not in flight in this
-    * JVM. An unpublished stage holds nothing a reader ever saw. */
+  /** Remove staging dirs an append or a rewrite left behind (its process
+    * died before publishing): older than the grace window and not in
+    * flight in this JVM. An unpublished stage holds nothing a reader ever
+    * saw. */
   private def sweepStages(fs: org.apache.hadoop.fs.FileSystem,
                           root: org.apache.hadoop.fs.Path,
                           now: Long, graceMs: Long): Unit =
     fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(StagePrefix) &&
-        now - s.getModificationTime >= graceMs && !activeStages.contains(s.getPath.getName))
-      .foreach(s => fs.delete(s.getPath, true))
+      .filter { s =>
+        val n = s.getPath.getName
+        s.isDirectory && (n.startsWith(StagePrefix) || n.startsWith(RewriteStagePrefix)) &&
+          now - s.getModificationTime >= graceMs && !activeStages.contains(n)
+      }
+      .foreach(s => MarkerLog.step("sweep", s.getPath)(fs.delete(s.getPath, true)))
 
   /** Keep the LAST row of each within-partition (date, sig, t) run — the
     * input is already clustered (date, name, sig, t, _sub), so duplicates
@@ -332,8 +336,8 @@ object PointsStore {
 
   /** The store's series dictionary (sig, name, _lc, lastDay), deduped
     * across append batches; None when the store predates the sidecar.
-    * Respects the `_dict` manifest ([[compact]] folds the sidecar into one
-    * deduped file with the same MVCC visibility flip the day partitions
+    * Respects the `_dict` commit log ([[compact]] folds the sidecar into
+    * one deduped file with the same MVCC visibility flip the day partitions
     * use) — and when exactly one live file remains (a compacted store with
     * no later appends), it is returned as-is: no dedup shuffle on the
     * query path. */
@@ -341,7 +345,7 @@ object PointsStore {
     val p = new org.apache.hadoop.fs.Path(s"$path/$DictDir")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return None
-    val live = liveDayFiles(fs, p)
+    val live = livePaths(fs, p)
     // driver-direct footer schema ([[sampleFooterSchema]]): a bare
     // spark.read.parquet pays a schema-inference JOB per dict read — one
     // per store-backed query (the dict rides every selector evaluation)
@@ -359,15 +363,15 @@ object PointsStore {
     * (no date predicate — `timestamp_millis` of the sentinels would
     * overflow the timestamp range).
     *
-    * Reads go through the per-day MANIFEST view ([[liveFiles]]): a
+    * Reads go through each day's tip commit ([[DirState.live]]): a
     * compacting writer never renames or deletes a file a planned reader
     * might hold — it adds its outputs under new names and atomically
-    * publishes a manifest flipping which names are live — so a reader
+    * publishes a commit flipping which names are live — so a reader
     * concurrent with compaction sees either the old file set or the new
     * one, both complete, never half of each. The date predicates are still
     * applied on the partition column, so the plan shows the same
     * PartitionFilters a path-based read had (and the driver-side day
-    * pruning in liveFiles already restricted the listing). */
+    * pruning already restricted the listing). */
   def read(spark: SparkSession, path: String,
            startMs: Long, endMs: Long, slackMs: Long = 0L,
            lww: Boolean = true): DataFrame = {
@@ -489,45 +493,47 @@ object PointsStore {
     normalizeStale(reader.schema(schema).parquet(files: _*))
   }
 
-  // ---- manifest-gated file visibility ----------------------------------
+  // ---- commit-gated file visibility --------------------------------------
   //
-  // Compaction output files carry the `compacted-` prefix and are visible
-  // ONLY when the day's newest `_manifest.<ts>` +lists them; plain append
-  // files (Spark `part-*`) are visible unless -listed. The manifest file
-  // is published with an atomic rename, so visibility flips as one unit:
-  // before the flip a reader sees the old live set (old files are still on
-  // disk), after it the compacted set — the reader-visible gap of the old
-  // rename-the-directory swap is gone. Dead files are vacuumed by a LATER
-  // compaction once the manifest that killed them is older than the grace
-  // window, so in-flight plans keep their files.
+  // Every day dir and the `_dict` sidecar is a [[MarkerLog.CommitLog]].
+  // Rewrite output files carry the `compacted-` prefix and are visible ONLY
+  // when the dir's tip commit +lists them; plain append files (Spark
+  // `part-*`) are visible unless -listed. A commit is one exclusive create,
+  // so visibility flips as one unit: before it a reader sees the old live
+  // set (old files are still on disk), after it the rewritten set. Dead
+  // files are vacuumed by a LATER compaction once the commit that killed
+  // them is older than the grace window, so in-flight plans keep their
+  // files.
+  //
+  // Stores written before the commit log hold `_manifest.<gen>` or chained
+  // `_manifest.<gen>_p_<parent>` files instead. A dir holding no commit
+  // resolves its manifest tip read-only ([[resolveTip]]); the first commit
+  // carries that tip's lists forward, and the manifests go once that commit
+  // is older than the grace window.
 
   private val CompactedPrefix = "compacted-"
   private val ManifestPrefix = "_manifest."
 
-  /** A rewrite lost the optimistic manifest check: between reading the
-    * live set and publishing, some other rewrite flipped the day's
-    * manifest. The staged outputs were discarded; the caller re-reads the
-    * (new) live set and retries. */
+  /** A rewrite lost the race for its commit: between reading the live set
+    * and publishing, some other rewrite committed to the same dir. The
+    * staged outputs were discarded; the caller re-reads the (new) live set
+    * and retries. */
   final class RewriteLostException(dir: String) extends RuntimeException(
-    s"concurrent rewrite published a newer manifest for $dir")
+    s"concurrent rewrite published a newer commit for $dir")
 
-  // Rewrites of ONE day dir must serialize: two concurrent rewrites each
-  // read a live set, and an unserialized publish race could undo the
-  // other's rewrite — if the loser was a deleteSeries, its deletion would
-  // be silently resurrected by a winner built from the pre-delete live
-  // set. Serve runs the maintenance-tick compaction concurrently with the
-  // admin delete_series route in one JVM, so a striped in-process mutex
-  // closes that deployment's race completely (cheaply — no namespace
-  // traffic); cross-process racers are handled by the chained-manifest
-  // protocol in [[publishRewrite]]/[[resolveTip]]: both publishes land as
-  // a visible namespace fork, resolution is deterministic, and the loser
-  // detects it post-rename and retries against the winner's live set.
+  // Rewrites of ONE dir serialize in-process: Serve runs the
+  // maintenance-tick compaction concurrently with the admin delete_series
+  // route in one JVM, and a striped mutex keeps the loser of that race
+  // from even staging its outputs. Cross-process racers both stage, and
+  // the numbered commit picks one: the other's create fails and it retries
+  // against the winner's live set, so a deleteSeries is never resurrected
+  // by a compaction built from the pre-delete set.
   private val rewriteStripes = Array.fill(64)(new Object)
   private def withDirLock[A](dir: org.apache.hadoop.fs.Path)(f: => A): A =
     rewriteStripes(math.floorMod(dir.toString.hashCode, 64)).synchronized(f)
 
   /** Run `attempt` (a read-live-then-publish rewrite of one dir),
-    * retrying when it loses the manifest CAS to a concurrent rewrite.
+    * retrying when it loses its commit to a concurrent rewrite.
     * Bounded: losing means SOMEONE ELSE made progress, so unbounded
     * livelock would need an unbounded stream of racing rewrites. */
   private def retryRewrite[A](dir: org.apache.hadoop.fs.Path,
@@ -547,82 +553,38 @@ object PointsStore {
   private def isHidden(name: String): Boolean =
     name.startsWith("_") || name.startsWith(".")
 
-  /** Unique generation id for one rewrite: wall-clock millis (orders
-    * generations and drives the grace window) plus a nanoTime uniquifier —
-    * two rewrites of the same dir within one millisecond (or clock-skewed
-    * writers) can no longer collide on manifest/output names. */
-  private def newGen(nowMs: Long): String =
-    s"$nowMs-${java.lang.Long.toUnsignedString(System.nanoTime(), 36)}"
-
-  /** Parse a manifest file name into its ordering stamp: (publish ms,
-    * full suffix — the tie-break within one millisecond). Returns None for
-    * stray `_manifest.*` files that don't start with a timestamp, which
-    * are simply ignored rather than breaking every read of the dir. */
-  private def manifestStamp(fileName: String): Option[(Long, String)] = {
-    val suffix = fileName.drop(ManifestPrefix.length)
-    val digits = suffix.takeWhile(_.isDigit)
-    if (digits.isEmpty || digits.length > 18) None
-    else Some((digits.toLong, suffix))
-  }
-
-  // ---- manifest chain resolution ---------------------------------------
-  //
-  // Manifest names CHAIN their parent generation:
-  // `_manifest.<gen>_p_<parentGen>` (parentGen = "root" for the first
-  // publish). The current manifest ("tip") is resolved by WALKING the
-  // chain, not by comparing timestamps — so two cross-process rewrites
-  // that both passed the pre-rename check and both renamed produce a
-  // visible FORK in the namespace (two manifests naming the same parent)
-  // instead of a silent last-stamp-wins overwrite. Fork resolution is
-  // deterministic (earliest rename wins, see [[resolveTip]]), every
-  // publisher re-resolves AFTER its rename ([[publishRewrite]]), and the
-  // loser throws [[RewriteLostException]] and retries against the
-  // winner's live set — a cross-process deleteSeries racing a compaction
-  // is DETECTED rather than resurrected. Pre-chain manifests
-  // (`_manifest.<gen>`) order by stamp as before; the first chained
-  // publish names the legacy tip as its parent.
+  /** One legacy manifest file: stamp ts, own generation, parent generation
+    * (None for the pre-chain `_manifest.<gen>` name), file name, and the
+    * file's modification time, which orders manifests by PUBLISH time (the
+    * staged manifest was renamed into place, which preserves it). */
+  private[sources] final case class MEnt(ts: Long, gen: String, parent: Option[String],
+                                name: String, mtime: Long)
 
   private val ParentSep = "_p_"
   private val RootToken = "root"
 
-  /** One parsed manifest file: stamp ts (grace ordering), own generation,
-    * parent generation (None = pre-chain legacy name), file name, and the
-    * file's modification time — set when the staged `.tmp` manifest was
-    * written, milliseconds before its rename, and preserved by the
-    * rename, so it orders manifests by PUBLISH time (stamps are taken
-    * before the rewrite's Spark write and can be minutes older). */
-  private[sources] final case class MEnt(ts: Long, gen: String, parent: Option[String],
-                                name: String, mtime: Long)
-
-  private def parseManifest(st: org.apache.hadoop.fs.FileStatus): Option[MEnt] = {
+  /** Parse a legacy manifest name; None for a stray `_manifest.*` file
+    * that does not start with a timestamp (ignored, not fatal). */
+  private def legacyManifest(st: org.apache.hadoop.fs.FileStatus): Option[MEnt] = {
     val name = st.getPath.getName
-    manifestStamp(name).map { case (ts, suffix) =>
-      val i = suffix.indexOf(ParentSep)
-      if (i < 0) MEnt(ts, suffix, None, name, st.getModificationTime)
-      else MEnt(ts, suffix.substring(0, i),
-        Some(suffix.substring(i + ParentSep.length)), name, st.getModificationTime)
-    }
+    val suffix = name.drop(ManifestPrefix.length)
+    val digits = suffix.takeWhile(_.isDigit)
+    val i = suffix.indexOf(ParentSep)
+    if (!name.startsWith(ManifestPrefix) || digits.isEmpty || digits.length > 18) None
+    else if (i < 0) Some(MEnt(digits.toLong, suffix, None, name, st.getModificationTime))
+    else Some(MEnt(digits.toLong, suffix.substring(0, i),
+      Some(suffix.substring(i + ParentSep.length)), name, st.getModificationTime))
   }
 
-  private[sources] def listManifests(fs: org.apache.hadoop.fs.FileSystem,
-                            day: org.apache.hadoop.fs.Path): Seq[MEnt] =
-    fs.listStatus(day).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith(ManifestPrefix))
-      .flatMap(parseManifest)
-
-  /** Resolve the dir's current manifest by walking the parent chain.
+  /** Resolve a legacy dir's current manifest by walking the parent chain.
     *
     * Start: the chained manifest whose parent is `root` or no longer
-    * present (vacuumed ancestors leave a single fragment —
-    * [[vacuum]] removes on-chain ancestors only when the namespace is
-    * fork-free, so fragments are unambiguous); else the newest legacy
-    * manifest (first chained publish named it as parent). At each step
-    * the child with the EARLIEST (mtime, name) wins a fork: mtime tracks
-    * rename order, so a racer that renamed after the winner — or any
-    * later would-be usurper — deterministically loses, and discovers it
-    * in its own post-rename re-resolution. Cycle-guarded (a cycle would
-    * need a forged name); falls back to stamp order if the walk cannot
-    * start. */
+    * present (a vacuumed ancestor leaves a single fragment head); else the
+    * newest pre-chain manifest (the first chained publish named it as
+    * parent). At each step the child with the EARLIEST (mtime, name) wins a
+    * fork: mtime tracks rename order, so a racer that renamed after the
+    * winner deterministically loses. Cycle-guarded (a cycle would need a
+    * forged name); falls back to stamp order if the walk cannot start. */
   private[sources] def resolveTip(ents: Seq[MEnt]): Option[MEnt] = {
     if (ents.isEmpty) return None
     val chained = ents.filter(_.parent.isDefined)
@@ -653,89 +615,104 @@ object PointsStore {
     }
   }
 
-  /** Generations on the tip chain: tip plus every present ancestor. */
-  private[sources] def chainGens(ents: Seq[MEnt], tip: MEnt): Set[String] = {
-    val byGen = ents.map(e => e.gen -> e).toMap
-    var cur = Option(tip)
-    val out = Set.newBuilder[String]
-    var steps = 0
-    while (cur.isDefined && steps <= ents.size) {
-      out += cur.get.gen
-      cur = cur.get.parent.filterNot(_ == RootToken).flatMap(byGen.get)
-      steps += 1
-    }
-    out.result()
-  }
+  /** One listing of a commit-managed dir: the commit view, the file holding
+    * the current lists (the tip commit, or the legacy manifest tip of a dir
+    * holding no commit) with its publish time, the +live and -dead lists,
+    * and the dir's data files. */
+  private final case class DirState(view: MarkerLog.CommitView,
+                                    tip: Option[org.apache.hadoop.fs.Path],
+                                    tipMtime: Option[Long],
+                                    plus: Set[String], minus: Set[String]) {
+    val files: Seq[org.apache.hadoop.fs.FileStatus] =
+      view.entries.filter(s => s.isFile && !isHidden(s.getPath.getName))
 
-  /** Current manifest of a day dir: (publish stamp, +live set, -dead set). */
-  private def newestManifest(fs: org.apache.hadoop.fs.FileSystem,
-                             day: org.apache.hadoop.fs.Path)
-      : Option[(Long, Set[String], Set[String])] = {
-    resolveTip(listManifests(fs, day)).map { tip =>
-      val in = fs.open(new org.apache.hadoop.fs.Path(day, tip.name))
-      val text = try {
-        val out = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
-        out.toString("UTF-8")
-      } finally in.close()
-      val lines = text.split("\n").filter(_.nonEmpty)
-      (tip.ts,
-        lines.filter(_.startsWith("+")).map(_.drop(1)).toSet,
-        lines.filter(_.startsWith("-")).map(_.drop(1)).toSet)
+    /** The files a reader may see: +listed `compacted-` outputs, plus
+      * append files not -listed. An unlisted `compacted-` file (a rewrite
+      * that crashed before its commit, or one mid-publish) is never
+      * visible. */
+    def live: Seq[org.apache.hadoop.fs.FileStatus] = files.filter { s =>
+      val n = s.getPath.getName
+      if (n.startsWith(CompactedPrefix)) plus.contains(n) else !minus.contains(n)
     }
   }
 
-  /** The unique FILE NAME of a dir's current manifest (None when no
-    * manifest was ever published) — the generation token the rewrite CAS
-    * in [[publishRewrite]] compares. */
-  private[sources] def newestManifestName(fs: org.apache.hadoop.fs.FileSystem,
-                                 day: org.apache.hadoop.fs.Path): Option[String] =
-    resolveTip(listManifests(fs, day)).map(_.name)
-
-  /** The files of one day a reader may see: manifest-+listed compacted
-    * outputs, plus append files not -listed. Unlisted `compacted-` files
-    * (a compaction that crashed before publishing, or one mid-publish) are
-    * never visible. */
-  private def liveDayFiles(fs: org.apache.hadoop.fs.FileSystem,
-                           day: org.apache.hadoop.fs.Path): Seq[String] =
-    liveDayFilesWithGen(fs, day)._1
-
-  /** [[liveDayFiles]] plus the generation token (newest manifest file
-    * name) the set was computed under — the pair a rewrite needs for its
-    * publish-time CAS. `newestManifest` re-lists internally; a publish
-    * landing between the two listings only makes the token OLDER than the
-    * set actually read, which fails the CAS conservatively (a retry, never
-    * a resurrect). */
-  private def liveDayFilesWithGen(fs: org.apache.hadoop.fs.FileSystem,
-                                  day: org.apache.hadoop.fs.Path)
-      : (Seq[String], Option[String]) = {
-    val gen = newestManifestName(fs, day)
-    val files = fs.listStatus(day).toSeq
-      .filter(s => s.isFile && !isHidden(s.getPath.getName))
-    val (plus, minus) = newestManifest(fs, day) match {
-      case Some((_, p, m)) => (p, m)
-      case None => (Set.empty[String], Set.empty[String])
-    }
-    (files.map(_.getPath).filter { p =>
-      val n = p.getName
-      if (n.startsWith(CompactedPrefix)) plus.contains(n)
-      else !minus.contains(n)
-    }.map(_.toString), gen)
+  private def dirState(fs: org.apache.hadoop.fs.FileSystem,
+                       dir: org.apache.hadoop.fs.Path): DirState = {
+    val log = new MarkerLog.CommitLog(fs, dir)
+    val view = log.view()
+    val tip = view.tip.map(c => (c.path, c.mtime)).orElse(
+      resolveTip(view.entries.filter(_.isFile).flatMap(legacyManifest))
+        .map(m => (new org.apache.hadoop.fs.Path(dir, m.name), m.mtime)))
+    val lines = tip.fold(Seq.empty[String])(t => log.read(t._1))
+    DirState(view, tip.map(_._1), tip.map(_._2),
+      lines.filter(_.startsWith("+")).map(_.drop(1)).toSet,
+      lines.filter(_.startsWith("-")).map(_.drop(1)).toSet)
   }
 
-  /** DataFrame over the manifest-visible files of the days intersecting
-    * [startMs-slackMs, endMs]; `basePath` keeps the `date` partition
+  private[sources] def livePaths(fs: org.apache.hadoop.fs.FileSystem,
+                        dir: org.apache.hadoop.fs.Path): Seq[String] =
+    dirState(fs, dir).live.map(_.getPath.toString)
+
+  /** The store's `date=` day dirs. */
+  private def dayDirs(fs: org.apache.hadoop.fs.FileSystem,
+                      root: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(root).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
+
+  /** The day dirs whose UTC day intersects [loMs, hiMs]; `Long.MinValue` /
+    * `Long.MaxValue` leave that side open. */
+  private def daysWithin(fs: org.apache.hadoop.fs.FileSystem,
+                         root: org.apache.hadoop.fs.Path,
+                         loMs: Long, hiMs: Long): Seq[org.apache.hadoop.fs.FileStatus] = {
+    def dayOf(ms: Long): java.time.LocalDate =
+      java.time.Instant.ofEpochMilli(ms).atZone(java.time.ZoneOffset.UTC).toLocalDate
+    val lo = if (loMs == Long.MinValue) None else Some(dayOf(loMs))
+    val hi = if (hiMs == Long.MaxValue) None else Some(dayOf(hiMs))
+    dayDirs(fs, root).filter { s =>
+      val d = java.time.LocalDate.parse(s.getPath.getName.stripPrefix("date="))
+      lo.forall(l => !d.isBefore(l)) && hi.forall(h => !d.isAfter(h))
+    }
+  }
+
+  /** Run `rewrite` on every day dir and return the days it rewrote. Days
+    * are independent rewrite units (separate dirs, separate commit logs),
+    * so they run CONCURRENTLY on a bounded pool: serial per-day rewrites
+    * would make wall-clock scale with the store's day count (a year of
+    * retention = hundreds of small sequential Spark jobs). One day runs
+    * inline — the common maintenance-tick shape, where the caller thread
+    * holds the stripe lock itself. Every day is awaited before the outcome
+    * is decided, so a failing day never strands another mid-publish, and
+    * the caller gets the first failing day's ORIGINAL exception, not the
+    * pool's ExecutionException wrapper. */
+  private def eachDay(days: Seq[org.apache.hadoop.fs.Path])(
+      rewrite: org.apache.hadoop.fs.Path => Option[String]): Seq[String] =
+    if (days.length <= 1) days.flatMap(rewrite)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(days.length, 8))
+      try {
+        val futures = days.map(d => pool.submit(
+          new java.util.concurrent.Callable[Option[String]] {
+            def call(): Option[String] = rewrite(d)
+          }))
+        val outcomes = futures.map(f =>
+          try Right(f.get())
+          catch {
+            case e: java.util.concurrent.ExecutionException =>
+              Left(Option(e.getCause).getOrElse(e))
+          })
+        outcomes.collectFirst { case Left(e) => e }.foreach(throw _)
+        outcomes.flatMap(_.toOption.flatten)
+      } finally pool.shutdown()
+    }
+
+  /** DataFrame over the commit-visible files of the days intersecting
+    * [startMs-slackMs, endMs] — `basePath` keeps the `date` partition
     * column derivable so callers' date predicates still show as
-    * PartitionFilters. */
-  private def readLive(spark: SparkSession, path: String,
-                       startMs: Long, endMs: Long, slackMs: Long): DataFrame =
-    readLiveInfo(spark, path, startMs, endMs, slackMs)._1
-
-  /** [[readLive]] plus the duplicate-possibility signal for the read-time
-    * LWW guard: a day's live set can hold (sig, t) duplicates only when it
+    * PartitionFilters — plus the duplicate-possibility signal for the
+    * read-time LWW guard: a day's live set can hold (sig, t) duplicates only when it
     * mixes at least one plain append file with any other file — all live
-    * `compacted-` files belong to ONE generation (the newest manifest
-    * +lists only its own rewrite's outputs) and that generation was
+    * `compacted-` files belong to ONE generation (the tip commit +lists
+    * only its own rewrite's outputs) and that generation was
     * globally deduped when written, while a lone append file cannot hold
     * duplicates either: one file is one batch task partition, and
     * [[append]] drops within-partition (sig, t) duplicates at write time
@@ -750,17 +727,9 @@ object PointsStore {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return (spark.read.parquet(path), false) // preserve error
-    def dayOf(ms: Long): java.time.LocalDate =
-      java.time.Instant.ofEpochMilli(ms).atZone(java.time.ZoneOffset.UTC).toLocalDate
-    val lo = if (startMs == Long.MinValue) None else Some(dayOf(startMs - slackMs))
-    val hi = if (endMs == Long.MaxValue) None else Some(dayOf(endMs))
-    val days = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
-      .filter { s =>
-        val d = java.time.LocalDate.parse(s.getPath.getName.stripPrefix("date="))
-        lo.forall(l => !d.isBefore(l)) && hi.forall(h => !d.isAfter(h))
-      }
-    val perDay = days.map(d => liveDayFiles(fs, d.getPath))
+    val days = daysWithin(fs, root,
+      if (startMs == Long.MinValue) startMs else startMs - slackMs, endMs)
+    val perDay = days.map(d => livePaths(fs, d.getPath))
     val mayDuplicate = perDay.exists { dayFiles =>
       dayFiles.length > 1 && dayFiles.exists(f =>
         !new org.apache.hadoop.fs.Path(f).getName.startsWith(CompactedPrefix))
@@ -771,9 +740,8 @@ object PointsStore {
       // range just missed) rather than scanning the root: the root may
       // hold a non-hidden `snapshots/` dir whose nested `date=` layers
       // would break partition discovery
-      val dayDirs = fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
-      val anyLive = dayDirs.iterator.map(d => liveDayFiles(fs, d.getPath))
+      val allDays = dayDirs(fs, root)
+      val anyLive = allDays.iterator.map(d => livePaths(fs, d.getPath))
         .find(_.nonEmpty).getOrElse(Nil)
       if (anyLive.nonEmpty)
         (readPointFiles(spark, anyLive, Some(path)).where(lit(false)), false)
@@ -783,7 +751,7 @@ object PointsStore {
         // under a date= dir — dead files share the live schema. NEVER
         // scan the root: it may hold the standard `snapshots/` tree,
         // whose nested date= layers break partition discovery.
-        val anyFile = dayDirs.iterator
+        val anyFile = allDays.iterator
           .flatMap(d => fs.listStatus(d.getPath).toSeq)
           .find(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
           .map(_.getPath.toString).toSeq
@@ -795,7 +763,8 @@ object PointsStore {
           // the plain-read error for a truly empty path
           val snapDay = Option(new org.apache.hadoop.fs.Path(root, "snapshots"))
             .filter(fs.exists(_))
-            .toSeq.flatMap(p => fs.listStatus(p).toSeq.filter(_.isDirectory))
+            .toSeq.flatMap(p => fs.listStatus(p).toSeq
+              .filter(s => s.isDirectory && !isHidden(s.getPath.getName)))
             .flatMap(sn => fs.listStatus(sn.getPath).toSeq
               .filter(d => d.isDirectory && d.getPath.getName.startsWith("date="))
               .map(d => (sn.getPath.toString, d.getPath.toString)))
@@ -853,17 +822,17 @@ object PointsStore {
     * reference's TSM compaction merges write-order segments into
     * series-ordered files for the same reason (persistence/store.go).
     *
-    * CONCURRENT-READER SAFE (MVCC via the day manifest): the rewrite
+    * CONCURRENT-READER SAFE (MVCC via the day's commit log): the rewrite
     * stages into a dot-prefixed temp dir, moves its outputs INTO the live
-    * day dir under `compacted-<ts>-` names (invisible until +listed), and
-    * flips visibility with ONE atomic manifest publish — replaced files
-    * are -listed, never renamed or deleted in place, so a reader planned
-    * against the old set keeps every file it references. Dead files and
-    * superseded manifests are vacuumed by a LATER compaction once the
-    * manifest that killed them is older than `graceMs` (any reader that
-    * old has finished); a crash before publish leaves only unlisted
-    * `compacted-` orphans, which readers never see and the orphan sweep
-    * removes. Returns the compacted partition paths. */
+    * day dir under `compacted-<gen>-` names (invisible until +listed), and
+    * flips visibility with ONE commit — replaced files are -listed, never
+    * renamed or deleted in place, so a reader planned against the old set
+    * keeps every file it references. Dead files and superseded commits are
+    * vacuumed by a LATER compaction once the commit that killed them is
+    * older than `graceMs` (any reader that old has finished); a crash
+    * before the commit leaves only unlisted `compacted-` orphans, which
+    * readers never see and the vacuum removes. Returns the compacted
+    * partition paths. */
   def compact(spark: SparkSession, path: String,
               targetBytes: Long = 128L * 1024 * 1024,
               onlyDay: Option[String] = None,
@@ -875,32 +844,21 @@ object PointsStore {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Nil
     sweepStages(fs, root, System.currentTimeMillis(), graceMs)
-    val days = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
+    MarkerLog.sweepSnapshots(fs, root, graceMs)
+    val days = dayDirs(fs, root)
       .filter(s => onlyDay.forall(d => s.getPath.getName == s"date=$d"))
-    val done = Seq.newBuilder[String]
-    // days are independent rewrite units (separate dirs, separate
-    // manifests): compact them CONCURRENTLY on a bounded pool — serial
-    // per-day rewrites would make compaction wall-clock scale with the
-    // store's day count (a year of retention = hundreds of small
-    // sequential Spark jobs), while concurrent days keep the cluster fed.
-    // Spark schedules jobs from multiple submitter threads natively; the
-    // uniquified generation ids keep output/manifest names collision-free.
-    def compactDay(st: org.apache.hadoop.fs.FileStatus): Option[String] = retryRewrite(st.getPath) {
-      val dayPath = st.getPath
-      val now = System.currentTimeMillis()
-      vacuum(fs, dayPath, now, graceMs)
+    val compacted = eachDay(days.map(_.getPath)) { dayPath => retryRewrite(dayPath) {
+      vacuum(fs, dayPath, graceMs)
       // ---- rewrite the current live set when it is fragmented
-      val (live, liveGen) = liveDayFilesWithGen(fs, dayPath)
+      val st = dirState(fs, dayPath)
+      val live = st.live
       if (live.length >= math.max(2, minFiles)) {
-        val liveBytes = live.map(f =>
-          fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
-        val nOut = math.max(1, (liveBytes / targetBytes).toInt)
+        val nOut = math.max(1, (live.map(_.getLen).sum / targetBytes).toInt)
         // reading the explicit live files keeps a racing appender's new
         // files out of this generation (they stay unlisted -> still live);
         // the normalized read makes the rewrite converge a mixed-layout
         // day to the uniform stale-carrying schema
-        val raw = readPointFiles(spark, live, None)
+        val raw = readPointFiles(spark, live.map(_.getPath.toString), None)
         // LAST-WRITE-WINS (sig, t) dedup, keeping the newest write stamp:
         // re-sent / replayed points collapse to one sample per (series, t)
         // — the guarantee Selectors.instant documents and the reference's
@@ -913,66 +871,35 @@ object PointsStore {
           .withColumn("_prevT", lag(col("t"), 1).over(w))
           .where(col("_prevT").isNull || col("_prevT") =!= col("t"))
           .drop("_prevT")
-        publishRewrite(fs, dayPath, live, now, liveGen, tmp =>
+        publishRewrite(fs, dayPath, st, tmp =>
           deduped
             .repartition(nOut)
             .sortWithinPartitions(col("name"), col("sig"), col("t"))
             .write.options(bloomWriteOptions)
             .mode(SaveMode.Overwrite).parquet(tmp.toString))
+        compactionsTotal.add(1L)
         Some(dayPath.toString)
       } else None
-    }
-    if (days.length == 1) {
-      // the common maintenance-tick shape (onlyDay / a hot single-day
-      // store): run inline — no executor churn, and the caller thread
-      // holds the stripe lock itself
-      compactDay(days.head).foreach { d => done += d; compactionsTotal.add(1L) }
-    } else if (days.nonEmpty) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(days.length, 8))
-      try {
-        val futures = days.map(st => pool.submit(
-          new java.util.concurrent.Callable[Option[String]] {
-            def call(): Option[String] = compactDay(st)
-          }))
-        // await EVERY day before deciding the outcome: a single failing day
-        // must not strand other days' rewrites mid-publish (each day is an
-        // independent MVCC unit — the completed ones are durable and
-        // correct), and the caller gets the ORIGINAL per-day exception, not
-        // the pool's ExecutionException wrapper.
-        val outcomes = futures.map(f =>
-          try Right(f.get())
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              Left(Option(e.getCause).getOrElse(e))
-          })
-        outcomes.foreach { case Right(d) =>
-          done ++= d; compactionsTotal.add(d.size.toLong)
-        case Left(_) => () }
-        outcomes.collectFirst { case Left(e) => e }.foreach(throw _)
-      } finally pool.shutdown()
-    }
+    }}
     // ---- fold the series-dictionary sidecar: rewrite the accumulated
-    // per-batch dict files into ONE deduped file (same MVCC manifest flip),
-    // so readDict on a compacted store is a single-file read — no
-    // per-query dedup shuffle, and the sidecar stops growing with append
-    // count (it scales with live series again).
+    // per-batch dict files into ONE deduped file (same MVCC commit), so
+    // readDict on a compacted store is a single-file read — no per-query
+    // dedup shuffle, and the sidecar stops growing with append count (it
+    // scales with live series again).
     val dictPath = new org.apache.hadoop.fs.Path(root, DictDir)
-    if (fs.exists(dictPath)) {
-      retryRewrite(dictPath) {
-        val now = System.currentTimeMillis()
-        vacuum(fs, dictPath, now, graceMs)
-        val (live, liveGen) = liveDayFilesWithGen(fs, dictPath)
-        if (live.length >= math.max(2, minFiles)) {
-          publishRewrite(fs, dictPath, live, now, liveGen, tmp =>
-            dedupDict(spark.read.parquet(live: _*))
-              .coalesce(1)
-              .write.mode(SaveMode.Overwrite).parquet(tmp.toString))
-          done += dictPath.toString
-        }
-      }
+    val dictFolded = if (!fs.exists(dictPath)) None else retryRewrite(dictPath) {
+      vacuum(fs, dictPath, graceMs)
+      val st = dirState(fs, dictPath)
+      val live = st.live.map(_.getPath.toString)
+      if (live.length >= math.max(2, minFiles)) {
+        publishRewrite(fs, dictPath, st, tmp =>
+          dedupDict(spark.read.parquet(live: _*))
+            .coalesce(1)
+            .write.mode(SaveMode.Overwrite).parquet(tmp.toString))
+        Some(dictPath.toString)
+      } else None
     }
-    done.result()
+    compacted ++ dictFolded
   }
 
   /** Automatic compaction policy: compact only when fragmentation crosses
@@ -980,7 +907,7 @@ object PointsStore {
     * sidecar). File COUNT is the trigger — not bytes — because the
     * documented fleet-scale bottleneck of foreachBatch ingest is the
     * per-file task + footer cost of thousands of micro-batch files, and
-    * count is readable from the manifest listing without opening anything.
+    * count is readable from one listing and the tip commit per dir.
     * Cheap when below threshold (one listing, no Spark job), so it is safe
     * to call on EVERY micro-batch; [[sink]] does exactly that, which keeps
     * per-day live-file count ≤ maxLiveFiles + batches-per-compaction
@@ -996,7 +923,7 @@ object PointsStore {
     val fragmented = fs.listStatus(root).toSeq.exists { s =>
       (s.isDirectory && s.getPath.getName.startsWith("date=") ||
         s.isDirectory && s.getPath.getName == DictDir) &&
-        liveDayFiles(fs, s.getPath).length >= threshold
+        dirState(fs, s.getPath).live.length >= threshold
     }
     if (fragmented) compact(spark, path, targetBytes, None, graceMs, threshold)
     else Nil
@@ -1015,178 +942,82 @@ object PointsStore {
       ()
     }
 
-  /** Vacuum one manifest-managed dir: the previous generation's dead
-    * files, superseded manifests, and never-published orphans, all past
-    * the grace window (any reader that planned against them has
-    * finished). */
+  /** Vacuum one commit-managed dir past the grace window (any reader that
+    * planned against what goes has finished): the tip's dead files and
+    * unpublished `compacted-` outputs once the tip is that old, superseded
+    * commits and staged commit bodies ([[MarkerLog.CommitLog.vacuum]]),
+    * and the legacy manifests once a commit is that old. */
   private def vacuum(fs: org.apache.hadoop.fs.FileSystem,
-                     dir: org.apache.hadoop.fs.Path,
-                     now: Long, graceMs: Long): Unit = {
-    newestManifest(fs, dir) match {
-      case Some((ts, plus, minus)) if now - ts >= graceMs =>
-        minus.foreach(n => fs.delete(new org.apache.hadoop.fs.Path(dir, n), false))
-        fs.listStatus(dir).toSeq
-          .filter(s => s.isFile && s.getPath.getName.startsWith(CompactedPrefix) &&
-            !plus.contains(s.getPath.getName) &&
-            now - s.getModificationTime >= graceMs)
-          .foreach(s => fs.delete(s.getPath, false))
-      case _ => ()
-    }
-    // superseded manifests: never the TIP (chain-resolved, not newest
-    // stamp); grace from MTIME — publish time — since a fork loser's
-    // stamp predates its rename by its rewrite's whole Spark write
-    val ents = listManifests(fs, dir)
-    resolveTip(ents).foreach { tip =>
-      val onChain = chainGens(ents, tip)
-      val offChain = ents.filter(e => !onChain.contains(e.gen))
-      // fork losers / usurped branches: a reader could have resolved one
-      // as tip only in the instant between the racing renames, so they
-      // age out on the same reader-grace as dead files
-      offChain.filter(e => now - e.mtime >= graceMs)
-        .foreach(e => fs.delete(new org.apache.hadoop.fs.Path(dir, e.name), false))
-      // on-chain ancestors: removed ONLY when the namespace is fork-free —
-      // deleting an ancestor while a fork loser remains could make the
-      // loser a parent-absent root and flip [[resolveTip]] — and only as
-      // a CONTIGUOUS OLDEST PREFIX of the chain: mtimes need not be
-      // monotone along it (a rename that lands as copy+delete can invert
-      // publish order), and deleting a MIDDLE ancestor would leave TWO
-      // parent-absent roots (the true oldest fragment and the hole's
-      // child), letting [[resolveTip]]'s earliest-mtime root selection
-      // flip the tip to a stale manifest and resurrect deleted data.
-      // Stopping at the first non-aged ancestor keeps every surviving
-      // manifest's parent present except the single fragment head.
-      if (offChain.isEmpty)
-        vacuumableAncestors(ents, tip, now, graceMs)
-          .foreach(e => fs.delete(new org.apache.hadoop.fs.Path(dir, e.name), false))
-    }
+                     dir: org.apache.hadoop.fs.Path, graceMs: Long): Unit = {
+    val now = System.currentTimeMillis()
+    val st = dirState(fs, dir)
+    def sweep(p: org.apache.hadoop.fs.Path): Unit =
+      MarkerLog.step("sweep", p)(fs.delete(p, false))
+    if (st.tipMtime.forall(_ <= now - graceMs))
+      st.files.foreach { f =>
+        val n = f.getPath.getName
+        if (st.minus.contains(n) || n.startsWith(CompactedPrefix) && !st.plus.contains(n) &&
+            f.getModificationTime <= now - graceMs) sweep(f.getPath)
+      }
+    new MarkerLog.CommitLog(fs, dir).vacuum(st.view, graceMs)
+    if (st.view.commits.exists(_.mtime <= now - graceMs))
+      st.view.entries.map(_.getPath)
+        .filter(p => p.getName.startsWith(ManifestPrefix) || p.getName.startsWith(s".$ManifestPrefix"))
+        .foreach(sweep)
   }
 
-  /** The on-chain ancestor manifests [[vacuum]] may delete: a CONTIGUOUS
-    * OLDEST PREFIX of grace-aged entries (see the rationale at the call
-    * site). Walks tip→parents, reverses to oldest-first, and stops at
-    * the first non-aged ancestor — so any non-aged entry shields every
-    * newer ancestor, and at most one parent-absent fragment head ever
-    * exists. */
-  private[sources] def vacuumableAncestors(ents: Seq[MEnt], tip: MEnt,
-                                           now: Long, graceMs: Long): Seq[MEnt] = {
-    val byGen = ents.map(e => e.gen -> e).toMap
-    val walk = scala.collection.mutable.ListBuffer[MEnt]()
-    var cur = Option(tip)
-    var steps = 0
-    while (cur.isDefined && steps <= ents.size) {
-      walk += cur.get
-      cur = cur.get.parent.filterNot(_ == RootToken).flatMap(byGen.get)
-      steps += 1
-    }
-    walk.toList.reverse // oldest ancestor first
-      .takeWhile(e => e.gen != tip.gen && now - e.mtime >= graceMs)
-  }
+  /** Staging dirs of day rewrites, beside the dir they rewrite; swept with
+    * the append stages ([[sweepStages]]). */
+  private val RewriteStagePrefix = ".compact-tmp-"
 
   /** Stage `writeTmp`'s output into `dir` under unique `compacted-<gen>-`
-    * names (invisible until +listed) and flip visibility with ONE atomic
-    * manifest publish: replaced files are -listed, never renamed or
-    * deleted in place, so a reader planned against the old set keeps every
-    * file it references. The generation id is uniquified ([[newGen]]) —
-    * concurrent or same-millisecond rewrites cannot collide on names.
+    * names (invisible until +listed) and publish the commit that flips
+    * visibility: replaced files are -listed, never renamed or deleted in
+    * place, so a reader planned against the old set keeps every file it
+    * references.
     *
-    * `expect` is the generation token ([[liveDayFilesWithGen]]) the live
-    * set was read under: immediately before the flip the current manifest
-    * is re-checked, and on mismatch the staged outputs are discarded and
-    * [[RewriteLostException]] thrown — the caller retries against the new
-    * live set. Without this a compaction that read the pre-delete live
-    * set but publishes AFTER a deleteSeries would silently resurrect the
-    * deleted samples. In-process racers are fully excluded by
-    * [[withDirLock]]. Cross-process racers that slip past the re-check
-    * (both rename inside the check→rename instant) are handled by the
-    * CHAINED names: both manifests land naming the same parent, the fork
-    * is resolved deterministically by [[resolveTip]] (earliest rename
-    * wins), and the post-rename re-resolution below makes the loser throw
-    * and retry — detected, never silently undone. Residual windows, both
-    * needing multiple independent publishers inside one ~millisecond
-    * namespace gap (each pair already being a lost-CAS anomaly): (a) a
-    * third publish chaining onto the fork's provisional winner inside
-    * the racers' rename gap could itself be usurped before ITS
-    * post-check; (b) mtime order can invert rename order when both
-    * renames land inside the other's staged-write→rename gap (the
-    * staged manifest is written microseconds before its rename precisely
-    * to shrink this) — the earlier-mtime publisher whose rename landed
-    * second then wins the fork after the other's post-check already
-    * passed, and the first rewrite is lost without a retry. Same-ms
-    * mtime ties break deterministically by name (detected, arbitrary
-    * winner). Fork resolution relies on rename-preserved mtimes — exact
-    * on POSIX and HDFS, best-effort on object stores whose rename is a
-    * copy. */
+    * `st` is the state the live set was read under, and the commit takes
+    * the number after its tip. When a racing rewrite took that number
+    * first, the staged outputs are discarded and [[RewriteLostException]]
+    * thrown — the caller retries against the new live set. Without this a
+    * compaction that read the pre-delete live set but published after a
+    * deleteSeries would silently resurrect the deleted samples. */
   private def publishRewrite(fs: org.apache.hadoop.fs.FileSystem,
-                             dir: org.apache.hadoop.fs.Path,
-                             live: Seq[String], now: Long,
-                             expect: Option[String],
+                             dir: org.apache.hadoop.fs.Path, st: DirState,
                              writeTmp: org.apache.hadoop.fs.Path => Unit): Unit = {
-    val gen = newGen(now)
-    val tmp = new org.apache.hadoop.fs.Path(
-      dir.getParent, s".compact-tmp-${dir.getName}-$gen")
-    fs.delete(tmp, true)
-    writeTmp(tmp)
-    val parts = fs.listStatus(tmp).toSeq
-      .filter(s => s.isFile && !isHidden(s.getPath.getName))
-      .sortBy(_.getPath.getName)
-    if (newestManifestName(fs, dir) != expect) {
-      fs.delete(tmp, true)
-      throw new RewriteLostException(dir.toString)
+    val gen = MarkerLog.freshName()
+    val tmp = new org.apache.hadoop.fs.Path(dir.getParent, s"$RewriteStagePrefix${dir.getName}-$gen")
+    activeStages.add(tmp.getName)
+    try {
+      MarkerLog.step("write", tmp)(writeTmp(tmp))
+      val parts = fs.listStatus(tmp).toSeq
+        .filter(s => s.isFile && !isHidden(s.getPath.getName))
+        .sortBy(_.getPath.getName)
+      val outs = parts.zipWithIndex.map { case (p, i) =>
+        val out = new org.apache.hadoop.fs.Path(dir, s"$CompactedPrefix$gen-$i.parquet")
+        MarkerLog.step("move", out) {
+          if (!fs.rename(p.getPath, out))
+            throw new java.io.IOException(s"could not move ${p.getPath} to $out")
+        }
+        out
+      }
+      // previously-dead names still on disk must stay dead in the new
+      // commit (they are append-named: unlisted would resurrect them)
+      val onDisk = st.files.map(_.getPath.getName).toSet
+      val body = outs.map("+" + _.getName) ++
+        (st.live.map(_.getPath.getName) ++ st.minus.filter(onDisk)).map("-" + _)
+      Option(publishTestHook.getAndSet(null)).foreach(_.apply())
+      if (!new MarkerLog.CommitLog(fs, dir).publish(st.view, body)) {
+        outs.foreach(o => MarkerLog.step("clear", o)(fs.delete(o, false)))
+        throw new RewriteLostException(dir.toString)
+      }
+    } finally {
+      activeStages.remove(tmp.getName)
+      MarkerLog.step("clear", tmp)(fs.delete(tmp, true))
     }
-    val newNames = parts.zipWithIndex.map { case (p, i) =>
-      val name = s"$CompactedPrefix$gen-$i.parquet"
-      fs.rename(p.getPath, new org.apache.hadoop.fs.Path(dir, name))
-      name
-    }
-    fs.delete(tmp, true)
-    // previously-dead names still on disk must stay dead in the new
-    // manifest (they are append-named: unlisted would resurrect them)
-    val prevMinus = newestManifest(fs, dir) match {
-      case Some((_, _, m)) =>
-        m.filter(n => fs.exists(new org.apache.hadoop.fs.Path(dir, n)))
-      case None => Set.empty[String]
-    }
-    val liveNames = live.map(f => new org.apache.hadoop.fs.Path(f).getName)
-    val manifestBody =
-      (newNames.map("+" + _) ++ (liveNames ++ prevMinus).map("-" + _))
-        .mkString("", "\n", "\n")
-    // last-instant re-check (the staged outputs above are unlisted
-    // `compacted-` names — invisible — so discarding here is safe)
-    if (newestManifestName(fs, dir) != expect) {
-      newNames.foreach(n => fs.delete(new org.apache.hadoop.fs.Path(dir, n), false))
-      throw new RewriteLostException(dir.toString)
-    }
-    Option(publishTestHook.getAndSet(null)).foreach(_.apply())
-    // the visibility flip: the manifest name CHAINS the parent generation,
-    // so if a cross-process racer renamed between the check above and this
-    // rename, the namespace holds a FORK (two manifests naming the same
-    // parent) rather than a silent stamp-ordered overwrite. The staged
-    // manifest is written HERE, after the check and microseconds before
-    // the rename: its mtime — preserved by the rename — is the fork
-    // resolution's publish-order signal, so it must be stamped as close
-    // to the flip as possible.
-    val tmpManifest = new org.apache.hadoop.fs.Path(dir, s".$ManifestPrefix$gen.tmp")
-    val out = fs.create(tmpManifest, true)
-    try out.write(manifestBody.getBytes("UTF-8")) finally out.close()
-    val parentToken = expect.map { n =>
-      val suffix = n.drop(ManifestPrefix.length)
-      val i = suffix.indexOf(ParentSep)
-      if (i < 0) suffix else suffix.substring(0, i)
-    }.getOrElse(RootToken)
-    val myName = s"$ManifestPrefix$gen$ParentSep$parentToken"
-    fs.rename(tmpManifest, new org.apache.hadoop.fs.Path(dir, myName))
-    // post-rename re-resolution: deterministic fork loser detection. The
-    // winner is whoever [[resolveTip]] picks (earliest rename); the loser
-    // leaves its manifest and outputs IN PLACE — a reader could have
-    // transiently resolved them as tip between the racing renames, so
-    // [[vacuum]] reclaims them after the reader grace window — and throws
-    // so [[retryRewrite]] re-runs it against the winner's live set.
-    val ents = listManifests(fs, dir)
-    val won = resolveTip(ents).exists(tip => chainGens(ents, tip).contains(gen))
-    if (!won) throw new RewriteLostException(dir.toString)
   }
 
-  /** Test seam: runs ONCE between the pre-rename check and the rename —
+  /** Test seam: runs ONCE between reading a rewrite's tip and its commit —
     * the cross-process race window — then self-clears. Lets specs inject
     * a full concurrent rewrite exactly where a real racer could land. */
   private[sources] val publishTestHook =
@@ -1201,7 +1032,7 @@ object PointsStore {
     *
     * Parquet is immutable, so deletion is a REWRITE of each intersecting
     * day's live file set with the matching rows filtered out — published
-    * through the same MVCC manifest flip compaction uses, so concurrent
+    * through the same MVCC commit compaction uses, so concurrent
     * readers see the old complete set or the new complete set, never a
     * torn mix, and in-flight plans keep their files until the grace
     * window passes (this replaces the TSDB tombstone+compact dance: the
@@ -1230,99 +1061,59 @@ object PointsStore {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Nil
-    def dayOf(ms: Long): java.time.LocalDate =
-      java.time.Instant.ofEpochMilli(ms).atZone(java.time.ZoneOffset.UTC).toLocalDate
-    val lo = if (startMs == Long.MinValue) None else Some(dayOf(startMs))
-    val hi = if (endMs == Long.MaxValue) None else Some(dayOf(endMs))
-    val days = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
-      .filter { s =>
-        val d = java.time.LocalDate.parse(s.getPath.getName.stripPrefix("date="))
-        lo.forall(l => !d.isBefore(l)) && hi.forall(h => !d.isAfter(h))
-      }
-    // days are independent rewrite units — delete them CONCURRENTLY on a
-    // bounded pool, same as [[compact]]: a wide retention/GDPR delete
-    // over hundreds of days must not serialize hundreds of small Spark
-    // jobs (the uniquified generation ids keep names collision-free)
-    def deleteDay(day: org.apache.hadoop.fs.Path): Option[String] = retryRewrite(day) {
-      val (live, liveGen) = liveDayFilesWithGen(fs, day)
+    eachDay(daysWithin(fs, root, startMs, endMs).map(_.getPath)) { day => retryRewrite(day) {
+      val st = dirState(fs, day)
+      val live = st.live.map(_.getPath.toString)
       if (live.isEmpty) None
       else {
-      val raw = readPointFiles(spark, live, None)
-      val del = graft.engine.Compiler.matcherFilter(matchers,
-        useLc = raw.columns.contains("_lc")) &&
-        (if (startMs == Long.MinValue) lit(true) else col("t") >= startMs) &&
-        (if (endMs == Long.MaxValue) lit(true) else col("t") <= endMs)
-      if (raw.where(del).isEmpty) None
-      else {
-        publishRewrite(fs, day, live, System.currentTimeMillis(), liveGen, tmp =>
-          raw.where(!del)
-            .repartition(live.length)
-            .sortWithinPartitions(col("name"), col("sig"), col("t"))
-            .write.options(bloomWriteOptions)
-            .mode(SaveMode.Overwrite).parquet(tmp.toString))
-        Some(day.toString)
+        val raw = readPointFiles(spark, live, None)
+        val del = graft.engine.Compiler.matcherFilter(matchers,
+          useLc = raw.columns.contains("_lc")) &&
+          (if (startMs == Long.MinValue) lit(true) else col("t") >= startMs) &&
+          (if (endMs == Long.MaxValue) lit(true) else col("t") <= endMs)
+        if (raw.where(del).isEmpty) None
+        else {
+          publishRewrite(fs, day, st, tmp =>
+            raw.where(!del)
+              .repartition(live.length)
+              .sortWithinPartitions(col("name"), col("sig"), col("t"))
+              .write.options(bloomWriteOptions)
+              .mode(SaveMode.Overwrite).parquet(tmp.toString))
+          Some(day.toString)
+        }
       }
-      }
-    }
-    val done = Seq.newBuilder[String]
-    if (days.length == 1) {
-      deleteDay(days.head.getPath).foreach(done += _) // inline, like compact
-    } else if (days.nonEmpty) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(days.length, 8))
-      try {
-        val futures = days.map(st => pool.submit(
-          new java.util.concurrent.Callable[Option[String]] {
-            def call(): Option[String] = deleteDay(st.getPath)
-          }))
-        val outcomes = futures.map(f =>
-          try Right(f.get())
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              Left(Option(e.getCause).getOrElse(e))
-          })
-        outcomes.foreach { case Right(d) => done ++= d; case Left(_) => () }
-        outcomes.collectFirst { case Left(e) => e }.foreach(throw _)
-      } finally pool.shutdown()
-    }
-    done.result()
+    }}
   }
 
   /** Admin snapshot — POST /api/v1/admin/tsdb/snapshot (vendored
     * web/api/v1/api.go:402,1642-1676: TSDB Snapshot into
     * `snapshots/<name>` under the data dir): materialize the CURRENT
-    * manifest-visible file set as `snapshots/<name>/` — itself a plain
-    * readable store (no manifests needed: the snapshot is one settled
-    * generation). Hard-links when the filesystem allows (the TSDB
-    * snapshot is hard-links too — O(files), zero bytes copied), byte
-    * copy otherwise. Concurrent-writer safe the same way readers are:
-    * the live set is a complete published generation. Returns the
-    * snapshot name. */
+    * commit-visible file set as `snapshots/<name>/` — itself a readable
+    * store holding one settled generation per dir. Hard-links when the
+    * filesystem allows (the TSDB snapshot is hard-links too — O(files),
+    * zero bytes copied), byte copy otherwise. Concurrent-writer safe the
+    * same way readers are: each dir's live set is a complete published
+    * generation. All-or-nothing ([[MarkerLog.snapshot]]): a crashed capture
+    * leaves no `snapshots/<name>`. Returns the snapshot name. */
   def snapshot(spark: SparkSession, path: String): String = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val name = MarkerLog.freshName()
-    // the Prometheus admin-API contract places snapshots at
-    // <data-dir>/snapshots/<name> (vendored api.go:1642-1676); readers
-    // never touch it — every store path lists `date=` dirs explicitly
-    val snapRoot = new org.apache.hadoop.fs.Path(root, s"snapshots/$name")
+    // readers never touch `snapshots/`: every store path lists `date=` dirs
+    // explicitly
     val dirs = fs.listStatus(root).toSeq.filter(s => s.isDirectory &&
       (s.getPath.getName.startsWith("date=") || s.getPath.getName == DictDir))
-    for (d <- dirs) {
-      val out = new org.apache.hadoop.fs.Path(snapRoot, d.getPath.getName)
-      fs.mkdirs(out)
-      // the newest manifest rides along so the snapshot's `compacted-`
-      // files stay visible under the same liveDayFiles rules (its
-      // -listed dead names simply don't exist in the snapshot)
-      // the chain-resolved tip rides along; its parent won't exist in the
-      // snapshot, which [[resolveTip]] treats as a root — still the tip
-      val manifest = resolveTip(listManifests(fs, d.getPath))
-        .map(e => new org.apache.hadoop.fs.Path(d.getPath, e.name))
-      for (f <- liveDayFiles(fs, d.getPath).map(new org.apache.hadoop.fs.Path(_)) ++ manifest)
-        MarkerLog.link(fs, f, new org.apache.hadoop.fs.Path(out, f.getName))
+    MarkerLog.snapshot(fs, root) { snap =>
+      for (d <- dirs) {
+        val out = new org.apache.hadoop.fs.Path(snap, d.getPath.getName)
+        MarkerLog.step("mkdirs", out)(fs.mkdirs(out))
+        // the tip rides along so the snapshot's `compacted-` files stay
+        // visible under the same rules (its -listed dead names simply don't
+        // exist there); a legacy chained tip resolves there as a root
+        val st = dirState(fs, d.getPath)
+        for (f <- st.live.map(_.getPath) ++ st.tip)
+          MarkerLog.link(fs, f, new org.apache.hadoop.fs.Path(out, f.getName))
+      }
     }
-    name
   }
 
   /** Retention: drop whole day partitions older than the cutoff —
@@ -1331,29 +1122,25 @@ object PointsStore {
     * `lastDay` (newest day the series was written) predates the cutoff can
     * only reference expired partitions, so the dict keeps scaling with
     * LIVE series, not all-time series churn. The rewrite is dict-sized and
-    * published with the same MVCC manifest flip compaction uses. */
+    * published with the same MVCC commit compaction uses. */
   def expire(spark: SparkSession, path: String, cutoffMs: Long): Seq[String] = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Nil
     val cutoff = java.time.Instant.ofEpochMilli(cutoffMs)
       .atZone(java.time.ZoneOffset.UTC).toLocalDate
-    val dropped = fs.listStatus(root).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter { p =>
-        p.getName.startsWith("date=") &&
-          java.time.LocalDate.parse(p.getName.stripPrefix("date=")).isBefore(cutoff)
-      }
+    val dropped = dayDirs(fs, root).map(_.getPath).filter(p =>
+      java.time.LocalDate.parse(p.getName.stripPrefix("date=")).isBefore(cutoff))
     dropped.foreach(p => fs.delete(p, true))
     expiredShardsTotal.add(dropped.length.toLong)
     val dictPath = new org.apache.hadoop.fs.Path(root, DictDir)
     if (dropped.nonEmpty && fs.exists(dictPath)) retryRewrite(dictPath) {
-      val (live, liveGen) = liveDayFilesWithGen(fs, dictPath)
+      val st = dirState(fs, dictPath)
+      val live = st.live.map(_.getPath.toString)
       if (live.nonEmpty) {
         val dict = spark.read.parquet(live: _*)
         if (dict.columns.contains("lastDay")) {
-          publishRewrite(fs, dictPath, live, System.currentTimeMillis(), liveGen, tmp =>
+          publishRewrite(fs, dictPath, st, tmp =>
             dedupDict(dict)
               .where(col("lastDay") >= lit(cutoff.toString).cast("date"))
               .coalesce(1)

@@ -130,6 +130,27 @@ class MarkerLogSpec extends AnyFunSuite {
     assert(orphans(log).isEmpty)
   }
 
+  test("claim: of 8 threads racing one slot, exactly one wins every round") {
+    val log = logAt(freshRoot())
+    val threads = 8
+    val barrier = new java.util.concurrent.CyclicBarrier(threads)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      for (seq <- 0L until 60L) {
+        val claims = (0 until threads).map(_ => pool.submit(
+          new java.util.concurrent.Callable[Boolean] {
+            def call(): Boolean = {
+              barrier.await()
+              try { log.claim(seq); true }
+              catch { case _: ConcurrentWriterException => false }
+            }
+          }))
+        val winners = claims.count(_.get())
+        assert(winners == 1, s"slot $seq: $winners writers claimed it")
+      }
+    } finally pool.shutdown()
+  }
+
   test("fold: a crash at any step keeps every row visible and every name landed") {
     def grown(): BatchLog = { val log = seeded(); append(log, "c", Seq(4)); log }
     val steps = { val log = grown(); stepsOf(log.root)(compact(log)) }
@@ -217,25 +238,32 @@ class MarkerLogSpec extends AnyFunSuite {
       append(log, "c", Seq(4))
       log
     }
-    val steps = {
-      val log = grown()
-      stepsOf(log.root)(log.snapshotInto(new Path(log.root, "snapshots/s0")))
+    def snapshot(log: BatchLog, name: String): MarkerLog.Capture = {
+      var cap: MarkerLog.Capture = null
+      MarkerLog.snapshot(fs, log.root, name)(out => cap = log.snapshotInto(out))
+      cap
     }
-    assert(steps.count(_.op == "link") == 2 && steps.count(_.op == "touch") >= 5,
-      steps.map(_.op))
+    val steps = { val log = grown(); stepsOf(log.root)(snapshot(log, "s0")) }
+    assert(steps.count(_.op == "link") == 2 && steps.count(_.op == "touch") >= 5 &&
+      steps.last.op == "publish", steps.map(_.op))
     for (k <- steps.indices) {
       val log = grown()
       val before = view(log)
       val seq = log.nextSeq()
-      crashAt(log.root, k)(log.snapshotInto(new Path(log.root, "snapshots/s1")))
+      crashAt(log.root, k)(snapshot(log, "s1"))
       assert(view(log) == before && Seq("a", "b", "c").forall(log.contains))
-      val cap = log.snapshotInto(new Path(log.root, "snapshots/s2"))
+      assert(!fs.exists(new Path(log.root, "snapshots/s1")),
+        s"crash before ${steps(k)}: a partial snapshot is visible")
+      val cap = snapshot(log, "s2")
       val snap = logAt(new Path(log.root, "snapshots/s2"))
       assert(cap.batches == log.live.toSet)
       assert(view(snap) == before && Seq("a", "b", "c").forall(snap.contains))
       assert(snap.nextSeq() == seq, "the writer ledger carries into the snapshot")
       compact(log)
+      MarkerLog.sweepSnapshots(fs, log.root, 0L)
       assert(orphans(log).isEmpty && view(log) == before)
+      assert(fs.listStatus(new Path(log.root, "snapshots")).map(_.getPath.getName).toSeq ==
+        Seq("s2"), s"crash before ${steps(k)}: the partial capture was not swept")
     }
   }
 }

@@ -4,13 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.PointsStore.MEnt
 
-/** Direct property tests of the chained-manifest resolution protocol —
-  * the safety-critical piece behind every store rewrite (compaction,
-  * deleteSeries, retention). [[PointsStore.resolveTip]] must pick ONE
-  * deterministic tip for every namespace shape the protocol can produce:
-  * pure-legacy dirs, chains grown on legacy tips, two-party forks in
-  * either mtime order, vacuumed ancestors leaving chain fragments, and
-  * fork leftovers coexisting with fragments. */
+/** Direct property tests of the legacy manifest reader: stores written
+  * before the numbered commit log hold `_manifest.` files, and a dir with
+  * no commit resolves its tip through [[PointsStore.resolveTip]], which
+  * must pick ONE deterministic tip for every namespace shape the old
+  * protocol could leave: pure-legacy dirs, chains grown on legacy tips,
+  * two-party forks in either mtime order, vacuumed ancestors leaving
+  * chain fragments, and fork leftovers coexisting with fragments. */
 class MvccChainSpec extends AnyFunSuite {
 
   private def leg(ts: Long, gen: String, mtime: Long): MEnt =
@@ -73,10 +73,6 @@ class MvccChainSpec extends AnyFunSuite {
     val wc = ch(400, "400-wc", "200-w", 400)
     val lc = ch(500, "500-lc", "300-l", 500) // child of the dead branch
     assert(tip(p, w, l, wc, lc) == Some("400-wc"))
-    val ents = Seq(p, w, l, wc, lc)
-    val gens = PointsStore.chainGens(ents,
-      PointsStore.resolveTip(ents).get)
-    assert(gens == Set("400-wc", "200-w", "100-p"))
   }
 
   test("vacuumed ancestors leave a fragment whose root resolves (fork-free invariant)") {
@@ -99,49 +95,5 @@ class MvccChainSpec extends AnyFunSuite {
     val l = ch(300, "300-l", "100-gone", 300)
     val wc = ch(400, "400-wc", "200-w", 400)
     assert(tip(w, l, wc) == Some("400-wc"))
-  }
-
-  test("post-rename loser detection: the losing publisher's gen is off the tip chain") {
-    val p = ch(100, "100-p", "root", 100)
-    val w = ch(200, "200-w", "100-p", 200)
-    val l = ch(300, "300-l", "100-p", 300)
-    val ents = Seq(p, w, l)
-    val t = PointsStore.resolveTip(ents).get
-    val onChain = PointsStore.chainGens(ents, t)
-    assert(onChain.contains("200-w") && !onChain.contains("300-l"),
-      "the loser must detect itself off-chain and retry")
-  }
-
-  test("ancestor vacuum deletes only a contiguous oldest prefix of the chain") {
-    def vac(now: Long, grace: Long, ents: MEnt*): Seq[String] =
-      PointsStore.vacuumableAncestors(ents,
-        PointsStore.resolveTip(ents).get, now, grace).map(_.gen)
-    // plain monotone chain: both aged ancestors go, the tip never does
-    val a = ch(100, "100-a", "root", 100)
-    val b = ch(200, "200-b", "100-a", 200)
-    val c = ch(300, "300-c", "200-b", 300)
-    assert(vac(1000, 500, a, b, c) == Seq("100-a", "200-b"))
-    assert(vac(1000, 850, a, b, c) == Seq("100-a")) // b not aged yet
-    assert(vac(1000, 950, a, b, c) == Seq())
-    // MTIME INVERSION (rename landed as copy+delete): the OLDEST chain
-    // position has the NEWEST mtime. Deleting the aged middle entry would
-    // leave two parent-absent roots (a2 and c2) and earliest-mtime root
-    // selection would flip the tip to the STALE a2, resurrecting deleted
-    // data — the prefix rule must delete NOTHING here
-    val a2 = ch(100, "100-a", "root", 900) // oldest position, newest mtime
-    val b2 = ch(200, "200-b", "100-a", 150)
-    val c2 = ch(300, "300-c", "200-b", 300)
-    assert(vac(1000, 500, a2, b2, c2) == Seq(),
-      "an aged middle ancestor must be shielded by its non-aged parent")
-    // and the invariant the rule exists for: after deleting any allowed
-    // prefix, the remaining namespace still resolves to the same tip
-    for (grace <- Seq(100L, 500L, 850L, 950L);
-         ents <- Seq(Seq(a, b, c), Seq(a2, b2, c2))) {
-      val t = PointsStore.resolveTip(ents).get
-      val del = PointsStore.vacuumableAncestors(ents, t, 1000, grace).toSet
-      val remaining = ents.filterNot(del.contains)
-      assert(PointsStore.resolveTip(remaining).map(_.gen) == Some(t.gen),
-        s"tip flipped after vacuum at grace=$grace")
-    }
   }
 }

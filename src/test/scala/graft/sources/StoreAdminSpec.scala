@@ -198,9 +198,9 @@ class StoreAdminSpec extends AnyFunSuite with SharedSpark {
   test("deleteSeries racing a concurrent compact never resurrects deleted samples") {
     // The Serve deployment runs the maintenance-tick compaction in one
     // thread and the admin delete_series route in another. Without
-    // per-day rewrite serialization + the publish-time manifest CAS, a
+    // per-day rewrite serialization + the numbered commit, a
     // compaction that read the pre-delete live set but published after
-    // the delete would win the manifest flip and bring the samples back.
+    // the delete would win the visibility flip and bring the samples back.
     // Stress both orders: fragment a day, then fire compact and delete
     // concurrently and assert the deletion survives, every iteration.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
@@ -230,16 +230,16 @@ class StoreAdminSpec extends AnyFunSuite with SharedSpark {
     } finally pool.shutdown()
   }
 
-  /** The CROSS-PROCESS publish race: a rewrite that passed its pre-rename
-    * manifest check while another publisher renames in the same instant.
-    * The stripe lock can't cover this (separate JVMs); the chained
-    * manifest names must — both publishes land as a namespace fork, the
-    * loser detects it post-rename and retries. The publishTestHook
-    * injects a full deleteSeries exactly inside compaction's
-    * check→rename window (stripe locks are reentrant, so the same-thread
-    * injection models an uncoordinated separate process). Without fork
-    * detection the compaction — built from the pre-delete live set —
-    * would win by newest stamp and silently resurrect the deletion. */
+  /** The CROSS-PROCESS publish race: another publisher commits between a
+    * rewrite's reading of the tip and its own commit. The stripe lock
+    * can't cover this (separate JVMs); the numbered commit must — both
+    * rewrites want the same commit number, the second create fails, and
+    * the loser retries. The publishTestHook injects a full deleteSeries
+    * exactly inside compaction's tip→commit window (stripe locks are
+    * reentrant, so the same-thread injection models an uncoordinated
+    * separate process). Without the exclusive commit the compaction —
+    * built from the pre-delete live set — would publish last and silently
+    * resurrect the deletion. */
   test("publish race past the pre-rename check: fork is detected, deletion never resurrected") {
     // single-day store in 3 append files (single-day rewrites run inline
     // on the caller thread, so the hook's injected delete re-enters the
@@ -275,19 +275,23 @@ class StoreAdminSpec extends AnyFunSuite with SharedSpark {
       spark.sparkContext.parallelize(Seq(
         Row("cpu", Map("user" -> "7"), T0, 77.0)), 1), schema)), dir)
     assert(PointsStore.compact(spark, dir, graceMs = 0L).nonEmpty)
-    // rewrite the day's chained manifest names to the pre-chain format
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val renamed = fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-      .filter(_.getPath.getName.startsWith("date=")).flatMap { day =>
-        fs.listStatus(day.getPath).toSeq
-          .filter(s => s.isFile && s.getPath.getName.startsWith("_manifest."))
-          .map { m =>
-            val legacy = m.getPath.getName.split("_p_")(0)
-            fs.rename(m.getPath, new org.apache.hadoop.fs.Path(day.getPath, legacy))
-          }
+    // replace each compacted day's commit with the manifests a store written
+    // before the commit log holds: a pre-chain `_manifest.<gen>` hiding every
+    // file, and a chained `_manifest.<gen>_p_<parent>` on top of it holding
+    // the commit's lists — the tip only if the chain is walked
+    val days = new java.io.File(dir).listFiles().filter(_.getName.startsWith("date="))
+    val converted = days.toSeq.flatMap { day =>
+      val names = day.list().toSeq
+      names.filter(_.startsWith("_commit.")).map { c =>
+        val body = Files.readAllBytes(new java.io.File(day, c).toPath)
+        val hideAll = names.filterNot(n => n.startsWith("_") || n.startsWith("."))
+          .map("-" + _).mkString("", "\n", "\n")
+        Files.write(new java.io.File(day, "_manifest.1000-a").toPath, hideAll.getBytes("UTF-8"))
+        Files.write(new java.io.File(day, "_manifest.2000-b_p_1000-a").toPath, body)
+        new java.io.File(day, c).delete()
       }
-    assert(renamed.nonEmpty && renamed.forall(identity))
+    }
+    assert(converted.nonEmpty && converted.forall(identity))
     assert(readAll(dir).count() == 61, "legacy manifest names unreadable")
     // a rewrite on top of the legacy layout chains onto the legacy tip
     PointsStore.deleteSeries(spark, dir, """cpu{user="7"}""", graceMs = 0L)
