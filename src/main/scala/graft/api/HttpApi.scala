@@ -197,6 +197,11 @@ final class HttpApi(spark: SparkSession, points: DataFrame,
     "graft_query_duration_seconds", "End-to-end PromQL query latency")
   private val ingressPointsTotal = Telemetry.counter(
     "metric_store_ingress_points_total", "Samples accepted by the remote-write receiver")
+  // a query shape compiles once; a count rising with every query is a
+  // code-cache miss storm (a time or value inlined into generated code)
+  Telemetry.counterSupplier("graft_codegen_compiles_total",
+    "Generated classes compiled by this process (Spark code-cache misses)")(() =>
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount.toDouble)
 
   /** Per-request `timeout=` (seconds float or Go duration), CAPPED at
     * the server's configured timeout — the vendored API's contract

@@ -119,7 +119,7 @@ object Engine {
         df.select(col("name"), Labels.fromCanonical(col("_lc")).as("labels"),
           col("step"), col("t"), col("value"))
       case StringVal(s) =>
-        spark.range(1).select(lit(startMs).as("t"), lit(s).as("value"))
+        spark.range(1).select(LongParam.of(startMs).as("t"), lit(s).as("value"))
     }
   }
 

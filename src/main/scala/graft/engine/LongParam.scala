@@ -1,0 +1,46 @@
+package graft.engine
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.LeafExpression
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DataType, LongType}
+
+/** A long value the generated code reads as a PARAMETER. Spark inlines a
+  * primitive `Literal` into the generated Java, so every fresh query time
+  * (`time=now` on a refreshing dashboard, a maintenance tick, an append's
+  * write stamp) is new code text: it misses Spark's code cache and pays a
+  * Janino compile plus cold JIT on every query. This expression instead
+  * reads its value from the plan's reference array
+  * (`ctx.addReferenceObj`, as [[TallySamples]] reads its accumulator), so
+  * one query shape compiles once and runs at every time.
+  *
+  * NON-foldable, or ConstantFolding would turn it back into a literal.
+  * The price: a filter on it is not a data-source filter, so it does not
+  * reach parquet's row-group statistics. A scan that needs pruning by
+  * time must carry its own literal bounds.
+  */
+final case class LongParam(value: Long) extends LeafExpression {
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+  override def prettyName: String = "param"
+  override def sql: String = s"param(${value}L)"
+
+  override def eval(input: InternalRow): Any = value
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("param", java.lang.Long.valueOf(value), "java.lang.Long")
+    ev.copy(
+      code = code"final ${CodeGenerator.javaType(dataType)} ${ev.value} = $ref.longValue();",
+      isNull = FalseLiteral)
+  }
+}
+
+object LongParam {
+  /** The parameter as a Column. */
+  def of(value: Long): Column = ColumnBridge.column(LongParam(value))
+}

@@ -14,11 +14,10 @@ final case class StepGrid(startMs: Long, endMs: Long, stepMs: Long) {
   require(endMs >= startMs, "end must be >= start")
   val nSteps: Long = (endMs - startMs) / stepMs + 1
 
-  /** One-row-per-step DataFrame: (step: Long). */
-  def df(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    spark.range(nSteps).select((lit(startMs) + col("id") * stepMs).as("step"))
-  }
+  /** One-row-per-step DataFrame: (step: Long). The start is a
+    * [[LongParam]]: the generated code is the same at every time. */
+  def df(spark: SparkSession): DataFrame =
+    spark.range(nSteps).select((LongParam.of(startMs) + col("id") * stepMs).as("step"))
 }
 
 /** PromQL selectors over the canonical points relation.
@@ -27,9 +26,9 @@ final case class StepGrid(startMs: Long, endMs: Long, stepMs: Long) {
   * pure per-row `explode(sequence(kLo, kHi))` — integer arithmetic on the
   * step index, no range join and no shuffle before the per-(series, step)
   * aggregation. The explode factor is bounded by `window/step + 1`, and
-  * Catalyst keeps the scan filter (`t` bounds, label matchers) pushed down to
-  * parquet. At 100 TB this is a single scan + one hash aggregation whose
-  * output is result-sized.
+  * Catalyst keeps the label matchers pushed down to parquet; the `t` bounds
+  * are [[LongParam]]s, filtered after the scan. At 100 TB this is a single
+  * scan + one hash aggregation whose output is result-sized.
   *
   * Reference semantics:
   *  - instant selector: newest sample in `(step - lookback, step]`, skipping
@@ -50,8 +49,13 @@ object Selectors {
     // a one-step grid serves only its start: an end past it (a range with
     // end - start < step, an unaligned subquery inner grid) must not admit
     // later samples; an instant grid (end == start) keeps the same bound
+    // every time-derived value is a [[LongParam]], so one query shape
+    // compiles once whatever its times; only the step and the window (the
+    // query's shape) stay literals
     val tMax = if (grid.nSteps == 1) grid.startMs else grid.endMs
-    val bounded = points.where(col("t") >= grid.startMs - windowMs && col("t") <= tMax)
+    val start = LongParam.of(grid.startMs)
+    val bounded = points.where(col("t") >= LongParam.of(grid.startMs - windowMs) &&
+      col("t") <= LongParam.of(tMax))
     // the MaxSamples meter wraps the step column: it is evaluated exactly
     // once per (sample, window) row — the reference's per-step sample
     // accounting — inside the same codegen'd pipeline (no second scan),
@@ -69,17 +73,17 @@ object Selectors {
       // and the explode(sequence(...)) Generate (a Long-array allocation
       // per sample) are pure overhead on the engine's biggest relation.
       // Same rows, same step values, one WholeStageCodegen span.
-      bounded.withColumn("step", counted(lit(grid.startMs)))
+      bounded.withColumn("step", counted(start))
     } else {
       val withK = bounded
         .withColumn("_kLo", greatest(lit(0L),
-          floor((col("t") - grid.startMs + grid.stepMs - 1) / grid.stepMs).cast("long")))
-        .withColumn("_kHi", least(lit(grid.nSteps - 1),
-          floor((col("t") + windowMs - grid.startMs) / grid.stepMs).cast("long")))
+          floor((col("t") - start + grid.stepMs - 1) / grid.stepMs).cast("long")))
+        .withColumn("_kHi", least(LongParam.of(grid.nSteps - 1),
+          floor((col("t") + windowMs - start) / grid.stepMs).cast("long")))
         .where(col("_kLo") <= col("_kHi"))
       withK
         .withColumn("step", explode(sequence(col("_kLo"), col("_kHi"))))
-        .withColumn("step", counted(lit(grid.startMs) + col("step") * grid.stepMs))
+        .withColumn("step", counted(start + col("step") * grid.stepMs))
         .drop("_kLo", "_kHi")
     }
   }

@@ -73,7 +73,7 @@ final case class MatrixVal(
     slim: Option[SlimRange] = None) extends Value {
   /** Column expression for the true window end (sample-time ms). */
   def windowEnd: org.apache.spark.sql.Column = pinnedEndMs match {
-    case Some(ts) => org.apache.spark.sql.functions.lit(ts)
+    case Some(ts) => LongParam.of(ts)
     case None => org.apache.spark.sql.functions.col("step") - windowEndMsOffset
   }
 }

@@ -3,7 +3,7 @@ package graft.rules
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.Engine
+import graft.engine.{Engine, LongParam}
 import graft.model.Points
 
 /** Recording and alerting rules on top of the engine (reference:
@@ -101,14 +101,14 @@ object Rules {
     // `since` (the per-tick fold's coalesce(prev.since, tick) chain)
     val seed = state.select(col("sig"), col("since").as("_seedSince"))
     val newState = runs
-      .where(col("_step") === lit(lastTick))
+      .where(col("_step") === LongParam.of(lastTick))
       .join(seed, Seq("sig"), "left")
       .select(col("sig"), col("labels"),
-        when(col("_runStart") === lit(startMs) && col("_seedSince").isNotNull,
+        when(col("_runStart") === LongParam.of(startMs) && col("_seedSince").isNotNull,
           col("_seedSince")).otherwise(col("_runStart")).as("since"),
         col("value"))
     val firing = newState
-      .where(lit(lastTick) - col("since") >= rule.forMs)
+      .where(LongParam.of(lastTick) - col("since") >= rule.forMs)
       .withColumn("alertname", lit(rule.alert))
     (newState, firing)
   }
@@ -367,14 +367,14 @@ object Rules {
     val newState = evals
       .join(prev, Seq("alert", "sig"), "left")
       .select(col("alert"), col("sig"), col("labels"),
-        coalesce(col("since"), lit(tsMs)).as("since"), col("value"))
+        coalesce(col("since"), LongParam.of(tsMs)).as("since"), col("value"))
     // per-rule `for:` thresholds ride a broadcast of the rule list itself
     import spark.implicits._
     val thresholds = broadcast(
       rules.map(r => (r.alert, r.forMs)).toDF("alert", "forMs"))
     val firing = newState
       .join(thresholds, Seq("alert"))
-      .where(lit(tsMs) - col("since") >= col("forMs"))
+      .where(LongParam.of(tsMs) - col("since") >= col("forMs"))
       .drop("forMs")
       .withColumn("alertname", col("alert"))
     (newState, firing)
@@ -422,9 +422,9 @@ object Rules {
     val newState = res
       .join(prev, Seq("sig"), "left")
       .select(col("sig"), col("labels"),
-        coalesce(col("since"), lit(tsMs)).as("since"), col("value"))
+        coalesce(col("since"), LongParam.of(tsMs)).as("since"), col("value"))
     val firing = newState
-      .where(lit(tsMs) - col("since") >= rule.forMs)
+      .where(LongParam.of(tsMs) - col("since") >= rule.forMs)
       .withColumn("alertname", lit(rule.alert))
     (newState, firing)
   }

@@ -91,6 +91,12 @@ object PointsStore {
       "Rows written to day partitions (post within-batch dedup)")(accValue(_._2))
     graft.api.Telemetry.counterSupplier("graft_store_lww_dropped_points_total",
       "Within-batch (sig, t) duplicates dropped at write time (LWW)")(accValue(_._3))
+    graft.api.Telemetry.counterSupplier("graft_store_relation_reuse_hits_total",
+      "Store reads that reused the relation of an unchanged live file set")(
+      () => relationHits.sum.toDouble)
+    graft.api.Telemetry.counterSupplier("graft_store_relation_reuse_misses_total",
+      "Store reads that built a new relation (first read of a live file set)")(
+      () => relationMisses.sum.toDouble)
   }
   private def storeAccs(spark: SparkSession):
       (org.apache.spark.util.LongAccumulator, org.apache.spark.util.LongAccumulator) = {
@@ -199,8 +205,10 @@ object PointsStore {
     // duplicates ACROSS batch partitions land in different files of the
     // day, where [[readLiveInfo]]'s multi-file signal arms [[lwwGuard]]
     // and (t, _seq desc, _sub desc) picks the later row.
+    // the stamp is a parameter, not a literal: it differs on every
+    // append, and a literal would make every append compile new code
     val stamped = withLc
-      .withColumn("_seq", lit(nextSeq()))
+      .withColumn("_seq", graft.engine.LongParam.of(nextSeq()))
       .withColumn("_sub", monotonically_increasing_id())
       .sortWithinPartitions(col("date"), col("name"), col("sig"), col("t"),
         col("_sub"))
@@ -371,7 +379,8 @@ object PointsStore {
     * one, both complete, never half of each. The date predicates are still
     * applied on the partition column, so the plan shows the same
     * PartitionFilters a path-based read had (and the driver-side day
-    * pruning already restricted the listing). */
+    * pruning already restricted the listing). Reads of an unchanged live
+    * file set share one relation ([[queryRelation]]). */
   def read(spark: SparkSession, path: String,
            startMs: Long, endMs: Long, slackMs: Long = 0L,
            lww: Boolean = true): DataFrame = {
@@ -491,6 +500,38 @@ object PointsStore {
         if (s.fieldNames.contains(n)) s else s.add(n, t)
       }
     normalizeStale(reader.schema(schema).parquet(files: _*))
+  }
+
+  /** Query-path relations, one per (session, live file set, basePath).
+    * Building one samples a footer and lists every file (the per-query
+    * `sources.read_ms`), but live files are immutable once a commit lists
+    * them, so the same set always reads the same rows: an append, a
+    * compaction or a delete changes the set, and with it the key. Only
+    * the relation is reused, never a result, and nothing is keyed by
+    * time. A small fixed LRU: a server reads a handful of day windows. */
+  private val RelationCacheSize = 16
+  private val relationCache = new java.util.LinkedHashMap[
+    (SparkSession, Seq[String], Option[String]), DataFrame](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[
+        (SparkSession, Seq[String], Option[String]), DataFrame]): Boolean =
+      size > RelationCacheSize
+  }
+  private val relationHits = new java.util.concurrent.atomic.LongAdder
+  private val relationMisses = new java.util.concurrent.atomic.LongAdder
+
+  /** [[readPointFiles]] through the relation cache. Compaction and delete
+    * rewrites call [[readPointFiles]] directly: they read each set once. */
+  private def queryRelation(spark: SparkSession, files: Seq[String],
+                            basePath: Option[String]): DataFrame = {
+    val key = (spark, files, basePath)
+    relationCache.synchronized(Option(relationCache.get(key))) match {
+      case Some(df) => relationHits.increment(); df
+      case None =>
+        relationMisses.increment()
+        val df = readPointFiles(spark, files, basePath)
+        relationCache.synchronized(relationCache.put(key, df))
+        df
+    }
   }
 
   // ---- commit-gated file visibility --------------------------------------
@@ -779,7 +820,7 @@ object PointsStore {
         }
       }
     }
-    else (readPointFiles(spark, files, Some(path)), mayDuplicate)
+    else (queryRelation(spark, files, Some(path)), mayDuplicate)
   }
 
   /** Hot-label flattening: selected label keys are ALSO stored as physical

@@ -82,6 +82,12 @@ class ServeSpec extends AnyFunSuite with SharedSpark {
         body.linesIterator.find(_.startsWith(name + " ")).map(_.split(" ")(1).toDouble).get
       assert(counterOf("graft_queries_total") >= 1.0)
       assert(counterOf("metric_store_written_points_total") >= 1.0)
+      // code-cache misses and store relation reuse: the server's first read
+      // of the store builds its relation, the query's read reuses it
+      assert(body.contains("# TYPE graft_codegen_compiles_total counter"))
+      assert(counterOf("graft_codegen_compiles_total") >= 1.0)
+      assert(counterOf("graft_store_relation_reuse_misses_total") >= 1.0)
+      assert(counterOf("graft_store_relation_reuse_hits_total") >= 1.0)
 
       // DOGFOOD: the engine's own Scrape source scrapes the engine's own
       // /metrics (httpFetch hits $target/metrics), retains HELP/TYPE in a

@@ -389,4 +389,33 @@ class StoreAdminSpec extends AnyFunSuite with SharedSpark {
     assert(!stale.exists() && fresh.exists())
     assert(readAll(dir).count() == 60)
   }
+
+  test("reads of one commit share one relation; an append, compact or delete gives a new one") {
+    val dir = seed()
+    def relation(df: org.apache.spark.sql.DataFrame) =
+      graft.engine.Engine.fileIndexes(df.queryExecution.analyzed).head
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("name"), col("labels")("user"), col("t"), col("value")).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
+    val first = readAll(dir)
+    assert(relation(readAll(dir)) eq relation(first))
+    val seeded = rowsOf(first)
+
+    PointsStore.append(Points.withSig(spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row("cpu", Map("user" -> "9"), T0 + 3 * DAY, 99.0)), 1), schema)), dir)
+    val appended = readAll(dir)
+    assert(!(relation(appended) eq relation(first)))
+    assert(rowsOf(appended) == seeded + (("cpu", "9", T0 + 3 * DAY, 99.0)))
+
+    PointsStore.compact(spark, dir)
+    val compacted = readAll(dir)
+    assert(!(relation(compacted) eq relation(appended)))
+    assert(rowsOf(compacted) == rowsOf(appended))
+
+    PointsStore.deleteSeries(spark, dir, """mem{user="0"}""")
+    val deleted = readAll(dir)
+    assert(!(relation(deleted) eq relation(compacted)))
+    assert(rowsOf(deleted) == rowsOf(compacted).filterNot(r => r._1 == "mem" && r._2 == "0"))
+    assert(relation(readAll(dir)) eq relation(deleted))
+  }
 }
