@@ -28,6 +28,13 @@ object GraftSession {
     // scale that sorts the exploded window rows on every rate-family
     // query, while the kernel buffers hold only a window's samples
     .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
+    // Spark's generated-code cache holds 100 classes by default, and in
+    // local mode a class takes two entries (the key includes the compiling
+    // thread's class loader, and the query thread's and the task threads'
+    // differ): a server's dashboard shapes and its appends evicted one
+    // another and compiled again on every refresh. Static: read when the
+    // cache is built
+    .config("spark.sql.codegen.cache.maxEntries", "1000")
     .config("spark.ui.enabled", "false")
 
   /** A session from [[builder]] with the log level the mains run at. */

@@ -88,8 +88,8 @@ object Stress {
     var stressIvfPqInc: String = null
     // a SigIndex with `n` live batch dirs (100 (doc_id, bv) rows each),
     // synthesized by ONE partitioned write renamed into batch-<name> dirs
-    // plus markers — builds in seconds where n sequential appends would
-    // take minutes; memoized per n, untimed (setup)
+    // and landed by one append commit — builds in seconds where n
+    // sequential appends would take minutes; memoized per n, untimed (setup)
     val sigDirCache = scala.collection.mutable.Map.empty[Int, String]
     def sigDirs(n: Int): String = sigDirCache.getOrElseUpdate(n, {
       val dir = java.nio.file.Files.createTempDirectory(s"stress_sig$n").toString
@@ -99,13 +99,10 @@ object Stress {
           col("id").as("doc_id"),
           xxhash64(col("id")).as("bv"))
         .write.partitionBy("b").parquet(stage)
-      val root = new org.apache.hadoop.fs.Path(dir)
-      val f = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val log = new graft.sources.MarkerLog.BatchLog(f, root, "SigIndex", "batch-")
-      val now = System.currentTimeMillis()
-      (0 until n).foreach { i =>
-        log.write(s"m$i")(f.rename(new org.apache.hadoop.fs.Path(stage, s"b=$i"), _))
-        log.mark(s"m$i", now)
+      val f = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      graft.pipeline.SigIndex.appendAll(spark, dir, (0 until n).map(i => s"m$i")) { (name, out) =>
+        f.rename(new org.apache.hadoop.fs.Path(stage, s"b=${name.drop(1)}"), out)
       }
       f.delete(new org.apache.hadoop.fs.Path(stage), true)
       dir

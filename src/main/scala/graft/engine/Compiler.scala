@@ -289,13 +289,18 @@ object Compiler {
     if (innerStart % innerStep != 0) {
       innerStart = innerStart - Math.floorMod(innerStart, innerStep) + innerStep
     }
-    val innerGrid = StepGrid(innerStart, outerEnd, innerStep)
+    // the aligned start can pass the outer end: no inner step falls in
+    // the range, and the subquery is empty (the reference's step loop runs
+    // zero times); the inner expression is then built on its one step
+    val noSteps = innerStart > outerEnd
+    val innerGrid = StepGrid(innerStart, math.max(innerStart, outerEnd), innerStep)
     val inner = evalVector(sq.expr,
       ctx.copy(grid = innerGrid, memo = scala.collection.mutable.Map.empty))
     // inner vector -> points: the sample time is the inner step
-    val asPoints = inner.df.select(
+    val innerPoints = inner.df.select(
       col("sig"), col("name"), col("labels"),
       col("step").as("t"), col("value"))
+    val asPoints = if (noSteps) innerPoints.limit(0) else innerPoints
     sq.at match {
       case Some(at) =>
         val ts = pinnedTs(at, grid) - sq.offsetMs

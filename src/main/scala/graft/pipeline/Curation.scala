@@ -691,7 +691,7 @@ object Curation {
               "decision was not found (sidecar retired and absent from the " +
               "ledger) — the index state was externally modified"))
       } else {
-        // claim intent before snapshotting (the sequential-writer guard)
+        // the commit number before snapshotting (the sequential-writer guard)
         val seq = SigIndex.nextAppendSeq(spark, indexDir)
         val pairs = docs
           .select(col("doc_id"), explode(split(col("text"), "\n")).as("line"))
@@ -707,7 +707,7 @@ object Curation {
         val h = boiler.limit(maxBoilerplate + 1).collect().map(_.getLong(0))
         require(h.length <= maxBoilerplate,
           s"dedupLinesIncremental: boilerplate set exceeds $maxBoilerplate lines")
-        // decision sidecar FIRST, pairs after: the batch marker implies
+        // decision sidecar FIRST, pairs after: the batch's commit implies
         // the sidecar exists (a crash in between replays the whole batch,
         // which overwrites the sidecar with the identical recomputation).
         // The decision set is a bounded driver array (maxBoilerplate) —

@@ -287,10 +287,11 @@ object Dedup {
             "(or raced the fold inside it); rerun against a fresh index " +
             "or raise SigIndex.compact graceMs")
       }
-    // claim intent BEFORE snapshotting the index: the sequence slot read
-    // here and claimed at the append covers the whole read→dedup→append
-    // span, so a second writer that read the same index state fails loud
-    // at its claim instead of silently splitting survivors
+    // read the commit number BEFORE snapshotting the index: the number
+    // read here and published at by the append covers the whole
+    // read→dedup→append span, so a second writer that read the same index
+    // state fails loud at its publish instead of silently splitting
+    // survivors
     val seq = SigIndex.nextAppendSeq(spark, indexDir)
     val sigs = signatures.localCheckpoint()
     val idx = SigIndex.read(spark, indexDir)

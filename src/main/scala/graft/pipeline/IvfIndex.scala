@@ -11,40 +11,39 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
   * cell-partitioned layout (which is rebuild-only):
   *
   * {{{
-  * dir/_gen.<ts>.<gid>                generation markers (newest wins)
-  * dir/gen-<gid>/centroids/           the generation's coarse quantizer
-  * dir/gen-<gid>/codebooks/           PQ codebooks (product-quantized mode)
-  * dir/gen-<gid>/batch=<name>/cell=<i>/  one append, partitioned by cell
-  * dir/gen-<gid>/_live. _seen. _slot. the generation's batch log
+  * dir/_commit.<n>                    the index's commits (highest wins)
+  * dir/gen-<gid>[-<uniq>]/centroids/  the generation's coarse quantizer
+  * dir/gen-.../codebooks/             PQ codebooks (product-quantized mode)
+  * dir/gen-.../batch=<name>/cell=<i>/ one append, partitioned by cell
+  * dir/gen-.../_hist.<name>           the batch's per-cell row counts
   * }}}
   *
-  * The commit protocol is [[MarkerLog]]'s: generations are a
-  * [[MarkerLog.VersionPointer]] (`_gen`), and each generation holds one
-  * [[MarkerLog.BatchLog]] — atomic publish, idempotent replay of a batch
-  * name, the sequential-writer slot guard
-  * ([[graft.sources.ConcurrentWriterException]]), publish-before-retire
-  * folds and grace vacuum. What is this index's own:
+  * The commit protocol is ONE [[MarkerLog.IndexLog]] at the root: every
+  * commit names the generation (its id and directory), the live batches
+  * with their first publish times and the folded names — atomic publish,
+  * idempotent replay of a batch name, the sequential-writer guard
+  * ([[graft.sources.ConcurrentWriterException]]), folds that swap batches
+  * in one commit, and grace vacuum. What is this index's own:
   *
   *  - APPEND assigns the batch against the CURRENT generation's fixed
   *    centroids (one codegen'd projection — the quantizer rides the
-  *    stage binary), writes it partitioned by cell, and re-checks the
-  *    generation both BEFORE and AFTER the marker create: an append that
-  *    lands while a retrain flips generations throws (withdrawing its
-  *    marker) rather than stranding the batch in a retired generation.
+  *    stage binary), writes it partitioned by cell, and publishes it only
+  *    onto a tip naming the same generation: an append and a retrain race
+  *    on one commit number, and an append that loses it to a retrain
+  *    throws, having published nothing.
   *  - SEARCH probes `nProbe` cells via a literal cell-set predicate over
   *    the UNION of live batch directories: every batch root carries the
   *    same `cell=<i>` partition layout, so Catalyst partition pruning
   *    lists and scans only probed × live-batch directories — query cost
   *    tracks nProbe/k of the corpus REGARDLESS of how many appends built
-  *    it. A fold's publish-before-retire window can expose a vector
-  *    twice, which SEARCH collapses with a (qid, cid) dedup before
-  *    ranking.
+  *    it. A vector appended under two batch names is visible twice,
+  *    which SEARCH collapses with a (qid, cid) dedup before ranking.
   *  - RETRAIN is the drift story: when appends skew the cell histogram
   *    ([[skew]] measures max/mean occupancy), [[retrain]] trains fresh
   *    centroids on a bounded sample of the live index, re-assigns every
-  *    live vector into a NEW generation, carries the old generation's
-  *    batch names forward as `_seen` records so replay detection
-  *    survives, and flips visibility with ONE `_gen` marker create.
+  *    live vector into a NEW generation directory no earlier attempt used,
+  *    carries the old generation's batch names forward so replay detection
+  *    survives, and flips visibility with ONE commit.
   *
   * Reference for the IVF structure: Jégou/Douze/Schmid, "Product
   * quantization for nearest neighbor search" (TPAMI 2011) §IV-A.
@@ -60,43 +59,52 @@ object IvfIndex {
   private val HistPrefix = "_hist."
   private val HistTmpPrefix = "_histtmp."
 
-  /** The sequence slot the NEXT append must claim — read this BEFORE
+  /** The commit number the NEXT append publishes at — read this BEFORE
     * taking the kept-set snapshot a batch dedups against
     * ([[Similarity.semDeDupIncremental]]) and pass it to [[append]]: the
-    * claim then covers the whole read→dedup→append span, so a second
-    * writer whose snapshot raced yours fails loud at its claim even when
-    * the two `append` calls themselves never overlap.
+    * number then covers the whole read→dedup→append span, so a second
+    * writer whose snapshot raced yours fails loud at its publish even
+    * when the two `append` calls themselves never overlap.
     *
-    * PRECISELY what the guard detects: any two writers whose slot-read →
-    * claim spans overlap collide on a slot and the later claim throws. A
-    * writer whose ENTIRE span lands inside another's claim → marker gap
-    * (milliseconds of driver-side filesystem calls, no Spark jobs) reads
-    * the higher slot and passes undetected — the guard is a tripwire for
-    * uncoordinated writers, not a lock; sequential dispatch (the
-    * `foreachBatch` shape) remains the contract. */
+    * PRECISELY what the guard detects: of writers that read one number,
+    * one publishes at it and every other finds a batch landed at or after
+    * it and throws; commits that land no batch (folds, flips) do not count as a
+    * race. The guard is a tripwire for uncoordinated writers, not a lock;
+    * sequential dispatch (the `foreachBatch` shape) remains the contract. */
   def nextAppendSeq(spark: SparkSession, dir: String): Long =
-    batches(spark, requireGen(spark, dir)._2).nextSeq()
+    requireGen(spark, dir).next
 
   private def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def gens(spark: SparkSession, dir: String) =
-    new MarkerLog.VersionPointer(fs(spark, dir), new Path(dir), "_gen.", "gen-")
+  /** The index's commit log: a state names the generation directory and
+    * the live batch directories inside it. */
+  private[pipeline] def log(spark: SparkSession, dir: String) =
+    new MarkerLog.IndexLog(fs(spark, dir), new Path(dir), "IvfIndex",
+      s => s.only(MarkerLog.Gen).toSeq.flatMap { case (g, _) =>
+        g +: s.live.map(n => s"$g/batch=$n")
+      },
+      Seq("gen-*", "gen-*/batch=*"))
 
-  /** Generation `gp`'s batch log. */
-  private def batches(spark: SparkSession, gp: String) =
-    new MarkerLog.BatchLog(fs(spark, gp), new Path(gp), "IvfIndex", "batch=")
+  /** One read of the log: the current generation's id and directory, the
+    * state naming them, and the number the next commit takes. Multi-stage
+    * calls resolve this ONCE and thread it through, so a retrain flipping
+    * mid-call cannot mix two quantizers' layouts. */
+  private final case class Gen(gid: Long, gp: String,
+                               state: MarkerLog.IndexState, next: Long)
 
-  /** The current generation id, by newest `_gen` marker. */
+  private def genOf(dir: String, v: MarkerLog.CommitView,
+                    st: MarkerLog.IndexState): Option[Gen] =
+    st.only(MarkerLog.Gen).map { case (g, gid) => Gen(gid, s"$dir/$g", st, v.next) }
+
+  /** The current generation id. */
   def currentGen(spark: SparkSession, dir: String): Option[Long] =
-    gens(spark, dir).current.flatMap(_.toLongOption)
+    log(spark, dir).state.only(MarkerLog.Gen).map(_._2)
 
-  private def genPath(dir: String, gid: Long): String = s"$dir/gen-$gid"
-
-  private def requireGen(spark: SparkSession, dir: String): (Long, String) = {
-    val gid = currentGen(spark, dir).getOrElse(throw new IllegalStateException(
+  private def requireGen(spark: SparkSession, dir: String): Gen = {
+    val (v, st) = log(spark, dir).read()
+    genOf(dir, v, st).getOrElse(throw new IllegalStateException(
       s"IvfIndex at $dir has no generation — call init() first"))
-    (gid, genPath(dir, gid))
   }
 
   /** Create the index with an initial quantizer (generation 0). Pass
@@ -143,13 +151,17 @@ object IvfIndex {
     require(currentGen(spark, dir).isEmpty, s"IvfIndex at $dir already exists")
     require(rotation.isEmpty || codebooks.isDefined,
       s"IvfIndex at $dir: an OPQ rotation without codebooks has nothing to rotate for")
-    writeGen(spark, dir, 0L, coarse, codebooks, rotation, Nil, Nil)
+    val g = writeGen(spark, dir, 0L, coarse, codebooks, rotation, Nil)
+    log(spark, dir).commit { (_, s) =>
+      require(s.only(MarkerLog.Gen).isEmpty, s"IvfIndex at $dir already exists")
+      Some(s.set(MarkerLog.Gen, g, 0L))
+    }
   }
 
   /** The current generation's FLAT quantizer, cell-ordered (fails on an
     * IMI-quantized index — use [[cellAssigner]]/[[imiHalves]] there). */
   def centroids(spark: SparkSession, dir: String): Array[Array[Double]] =
-    centroidsIn(spark, requireGen(spark, dir)._2)
+    centroidsIn(spark, requireGen(spark, dir).gp)
 
   private def centroidsIn(spark: SparkSession, gp: String): Array[Array[Double]] =
     // k×dims quantizer metadata the driver consumes (the centroids ride
@@ -160,8 +172,7 @@ object IvfIndex {
   /** The current generation's IMI half codebooks (None on a flat index). */
   def imiHalves(spark: SparkSession,
                 dir: String): Option[Array[Array[Array[Double]]]] = {
-    val gp = requireGen(spark, dir)._2
-    coarseIn(spark, gp) match {
+    coarseIn(spark, requireGen(spark, dir).gp) match {
       case ImiCoarse(h) => Some(h)
       case _ => None
     }
@@ -231,16 +242,16 @@ object IvfIndex {
     * cells into the new generation's layout). */
   private[pipeline] def cellAssignerGen(spark: SparkSession, dir: String)
       : (Long, org.apache.spark.sql.Column => org.apache.spark.sql.Column) = {
-    val (gid, gp) = requireGen(spark, dir)
-    val c = coarseIn(spark, gp)
-    (gid, e => assignCol(c, e))
+    val g = requireGen(spark, dir)
+    val c = coarseIn(spark, g.gp)
+    (g.gid, e => assignCol(c, e))
   }
 
   /** The current generation's PQ codebooks (None on a flat index) —
     * [[Similarity.readCodebooks]] over the generation's parquet. */
   def codebooks(spark: SparkSession,
                 dir: String): Option[Array[Array[Array[Double]]]] =
-    codebooksIn(spark, requireGen(spark, dir)._2)
+    codebooksIn(spark, requireGen(spark, dir).gp)
 
   private def codebooksIn(spark: SparkSession,
                           gp: String): Option[Array[Array[Array[Double]]]] = {
@@ -252,24 +263,24 @@ object IvfIndex {
   /** The current generation's OPQ rotation (None on a plain index). */
   def rotation(spark: SparkSession,
                dir: String): Option[Array[Array[Double]]] =
-    Similarity.readRotation(spark, requireGen(spark, dir)._2)
+    Similarity.readRotation(spark, requireGen(spark, dir).gp)
 
   /** Whether batch `name` already landed in the CURRENT generation —
     * live, folded, or carried forward across a retrain. */
   def contains(spark: SparkSession, dir: String, name: String): Boolean =
-    batches(spark, requireGen(spark, dir)._2).contains(name)
+    requireGen(spark, dir).state.landed(name)
 
   /** Append `vectors` (vec_id, embedding) under batch `name`: assign each
     * vector to its nearest current-generation centroid and write the
     * batch partitioned by cell. Returns false when `name` already landed
     * (idempotent replay). Throws
-    * [[graft.sources.ConcurrentWriterException]] when a second writer
-    * claimed this append's generation sequence slot first
-    * (pass `seq` from [[nextAppendSeq]] to cover a kept-set read that
-    * preceded this call), and [[IllegalStateException]] if a retrain
-    * flipped generations while the batch was writing — in both cases the
-    * batch directory is an unmarked orphan the next [[compact]] sweeps,
-    * and the batch must be re-run. */
+    * [[graft.sources.ConcurrentWriterException]] when a second writer's
+    * batch landed at or after this append's commit number (pass `seq`
+    * from [[nextAppendSeq]] to cover a kept-set read that preceded this
+    * call), and [[IllegalStateException]] if a retrain flipped
+    * generations while the batch was writing — in both cases nothing was
+    * published, the batch directory is an unnamed orphan the next
+    * [[compact]] sweeps, and the batch must be re-run. */
   def append(vectors: DataFrame, dir: String, name: String,
              seq: Option[Long] = None): Boolean =
     appendCore(vectors.sparkSession, dir, name, seq, gp =>
@@ -290,9 +301,9 @@ object IvfIndex {
     * kernel per survivor. Caller contract: the assignment comes from
     * [[cellAssignerGen]], whose gid is passed here — cell ids are
     * generation-specific, so a retrain flipping between the assignment
-    * and this append throws (the internal pre/post checks only cover
-    * flips INSIDE the append; without the gid pin a pre-append flip
-    * would silently write stale-generation cells into the new layout). */
+    * and this append throws (the publish-time check only covers flips
+    * INSIDE the append; without the gid pin a pre-append flip would
+    * silently write stale-generation cells into the new layout). */
   private[pipeline] def appendAssigned(assigned: DataFrame, dir: String,
                                        name: String, seq: Option[Long],
                                        assignedGen: Long): Boolean =
@@ -305,28 +316,29 @@ object IvfIndex {
                          seq: Option[Long],
                          mkAssigned: String => DataFrame,
                          expectGen: Option[Long] = None): Boolean = {
-    val (gid, gp) = requireGen(spark, dir)
+    val g = requireGen(spark, dir)
+    val (gid, gp) = (g.gid, g.gp)
     // idempotency FIRST: a retry of an already-landed batch stays a no-op
     // even when it carries a stale assignedGen (a retrain that landed
     // after the first attempt committed must not turn the replay into a
-    // spurious failure — the marker carried across the flip, nothing is
+    // spurious failure — the name carried across the flip, nothing is
     // written). The generation pin below guards NOT-landed batches only.
-    val log = batches(spark, gp)
-    if (log.contains(name)) return false
+    if (g.state.landed(name)) return false
     expectGen.filter(_ != gid).foreach(eg =>
       throw new IllegalStateException(
         s"IvfIndex append '$name' raced a retrain at $dir: the batch was " +
           s"assigned against generation $eg but the index is at $gid — " +
           "cell assignments are generation-specific; re-run the batch " +
           "against the new quantizer"))
-    val f = log.fs
-    // slot read FIRST (before the quantizer read — the start of this
-    // append's view of the index), claim before the marker create
-    val next = seq.getOrElse(log.nextSeq())
+    val f = fs(spark, dir)
+    // the commit number comes from the same read as the generation: the
+    // start of this append's view of the index
+    val next = seq.getOrElse(g.next)
     val cbs = codebooksIn(spark, gp)
     val rot = Similarity.readRotation(spark, gp)
     val assigned = mkAssigned(gp)
-    log.write(name) { outDir =>
+    val outDir = new Path(s"$gp/batch=$name")
+    MarkerLog.step("write", outDir) {
       // a PQ generation also encodes AT APPEND TIME against its persisted
       // codebooks (one more codegen'd projection in the same pass) — the
       // code column is what [[searchPq]] scans; an OPQ generation rotates
@@ -338,14 +350,14 @@ object IvfIndex {
         .write.mode("overwrite").partitionBy("cell")
         .parquet(outDir.toString)
       // an EMPTY batch (routine: every survivor of a semDeDup batch was a
-      // near-dup) publishes its marker WITHOUT a directory — a zero-row
+      // near-dup) publishes its name WITHOUT a directory — a zero-row
       // partitionBy write emits no parquet footer, which later reads could
       // not parse; [[readBatch]]/[[read]] treat the missing directory as
       // the empty relation. Emptiness is read OFF THE WRITTEN DIRECTORY
       // (no cell= children) instead of a separate isEmpty pre-action,
       // which cost one full extra pass over the batch's dedup lineage per
       // append; a crash between the write and this delete leaves an
-      // unmarked orphan dir, exactly like a crash mid-write — [[compact]]
+      // unnamed orphan dir, exactly like a crash mid-write — [[compact]]
       // sweeps it.
       val wroteRows = f.exists(outDir) && f.listStatus(outDir).exists(st =>
         st.isDirectory && st.getPath.getName.startsWith("cell="))
@@ -357,35 +369,26 @@ object IvfIndex {
         writeHist(spark, f, gp, name)
       else f.delete(outDir, true)
     }
-    if (currentGen(spark, dir) != Some(gid))
-      throw new IllegalStateException(
-        s"IvfIndex append '$name' raced a retrain at $dir (generation " +
-          s"moved past $gid) — re-run the batch against the new quantizer")
-    log.claim(next)
-    val marker = log.mark(name)
-    // post-create re-check: a retrain that flipped between the pre-check
-    // and the create would leave this marker in a RETIRED generation —
-    // append would report success while new-generation readers never see
-    // the batch. Withdraw the marker and fail loud instead.
-    if (currentGen(spark, dir) != Some(gid)) {
-      log.withdraw(marker)
-      throw new IllegalStateException(
-        s"IvfIndex append '$name' raced a retrain at $dir (generation " +
-          s"moved past $gid after the marker create) — marker withdrawn; " +
-          "re-run the batch against the new quantizer")
-    }
+    // published only onto a tip naming THIS generation: a retrain that
+    // took the number first would strand the batch in a retired generation
+    log(spark, dir).append(Seq(name), next)(s =>
+      if (!s.only(MarkerLog.Gen).exists(_._2 == gid))
+        throw new IllegalStateException(
+          s"IvfIndex append '$name' raced a retrain at $dir (generation " +
+            s"moved past $gid) — nothing was published; re-run the batch " +
+            "against the new quantizer"))
     true
   }
 
   /** The rows one batch appended (None when not individually readable —
-    * never landed, or folded/retired past the grace window). A marker
-    * without a directory is a landed EMPTY batch. */
+    * never landed, or folded/retired past the grace window). A live
+    * name without a directory is a landed EMPTY batch. */
   def readBatch(spark: SparkSession, dir: String,
                 name: String): Option[DataFrame] = {
-    val (_, gp) = requireGen(spark, dir)
-    val log = batches(spark, gp)
-    if (!log.isLive(name)) None
-    else if (!log.fs.exists(log.batchPath(name)))
+    val g = requireGen(spark, dir)
+    val gp = g.gp
+    if (!g.state(MarkerLog.Live).contains(name)) None
+    else if (!fs(spark, dir).exists(new Path(s"$gp/batch=$name")))
       Some(emptyCells(spark))
     else
       Some(spark.read.option("basePath", gp)
@@ -398,11 +401,8 @@ object IvfIndex {
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cellSchema)
 
-  private def liveBatchNames(spark: SparkSession, gp: String): Seq[String] =
-    batches(spark, gp).live
-
   /** The live index relation (cell, cid, ce) — the union of the current
-    * generation's marker-named batch directories. Every batch root shares
+    * generation's live batch directories. Every batch root shares
     * the `cell=<i>` layout, so a literal cell predicate on this relation
     * partition-prunes EVERY batch. */
   def read(spark: SparkSession, dir: String): DataFrame =
@@ -427,7 +427,7 @@ object IvfIndex {
 
   private def readCols(spark: SparkSession, dir: String, cols: Seq[String],
                        emptySchema: StructType): DataFrame =
-    readColsIn(spark, requireGen(spark, dir)._2, cols, emptySchema)
+    readColsIn(spark, requireGen(spark, dir), cols, emptySchema)
 
   /** The user-specified schema of a batch-directory read — data columns
     * plus the `batch`/`cell` partition path columns. Handing it to the
@@ -445,15 +445,13 @@ object IvfIndex {
       Seq(StructField("batch", org.apache.spark.sql.types.StringType),
         StructField("cell", IntegerType)))
 
-  /** [[readCols]] against an ALREADY-RESOLVED generation path — multi-
-    * stage queries resolve the generation ONCE and thread it through, so
-    * a retrain flipping mid-query cannot mix two quantizers' layouts. */
-  private def readColsIn(spark: SparkSession, gp: String, cols: Seq[String],
+  /** [[readCols]] against an ALREADY-RESOLVED generation. */
+  private def readColsIn(spark: SparkSession, g: Gen, cols: Seq[String],
                          emptySchema: StructType): DataFrame = {
+    val gp = g.gp
     val f = fs(spark, gp)
-    // empty batches land as marker-only (no directory) — skip them
-    val live = liveBatchNames(spark, gp)
-      .filter(n => f.exists(new Path(s"$gp/batch=$n")))
+    // empty batches land by name only (no directory) — skip them
+    val live = g.state.live.filter(n => f.exists(new Path(s"$gp/batch=$n")))
     if (live.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
@@ -487,11 +485,11 @@ object IvfIndex {
              maxQueryRows: Long = Similarity.DefaultMaxQueryRows): DataFrame = {
     // ONE generation resolution for the whole query: quantizer and layout
     // always agree even when a retrain flips mid-call
-    val (_, gp) = requireGen(spark, dir)
-    searchIn(spark, gp, coarseIn(spark, gp), queries, topK, nProbe, maxQueryRows)
+    val g = requireGen(spark, dir)
+    searchIn(spark, g, coarseIn(spark, g.gp), queries, topK, nProbe, maxQueryRows)
   }
 
-  private def searchIn(spark: SparkSession, gp: String, coarse: Coarse,
+  private def searchIn(spark: SparkSession, g: Gen, coarse: Coarse,
                        queries: DataFrame,
                        topK: Int, nProbe: Int, maxQueryRows: Long): DataFrame = {
     // the bounded query side lands on the driver ONCE
@@ -504,7 +502,7 @@ object IvfIndex {
     val rows = Similarity.takeBounded(qFrame, maxQueryRows, "IvfIndex.search")
     val (q, probed) = Similarity.probedLocalFlat(spark, rows, qFrame.schema,
       probeLocal(coarse, nProbe))
-    val cells = readColsIn(spark, gp, Seq("cell", "cid", "ce"), cellSchema)
+    val cells = readColsIn(spark, g, Seq("cell", "cid", "ce"), cellSchema)
       .where(col("cell").isInCollection(probed)) // literal → partition pruning
     // the query side is bounded by contract — broadcast it explicitly
     // (like [[Similarity.ivfPqSearch]]): the join key `cell` has ≤ k
@@ -513,8 +511,8 @@ object IvfIndex {
     // skewed; the broadcast join never shuffles the corpus side
     val scored = broadcast(q).join(cells, Seq("cell")).where(col("qid") =!= col("cid"))
       .withColumn("cos", Similarity.cosine(col("qe"), col("ce")))
-      // a compaction's publish-before-retire window can expose a vector
-      // in both the fold and its original batch: collapse the copies
+      // a vector appended under two batch names is visible twice:
+      // collapse the copies
       // BEFORE ranking (row_number would give the twin two ranks and
       // push the true k-th neighbour out). Scored FIRST and deduped on
       // scalars only — carrying the embedding arrays through the
@@ -533,8 +531,8 @@ object IvfIndex {
     * batch directory) and every candidate is scored by M table probes on
     * its codes — the scan touches the code column only (column pruning),
     * so probe I/O is nProbe/k of the corpus × M bytes per row no matter
-    * how many appends built the index. A compaction's publish-before-
-    * retire window can expose a vector twice; the twins carry identical
+    * how many appends built the index. A vector appended under two batch
+    * names is visible twice; the twins carry identical
     * codes (deterministic encode), so the (qid, cid) dedup before
     * ranking collapses them exactly as [[search]] does.
     *
@@ -545,9 +543,9 @@ object IvfIndex {
   def searchPq(spark: SparkSession, dir: String, queries: DataFrame,
                topK: Int, nProbe: Int = 4,
                maxQueryRows: Long = Similarity.DefaultMaxQueryRows): DataFrame = {
-    val (_, gp) = requireGen(spark, dir) // one resolution per query
-    val scored = adcScoredIn(spark, pqGenIn(spark, gp, dir), queries, nProbe,
-      maxQueryRows, "IvfIndex.searchPq", gp)._1
+    val g = requireGen(spark, dir) // one resolution per query
+    val scored = adcScoredIn(spark, pqGenIn(spark, g.gp, dir), queries, nProbe,
+      maxQueryRows, "IvfIndex.searchPq", g)._1
     Similarity.rankTopK(scored, "adist", ascending = true, topK)
   }
 
@@ -577,7 +575,7 @@ object IvfIndex {
     * side all derive from it, driver-side ([[Similarity.probedLocalLut]]). */
   private def adcScoredIn(spark: SparkSession, g: PqGen,
                           queries: DataFrame, nProbe: Int, maxQueryRows: Long,
-                          op: String, gp: String)
+                          op: String, gen: Gen)
       : (DataFrame, DataFrame, Seq[Int]) = {
     val qFrame = queries.select(col("vec_id").as("qid"),
       col("embedding").cast("array<double>").as("qe"))
@@ -594,12 +592,12 @@ object IvfIndex {
     val (q, probed) = Similarity.probedLocalLut(spark, rows, qFrame.schema,
       probeLocal(g.coarse, nProbe), Similarity.adcLutLocal(g.cbs, g.rot),
       g.cbs.length)
-    val cells = readColsIn(spark, gp, Seq("cell", "cid", "codes"), codedSchema)
+    val cells = readColsIn(spark, gen, Seq("cell", "cid", "codes"), codedSchema)
       .where(col("cell").isInCollection(probed)) // literal → partition pruning
     val scored = broadcast(q).join(cells, Seq("cell"))
       .where(col("qid") =!= col("cid"))
       .withColumn("adist", Similarity.adcScoreCol(g.cbs))
-      // fold-window twins carry identical deterministic codes → identical
+      // twins carry identical deterministic codes → identical
       // adist; dedup on scalars only, before ranking (like [[search]])
       .select("qid", "cid", "adist")
       .dropDuplicates("qid", "cid")
@@ -632,9 +630,9 @@ object IvfIndex {
     // stages: a retrain flipping mid-call cannot pair stage-1 geometry
     // with stage-2 layout (probed cells computed against one quantizer
     // filtering another generation's re-assigned directories)
-    val (_, gp) = requireGen(spark, dir)
-    val (adc, q, probed) = adcScoredIn(spark, pqGenIn(spark, gp, dir), queries,
-      nProbe, maxQueryRows, "IvfIndex.searchPqRerank", gp)
+    val g = requireGen(spark, dir)
+    val (adc, q, probed) = adcScoredIn(spark, pqGenIn(spark, g.gp, dir), queries,
+      nProbe, maxQueryRows, "IvfIndex.searchPqRerank", g)
     // the ONE shared ranking tail cuts the shortlist too — its tie-break
     // can never diverge from searchPq's. The shortlist is bounded by
     // contract (queries × l rows): collect it ONCE — the cid probe and
@@ -652,7 +650,7 @@ object IvfIndex {
     // alone filters (the scan then reads the probed cells' ce — still
     // nProbe/k, never the corpus)
     val cidProbe = shortRows.map(_.getLong(1)).distinct
-    val vecsAll = readColsIn(spark, gp, Seq("cell", "cid", "ce"), cellSchema)
+    val vecsAll = readColsIn(spark, g, Seq("cell", "cid", "ce"), cellSchema)
       .where(col("cell").isInCollection(probed))
     val vecs =
       if (cidProbe.length <= MaxRerankCidProbe)
@@ -664,7 +662,7 @@ object IvfIndex {
     // dedup buffer here would downgrade the aggregation to SortAggregate)
     val scored = broadcast(q).join(cand, Seq("qid"))
       .withColumn("cos", Similarity.cosine(col("qe"), col("ce")))
-      // fold-window twins collapse on scalars, like [[search]]
+      // twins collapse on scalars, like [[search]]
       .select("qid", "cid", "cos")
       .dropDuplicates("qid", "cid")
     Similarity.rankTopK(scored, "cos", ascending = false, topK)
@@ -697,11 +695,11 @@ object IvfIndex {
     // ONE generation resolution for every slice: a retrain flipping
     // mid-iteration cannot answer different slices from different
     // quantizers
-    val (_, gp) = requireGen(spark, dir)
-    val g = pqGenIn(spark, gp, dir) // quantizer state read ONCE, all slices
+    val g = requireGen(spark, dir)
+    val pq = pqGenIn(spark, g.gp, dir) // quantizer state read ONCE, all slices
     batchedOver(spark, queries, batchRows, q => {
-      val scored = adcScoredIn(spark, g, q, nProbe, batchRows,
-        "IvfIndex.searchPqBatched", gp)._1
+      val scored = adcScoredIn(spark, pq, q, nProbe, batchRows,
+        "IvfIndex.searchPqBatched", g)._1
       Similarity.rankTopK(scored, "adist", ascending = true, topK)
     })
   }
@@ -712,10 +710,10 @@ object IvfIndex {
   def searchBatched(spark: SparkSession, dir: String, queries: DataFrame,
                     topK: Int, nProbe: Int = 4,
                     batchRows: Long = Similarity.DefaultMaxQueryRows): DataFrame = {
-    val (_, gp) = requireGen(spark, dir)
-    val coarse = coarseIn(spark, gp) // quantizer read ONCE, all slices
+    val g = requireGen(spark, dir)
+    val coarse = coarseIn(spark, g.gp) // quantizer read ONCE, all slices
     batchedOver(spark, queries, batchRows,
-      searchIn(spark, gp, coarse, _, topK, nProbe, batchRows))
+      searchIn(spark, g, coarse, _, topK, nProbe, batchRows))
   }
 
   /** The shared unbounded-query slicing: deterministic vec_id ranges of
@@ -763,12 +761,16 @@ object IvfIndex {
     // [[compact]] sweeps any crash-orphaned tmp.
     val tmp = new Path(gp, s"$HistTmpPrefix$name")
     val dst = new Path(gp, s"$HistPrefix$name")
-    val o = f.create(tmp, true)
-    o.write(counts.toSeq.sorted.map { case (c, n) => s"$c $n" }.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    o.close()
-    f.delete(dst, false)
-    f.rename(tmp, dst)
+    MarkerLog.step("hist", tmp) {
+      val o = f.create(tmp, true)
+      try o.write(counts.toSeq.sorted.map { case (c, n) => s"$c $n" }.mkString("\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally o.close()
+    }
+    MarkerLog.step("move", dst) {
+      f.delete(dst, false)
+      f.rename(tmp, dst)
+    }
   }
 
   private def readHist(f: org.apache.hadoop.fs.FileSystem, gp: String,
@@ -818,12 +820,12 @@ object IvfIndex {
     * index; a batch missing its sidecar (externally restored state) falls
     * back to a partition-column scan of THAT batch only. */
   def cellCounts(spark: SparkSession, dir: String): Map[Int, Long] =
-    cellCountsIn(spark, requireGen(spark, dir)._2)
+    cellCountsIn(spark, requireGen(spark, dir))
 
-  private def cellCountsIn(spark: SparkSession, gp: String): Map[Int, Long] = {
+  private def cellCountsIn(spark: SparkSession, g: Gen): Map[Int, Long] = {
+    val gp = g.gp
     val f = fs(spark, gp)
-    val live = liveBatchNames(spark, gp)
-      .filter(n => f.exists(new Path(s"$gp/batch=$n")))
+    val live = g.state.live.filter(n => f.exists(new Path(s"$gp/batch=$n")))
     live.map(n => readHist(f, gp, n).getOrElse(scanCellCounts(spark, gp, n)))
       .foldLeft(Map.empty[Int, Long]) { (acc, m) =>
         m.foldLeft(acc) { case (a, (c, n)) => a.updated(c, a.getOrElse(c, 0L) + n) }
@@ -834,9 +836,9 @@ object IvfIndex {
     * (1.0 = perfectly balanced; k = everything in one cell). A metadata
     * read — [[cellCounts]] sums the `_hist` sidecars, never batch data. */
   def skew(spark: SparkSession, dir: String): Double = {
-    val (_, gp) = requireGen(spark, dir)
-    val k = coarseIn(spark, gp).kEff
-    val counts = cellCountsIn(spark, gp)
+    val g = requireGen(spark, dir)
+    val k = coarseIn(spark, g.gp).kEff
+    val counts = cellCountsIn(spark, g)
     val total = counts.values.sum
     if (total == 0L) 1.0
     else counts.values.max.toDouble / (total.toDouble / k)
@@ -852,7 +854,9 @@ object IvfIndex {
   /** Retrain the quantizer on a bounded sample of the live index and
     * rebuild into a NEW generation: fresh centroids, live vectors
     * re-assigned, replay detection carried, visibility flipped by ONE
-    * atomic `_gen` marker create. On a product-quantized index the
+    * commit. The retrain and every other writer race on that commit's
+    * number: when any commit landed since the retrain's read, it throws,
+    * having published nothing. On a product-quantized index the
     * CODEBOOKS retrain too (same M and Ks, per-subspace Lloyd on the same
     * bounded sample) and the rebuild re-encodes every live vector against
     * them — possible precisely because the appendable layout retains raw
@@ -864,14 +868,14 @@ object IvfIndex {
     * the bounded train sample (≤ `trainLimit` rows, feeding the coarse
     * Lloyd passes AND each PQ subspace's), never the corpus.
     *
-    * REPLAY ACROSS THE FLIP (compact's grace discipline): batches whose
-    * marker is younger than `graceMs` keep PER-BATCH identity in the new
-    * generation — re-assigned into their own `batch=<name>` directory
-    * with a fresh marker — so a streaming `foreachBatch` replay that
-    * crosses the retrain still answers from its own batch ([[readBatch]]
-    * — the survivor ID SET is assignment-invariant). Aged batches fold
-    * into one directory and carry forward as `_seen` records only (a
-    * replay that old fails loud, as it does across a fold).
+    * REPLAY ACROSS THE FLIP (compact's grace discipline): batches
+    * published less than `graceMs` ago keep PER-BATCH identity in the new
+    * generation — re-assigned into their own `batch=<name>` directory,
+    * live at their original publish time — so a streaming `foreachBatch`
+    * replay that crosses the retrain still answers from its own batch
+    * ([[readBatch]] — the survivor ID SET is assignment-invariant). Aged
+    * batches fold into one directory and carry forward as folded names
+    * only (a replay that old fails loud, as it does across a fold).
     *
     * The old generation's directories stay on disk for in-flight readers
     * until [[compact]]'s grace-window vacuum retires them. Returns the
@@ -879,18 +883,17 @@ object IvfIndex {
   def retrain(spark: SparkSession, dir: String, k: Int = 16, iters: Int = 5,
               trainLimit: Int = 100000,
               graceMs: Long = 15 * 60 * 1000L): Long = {
-    val (gid, gp) = requireGen(spark, dir)
+    val g = requireGen(spark, dir)
+    val (gid, gp) = (g.gid, g.gp)
     val f = fs(spark, dir)
-    val log = batches(spark, gp)
-    val liveMarks = log.liveStamped
-    val newest = liveMarks.groupBy(_._2).map { case (n, xs) => n -> xs.map(_._1).max }
+    val published = g.state(MarkerLog.Live)
     val now = System.currentTimeMillis()
-    val recent = newest.filter(_._2 > now - graceMs).keys.toSeq.sorted
-    val aged = newest.keys.toSeq.diff(recent).sorted
+    val recent = published.filter(_._2 > now - graceMs).keys.toSeq.sorted
+    val aged = published.keys.toSeq.diff(recent).sorted
     // the frozen corpus view: an explicit-path parquet relation over the
-    // live batch directories (immutable once marked) — both the sample
+    // live batch directories (immutable once published) — both the sample
     // pass and the re-assign passes read these same bytes
-    val vecs = readColsIn(spark, gp, Seq("cell", "cid", "ce"), cellSchema)
+    val vecs = readColsIn(spark, g, Seq("cell", "cid", "ce"), cellSchema)
       .select(col("cid").as("vec_id"), col("ce").as("embedding"))
     Option(retrainReadTestHook.getAndSet(null)).foreach(_.apply(vecs))
     val sample = vecs.orderBy(col("vec_id")).limit(trainLimit)
@@ -956,12 +959,23 @@ object IvfIndex {
       (n,
         if (f.exists(new Path(s"$gp/batch=$n")))
           Some(rows(Seq(s"$gp/batch=$n")))
-        else None, // marker-only empty batch stays marker-only
-        newest(n))
+        else None, // a name-only empty batch stays name-only
+        published(n))
     }
-    val carried = (log.seenTimes.keys.toSeq ++ aged).distinct
-    writeGen(spark, dir, gid + 1, coarse, newCbs, newRot,
-      fold ++ recentBatches, carried)
+    val batchesOut = fold ++ recentBatches
+    val newGen = writeGen(spark, dir, gid + 1, coarse, newCbs, newRot, batchesOut)
+    // ONE commit flips the generation, names the re-assigned batches at
+    // their publish times and carries every other landed name as folded
+    val flipped = log(spark, dir).commit { (v, s) =>
+      if (v.next != g.next) None
+      else Some(MarkerLog.IndexState(Map(
+        MarkerLog.Gen -> Map(newGen -> (gid + 1)),
+        MarkerLog.Live -> batchesOut.map { case (n, _, ts) => n -> ts }.toMap,
+        MarkerLog.Seen -> (s(MarkerLog.Seen) ++ aged.map(_ -> now))), s.appended))
+    }
+    if (flipped.isEmpty) throw new IllegalStateException(
+      s"IvfIndex at $dir: a concurrent commit landed while generation ${gid + 1} " +
+        "was training — the retrain published nothing; re-run it")
     gid + 1
   }
 
@@ -978,18 +992,24 @@ object IvfIndex {
       Some(retrain(spark, dir, k, iters, trainLimit, graceMs))
     else None
 
-  /** Write generation `gid` and flip it current — a
-    * [[MarkerLog.VersionPointer]] flip, so the remnant of a crashed
-    * earlier attempt (a `gen-<gid>` no `_gen` marker names) is cleared
-    * first and a retry lands. */
+  /** Write generation `gid` — its quantizer files and the re-assigned
+    * `batchesIn` — into a directory no earlier attempt used, and return
+    * its name for the commit that publishes it. The first generation is
+    * `gen-0`; every later one, and an init retried over a crashed one,
+    * takes a fresh suffix, so nothing is cleared before reuse: an attempt
+    * that crashed before its commit leaves an unnamed directory the
+    * vacuum sweeps. */
   private def writeGen(spark: SparkSession, dir: String, gid: Long,
                        coarse: Coarse,
                        cbs: Option[Array[Array[Array[Double]]]],
                        rot: Option[Array[Array[Double]]],
-                       batchesIn: Seq[(String, Option[DataFrame], Long)],
-                       carriedNames: Seq[String]): Unit = {
-    val flipped = gens(spark, dir).flip(gid.toString) { target =>
-      val gp = target.toString
+                       batchesIn: Seq[(String, Option[DataFrame], Long)]): String = {
+    val f = fs(spark, dir)
+    val name =
+      if (gid == 0L && !f.exists(new Path(dir, "gen-0"))) "gen-0"
+      else s"gen-$gid-${MarkerLog.freshName()}"
+    val gp = s"$dir/$name"
+    MarkerLog.step("write", new Path(gp)) {
       // quantizer state is a driver array — direct driver parquet writes
       // ([[QuantizerFiles]]), no Spark job per file
       def writeCbs(b: Array[Array[Array[Double]]], path: String): Unit =
@@ -1004,61 +1024,52 @@ object IvfIndex {
       }
       cbs.foreach(writeCbs(_, s"$gp/codebooks"))
       rot.foreach(Similarity.writeRotation(spark, gp, _))
-      val log = batches(spark, gp)
-      batchesIn.foreach { case (name, vectors, markerTs) =>
+      batchesIn.foreach { case (batch, vectors, _) =>
         vectors.foreach { vecs =>
           val assigned = vecs.select(col("vec_id").as("cid"),
               col("embedding").cast("array<double>").as("ce"))
             .withColumn("cell", assignCol(coarse, col("ce")))
-          log.write(name)(out =>
-            cbs.fold(assigned.select("cell", "cid", "ce"))(b =>
-                assigned.withColumn("codes",
-                    Similarity.pqCodesCol(Similarity.rotatedCol(col("ce"), rot), b))
-                  .select("cell", "cid", "ce", "codes"))
-              .write.mode("overwrite").partitionBy("cell")
-              .parquet(out.toString))
-          writeHist(spark, log.fs, gp, name)
+          cbs.fold(assigned.select("cell", "cid", "ce"))(b =>
+              assigned.withColumn("codes",
+                  Similarity.pqCodesCol(Similarity.rotatedCol(col("ce"), rot), b))
+                .select("cell", "cid", "ce", "codes"))
+            .write.mode("overwrite").partitionBy("cell")
+            .parquet(s"$gp/batch=$batch")
+          writeHist(spark, f, gp, batch)
         }
-        // markerTs preserves a carried batch's ORIGINAL publish time, so
-        // its fold-grace clock survives the generation flip
-        log.mark(name, markerTs)
       }
-      log.recordSeen(carriedNames)
     }
-    if (!flipped) throw new IllegalStateException(
-      s"IvfIndex at $dir: generation $gid is already published — a " +
-        "concurrent retrain or init raced this one")
+    name
   }
 
   /** Freeze the CURRENT generation under `dir/snapshots/<name>/` — a
-    * fully valid IvfIndex directory (its own `_gen` marker, the
-    * generation's quantizer files, and the batch log's captured state —
-    * [[MarkerLog.BatchLog.snapshotInto]]): search, append and retrain all
-    * work against a restored snapshot. Readers of the original never list
-    * `snapshots/`, and a crashed capture publishes none
-    * ([[MarkerLog.snapshot]]). */
+    * fully valid IvfIndex directory (the generation's quantizer files, its
+    * live batches and their histogram sidecars, and its own `_commit.1` —
+    * [[MarkerLog.IndexLog.snapshot]]): search, append and retrain all work
+    * against a restored snapshot. Readers of the original never list
+    * `snapshots/`, and a crashed capture publishes none. */
   def snapshot(spark: SparkSession, dir: String): String = {
-    val (gid, gp) = requireGen(spark, dir)
     val f = fs(spark, dir)
-    MarkerLog.snapshot(f, new Path(dir)) { out =>
-      val ogp = new Path(out, s"gen-$gid")
-      val cap = batches(spark, gp).snapshotInto(ogp)
-      cap.entries.foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && (n == "centroids" || n == "codebooks" ||
-            n == "rotation" || n == "imicb"))
-          MarkerLog.linkTree(f, st.getPath, new Path(ogp, n))
-        else if (st.isFile && n.startsWith(HistPrefix) &&
-            cap.batches.contains(n.drop(HistPrefix.length)))
-          // histogram sidecars CARRY CONTENT (unlike the zero-byte marker
-          // names) — link them; a compact racing the snapshot can retire one
-          // between the capture listing and this copy, and the restored
-          // index then falls back to the per-batch repair scan, so a
-          // vanished source is skipped, not fatal
-          try MarkerLog.link(f, st.getPath, new Path(ogp, n))
-          catch { case _: java.io.FileNotFoundException => () }
+    log(spark, dir).snapshot() { (st, out) =>
+      val g = st.only(MarkerLog.Gen).getOrElse(throw new IllegalStateException(
+        s"IvfIndex at $dir has no generation — call init() first"))._1
+      val (gp, ogp) = (new Path(dir, g), new Path(out, g))
+      MarkerLog.step("mkdirs", ogp)(f.mkdirs(ogp))
+      Seq("centroids", "codebooks", "rotation", "imicb").map(new Path(gp, _))
+        .filter(f.exists).foreach(q => MarkerLog.linkTree(f, q, new Path(ogp, q.getName)))
+      // a batch a racing vacuum swept is left out; a live name without a
+      // directory is an empty batch
+      val gone = st.live.filter { n =>
+        val b = new Path(gp, s"batch=$n")
+        f.exists(b) && !MarkerLog.linkTreeTolerant(f, b, new Path(ogp, b.getName))
       }
-      gens(spark, dir).markInto(out, gid.toString)
+      st.live.filterNot(gone.contains).foreach { n =>
+        // a missing sidecar only costs the restored index the per-batch
+        // repair scan, so a vanished one is skipped, not fatal
+        try MarkerLog.link(f, new Path(gp, s"$HistPrefix$n"), new Path(ogp, s"$HistPrefix$n"))
+        catch { case _: java.io.FileNotFoundException => () }
+      }
+      st.drop(MarkerLog.Live, gone)
     }
   }
 
@@ -1074,25 +1085,25 @@ object IvfIndex {
   private[pipeline] val maxFoldDupProbeOverride =
     new java.util.concurrent.atomic.AtomicReference[Integer](null)
 
-  /** Fold aged live batches of the CURRENT generation into one directory
-    * and vacuum it ([[MarkerLog.BatchLog.compact]]), then vacuum RETIRED
-    * GENERATIONS superseded longer than the grace window ago and
-    * unmarked `gen-` remnants of crashed retrains
-    * ([[MarkerLog.VersionPointer.vacuum]]), and partial snapshots of
-    * crashed captures. */
+  /** Fold aged live batches of the CURRENT generation into one directory,
+    * swapping them for it in one commit ([[MarkerLog.IndexLog.fold]]), then
+    * vacuum ([[MarkerLog.IndexLog.vacuum]]): retired commits, the
+    * generations and batches no remaining commit names (retired ones and
+    * crash remnants alike, each batch with its histogram sidecar), and
+    * partial snapshots of crashed captures. */
   def compact(spark: SparkSession, dir: String,
               graceMs: Long = 15 * 60 * 1000L): Unit = {
-    val (_, gp) = requireGen(spark, dir)
-    val log = batches(spark, gp)
-    val f = log.fs
-    def dropHist(n: String): Unit = f.delete(new Path(gp, s"$HistPrefix$n"), false)
-    // a crashed append can leave a histogram sidecar beside its orphan
-    // directory — it retires with the directory
-    val retired = log.compact(graceMs, onSweep = dropHist) { (aged, foldName) =>
-      // marker-only EMPTY batches have no directory — they fold to their
-      // `_seen` record alone
-      val agedDirs = aged.filter(n => f.exists(log.batchPath(n)))
-      if (agedDirs.nonEmpty) {
+    val g = requireGen(spark, dir)
+    val gp = g.gp
+    val lg = log(spark, dir)
+    val f = lg.fs
+    def batchPath(n: String) = new Path(s"$gp/batch=$n")
+    // the fold publishes only onto a tip naming the generation it read
+    lg.fold(graceMs, _.only(MarkerLog.Gen).exists(_._2 == g.gid)) { (aged, foldName) =>
+      // name-only EMPTY batches have no directory — they fold to their
+      // folded name alone
+      val agedDirs = aged.filter(n => f.exists(batchPath(n)))
+      if (agedDirs.nonEmpty) MarkerLog.step("write", batchPath(foldName)) {
         // a PQ generation's rows carry the code column — fold it verbatim
         // (codes are deterministic per (vector, generation codebooks), so
         // the keyed dedup below collapses duplicate vectors exactly)
@@ -1105,11 +1116,10 @@ object IvfIndex {
           else Seq("cell", "cid", "ce")
         def readAged() = spark.read.option("basePath", gp)
           .schema(layoutSchema(withCodes = pq)) // no inference job
-          .parquet(agedDirs.map(n => log.batchPath(n).toString): _*)
-        // SET-SEMANTICS dedup (a fold racing a fold, or a crash between a
-        // fold's publish and its retire markers, exposes a vector in two
-        // batch dirs; an append whose input repeats a vec_id lands the
-        // copies in one) on the KEYS, not the rows: within one generation
+          .parquet(agedDirs.map(batchPath(_).toString): _*)
+        // SET-SEMANTICS dedup (a vector appended under two batch names
+        // sits in two batch dirs; an append whose input repeats a vec_id
+        // lands the copies in one) on the KEYS, not the rows: within one generation
         // `cid` determines (cell, ce, codes) — same quantizer, same
         // deterministic encode — so the old full-row distinct() shuffled
         // the embedding/code arrays only to compare keys (guide §2.3
@@ -1140,30 +1150,28 @@ object IvfIndex {
         // scale-adaptive output sizing replaces the removed exchange's
         // AQE coalescing: merge scan partitions locally (no shuffle) to
         // ~targetBytes outputs so the fold actually shrinks file counts
-        val agedBytes = agedDirs.map(n =>
-          f.getContentSummary(log.batchPath(n))
-            .getLength).sum
+        val agedBytes = agedDirs.map(n => f.getContentSummary(batchPath(n)).getLength).sum
         val nOut = math.max(1, (agedBytes / FoldTargetBytes).toInt)
         folded.coalesce(nOut)
           .write.mode("overwrite").partitionBy("cell")
-          .parquet(log.batchPath(foldName).toString)
+          .parquet(batchPath(foldName).toString)
         writeHist(spark, f, gp, foldName)
       }
       agedDirs.nonEmpty
     }
-    // histogram sidecars follow their markers: a retired batch's counts
-    // are no longer summed, so the sidecar retires with the marker
-    retired.foreach(dropHist)
     // crash-orphaned histogram tmp files (a writeHist that died between
     // create and rename) sweep once past the grace window
     val now = System.currentTimeMillis()
     f.listStatus(new Path(gp)).toSeq.foreach { st =>
       if (st.isFile && st.getPath.getName.startsWith(HistTmpPrefix) &&
           st.getModificationTime <= now - graceMs)
-        f.delete(st.getPath, false)
+        MarkerLog.step("sweep", st.getPath)(f.delete(st.getPath, false))
     }
-    // retired generations, remnants of crashed flips, partial snapshots
-    gens(spark, dir).vacuum(graceMs)
+    // a swept batch's histogram sidecar goes with it
+    lg.vacuum(graceMs, onSweep = p => if (p.getName.startsWith("batch=")) {
+      val h = new Path(p.getParent, HistPrefix + p.getName.drop("batch=".length))
+      MarkerLog.step("sweep", h)(f.delete(h, false))
+    })
     MarkerLog.sweepSnapshots(f, new Path(dir), graceMs)
   }
 }

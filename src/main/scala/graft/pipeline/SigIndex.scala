@@ -10,18 +10,18 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * continuously-fed 100 TB pipeline dedups each arriving batch against:
   * one row per (kept document, LSH bucket), `doc_id LONG, bv LONG`.
   *
-  * The index is a [[MarkerLog.BatchLog]] of `batch-<name>/` parquet
-  * directories: appends publish atomically, a crashed append is invisible,
-  * a racing second writer fails loud ([[graft.sources.ConcurrentWriterException]]),
-  * and [[compact]] folds aged batches with publish-before-retire — a
-  * concurrent reader sees at worst DUPLICATE signature rows, harmless
-  * because every consumer here treats the index as a set.
+  * The index is `batch-<name>/` parquet directories under a
+  * [[MarkerLog.IndexLog]]: every commit names the live batches, the folded
+  * names, the decision ledger and the folded decision sidecars. Appends
+  * publish atomically, a crashed append is invisible, a racing second
+  * writer fails loud ([[graft.sources.ConcurrentWriterException]]), and
+  * [[compact]] swaps aged batches for their fold in one commit.
   *
-  * Streaming idempotence: the marker embeds the caller's batch name, so
-  * a replayed `foreachBatch` can detect its own prior append (the
-  * `_live.<ts>.b<batchId>` file), answer from its own batch directory
-  * ([[readBatch]] — the appended sigs ARE the survivors'), and skip the
-  * double write — see [[Dedup.incrementalOnce]].
+  * Streaming idempotence: the commit names the caller's batch, so a
+  * replayed `foreachBatch` can detect its own prior append (batch
+  * `b<batchId>`), answer from its own batch directory ([[readBatch]] — the
+  * appended sigs ARE the survivors'), and skip the double write — see
+  * [[Dedup.incrementalOnce]].
   *
   * Files carry a parquet bloom filter on `bv`: a batch probes the index
   * with an `In(bv)` scan ([[Dedup.incremental]]), and the bloom skips
@@ -36,12 +36,16 @@ object SigIndex {
   private def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def pairs(spark: SparkSession, dir: String) =
-    new MarkerLog.BatchLog(fs(spark, dir), new Path(dir), "SigIndex", "batch-")
+  private val BatchPrefix = "batch-"
 
-  /** The decision ledger: `decled-<gen>/`, newest `_decled.` marker wins. */
-  private def ledger(spark: SparkSession, dir: String) =
-    new MarkerLog.VersionPointer(fs(spark, dir), new Path(dir), DecLedgerPrefix, "decled-")
+  /** The index's commit log: a state names its live batch directories
+    * and its decision ledger directory. */
+  private[pipeline] def log(spark: SparkSession, dir: String) =
+    new MarkerLog.IndexLog(fs(spark, dir), new Path(dir), "SigIndex",
+      s => s.live.map(BatchPrefix + _) ++ s.only(MarkerLog.Ledger).map(_._1),
+      Seq(s"$BatchPrefix*", s"$LedgerPrefix*"))
+
+  private def batchPath(dir: String, name: String): String = s"$dir/$BatchPrefix$name"
 
   /** Parquet bloom on the bucket value — sized like the store's adaptive
     * blooms: small micro-batch files get small bitsets, compacted row
@@ -60,36 +64,54 @@ object SigIndex {
     * index (the foreachBatch shape) — two writers racing the same index
     * would each dedup against a state missing the other's batch and
     * silently keep one copy of a pair duplicated across them. Every
-    * append claims sequence slot `seq` (default: the next one), so a
-    * second writer fails loud instead of splitting survivors; its batch
-    * directory is an unmarked orphan the next [[compact]] sweeps. */
+    * append publishes at commit number `seq` (default: the next one), so
+    * a second writer fails loud instead of splitting survivors; its batch
+    * directory is an unnamed orphan the next [[compact]] sweeps. */
   def append(sigs: DataFrame, dir: String, name: String,
              seq: Option[Long] = None): Boolean =
-    pairs(sigs.sparkSession, dir).append(name, seq)(out =>
+    appendAll(sigs.sparkSession, dir, Seq(name), seq)((_, out) =>
       sigs.select("doc_id", "bv")
         .write.options(bloomWriteOptions).mode("overwrite").parquet(out.toString))
 
+  /** [[append]] of several batches in ONE commit: `write` fills each
+    * batch's directory. False, writing nothing, when any name already
+    * landed. */
+  private[graft] def appendAll(spark: SparkSession, dir: String, names: Seq[String],
+                               seq: Option[Long] = None)(write: (String, Path) => Unit): Boolean = {
+    val lg = log(spark, dir)
+    val (v, st) = lg.read()
+    if (names.exists(st.landed)) return false
+    val at = seq.getOrElse(v.next)
+    names.foreach { n =>
+      val out = new Path(batchPath(dir, n))
+      MarkerLog.step("write", out)(write(n, out))
+    }
+    lg.append(names, at)()
+    true
+  }
+
   /** Freeze the index's CURRENT state under `dir/snapshots/<name>/` — a
-    * fully valid index directory ([[MarkerLog.BatchLog.snapshotInto]]):
-    * replay detection survives, and a pipeline RESTORED onto the snapshot
-    * continues the sequential-writer ledger. `boiler-` decision sidecars
+    * fully valid index directory ([[MarkerLog.IndexLog.snapshot]]): replay
+    * detection survives, and a pipeline RESTORED onto the snapshot
+    * continues the sequential-writer guard. `boiler-` decision sidecars
     * and the decision ledger ride along so line-dedup replays stay
     * exactly-once against the snapshot. Readers of the original never see
-    * `snapshots/`, and a crashed capture publishes none
-    * ([[MarkerLog.snapshot]]). Returns the snapshot name. */
+    * `snapshots/`, and a crashed capture publishes none. Returns the
+    * snapshot name. */
   def snapshot(spark: SparkSession, dir: String): String = {
     val f = fs(spark, dir)
-    MarkerLog.snapshot(f, new Path(dir)) { out =>
-      val cap = pairs(spark, dir).snapshotInto(out)
-      cap.entries.foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n.startsWith(DecisionPrefix))
-          MarkerLog.linkTreeTolerant(f, st.getPath, new Path(out, n))
-        else if (st.isFile) MarkerLog.stamped(DecFoldPrefix, n).foreach { case (ts, b) =>
-          MarkerLog.touchMarker(f, out, DecFoldPrefix, b, ts)
-        }
+    def linked(rel: String, out: Path): Boolean =
+      MarkerLog.linkTreeTolerant(f, new Path(dir, rel), new Path(out, rel))
+    log(spark, dir).snapshot() { (st, out) =>
+      f.listStatus(new Path(dir)).foreach { e =>
+        if (e.isDirectory && e.getPath.getName.startsWith(DecisionPrefix))
+          linked(e.getPath.getName, out)
       }
-      ledger(spark, dir).snapshotInto(out, cap.entries)
+      val gone = st.live.filterNot(n => linked(BatchPrefix + n, out))
+      val kept = st.drop(MarkerLog.Live, gone)
+      st.only(MarkerLog.Ledger).fold(kept) { case (led, _) =>
+        if (linked(led, out)) kept else kept.drop(MarkerLog.Ledger, Seq(led))
+      }
     }
   }
 
@@ -108,31 +130,28 @@ object SigIndex {
     else (idx.join(batchBvs, Seq("bv"), "left_semi"), false)
   }
 
-  /** The sequence slot the NEXT append must claim — read this BEFORE
+  /** The commit number the NEXT append publishes at — read this BEFORE
     * taking the index snapshot a batch dedups against, and pass it to
-    * [[append]]: the claim then covers the whole read→dedup→append span,
+    * [[append]]: the number then covers the whole read→dedup→append span,
     * so a second writer whose snapshot raced yours fails loud at its
-    * claim even when the two `append` calls themselves never overlap
-    * (the claim-time default only detects overlapping appends).
+    * publish even when the two `append` calls themselves never overlap.
     *
-    * PRECISELY what the guard detects: any two writers whose slot-read →
-    * claim spans overlap collide on a slot and the later claim throws. A
-    * writer whose ENTIRE span lands inside another's claim → marker gap
-    * (milliseconds of driver-side filesystem calls, no Spark jobs) reads
-    * the higher slot and passes undetected — the guard is a tripwire for
-    * uncoordinated writers, not a lock; sequential dispatch (the
-    * `foreachBatch` shape) remains the contract. */
+    * PRECISELY what the guard detects: of writers that read one number,
+    * one publishes at it and every other finds a batch landed at or after
+    * it and throws. Commits that land no batch (folds, flips) do not count as a
+    * race. The guard is a tripwire for uncoordinated writers, not a lock;
+    * sequential dispatch (the `foreachBatch` shape) remains the contract. */
   def nextAppendSeq(spark: SparkSession, dir: String): Long =
-    pairs(spark, dir).nextSeq()
+    log(spark, dir).read()._1.next
 
-  /** Live batch names, via the markers. */
+  /** Live batch names, oldest first. */
   def liveNames(spark: SparkSession, dir: String): Seq[String] =
-    pairs(spark, dir).live
+    log(spark, dir).state.live
 
-  /** Whether batch `name` has already landed: its `_live` marker exists,
-    * or a `_seen` record says a compaction folded it. */
+  /** Whether batch `name` has already landed: live, or folded by a
+    * compaction. */
   def contains(spark: SparkSession, dir: String, name: String): Boolean =
-    pairs(spark, dir).contains(name)
+    log(spark, dir).state.landed(name)
 
   /** The rows one batch appended — a replayed streaming batch derives
     * its survivor set from exactly these (the appended sigs ARE the
@@ -141,21 +160,18 @@ object SigIndex {
     * directory). */
   def readBatch(spark: SparkSession, dir: String,
                 name: String): Option[DataFrame] = {
-    val log = pairs(spark, dir)
-    if (!log.isLive(name)) None
-    else Some(spark.read.schema(schema).parquet(log.batchPath(name).toString))
+    if (!log(spark, dir).state(MarkerLog.Live).contains(name)) None
+    else Some(spark.read.schema(schema).parquet(batchPath(dir, name)))
   }
 
-  /** The live index relation — the union of marker-named directories;
-    * empty (with schema) when nothing has landed. */
+  /** The live index relation — the union of the directories the tip
+    * commit names; empty (with schema) when nothing has landed. */
   def read(spark: SparkSession, dir: String): DataFrame = {
-    val log = pairs(spark, dir)
-    val names = log.live
+    val names = liveNames(spark, dir)
     if (names.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else
-      spark.read.schema(schema)
-        .parquet(names.map(n => log.batchPath(n).toString): _*)
+      spark.read.schema(schema).parquet(names.map(batchPath(dir, _)): _*)
   }
 
   // ---- decision sidecars ---------------------------------------------------
@@ -166,23 +182,21 @@ object SigIndex {
   // long-running stream would accumulate one directory per batch forever
   // — so [[compact]] folds sidecars whose batch retired longer than
   // `decisionRetentionMs` ago into ONE ledger directory (`decled-<gen>/`,
-  // a [[MarkerLog.VersionPointer]] flip), and replay transparently
-  // falls back to the ledger: exactly-once survives the fold, directory
-  // count stays bounded (recent sidecars + one ledger generation).
+  // named by the commit that also records the sidecars as folded), and
+  // replay transparently falls back to the ledger: exactly-once survives
+  // the fold, directory count stays bounded (recent sidecars + one ledger
+  // generation).
 
   private val DecisionPrefix = "boiler-"
-  private val DecFoldPrefix = "_decfold."
-  private val DecLedgerPrefix = "_decled."
+  private val LedgerPrefix = "decled-"
 
   /** The frozen-decision sidecar directory for batch `name`. */
   def decisionPath(dir: String, name: String): String =
     s"$dir/$DecisionPrefix$name"
 
   /** The current decision-ledger directory. */
-  private def currentLedger(spark: SparkSession, dir: String): Option[String] = {
-    val led = ledger(spark, dir)
-    led.current.map(g => led.versionPath(g).toString)
-  }
+  private def currentLedger(spark: SparkSession, dir: String): Option[String] =
+    log(spark, dir).state.only(MarkerLog.Ledger).map(l => s"$dir/${l._1}")
 
   /** Batch `name`'s frozen decision values: from its sidecar while the
     * sidecar lives, from the fold ledger after [[compact]] retired it.
@@ -218,11 +232,10 @@ object SigIndex {
     }
   }
 
-  /** Fold decision sidecars of batches retired (`_seen`) longer than
-    * `retentionMs` ago into the single ledger directory; grace-delay the
-    * sidecar deletion so a replay that resolved the sidecar mid-fold
-    * keeps its files, and vacuum superseded ledger generations on the
-    * same grace.
+  /** Fold decision sidecars of batches retired (folded) longer than
+    * `retentionMs` ago into the single ledger directory, and grace-delay
+    * the sidecar deletion so a replay that resolved the sidecar mid-fold
+    * keeps its files.
     *
     * `horizonMs` BOUNDS THE LEDGER: a folded decision's DATA rows are
     * carried from ledger generation to ledger generation only while the
@@ -237,8 +250,10 @@ object SigIndex {
     val f = fs(spark, dir)
     val root = new Path(dir)
     val now = System.currentTimeMillis()
-    val seenTs = pairs(spark, dir).seenTimes
-    val decFolded = MarkerLog.firstStamps(f, root, DecFoldPrefix)
+    val lg = log(spark, dir)
+    val st = lg.state
+    val seenTs = st(MarkerLog.Seen)
+    val decFolded = st(MarkerLog.DecFold)
     val sidecars = f.listStatus(root).toSeq.map(_.getPath.getName)
       .filter(_.startsWith(DecisionPrefix)).map(_.drop(DecisionPrefix.length))
     val eligible = sidecars.filter(n => !decFolded.contains(n) &&
@@ -250,8 +265,9 @@ object SigIndex {
     val horizonCut = now - horizonMs
     val expired: Seq[String] =
       seenTs.filter(_._2 <= horizonCut).keys.toSeq.sorted
-    val priorLedger = currentLedger(spark, dir).map { p =>
-      val raw = spark.read.parquet(p)
+    val prior = st.only(MarkerLog.Ledger)
+    val priorLedger = prior.map { case (p, _) =>
+      val raw = spark.read.parquet(s"$dir/$p")
       val d = if (raw.columns.contains("exp")) raw // pre-horizon ledgers
         else raw.withColumn("exp", lit(false))
       d.select(col("name"), col("bv"), col("exp"))
@@ -281,40 +297,49 @@ object SigIndex {
             .select(col("name")).distinct()
             .select(col("name"), lit(null).cast("long").as("bv"),
               lit(true).as("exp")))
-      // idempotent under a fold replay (crash between the ledger marker
-      // and the per-sidecar _decfold markers re-folds the same sidecars):
-      // the decision SET shape survives the replay
+      // idempotent under a fold replay (a sidecar that outlived its fold
+      // folds again): the decision SET shape survives the replay
       val all = all1.dropDuplicates("name", "bv", "exp")
-      ledger(spark, dir).flip(MarkerLog.freshName())(out =>
-        all.repartition(1).write.mode("overwrite").parquet(out.toString))
-      eligible.foreach(MarkerLog.touchMarker(f, root, DecFoldPrefix, _))
+      val led = s"$LedgerPrefix${MarkerLog.freshName()}"
+      MarkerLog.step("write", new Path(root, led))(
+        all.repartition(1).write.mode("overwrite").parquet(s"$dir/$led"))
+      // one commit names the new ledger AND records its sidecars as
+      // folded; a racing fold that moved the ledger first wins, and this
+      // ledger directory is an orphan the vacuum sweeps
+      val at = System.currentTimeMillis()
+      lg.commit { (_, s) =>
+        if (s.only(MarkerLog.Ledger) != prior) None
+        else Some(eligible.foldLeft(s.set(MarkerLog.Ledger, led, at))(
+          _.put(MarkerLog.DecFold, _, at)))
+      }
     }
     // grace-delayed sidecar deletion: a replay that resolved the sidecar
     // before the fold keeps its files for the reader window. Re-read the
-    // markers so those THIS pass's fold created age from a fresh clock (at
+    // state so the sidecars THIS pass folded age from a fresh clock (at
     // grace 0 the fold and the sweep land in one maintenance tick).
     val now2 = System.currentTimeMillis()
-    MarkerLog.firstStamps(f, root, DecFoldPrefix)
-      .filter(_._2 <= now2 - graceMs).foreach { case (n, _) =>
-        f.delete(new Path(decisionPath(dir, n)), true)
-        MarkerLog.dropMarkers(f, root, DecFoldPrefix, n)
+    val done = lg.state(MarkerLog.DecFold).filter(_._2 <= now2 - graceMs).keys.toSeq
+    if (done.nonEmpty) {
+      done.foreach { n =>
+        val side = new Path(decisionPath(dir, n))
+        MarkerLog.step("sweep", side)(f.delete(side, true))
       }
-    ledger(spark, dir).vacuum(graceMs)
+      lg.commit((_, s) => Some(s.drop(MarkerLog.DecFold, done)))
+    }
   }
 
-  /** Fold AGED live directories into one and retire the originals
-    * ([[MarkerLog.BatchLog.compact]]: publish-before-retire, slot-ledger
-    * trim, grace vacuum of retired and orphaned directories), and sweep
-    * the partial snapshots crashed captures left.
+  /** Fold AGED live directories into one, swapping them for the fold in
+    * one commit ([[MarkerLog.IndexLog.fold]]), then vacuum retired commits,
+    * the directories no remaining commit names and the partial snapshots
+    * crashed captures left ([[MarkerLog.IndexLog.vacuum]]).
     *
-    * `graceMs` guards the streaming replay contract: only batches whose
-    * marker is older than the grace window fold, so a replayed
+    * `graceMs` guards the streaming replay contract: only batches
+    * published longer than the grace window ago fold, so a replayed
     * `foreachBatch` (which recomputes its survivors from its OWN batch
     * directory — [[readBatch]]) always still finds it; a replay arriving
     * after the grace window means the stream rolled back past a
-    * long-committed checkpoint, and the folded batch is recorded in a
-    * `_seen.<ts>.<name>` marker so the caller can fail loud instead of
-    * double-appending.
+    * long-committed checkpoint, and the folded batch stays named as
+    * folded so the caller can fail loud instead of double-appending.
     *
     * `decisionRetentionMs` bounds the DECISION-SIDECAR lifecycle
     * ([[decisionPath]]): sidecars of batches retired longer than the
@@ -332,18 +357,19 @@ object SigIndex {
               decisionRetentionMs: Long = 24 * 3600 * 1000L,
               decisionReplayHorizonMs: Long = 7 * 24 * 3600 * 1000L): Unit = {
     if (!fs(spark, dir).exists(new Path(dir))) return
-    val log = pairs(spark, dir)
-    log.compact(graceMs) { (aged, foldName) =>
-      spark.read.schema(schema)
-        .parquet(aged.map(n => log.batchPath(n).toString): _*).distinct()
-        .write.options(bloomWriteOptions).mode("overwrite")
-        .parquet(log.batchPath(foldName).toString)
+    val lg = log(spark, dir)
+    lg.fold(graceMs) { (aged, foldName) =>
+      val out = new Path(batchPath(dir, foldName))
+      MarkerLog.step("write", out)(
+        spark.read.schema(schema).parquet(aged.map(batchPath(dir, _)): _*).distinct()
+          .write.options(bloomWriteOptions).mode("overwrite").parquet(out.toString))
       true
     }
-    // AFTER the pair fold: the `_seen` records it just wrote start the
+    // AFTER the pair fold: the folded times it just recorded start the
     // decision-retention clock for the folded batches' sidecars
     foldDecisionSidecars(spark, dir, graceMs, decisionRetentionMs,
       decisionReplayHorizonMs)
-    MarkerLog.sweepSnapshots(log.fs, log.root, graceMs)
+    lg.vacuum(graceMs)
+    MarkerLog.sweepSnapshots(lg.fs, lg.root, graceMs)
   }
 }

@@ -625,9 +625,10 @@ object Similarity {
     *
     * State is tiny (≤ k × perCell rows) and flips atomically: each merge
     * writes a fresh `state-<gen>/` directory and publishes it with one
-    * `_state.<ts>.<gen>` marker create (newest wins —
-    * [[graft.sources.MarkerLog.VersionPointer]]); superseded and unmarked
-    * state directories vacuum after `graceMs`. Scale shape: the heavy side is
+    * commit ([[graft.sources.MarkerLog.IndexLog]]); a merge that finds the
+    * state moved by a racing merge throws, publishing nothing (re-running
+    * it converges). Superseded and unnamed state directories vacuum after
+    * `graceMs`. Scale shape: the heavy side is
     * the BATCH (one codegen'd assignment projection + one cell-keyed
     * window with WindowGroupLimit); the state side is quota-bounded.
     * Returns the updated kept set (vec_id, cell, rn). */
@@ -635,13 +636,15 @@ object Similarity {
                                  centroids: Array[Array[Double]],
                                  perCell: Int,
                                  graceMs: Long = 15 * 60 * 1000L): DataFrame = {
+    import graft.sources.MarkerLog
     val spark = emb.sparkSession
     val root = new org.apache.hadoop.fs.Path(dir)
-    val state = new graft.sources.MarkerLog.VersionPointer(
-      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root, "_state.", "state-")
-    val prev = state.current.map { g =>
-      spark.read.parquet(state.versionPath(g).toString)
-        .select(col("vec_id"), col("cell"), col("rk"))
+    val log = new MarkerLog.IndexLog(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root,
+      "diversity sample", _.only(MarkerLog.StateDir).map(_._1).toSeq, Seq("state-*"))
+    val current = log.state.only(MarkerLog.StateDir)
+    val prev = current.map { case (g, _) =>
+      spark.read.parquet(s"$dir/$g").select(col("vec_id"), col("cell"), col("rk"))
     }
     val batch = emb
       .select(col("vec_id"), asDouble(col("embedding")).as("e"))
@@ -654,9 +657,16 @@ object Similarity {
     val kept = merged.withColumn("rn", row_number().over(w))
       .where(col("rn") <= perCell)
       .localCheckpoint() // one merge pass feeds the write AND the return
-    state.flip(graft.sources.MarkerLog.freshName())(out =>
-      kept.write.mode("overwrite").parquet(out.toString))
-    state.vacuum(graceMs)
+    val next = s"state-${MarkerLog.freshName()}"
+    MarkerLog.step("write", new org.apache.hadoop.fs.Path(root, next))(
+      kept.write.mode("overwrite").parquet(s"$dir/$next"))
+    val published = log.commit { (_, s) =>
+      if (s.only(MarkerLog.StateDir) != current) None
+      else Some(s.set(MarkerLog.StateDir, next, System.currentTimeMillis()))
+    }
+    if (published.isEmpty) throw new IllegalStateException(s"diversity sample at " +
+      s"$dir: a concurrent merge moved the state — this batch published nothing; re-run it")
+    log.vacuum(graceMs)
     kept.select(col("vec_id"), col("cell"), col("rn"))
   }
 
@@ -851,7 +861,7 @@ object Similarity {
     * MB of I/O. Codebooks persist alongside, making search
     * self-contained. Immutable once built (rebuild = fresh dir + pointer
     * flip); the incremental counterpart is [[IvfIndex]], which trades
-    * code compression for marker-manifest appendability. */
+    * code compression for commit-log appendability. */
   /** Optional OPQ rotation (`rotation`): codes are computed over the
     * ROTATED vector (rotation before the subspace split — Ge et al.,
     * CVPR 2013; the codebooks must live in the rotated space, e.g. from
@@ -1017,7 +1027,7 @@ object Similarity {
             "retired its directory (grace window exceeded); rerun against " +
             "a fresh index or raise IvfIndex.compact graceMs")
       }
-    // claim intent before the kept-set snapshot (the sequential-writer
+    // the commit number before the kept-set snapshot (the sequential-writer
     // guard): a second writer whose snapshot races this one fails loud
     // at its append instead of silently splitting survivors
     val seq = IvfIndex.nextAppendSeq(spark, indexDir)

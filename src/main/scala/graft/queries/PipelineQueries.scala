@@ -100,7 +100,7 @@ object PipelineQueries {
       Similarity.ivfBuild(e, idx, Similarity.fixedCentroids(8, 64))
       Similarity.ivfSearch(s, idx, e.where(col("vec_id") < 10), 3, nProbe = 3)
     }),
-    // the INCREMENTAL IVF index: a 3-batch append history (marker-manifest
+    // the INCREMENTAL IVF index: a 3-batch append history (commit-log
     // visibility, one fold compaction mid-history) must answer exactly
     // like the one-shot in-memory probe over the same fixed quantizer —
     // assignment is per-vector, so the oracle replays it batch-agnostic

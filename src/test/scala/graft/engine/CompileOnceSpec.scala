@@ -135,6 +135,34 @@ class CompileOnceSpec extends AnyFunSuite with SharedSpark {
       }
     }
 
+  test("the server's working set stays compiled: every shape and an append, interleaved") {
+    // all the shapes above and an append, round after round at fresh
+    // times, as a dashboard refreshes while ingest runs: together they
+    // hold more classes than Spark's default cache keeps
+    val appendDir = Files.createTempDirectory("compile_once_mixed").toString
+    def round(t: Long): Seq[(String, String)] =
+      shapes.map { case (name, q, range, step) =>
+        val df = served(dir, q, t, range, step)
+        df.collect()
+        (name, planShape(df))
+      } :+ {
+        PointsStore.append(frame(rows(0 until 3, t)), appendDir)
+        ("append", "")
+      }
+    val seen = scala.collection.mutable.Set(round(warmAt): _*)
+    val counted = times.map { t =>
+      val before = compiles
+      val ran = round(t)
+      val n = compiles - before
+      // a round that only repeats plans that ran before compiles nothing
+      val repeated = ran.forall(seen)
+      if (repeated) assert(n == 0, s"$n classes compiled at $t for plans that ran before")
+      seen ++= ran
+      repeated
+    }
+    assert(counted.count(identity) >= times.length / 2, "too few rounds repeated every plan")
+  }
+
   test("an append compiles no code at fresh write stamps") {
     val appendDir = Files.createTempDirectory("compile_once_append").toString
     val runs = freshRuns { t =>

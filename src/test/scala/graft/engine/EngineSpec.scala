@@ -229,6 +229,26 @@ class EngineSpec extends AnyFunSuite with SharedSpark {
     assert(out.collect().map(_.getAs[Double]("value")).toSeq == Seq(1.0))
   }
 
+  /** A sample every 10 s from 0 to 10 m. */
+  private def every10s = pts((0 to 60).map(i =>
+    Row("m", Map.empty[String, String], i * 10000L, i.toDouble)))
+
+  test("a subquery whose aligned inner start passes the query end is empty, not an error") {
+    // at 5m40s the [30s:1m] inner grid starts at 5m10s, aligned up to 6m
+    val out = Engine.instantQuery(spark, every10s, "max_over_time(m[30s:1m])", 340000L)
+    assert(out.collect().isEmpty)
+    // one step later the window holds the 6m inner step
+    assert(Engine.instantQuery(spark, every10s, "max_over_time(m[30s:1m])", 380000L)
+      .collect().map(_.getAs[Double]("value")).toSeq == Seq(36.0))
+  }
+
+  test("a range query whose steps all fall in one inner-step gap is empty") {
+    // steps 5m20s..5m40s, windows (t-10s, t]: no inner step (5m, 6m) inside
+    val out = Engine.rangeQuery(spark, every10s, "max_over_time(m[10s:1m])",
+      320000L, 340000L, 10000L)
+    assert(out.collect().isEmpty)
+  }
+
   test("plan choice: the slim plan only past the threshold; the dictionary is read only then") {
     // the rule itself, at Spark's default open cost
     val threshold = 4L * 1024 * 1024

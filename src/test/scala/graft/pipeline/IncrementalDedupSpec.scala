@@ -252,23 +252,21 @@ class IncrementalDedupSpec extends AnyFunSuite with SharedSpark {
     val dir = Files.createTempDirectory("sigidx_race").toString
     // batch 1 lands normally (claims slot 0)
     Dedup.incremental(df(Seq(1L -> base)), dir, name = "w0")
-    // writer A starts batch "wA"; in its slot-read -> claim window a
-    // second writer lands a full append (the uncoordinated-two-writers
+    // writer A starts batch "wA"; between its number read and its publish
+    // a second writer lands a full append (the uncoordinated-two-writers
     // case the sequential contract forbids). A must fail LOUD — without
     // the guard both appends would land and each could keep one copy of
     // a cross-batch duplicate pair.
     var racerRan = false
-    graft.sources.MarkerLog.appendTestHook.set { () =>
-      Dedup.incremental(df(Seq(
-        20L -> "a racer document about glacial moraines and the stones they carry")),
-        dir, name = "racer")
-      racerRan = true
-    }
     val e = intercept[graft.sources.ConcurrentWriterException] {
-      try Dedup.incremental(df(Seq(
+      graft.testkit.Faults.onceAt("commit", dir) {
+        Dedup.incremental(df(Seq(
+          20L -> "a racer document about glacial moraines and the stones they carry")),
+          dir, name = "racer")
+        racerRan = true
+      }(Dedup.incremental(df(Seq(
         21L -> "writer A's document about river deltas and silt deposition")),
-        dir, name = "wA").collect()
-      finally graft.sources.MarkerLog.appendTestHook.set(null)
+        dir, name = "wA").collect())
     }
     assert(racerRan && e.getMessage.contains("concurrent writer"))
     // the loser's batch is an unmarked orphan: not visible, not 'landed'
@@ -278,6 +276,29 @@ class IncrementalDedupSpec extends AnyFunSuite with SharedSpark {
     assert(Dedup.incremental(df(Seq(
       30L -> "a later batch about mangrove roots that knit the shoreline together")),
       dir, name = "w1").count() == 1)
+  }
+
+  test("8 writers appending at one commit number: exactly one lands every round") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("sigidx_race8").toString
+    val threads = 8
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try for (round <- 0 until 3) {
+      val seq = SigIndex.nextAppendSeq(spark, dir)
+      val barrier = new java.util.concurrent.CyclicBarrier(threads)
+      val landed = (0 until threads).map(t => pool.submit(
+        new java.util.concurrent.Callable[Boolean] {
+          def call(): Boolean = {
+            val sigs = Seq((round * threads + t.toLong, t.toLong)).toDF("doc_id", "bv")
+            barrier.await()
+            try SigIndex.append(sigs, dir, s"r$round-t$t", seq = Some(seq))
+            catch { case _: graft.sources.ConcurrentWriterException => false }
+          }
+        })).count(_.get())
+      assert(landed == 1, s"round $round: $landed writers landed at commit $seq")
+      assert(SigIndex.liveNames(spark, dir).length == round + 1)
+    } finally pool.shutdown()
+    assert(SigIndex.read(spark, dir).count() == 3)
   }
 
   test("SigIndex snapshot RESTORE continuation: replay detection, slot ledger, dedup answers") {

@@ -3,15 +3,20 @@ package graft.pipeline
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.MarkerLog
 import graft.testkit.SharedSpark
 
-/** Crash leftovers of the persisted indexes are swept or cleared: what a
-  * crashed append, fold or flip leaves behind never outlives the grace
-  * window, and never blocks a retry. */
+/** Crash leftovers of the persisted indexes are swept: what a crashed
+  * append, fold, retrain, ledger fold or sampler merge leaves behind never
+  * outlives the grace window, never blocks a retry, and a retry lands
+  * exactly once. Every index keeps one commit log at its root, and an
+  * index written before the commit log (stamped marker files) stays
+  * readable until its first commit. */
 class IndexRecoverySpec extends AnyFunSuite with SharedSpark {
 
   /** 400 deterministic 64-dim vectors. */
@@ -27,6 +32,8 @@ class IndexRecoverySpec extends AnyFunSuite with SharedSpark {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString + "/idx"
 
+  private def fs = new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   /** Plant a directory whose modification time is `ageMs` in the past. */
   private def plantOld(path: String, ageMs: Long): File = {
     val d = new File(path)
@@ -34,6 +41,40 @@ class IndexRecoverySpec extends AnyFunSuite with SharedSpark {
     Files.write(new File(d, "part").toPath, Array[Byte](1))
     d.setLastModified(System.currentTimeMillis() - ageMs)
     d
+  }
+
+  private def names(dir: String): Seq[String] = new File(dir).list().toSeq.sorted
+
+  private final class Crash extends RuntimeException("injected crash")
+
+  /** Run `op` on a fresh copy of `template` once per file-system step it
+    * makes, that step failing (a crash just before it); `check` then sees
+    * the copy. Returns the steps. */
+  private def crashEachStep(template: String)(op: String => Any)(check: String => Unit)
+      : Seq[String] = {
+    def copy(): String = {
+      val d = tmp("crash")
+      FileUtil.copy(fs, new Path(template), fs, new Path(d), false, spark.sparkContext.hadoopConfiguration)
+      d
+    }
+    val probe = copy()
+    val steps = Seq.newBuilder[String]
+    MarkerLog.faultHook.set(s => if (s.path.toUri.getPath.startsWith(probe)) steps += s.op)
+    try op(probe) finally MarkerLog.faultHook.set(null)
+    val ops = steps.result()
+    for (k <- ops.indices) {
+      val d = copy()
+      var n = 0
+      MarkerLog.faultHook.set { s =>
+        if (s.path.toUri.getPath.startsWith(d)) {
+          if (n == k) throw new Crash
+          n += 1
+        }
+      }
+      try intercept[Crash](op(d)) finally MarkerLog.faultHook.set(null)
+      withClue(s"crash before step $k (${ops(k)}) of ${ops.mkString(",")}: ")(check(d))
+    }
+    ops
   }
 
   test("SigIndex.compact sweeps a crashed append's orphan while one batch is live") {
@@ -70,20 +111,33 @@ class IndexRecoverySpec extends AnyFunSuite with SharedSpark {
     dir
   }
 
-  private def resultSet(df: org.apache.spark.sql.DataFrame) =
-    df.collect().map(_.toSeq).toSet
+  private def resultSet(df: DataFrame) = df.collect().map(_.toSeq).toSet
 
-  test("a retrain that crashed after its first marker create can be retried") {
+  private def genDirs(dir: String): Seq[String] = names(dir).filter(_.startsWith("gen-"))
+
+  test("a retrain that crashed before its commit can be retried") {
     val clean = builtIvf()
     IvfIndex.retrain(spark, clean, k = 8, iters = 2, trainLimit = 500)
     val dir = builtIvf()
-    // the crashed retrain re-created a recent batch's marker, with its
-    // original timestamp, in the next generation and then died
-    val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = f.listStatus(new Path(s"$dir/gen-0")).map(_.getPath.getName)
-      .filter(_.startsWith("_live.")).min
-    f.mkdirs(new Path(s"$dir/gen-1"))
-    f.create(new Path(s"$dir/gen-1/$marker"), false).close()
+    // every step of the retrain fails in turn: the index stays at one
+    // generation or the other, and a retry of a crashed one lands
+    val template = builtIvf()
+    crashEachStep(template)(IvfIndex.retrain(spark, _, k = 8, iters = 2, trainLimit = 500)) {
+      d =>
+        val g = IvfIndex.currentGen(spark, d)
+        assert(g == Some(0L) || g == Some(1L))
+        assert(IvfIndex.read(spark, d).count() == 400)
+        if (g == Some(0L)) assert(IvfIndex.retrain(spark, d, k = 8, iters = 2, trainLimit = 500) == 1L)
+        assert(IvfIndex.currentGen(spark, d) == Some(1L) && IvfIndex.read(spark, d).count() == 400)
+        IvfIndex.compact(spark, d, graceMs = 0L)
+        assert(genDirs(d).length == 1, genDirs(d))
+    }
+    // a crashed attempt leaves a directory no commit names; the retry
+    // writes a fresh one, and answers as a retrain that never crashed
+    MarkerLog.faultHook.set(s => if (s.op == "commit") throw new Crash)
+    try intercept[Crash](IvfIndex.retrain(spark, dir, k = 8, iters = 2, trainLimit = 500))
+    finally MarkerLog.faultHook.set(null)
+    assert(IvfIndex.currentGen(spark, dir) == Some(0L) && genDirs(dir).length == 2)
     assert(IvfIndex.retrain(spark, dir, k = 8, iters = 2, trainLimit = 500) == 1L)
     assert(IvfIndex.centroids(spark, dir).map(_.toSeq).toSeq ==
       IvfIndex.centroids(spark, clean).map(_.toSeq).toSeq)
@@ -91,6 +145,8 @@ class IndexRecoverySpec extends AnyFunSuite with SharedSpark {
     assert(resultSet(IvfIndex.search(spark, dir, q, 3, nProbe = 3)) ==
       resultSet(IvfIndex.search(spark, clean, q, 3, nProbe = 3)))
     assert(IvfIndex.contains(spark, dir, "b0") && IvfIndex.contains(spark, dir, "b1"))
+    IvfIndex.compact(spark, dir, graceMs = 0L)
+    assert(genDirs(dir).length == 1)
   }
 
   test("unmarked generation and state directories of crashed flips are swept past the grace") {
@@ -106,5 +162,155 @@ class IndexRecoverySpec extends AnyFunSuite with SharedSpark {
     val kept = Similarity.diversitySampleIncremental(emb, st, cents, 4).count()
     assert(!staleState.exists())
     assert(Similarity.diversitySampleIncremental(emb, st, cents, 4).count() == kept)
+  }
+
+  private def docs(rows: (Long, String)*) = {
+    import spark.implicits._
+    rows.toDF("doc_id", "text")
+  }
+
+  private def decisions(dir: String): Map[String, Set[Long]] =
+    Seq("L0", "L1", "L2").map(n =>
+      n -> SigIndex.readDecision(spark, dir, n).map(_.toSet).getOrElse(Set(-1L))).toMap
+
+  test("ledger fold: a crash at any step keeps every frozen decision; a retry folds once") {
+    val template = tmp("ledger_crash")
+    Curation.dedupLinesIncremental(docs(1L -> "A\nX1", 2L -> "A\nX2"), template, "L0")
+    Curation.dedupLinesIncremental(docs(3L -> "X1\nB"), template, "L1")
+    Curation.dedupLinesIncremental(docs(4L -> "C"), template, "L2")
+    SigIndex.compact(spark, template, graceMs = 0L) // retires the batches
+    val want = decisions(template)
+    val rows = SigIndex.read(spark, template).count()
+    val steps = crashEachStep(template)(SigIndex.compact(spark, _, graceMs = 0L,
+      decisionRetentionMs = 0L)) { d =>
+      assert(decisions(d) == want && SigIndex.read(spark, d).count() == rows)
+      SigIndex.compact(spark, d, graceMs = 0L, decisionRetentionMs = 0L)
+      assert(decisions(d) == want && SigIndex.read(spark, d).count() == rows)
+      val ns = names(d)
+      assert(!ns.exists(_.startsWith("boiler-")) && ns.count(_.startsWith("decled-")) == 1, ns)
+    }
+    assert(steps.count(_ == "commit") == 2, steps) // the ledger flip, the sidecar drop
+  }
+
+  test("sampler merge: a crash at any step leaves the old or the new sample; a retry converges") {
+    val b0 = emb.where(col("vec_id") % 2 === 0)
+    val b1 = emb.where(col("vec_id") % 2 === 1)
+    def sample(d: String): Set[Seq[Any]] = {
+      val log = new MarkerLog.IndexLog(fs, new Path(d), "sample", _ => Nil, Nil)
+      log.state.only(MarkerLog.StateDir).fold(Set.empty[Seq[Any]])(s =>
+        spark.read.parquet(s"$d/${s._1}").select("vec_id", "cell").collect().map(_.toSeq).toSet)
+    }
+    val template = tmp("div_crash")
+    Similarity.diversitySampleIncremental(b0, template, cents, 4)
+    val old = sample(template)
+    val oneShot = Similarity.diversitySample(emb, cents, 4).select("vec_id", "cell")
+      .collect().map(_.toSeq).toSet
+    crashEachStep(template)(Similarity.diversitySampleIncremental(b1, _, cents, 4, graceMs = 0L)) {
+      d =>
+        val s = sample(d)
+        assert(s == old || s == oneShot)
+        Similarity.diversitySampleIncremental(b1, d, cents, 4, graceMs = 0L)
+        assert(sample(d) == oneShot)
+        assert(names(d).count(_.startsWith("state-")) == 1, names(d))
+    }
+  }
+
+  /** Names at an index root that only a marker-protocol index writes. */
+  private val markerNames = Seq("_live.", "_seen.", "_slot.", "_gen.", "_state.", "_decled.", "_decfold.")
+
+  /** The root holds commits, data directories and sidecars — no marker. */
+  private def onlyCommitsAndData(dir: String, dataPrefixes: String*): Unit = {
+    val ns = names(dir)
+    assert(!ns.exists(n => markerNames.exists(n.startsWith)), ns)
+    ns.foreach { n =>
+      val isDir = new File(dir, n).isDirectory
+      assert(if (isDir) n == "snapshots" || dataPrefixes.exists(n.startsWith)
+             else n.startsWith("_commit."), s"unexpected $n in ${ns.mkString(",")}")
+    }
+    assert(ns.count(_.startsWith("_commit.")) == 1, ns)
+  }
+
+  test("index lifecycle: append, fold, retrain or ledger fold, snapshot, vacuum leave commits and data only") {
+    val sig = tmp("life_sig")
+    Curation.dedupLinesIncremental(docs(1L -> "A\nX1", 2L -> "A\nX2"), sig, "L0")
+    Curation.dedupLinesIncremental(docs(3L -> "X1\nB"), sig, "L1")
+    SigIndex.compact(spark, sig, graceMs = 0L)
+    SigIndex.compact(spark, sig, graceMs = 0L, decisionRetentionMs = 0L)
+    val sigSnap = SigIndex.snapshot(spark, sig)
+    SigIndex.compact(spark, sig, graceMs = 0L)
+    onlyCommitsAndData(sig, "batch-", "decled-")
+    onlyCommitsAndData(s"$sig/snapshots/$sigSnap", "batch-", "decled-")
+    assert(SigIndex.contains(spark, s"$sig/snapshots/$sigSnap", "L1"))
+
+    val ivf = builtIvf()
+    IvfIndex.compact(spark, ivf, graceMs = 0L)
+    IvfIndex.retrain(spark, ivf, k = 8, iters = 1, trainLimit = 200)
+    val ivfSnap = IvfIndex.snapshot(spark, ivf)
+    IvfIndex.compact(spark, ivf, graceMs = 0L)
+    onlyCommitsAndData(ivf, "gen-")
+    onlyCommitsAndData(s"$ivf/snapshots/$ivfSnap", "gen-")
+    assert(genDirs(ivf).length == 1)
+    val gen = new File(ivf, genDirs(ivf).head)
+    assert(gen.list().forall(n => n.startsWith("batch=") || n.startsWith("_hist.") ||
+      n == "centroids" || n.startsWith(".")), gen.list().mkString(","))
+    assert(IvfIndex.read(spark, ivf).count() == 400)
+    assert(IvfIndex.read(spark, s"$ivf/snapshots/$ivfSnap").count() == 400)
+
+    val div = tmp("life_div")
+    (0 until 2).foreach(b => Similarity.diversitySampleIncremental(
+      emb.where(col("vec_id") % 2 === b), div, cents, 4, graceMs = 0L))
+    onlyCommitsAndData(div, "state-")
+  }
+
+  /** Turn an index written through the commit log back into the layout
+    * an index written before it had: the commits go, and `markers` (paths
+    * relative to the root) name what the tip named. */
+  private def toLegacy(dir: String, markers: String*): Unit = {
+    names(dir).filter(_.startsWith("_commit.")).foreach(n => new File(dir, n).delete())
+    markers.foreach(m => Files.createFile(new File(dir, m).toPath))
+  }
+
+  test("legacy marker indexes read, append and search, and their markers vacuum past the grace") {
+    val sig = tmp("legacy_sig")
+    Dedup.incremental(docs(1L -> "the quick brown fox jumps over the lazy dog " * 3), sig, name = "a")
+    toLegacy(sig, "_live.1000.a", "_slot.0")
+    assert(SigIndex.contains(spark, sig, "a") && SigIndex.liveNames(spark, sig) == Seq("a"))
+    // the probe finds the legacy batch: a duplicate drops, fresh text lands
+    assert(Dedup.incremental(docs(2L -> "the quick brown fox jumps over the lazy dog " * 3),
+      sig, name = "b").count() == 0)
+    assert(Dedup.incremental(docs(3L -> "a wholly different text about tides and moons " * 3),
+      sig, name = "c").count() == 1)
+    SigIndex.compact(spark, sig, graceMs = 60 * 60 * 1000L)
+    assert(names(sig).contains("_live.1000.a"), "markers went inside the grace window")
+    SigIndex.compact(spark, sig, graceMs = 0L)
+    onlyCommitsAndData(sig, "batch-")
+    Seq("a", "b", "c").foreach(n => assert(SigIndex.contains(spark, sig, n)))
+
+    val ivf = builtIvf()
+    val q = emb.where(col("vec_id") < 10)
+    val before = resultSet(IvfIndex.search(spark, ivf, q, 3, nProbe = 3))
+    toLegacy(ivf, "_gen.1000.0", "gen-0/_live.1000.b0", "gen-0/_live.1001.b1",
+      "gen-0/_slot.1")
+    assert(IvfIndex.currentGen(spark, ivf) == Some(0L))
+    assert(resultSet(IvfIndex.search(spark, ivf, q, 3, nProbe = 3)) == before)
+    assert(!IvfIndex.append(emb.where(col("vec_id") % 2 === 0), ivf, "b0"))
+    val more = emb.where(col("vec_id") < 10).select(col("vec_id") + 1000, col("embedding"))
+      .toDF("vec_id", "embedding")
+    assert(IvfIndex.append(more, ivf, "b2"))
+    assert(IvfIndex.read(spark, ivf).count() == 410)
+    IvfIndex.compact(spark, ivf, graceMs = 0L)
+    onlyCommitsAndData(ivf, "gen-")
+    assert(!new File(ivf, "gen-0").list().exists(n => markerNames.exists(n.startsWith)))
+    assert(IvfIndex.read(spark, ivf).count() == 410 && IvfIndex.contains(spark, ivf, "b1"))
+
+    val div = tmp("legacy_div")
+    Similarity.diversitySampleIncremental(emb.where(col("vec_id") % 2 === 0), div, cents, 4)
+    val st = names(div).find(_.startsWith("state-")).get
+    assert(new File(div, st).renameTo(new File(div, "state-old")))
+    toLegacy(div, "_state.1000.old")
+    val got = Similarity.diversitySampleIncremental(emb.where(col("vec_id") % 2 === 1), div,
+      cents, 4, graceMs = 0L).collect().map(_.toSeq).toSet
+    assert(got == Similarity.diversitySample(emb, cents, 4).collect().map(_.toSeq).toSet)
+    onlyCommitsAndData(div, "state-")
   }
 }

@@ -343,19 +343,17 @@ class IvfIndexSpec extends AnyFunSuite with SharedSpark {
   test("a racing second semDeDup writer fails loud on the sequence slot") {
     val dir = oneCellIndex()
     Similarity.semDeDupIncremental(vecDf(1L -> planeVec(0)), dir, "w0", 0.99)
-    // writer A starts batch "wA"; in its slot-read -> claim window a
-    // second writer lands a FULL semDeDup batch (the uncoordinated-two-
+    // writer A starts batch "wA"; between its number read and its publish
+    // a second writer lands a FULL semDeDup batch (the uncoordinated-two-
     // writers case the sequential contract forbids). A must fail LOUD —
     // without the guard both appends would land, each deduped against a
     // kept-set missing the other's survivors (the cross-batch split).
     var racerRan = false
-    graft.sources.MarkerLog.appendTestHook.set { () =>
-      Similarity.semDeDupIncremental(vecDf(20L -> planeVec(120)), dir, "racer", 0.99)
-      racerRan = true
-    }
     val e = intercept[graft.sources.ConcurrentWriterException] {
-      try Similarity.semDeDupIncremental(vecDf(21L -> planeVec(60)), dir, "wA", 0.99)
-      finally graft.sources.MarkerLog.appendTestHook.set(null)
+      graft.testkit.Faults.onceAt("commit", dir) {
+        Similarity.semDeDupIncremental(vecDf(20L -> planeVec(120)), dir, "racer", 0.99)
+        racerRan = true
+      }(Similarity.semDeDupIncremental(vecDf(21L -> planeVec(60)), dir, "wA", 0.99))
     }
     assert(racerRan && e.getMessage.contains("concurrent writer"))
     // the loser's batch is an unmarked orphan: not visible, not 'landed'
@@ -403,21 +401,25 @@ class IvfIndexSpec extends AnyFunSuite with SharedSpark {
   test("a retrain flipping inside the append marker window is detected loud") {
     val dir = freshIndex()
     IvfIndex.append(emb.where(col("vec_id") < 50), dir, "b0")
-    // flip the generation AFTER the slot claim and gen pre-check, BEFORE
-    // the marker create: without the post-create re-check the marker
-    // would land in the retired generation — append reports success,
-    // new-generation readers never see the batch (a silent drop)
-    graft.sources.MarkerLog.preMarkerTestHook.set { () =>
-      IvfIndex.retrain(spark, dir, k = 8, iters = 1, trainLimit = 200)
-    }
+    // flip the generation AFTER the batch is written, BEFORE its commit:
+    // the retrain takes the append's commit number, and an append that
+    // published onto the new tip anyway would land in the retired
+    // generation — success reported, new-generation readers never see
+    // the batch (a silent drop)
     val e = intercept[IllegalStateException] {
-      try IvfIndex.append(
-        emb.where(col("vec_id") >= 50 && col("vec_id") < 90), dir, "b1")
-      finally graft.sources.MarkerLog.preMarkerTestHook.set(null)
+      graft.testkit.Faults.onceAt("commit", dir)(
+        IvfIndex.retrain(spark, dir, k = 8, iters = 1, trainLimit = 200))(
+        IvfIndex.append(emb.where(col("vec_id") >= 50 && col("vec_id") < 90), dir, "b1"))
     }
     assert(e.getMessage.contains("raced a retrain"))
-    // the marker was withdrawn: the batch is NOT landed in any generation
+    assert(IvfIndex.currentGen(spark, dir).contains(1L))
+    // nothing was published: the batch is NOT landed in any generation,
+    // and no commit ever named it
     assert(!IvfIndex.contains(spark, dir, "b1"))
+    val log = IvfIndex.log(spark, dir)
+    val v = log.read()._1
+    assert(v.commits.forall(c => !graft.sources.MarkerLog.IndexState
+      .parse(new graft.sources.MarkerLog.CommitLog(log.fs, log.root).read(c.path)).landed("b1")))
     // a re-run against the new quantizer lands and is searchable
     assert(IvfIndex.append(
       emb.where(col("vec_id") >= 50 && col("vec_id") < 90), dir, "b1"))
@@ -650,17 +652,11 @@ class IvfIndexSpec extends AnyFunSuite with SharedSpark {
   test("retrain keeps recent batches per-batch across the flip; aged batches fold to _seen") {
     val dir = oneCellIndex()
     Similarity.semDeDupIncremental(vecDf(1L -> planeVec(0)), dir, "s0", 0.99)
-    // age s0: rewrite its marker with an ancient publish timestamp
-    val f = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gp = new org.apache.hadoop.fs.Path(s"$dir/gen-0")
-    val m = f.listStatus(gp).map(_.getPath)
-      .find(_.getName.matches("_live\\.\\d+\\.s0")).get
-    assert(f.rename(m, new org.apache.hadoop.fs.Path(gp, "_live.1000.s0")))
+    // age s0: republish it with an ancient publish time
+    val log = IvfIndex.log(spark, dir)
+    log.commit((_, s) => Some(s.put(graft.sources.MarkerLog.Live, "s0", 1000L)))
     Similarity.semDeDupIncremental(vecDf(2L -> planeVec(60)), dir, "s1", 0.99)
-    val s1Ts = f.listStatus(gp).map(_.getPath.getName)
-      .collectFirst { case n if n.matches("_live\\.\\d+\\.s1") =>
-        n.split("\\.")(1).toLong }.get
+    val s1Ts = log.state(graft.sources.MarkerLog.Live)("s1")
     assert(IvfIndex.retrain(spark, dir, k = 1, iters = 1, trainLimit = 100) == 1L)
     // the RECENT batch keeps per-batch identity in the new generation...
     assert(IvfIndex.readBatch(spark, dir, "s1").get
@@ -668,11 +664,8 @@ class IvfIndexSpec extends AnyFunSuite with SharedSpark {
     // ...and CARRIES ITS ORIGINAL publish timestamp — a retrain that
     // re-stamped it would reset the fold-grace clock on every flip, and
     // under recurring retrains no batch would ever age into a fold
-    val gp1 = new org.apache.hadoop.fs.Path(s"$dir/gen-1")
-    val s1TsAfter = f.listStatus(gp1).map(_.getPath.getName)
-      .collectFirst { case n if n.matches("_live\\.\\d+\\.s1") =>
-        n.split("\\.")(1).toLong }.get
-    assert(s1TsAfter == s1Ts, "retrain re-stamped a carried batch's marker")
+    val s1TsAfter = log.state(graft.sources.MarkerLog.Live)("s1")
+    assert(s1TsAfter == s1Ts, "retrain re-stamped a carried batch's publish time")
     // ...the AGED one folded: replay-detected, not individually readable
     assert(IvfIndex.contains(spark, dir, "s0"))
     assert(IvfIndex.readBatch(spark, dir, "s0").isEmpty)

@@ -255,13 +255,13 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     val replayed = Similarity.diversitySampleIncremental(b1, dir, cents, 4, graceMs = 0L)
       .collect().map(_.toSeq).toSet
     assert(replayed == after1)
-    // grace-0 vacuum: only the newest state (+ marker) remains on disk
+    // grace-0 vacuum: only the newest state (+ its commit) remains on disk
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val names = f.listStatus(new org.apache.hadoop.fs.Path(dir))
       .map(_.getPath.getName)
     assert(names.count(_.startsWith("state-")) == 1, names.mkString(","))
-    assert(names.count(_.startsWith("_state.")) == 1, names.mkString(","))
+    assert(names.count(_.startsWith("_commit.")) == 1, names.mkString(","))
   }
 
   test("multi-probe lsh lifts recall over single-probe") {

@@ -7,14 +7,15 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
-import MarkerLog.{BatchLog, VersionPointer}
+import MarkerLog.{IndexLog, Live, Seen, StateDir}
+import graft.testkit.Faults
 
-/** Fault injection for [[MarkerLog]]: every file-system step of append,
-  * fold, flip and snapshot is failed in turn through the module's one test
-  * seam ([[MarkerLog.faultHook]]), and after each crash
+/** Fault injection for [[MarkerLog.IndexLog]]: every file-system step of
+  * append, fold, flip and snapshot is failed in turn through the module's
+  * one test seam ([[MarkerLog.faultHook]]), and after each crash
   *
   *  - readers see exactly the old or the new live set,
-  *  - `contains` agrees with what readers see,
+  *  - `landed` agrees with what readers see,
   *  - a compact past the grace window leaves no orphan directory,
   *  - a retry either no-ops or lands.
   *
@@ -69,29 +70,46 @@ class MarkerLogSpec extends AnyFunSuite {
   private def freshRoot(): Path =
     new Path(Files.createTempDirectory("markerlog").toString, "idx")
 
-  private def logAt(root: Path) = new BatchLog(fs, root, "MarkerLogSpec", "batch-")
+  private def logAt(root: Path) = new IndexLog(fs, root, "MarkerLogSpec",
+    s => s.live.map("batch-" + _) ++ s.only(StateDir).map(_._1), Seq("batch-*", "state-*"))
 
-  /** What a reader sees: the rows of every marker-named batch. */
-  private def view(log: BatchLog): Set[Int] =
-    log.live.flatMap(n => readRows(log.batchPath(n))).toSet
+  private def batchPath(log: IndexLog, name: String) = new Path(log.root, s"batch-$name")
 
-  private def append(log: BatchLog, name: String, rows: Seq[Int]): Boolean =
-    log.append(name)(writeRows(_, rows))
+  /** What a reader sees: the rows of every live batch. */
+  private def view(log: IndexLog): Set[Int] =
+    log.state.live.flatMap(n => readRows(batchPath(log, n))).toSet
 
-  private def compact(log: BatchLog): Seq[String] =
-    log.compact(graceMs = 0L) { (aged, foldName) =>
-      writeRows(log.batchPath(foldName), aged.flatMap(n => readRows(log.batchPath(n))))
+  private def landed(log: IndexLog, name: String): Boolean = log.state.landed(name)
+
+  /** An index append: write the batch directory, publish it at commit
+    * `seq` (default: the number read first). False when already landed. */
+  private def append(log: IndexLog, name: String, rows: Seq[Int],
+                     seq: Option[Long] = None): Boolean = {
+    val (v, st) = log.read()
+    if (st.landed(name)) return false
+    MarkerLog.step("write", batchPath(log, name))(writeRows(batchPath(log, name), rows))
+    log.append(Seq(name), seq.getOrElse(v.next))()
+    true
+  }
+
+  /** Fold every live batch (they are all past a 0 ms grace window). */
+  private def fold(log: IndexLog): Unit =
+    log.fold(0L) { (aged, out) =>
+      MarkerLog.step("write", batchPath(log, out))(
+        writeRows(batchPath(log, out), aged.flatMap(n => readRows(batchPath(log, n)))))
       true
     }
 
-  /** Batch directories no marker names. */
-  private def orphans(log: BatchLog): Seq[String] = {
-    val live = log.live.toSet
+  private def compact(log: IndexLog): Unit = { fold(log); log.vacuum(0L) }
+
+  /** Batch directories no live name owns. */
+  private def orphans(log: IndexLog): Seq[String] = {
+    val live = log.state.live.toSet
     fs.listStatus(log.root).toSeq.filter(_.isDirectory).map(_.getPath.getName)
       .filter(n => n.startsWith("batch-") && !live.contains(n.drop("batch-".length)))
   }
 
-  private def seeded(): BatchLog = {
+  private def seeded(): IndexLog = {
     val log = logAt(freshRoot())
     assert(append(log, "a", Seq(1, 2)))
     assert(append(log, "b", Seq(2, 3)))
@@ -100,7 +118,7 @@ class MarkerLogSpec extends AnyFunSuite {
 
   test("append: a crash at any step leaves the old or the new live set; a retry lands once") {
     val steps = { val log = seeded(); stepsOf(log.root)(append(log, "c", Seq(3, 4))) }
-    assert(steps.map(_.op) == Seq("write", "claim", "mark"))
+    assert(steps.map(_.op) == Seq("write", "stage", "commit", "unstage"))
     for (k <- steps.indices) {
       val log = seeded()
       val before = view(log)
@@ -108,13 +126,13 @@ class MarkerLogSpec extends AnyFunSuite {
       crashAt(log.root, k)(append(log, "c", Seq(3, 4)))
       val v = view(log)
       assert(v == before || v == after, s"crash before ${steps(k)}: torn view $v")
-      assert(log.contains("c") == (v == after), s"crash before ${steps(k)}")
+      assert(landed(log, "c") == (v == after), s"crash before ${steps(k)}")
       compact(log)
       assert(orphans(log).isEmpty, s"crash before ${steps(k)}")
       assert(view(log) == v)
       // a replay of a landed (even folded) batch is a no-op; else it lands
       assert(append(log, "c", Seq(3, 4)) == (v == before), s"crash before ${steps(k)}")
-      assert(view(log) == after && log.contains("c"))
+      assert(view(log) == after && landed(log, "c"))
       compact(log)
       assert(orphans(log).isEmpty && view(log) == after)
     }
@@ -122,10 +140,10 @@ class MarkerLogSpec extends AnyFunSuite {
 
   test("append: a second writer on a claimed slot fails loud, and its batch stays invisible") {
     val log = seeded()
-    val seq = log.nextSeq()
+    val seq = log.read()._1.next
     assert(append(log, "racer", Seq(7)))
-    intercept[ConcurrentWriterException](log.append("late", Some(seq))(writeRows(_, Seq(8))))
-    assert(!log.contains("late") && !view(log).contains(8))
+    intercept[ConcurrentWriterException](append(log, "late", Seq(8), Some(seq)))
+    assert(!landed(log, "late") && !view(log).contains(8))
     compact(log)
     assert(orphans(log).isEmpty)
   }
@@ -136,37 +154,49 @@ class MarkerLogSpec extends AnyFunSuite {
     val barrier = new java.util.concurrent.CyclicBarrier(threads)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     try {
-      for (seq <- 0L until 60L) {
-        val claims = (0 until threads).map(_ => pool.submit(
+      for (round <- 0 until 30) {
+        val seq = log.read()._1.next
+        val appends = (0 until threads).map(t => pool.submit(
           new java.util.concurrent.Callable[Boolean] {
             def call(): Boolean = {
               barrier.await()
-              try { log.claim(seq); true }
+              try append(log, s"r$round-t$t", Seq(round * threads + t), Some(seq))
               catch { case _: ConcurrentWriterException => false }
             }
           }))
-        val winners = claims.count(_.get())
-        assert(winners == 1, s"slot $seq: $winners writers claimed it")
+        val winners = appends.count(_.get())
+        assert(winners == 1, s"round $round: $winners writers landed at commit $seq")
+        assert(log.state.live.length == round + 1)
       }
     } finally pool.shutdown()
   }
 
+  test("append: a fold that publishes between its read and its publish does not fail it") {
+    val log = seeded()
+    val seq = log.read()._1.next
+    // the fold takes commit `seq` first; the append re-reads, finds no
+    // batch landed since, and publishes at the next number
+    assert(Faults.onceAt("commit", log.root.toString)(fold(log))(
+      append(log, "c", Seq(5), Some(seq))))
+    assert(log.state.live.length == 2 && landed(log, "a") && landed(log, "c"))
+    assert(view(log) == Set(1, 2, 3, 5))
+  }
+
   test("fold: a crash at any step keeps every row visible and every name landed") {
-    def grown(): BatchLog = { val log = seeded(); append(log, "c", Seq(4)); log }
+    def grown(): IndexLog = { val log = seeded(); append(log, "c", Seq(4)); log }
     val steps = { val log = grown(); stepsOf(log.root)(compact(log)) }
-    assert(steps.map(_.op).take(2) == Seq("write", "mark") &&
-      steps.count(_.op == "seen") == 3 && steps.count(_.op == "retire") == 3 &&
-      steps.count(_.op == "sweep") == 3, steps.map(_.op))
+    assert(steps.map(_.op).take(4) == Seq("write", "stage", "commit", "unstage") &&
+      steps.count(_.op == "retire") == 3 && steps.count(_.op == "sweep") == 3, steps.map(_.op))
     for (k <- steps.indices) {
       val log = grown()
       val before = view(log)
       crashAt(log.root, k)(compact(log))
-      // a fold publishes before it retires: never a gap, at worst twins
+      // one commit swaps the batches for their fold: never a gap or twins
       assert(view(log) == before, s"crash before ${steps(k)}")
-      assert(Seq("a", "b", "c").forall(log.contains), s"crash before ${steps(k)}")
+      assert(Seq("a", "b", "c").forall(landed(log, _)), s"crash before ${steps(k)}")
       compact(log)
       assert(orphans(log).isEmpty, s"crash before ${steps(k)}")
-      assert(view(log) == before && log.live.size == 1)
+      assert(view(log) == before && log.state.live.size == 1)
       assert(!append(log, "a", Seq(9)) && !view(log).contains(9))
     }
   }
@@ -174,91 +204,116 @@ class MarkerLogSpec extends AnyFunSuite {
   test("fold: retired and orphaned directories are swept even when nothing folds") {
     val log = logAt(freshRoot())
     append(log, "a", Seq(1))
-    writeRows(log.batchPath("orphan"), Seq(9)) // a crashed append
-    compact(log) // one aged batch: nothing to fold, but the vacuum runs
+    writeRows(batchPath(log, "orphan"), Seq(9)) // a crashed append
+    compact(log) // one live batch: nothing to fold, but the vacuum runs
     assert(orphans(log).isEmpty && view(log) == Set(1))
   }
 
-  private def pointer(root: Path) = new VersionPointer(fs, root, "_v.", "v-")
+  /** Flip the state to a fresh version directory holding `rows`. */
+  private def flip(log: IndexLog, rows: Seq[Int]): Unit = {
+    val dir = s"state-${MarkerLog.freshName()}"
+    MarkerLog.step("write", new Path(log.root, dir))(writeRows(new Path(log.root, dir), rows))
+    val at = System.currentTimeMillis()
+    log.commit((_, s) => Some(s.set(StateDir, dir, at)))
+  }
 
-  private def value(p: VersionPointer): Option[Set[Int]] =
-    p.current.map(g => readRows(p.versionPath(g)))
+  private def value(log: IndexLog): Option[Set[Int]] =
+    log.state.only(StateDir).map(v => readRows(new Path(log.root, v._1)))
+
+  private def versions(log: IndexLog): Seq[String] =
+    fs.listStatus(log.root).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.startsWith("state-"))
 
   test("flip: a crash at any step leaves the old or the new version; a retry lands once") {
-    def seededPointer(): VersionPointer = {
-      val p = pointer(freshRoot())
-      assert(p.flip("1")(writeRows(_, Seq(1))))
-      p
-    }
-    val steps = { val p = seededPointer(); stepsOf(p.root)(p.flip("2")(writeRows(_, Seq(2)))) }
-    assert(steps.map(_.op) == Seq("write", "mark"))
+    def seededFlip(): IndexLog = { val log = logAt(freshRoot()); flip(log, Seq(1)); log }
+    val steps = { val log = seededFlip(); stepsOf(log.root)(flip(log, Seq(2))) }
+    assert(steps.map(_.op) == Seq("write", "stage", "commit", "unstage"))
     for (k <- steps.indices) {
-      val p = seededPointer()
-      crashAt(p.root, k)(p.flip("2")(writeRows(_, Seq(2))))
-      val v = value(p)
+      val log = seededFlip()
+      crashAt(log.root, k)(flip(log, Seq(2)))
+      val v = value(log)
       assert(v == Some(Set(1)) || v == Some(Set(2)), s"crash before ${steps(k)}: $v")
-      assert((p.current == Some("2")) == (v == Some(Set(2))))
-      // the crashed flip's target is an orphan: cleared before reuse
-      assert(p.flip("2")(writeRows(_, Seq(2))) == (v == Some(Set(1))))
-      assert(value(p) == Some(Set(2)))
-      p.vacuum(0L)
-      val dirs = fs.listStatus(p.root).toSeq.filter(_.isDirectory).map(_.getPath.getName)
-      assert(dirs == Seq("v-2"), s"crash before ${steps(k)}: $dirs")
-      assert(value(p) == Some(Set(2)))
+      if (v == Some(Set(1))) flip(log, Seq(2))
+      assert(value(log) == Some(Set(2)))
+      log.vacuum(0L)
+      assert(versions(log).length == 1, s"crash before ${steps(k)}: ${versions(log)}")
+      assert(value(log) == Some(Set(2)))
     }
   }
 
-  test("flip: a remnant target is cleared before reuse, and the vacuum sweeps unmarked versions") {
-    val p = pointer(freshRoot())
-    p.flip("1")(writeRows(_, Seq(1)))
-    // a crashed flip left a stale file inside the next target
-    writeRows(p.versionPath("2"), Seq(99))
-    fs.create(new Path(p.versionPath("2"), "_live.1.stale"), false).close()
-    writeRows(p.versionPath("3"), Seq(98)) // a remnant no retry reuses
-    assert(p.flip("2")(t => { assert(!fs.exists(t)); writeRows(t, Seq(2)) }))
-    assert(!fs.exists(new Path(p.versionPath("2"), "_live.1.stale")))
-    p.vacuum(0L)
-    assert(!fs.exists(p.versionPath("3")) && !fs.exists(p.versionPath("1")))
-    assert(value(p) == Some(Set(2)))
+  test("flip: a crashed flip's directory is never reused, and the vacuum sweeps unnamed versions") {
+    val log = logAt(freshRoot())
+    flip(log, Seq(1))
+    // crashed flips left unnamed versions behind; no later flip writes
+    // into them, so nothing is cleared before reuse
+    writeRows(new Path(log.root, "state-crashed"), Seq(99))
+    val planted = fs.getFileStatus(new Path(log.root, "state-crashed/rows")).getModificationTime
+    flip(log, Seq(2))
+    assert(fs.getFileStatus(new Path(log.root, "state-crashed/rows")).getModificationTime == planted)
+    assert(value(log) == Some(Set(2)))
+    log.vacuum(0L)
+    assert(versions(log) == Seq(log.state.only(StateDir).get._1))
+    assert(value(log) == Some(Set(2)))
   }
 
-  test("the newest marker wins; a millisecond tie breaks on the name, numerically") {
-    val p = pointer(freshRoot())
-    Seq("9", "10").foreach { g =>
-      writeRows(p.versionPath(g), Seq(g.toInt))
-      fs.create(new Path(p.root, s"_v.100.$g"), false).close()
-    }
-    assert(p.current == Some("10"))
+  test("legacy markers read until the first commit, which vacuums them past the grace window") {
+    val log = logAt(freshRoot())
+    // an index written before the commit log: stamped markers, a batch
+    // re-stamped by a retrain (its FIRST stamp is its time), a folded
+    // name, a slot claim and a newest-wins version
+    writeRows(batchPath(log, "a"), Seq(1))
+    writeRows(batchPath(log, "b"), Seq(2))
+    writeRows(new Path(log.root, "state-old"), Seq(7))
+    writeRows(new Path(log.root, "state-new"), Seq(8))
+    Seq("_live.100.a", "_live.300.b", "_live.200.b", "_seen.50.z", "_slot.4",
+        "_state.10.old", "_state.20.new").foreach(n => fs.create(new Path(log.root, n)).close())
+    val st = log.state
+    assert(st(Live) == Map("a" -> 100L, "b" -> 200L) && st(Seen) == Map("z" -> 50L))
+    assert(view(log) == Set(1, 2) && value(log) == Some(Set(8)) && landed(log, "z"))
+    // nothing is named by a commit yet, and nothing the markers name goes
+    log.vacuum(0L)
+    assert(view(log) == Set(1, 2) && value(log) == Some(Set(8)))
+    // the first commit carries the marker state forward
+    assert(append(log, "c", Seq(3)))
+    assert(log.state(Live) == Map("a" -> 100L, "b" -> 200L, "c" -> log.state(Live)("c")))
+    log.vacuum(60 * 60 * 1000L)
+    assert(fs.exists(new Path(log.root, "_live.100.a")), "markers went inside the grace window")
+    log.vacuum(0L)
+    assert(!fs.listStatus(log.root).map(_.getPath.getName).exists(n =>
+      n.startsWith("_live.") || n.startsWith("_seen.") || n.startsWith("_slot.") ||
+        n.startsWith("_state.")))
+    assert(view(log) == Set(1, 2, 3) && value(log) == Some(Set(8)) && landed(log, "z"))
+    assert(versions(log) == Seq("state-new"))
   }
 
   test("snapshot: a crash at any step leaves the original untouched; a retry captures it whole") {
-    def grown(): BatchLog = {
+    def grown(): IndexLog = {
       val log = seeded()
-      compact(log) // a, b folded: `_seen` records and a fold batch
+      compact(log) // a, b folded
       append(log, "c", Seq(4))
       log
     }
-    def snapshot(log: BatchLog, name: String): MarkerLog.Capture = {
-      var cap: MarkerLog.Capture = null
-      MarkerLog.snapshot(fs, log.root, name)(out => cap = log.snapshotInto(out))
-      cap
-    }
+    def snapshot(log: IndexLog, name: String): Unit =
+      log.snapshot(name) { (st, out) =>
+        val gone = st.live.filterNot(n => MarkerLog.linkTreeTolerant(fs,
+          batchPath(log, n), new Path(out, s"batch-$n")))
+        st.drop(Live, gone)
+      }
     val steps = { val log = grown(); stepsOf(log.root)(snapshot(log, "s0")) }
-    assert(steps.count(_.op == "link") == 2 && steps.count(_.op == "touch") >= 5 &&
+    assert(steps.count(_.op == "link") == 2 && steps.count(_.op == "commit") == 1 &&
       steps.last.op == "publish", steps.map(_.op))
     for (k <- steps.indices) {
       val log = grown()
       val before = view(log)
-      val seq = log.nextSeq()
       crashAt(log.root, k)(snapshot(log, "s1"))
-      assert(view(log) == before && Seq("a", "b", "c").forall(log.contains))
+      assert(view(log) == before && Seq("a", "b", "c").forall(landed(log, _)))
       assert(!fs.exists(new Path(log.root, "snapshots/s1")),
         s"crash before ${steps(k)}: a partial snapshot is visible")
-      val cap = snapshot(log, "s2")
+      snapshot(log, "s2")
       val snap = logAt(new Path(log.root, "snapshots/s2"))
-      assert(cap.batches == log.live.toSet)
-      assert(view(snap) == before && Seq("a", "b", "c").forall(snap.contains))
-      assert(snap.nextSeq() == seq, "the writer ledger carries into the snapshot")
+      assert(snap.state.live.toSet == log.state.live.toSet)
+      assert(view(snap) == before && Seq("a", "b", "c").forall(landed(snap, _)))
+      assert(snap.read()._1.next == 2, "the snapshot is its own commit 1")
       compact(log)
       MarkerLog.sweepSnapshots(fs, log.root, 0L)
       assert(orphans(log).isEmpty && view(log) == before)
