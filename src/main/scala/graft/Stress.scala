@@ -239,7 +239,7 @@ object Stress {
       // compacts rarely accumulates thousands of batch dirs — the fold
       // cost must scale ~linearly in directory count and reads must be
       // FLAT afterwards. Directories are synthesized cheaply (one
-      // partitioned write renamed into batch-<name> dirs + markers), so
+      // partitioned write renamed into batch-<name> dirs + one commit), so
       // the probe times the fold/read, not 4k sequential Spark writes.
       timed("sigidx_read_1k") {
         graft.pipeline.SigIndex.read(spark, sigDirs(1000)).count()

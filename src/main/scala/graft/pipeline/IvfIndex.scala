@@ -1044,8 +1044,9 @@ object IvfIndex {
 
   /** Freeze the CURRENT generation under `dir/snapshots/<name>/` — a
     * fully valid IvfIndex directory (the generation's quantizer files, its
-    * live batches and their histogram sidecars, and its own `_commit.1` —
-    * [[MarkerLog.IndexLog.snapshot]]): search, append and retrain all work
+    * live batches and their histogram sidecars, and its own commit,
+    * numbered as the captured tip — [[MarkerLog.IndexLog.snapshot]]):
+    * search, append and retrain all work
     * against a restored snapshot. Readers of the original never list
     * `snapshots/`, and a crashed capture publishes none. */
   def snapshot(spark: SparkSession, dir: String): String = {

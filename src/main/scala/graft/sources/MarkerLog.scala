@@ -5,11 +5,14 @@ import java.util.concurrent.atomic.AtomicReference
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** A second writer raced an [[MarkerLog.IndexLog]] append: a batch of
-  * another writer landed at or after the commit number this append read. */
+  * another writer landed at or after the commit number this append read,
+  * or the log never offered that number (the index was restored from a
+  * snapshot taken before the read). */
 final class ConcurrentWriterException(owner: String, dir: String, seq: Long)
   extends IllegalStateException(
-    s"$owner at $dir: commit $seq was taken by a concurrent writer's batch " +
-      "— appends must be sequential per index; this batch was NOT appended " +
+    s"$owner at $dir: commit $seq is stale — a concurrent writer's batch " +
+      "landed at or after it, or the index was restored to an earlier state; " +
+      "appends must be sequential per index; this batch was NOT appended " +
       "(its directory is an unnamed orphan)")
 
 /** The commit protocol of everything persisted: data lives in immutable
@@ -34,7 +37,8 @@ final class ConcurrentWriterException(owner: String, dir: String, seq: Long)
   * the grace window (the newer one's age bounds the supersession age from
   * below), and a data directory once no remaining commit names it and it is
   * itself that old (an in-flight write is younger) — one rule for retired
-  * directories and crash orphans alike.
+  * directories and crash orphans alike. An index state records which
+  * commit stopped naming each directory, so the vacuum reads the tip alone.
   *
   * Every file-system mutation passes [[step]] first — the one test seam. */
 private[graft] object MarkerLog {
@@ -225,8 +229,11 @@ private[graft] object MarkerLog {
 
     /** Publish `lines` as the successor of `v`'s tip. False, publishing
       * nothing, when another writer took that number first: `v` is stale. */
-    def publish(v: CommitView, lines: Seq[String]): Boolean =
-      createExclusive(fs, new Path(dir, s"$CommitPrefix${v.next}"),
+    def publish(v: CommitView, lines: Seq[String]): Boolean = publishAt(v.next, lines)
+
+    /** Publish `lines` as commit `n`; false when it exists. */
+    private[MarkerLog] def publishAt(n: Long, lines: Seq[String]): Boolean =
+      createExclusive(fs, new Path(dir, s"$CommitPrefix$n"),
         lines.mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
         "commit")
 
@@ -253,17 +260,21 @@ private[graft] object MarkerLog {
     * name (its fold time), kept so a replay of a folded batch is detected;
     * IvfIndex's generation directory (its number); SigIndex's decision
     * ledger directory and folded decision sidecars; the diversity
-    * sampler's state directory. */
+    * sampler's state directory; and a directory an earlier state named
+    * (the number of the commit that stopped naming it), which
+    * [[IndexLog.commit]] alone writes. */
   val Live = "live"
   val Seen = "seen"
   val Gen = "gen"
   val Ledger = "ledger"
   val DecFold = "decfold"
   val StateDir = "state"
+  val Retired = "retired"
 
   /** The whole state of a pipeline index, as one commit body names it:
     * facts `<kind> <n> <name>`, at most one per (kind, name), where `n` is
-    * the fact's time — or, for IvfIndex's generation, its number — plus
+    * the fact's time — or, for IvfIndex's generation, its number, and for
+    * a retired directory, the number of the commit that retired it — plus
     * `appended`, the commit number of the newest batch append (-1: none). */
   final case class IndexState(facts: Map[String, Map[String, Long]], appended: Long) {
 
@@ -338,10 +349,21 @@ private[graft] object MarkerLog {
     @annotation.tailrec
     def commit(update: (CommitView, IndexState) => Option[IndexState]): Option[IndexState] = {
       val (v, s) = read()
-      update(v, s) match {
+      update(v, s).map(retire(v, s, _)) match {
         case Some(n) if !log.publish(v, n.lines) => commit(update)
         case published => published
       }
+    }
+
+    /** `n`, about to replace `s` as commit `v.next`, recording the
+      * directories `s` named and `n` does not as retired by that commit,
+      * and forgetting those retired by commits the vacuum removed (which
+      * were past the grace window). */
+    private def retire(v: CommitView, s: IndexState, n: IndexState): IndexState = {
+      val oldest = v.commits.map(_.n).minOption.getOrElse(v.next)
+      val retired = (s(Retired) -- dirs(n)).filter(_._2 >= oldest) ++
+        (dirs(s).toSet -- dirs(n)).map(_ -> v.next)
+      n.copy(facts = n.facts.updated(Retired, retired))
     }
 
     /** Land batches `names`, whose directories are written, in one commit
@@ -349,12 +371,14 @@ private[graft] object MarkerLog {
       * When that number is lost and a commit since landed any batch, a
       * concurrent writer raced this one ([[ConcurrentWriterException]]);
       * commits that landed no batch (folds, flips) are benign, and the
-      * append publishes at the new tip. `guard` vets every tip it would
-      * publish onto (IvfIndex: the generation is unchanged). */
+      * append publishes at the new tip. A number past the next one was
+      * never offered by this log (it was read before a restore) and throws
+      * too. `guard` vets every tip it would publish onto (IvfIndex: the
+      * generation is unchanged). */
     def append(names: Seq[String], seq: Long, ts: Long = System.currentTimeMillis())(
         guard: IndexState => Unit = _ => ()): Unit =
       commit { (v, s) =>
-        if (v.next != seq && s.appended >= seq || names.exists(s.landed))
+        if (seq > v.next || v.next != seq && s.appended >= seq || names.exists(s.landed))
           throw new ConcurrentWriterException(owner, root.toString, seq)
         guard(s)
         Some(names.foldLeft(s)(_.put(Live, _, ts)).copy(appended = v.next))
@@ -385,17 +409,17 @@ private[graft] object MarkerLog {
     /** Retire commits superseded for `graceMs`, then delete every data
       * directory matching `sweep` that no remaining commit names once it is
       * itself that old (`onSweep` hears each), and, once a commit is that
-      * old, the markers of an index written before the commit log. */
+      * old, the markers of an index written before the commit log. The
+      * remaining commits name what the tip names plus the directories
+      * retired by a commit younger than `graceMs` (an older one has
+      * superseded every commit naming them for the window). */
     def vacuum(graceMs: Long, onSweep: Path => Unit = _ => ()): Unit = {
       val now = System.currentTimeMillis()
       log.vacuum(log.view(), graceMs)
-      val v = log.view()
-      val states = if (v.commits.isEmpty) Seq(legacyState(fs, root, v.entries))
-        else v.commits.flatMap { c =>
-          try Some(IndexState.parse(log.read(c.path)))
-          catch { case _: java.io.FileNotFoundException => None }
-        }
-      val named = states.flatMap(dirs).flatMap { d =>
+      val (v, s) = read()
+      val young = v.commits.filter(_.mtime > now - graceMs).map(_.n).toSet
+      val retired = s(Retired).collect { case (d, r) if young(r) => d }
+      val named = (dirs(s) ++ retired).flatMap { d =>
         d.split("/").toSeq.inits.filter(_.nonEmpty).map(_.mkString("/"))
       }.toSet
       val rootPath = fs.makeQualified(root).toUri.getPath
@@ -413,14 +437,16 @@ private[graft] object MarkerLog {
 
     /** Snapshot the index: `capture` links what the tip state names into the
       * staged snapshot directory and returns the state it captured (leaving
-      * out any directory that vanished); that state is the snapshot's own
-      * `_commit.1`. Everything in it landed at or before that commit, so
-      * the snapshot's appends number on from 2. Returns the name. */
+      * out any directory that vanished); that state is the snapshot's one
+      * commit, numbered as the captured tip, so a restored index continues
+      * the original's numbering and a writer holding a number read before
+      * the restore fails loud ([[append]]). Returns the name. */
     def snapshot(name: String = freshName())(capture: (IndexState, Path) => IndexState): String =
       MarkerLog.snapshot(fs, root, name) { out =>
-        val s = capture(state, out)
-        new CommitLog(fs, out).publish(CommitView(Nil, Nil),
-          s.copy(appended = math.min(s.appended, 1L)).lines)
+        val (v, s) = read()
+        val kept = capture(s, out)
+        new CommitLog(fs, out).publishAt(v.tip.fold(1L)(_.n),
+          kept.copy(facts = kept.facts - Retired).lines)
       }
   }
 

@@ -309,6 +309,11 @@ class IncrementalDedupSpec extends AnyFunSuite with SharedSpark {
     // restore = copy the snapshot OUT of the original tree onto a fresh
     // path (the real restore shape), then CONTINUE the history on it
     val snapName = SigIndex.snapshot(spark, dir)
+    // the original moves on past the snapshot, and a writer reads the
+    // number its next append would take there
+    Dedup.incremental(df(Seq(5L -> "an original-only batch on tidal marsh grasses")), dir, name = "o2")
+    Dedup.incremental(df(Seq(6L -> "an original-only batch on glacier ice cores")), dir, name = "o3")
+    val stale = SigIndex.nextAppendSeq(spark, dir)
     val restored = Files.createTempDirectory("sigidx_restored").toString + "/idx"
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -325,11 +330,16 @@ class IncrementalDedupSpec extends AnyFunSuite with SharedSpark {
     val t3 = "a third batch describing orchard beekeeping through the almond bloom"
     assert(Dedup.incremental(df(Seq(11L -> t3)), restored, name = "n3").count() == 1)
     assert(Dedup.incremental(df(Seq(12L -> t3)), restored, name = "n4").count() == 0)
-    // the slot ledger carried: a writer holding a PRE-restore sequence
-    // fails loud instead of splitting survivors
-    intercept[graft.sources.ConcurrentWriterException] {
-      SigIndex.append(df(Seq(13L -> t3))
-        .select(col("doc_id"), lit(1L).as("bv")), restored, "stale", seq = Some(0L))
+    // the numbering carried: a writer holding a number read before the
+    // restore fails loud instead of splitting survivors — one from the
+    // snapshotted history, and one from the original after it moved on,
+    // past the restored index's own appends
+    assert(SigIndex.nextAppendSeq(spark, restored) > stale)
+    Seq(0L, stale).foreach { seq =>
+      intercept[graft.sources.ConcurrentWriterException] {
+        SigIndex.append(df(Seq(13L -> t3))
+          .select(col("doc_id"), lit(1L).as("bv")), restored, "stale", seq = Some(seq))
+      }
     }
     // and a compact on the restored index keeps all of it answering
     SigIndex.compact(spark, restored, graceMs = 0L)

@@ -446,6 +446,11 @@ class IvfIndexSpec extends AnyFunSuite with SharedSpark {
     // restore = copy the snapshot OUT of the original tree (a real
     // restore lands on a fresh path, not inside the source's snapshots/)
     val snapName = IvfIndex.snapshot(spark, dir)
+    val snapRows = IvfIndex.read(spark, dir).count()
+    // the original moves on past the snapshot, and a writer reads the
+    // number its next append would take there
+    (2 until 4).foreach(b => IvfIndex.append(emb.where(col("vec_id") < 0), dir, s"o$b"))
+    val stale = IvfIndex.nextAppendSeq(spark, dir)
     val restored = Files.createTempDirectory("ivf_restore").toString + "/idx"
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -461,12 +466,17 @@ class IvfIndexSpec extends AnyFunSuite with SharedSpark {
       .select(col("vec_id") + 100000, col("embedding"))
       .toDF("vec_id", "embedding")
     assert(IvfIndex.append(more, restored, "b3"))
-    assert(IvfIndex.read(spark, restored).count() ==
-      IvfIndex.read(spark, dir).count() + 10)
-    // the slot ledger carried: a stale-seq writer (one that snapshotted
-    // the PRE-restore state) fails loud instead of splitting survivors
-    intercept[graft.sources.ConcurrentWriterException] {
-      IvfIndex.append(more, restored, "stale", seq = Some(0L))
+    assert(IvfIndex.read(spark, restored).count() == snapRows + 10)
+    assert(IvfIndex.append(emb.where(col("vec_id") < 0), restored, "b4"))
+    // the numbering carried: a writer holding a number read before the
+    // restore fails loud instead of splitting survivors — one from the
+    // snapshotted history, and one from the original after it moved on,
+    // past the restored index's own appends
+    assert(IvfIndex.nextAppendSeq(spark, restored) > stale)
+    Seq(0L, stale).foreach { seq =>
+      intercept[graft.sources.ConcurrentWriterException] {
+        IvfIndex.append(more, restored, "stale", seq = Some(seq))
+      }
     }
     // and the continued index answers exactly like a one-shot probe over
     // the union of the pre-snapshot corpus and the post-restore batch

@@ -7,7 +7,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
-import MarkerLog.{IndexLog, Live, Seen, StateDir}
+import MarkerLog.{IndexLog, Live, Retired, Seen, StateDir}
 import graft.testkit.Faults
 
 /** Fault injection for [[MarkerLog.IndexLog]]: every file-system step of
@@ -201,6 +201,26 @@ class MarkerLogSpec extends AnyFunSuite {
     }
   }
 
+  test("vacuum: a retired directory stays while the commit that retired it is young") {
+    val log = seeded()
+    fold(log)
+    val retired = Seq("a", "b").map(n => s"batch-$n")
+    assert(log.state(Retired).keySet == retired.toSet)
+    // the directories are old, but the commit that retired them is not
+    val old = System.currentTimeMillis() - 2 * 60 * 60 * 1000L
+    retired.foreach(d => fs.setTimes(new Path(log.root, d), old, -1))
+    log.vacuum(60 * 60 * 1000L)
+    assert(retired.forall(d => fs.exists(new Path(log.root, d))), "swept inside the grace window")
+    log.vacuum(0L)
+    assert(orphans(log).isEmpty && view(log) == Set(1, 2, 3))
+    // once the vacuum removed the commit that retired them, the next
+    // commit forgets them: the state does not grow with the history
+    assert(append(log, "c", Seq(4)))
+    log.vacuum(0L)
+    assert(append(log, "d", Seq(5)))
+    assert(log.state(Retired).isEmpty)
+  }
+
   test("fold: retired and orphaned directories are swept even when nothing folds") {
     val log = logAt(freshRoot())
     append(log, "a", Seq(1))
@@ -286,6 +306,21 @@ class MarkerLogSpec extends AnyFunSuite {
     assert(versions(log) == Seq("state-new"))
   }
 
+  test("legacy versions: a millisecond tie breaks on the name, numerically") {
+    val log = logAt(freshRoot())
+    Seq(9, 10).foreach(g => writeRows(new Path(log.root, s"state-$g"), Seq(g)))
+    Seq("_state.100.9", "_state.100.10").foreach(n => fs.create(new Path(log.root, n)).close())
+    assert(log.state.only(StateDir).map(_._1) == Some("state-10") && value(log) == Some(Set(10)))
+  }
+
+  /** Snapshot `log` as `name`, linking its live batches. */
+  private def snapshot(log: IndexLog, name: String): Unit =
+    log.snapshot(name) { (st, out) =>
+      val gone = st.live.filterNot(n => MarkerLog.linkTreeTolerant(fs,
+        batchPath(log, n), new Path(out, s"batch-$n")))
+      st.drop(Live, gone)
+    }
+
   test("snapshot: a crash at any step leaves the original untouched; a retry captures it whole") {
     def grown(): IndexLog = {
       val log = seeded()
@@ -293,12 +328,6 @@ class MarkerLogSpec extends AnyFunSuite {
       append(log, "c", Seq(4))
       log
     }
-    def snapshot(log: IndexLog, name: String): Unit =
-      log.snapshot(name) { (st, out) =>
-        val gone = st.live.filterNot(n => MarkerLog.linkTreeTolerant(fs,
-          batchPath(log, n), new Path(out, s"batch-$n")))
-        st.drop(Live, gone)
-      }
     val steps = { val log = grown(); stepsOf(log.root)(snapshot(log, "s0")) }
     assert(steps.count(_.op == "link") == 2 && steps.count(_.op == "commit") == 1 &&
       steps.last.op == "publish", steps.map(_.op))
@@ -309,16 +338,40 @@ class MarkerLogSpec extends AnyFunSuite {
       assert(view(log) == before && Seq("a", "b", "c").forall(landed(log, _)))
       assert(!fs.exists(new Path(log.root, "snapshots/s1")),
         s"crash before ${steps(k)}: a partial snapshot is visible")
+      val next = log.read()._1.next
       snapshot(log, "s2")
       val snap = logAt(new Path(log.root, "snapshots/s2"))
       assert(snap.state.live.toSet == log.state.live.toSet)
       assert(view(snap) == before && Seq("a", "b", "c").forall(landed(snap, _)))
-      assert(snap.read()._1.next == 2, "the snapshot is its own commit 1")
+      assert(snap.read()._1.next == next, "the writer ledger carries into the snapshot")
       compact(log)
       MarkerLog.sweepSnapshots(fs, log.root, 0L)
       assert(orphans(log).isEmpty && view(log) == before)
       assert(fs.listStatus(new Path(log.root, "snapshots")).map(_.getPath.getName).toSeq ==
         Seq("s2"), s"crash before ${steps(k)}: the partial capture was not swept")
     }
+  }
+
+  test("restore: a writer holding a number read before the restore fails loud") {
+    val log = seeded() // commits 1, 2
+    snapshot(log, "s")
+    // the original moves on, and a writer reads its next number there
+    assert(append(log, "c", Seq(3)) && append(log, "d", Seq(4)))
+    val stale = log.read()._1.next
+    // restore: the snapshot copied out onto a fresh path
+    val restored = logAt(freshRoot())
+    org.apache.hadoop.fs.FileUtil.copy(fs, new Path(log.root, "snapshots/s"),
+      fs, restored.root, false, fs.getConf)
+    assert(restored.read()._1.next == 3 && view(restored) == Set(1, 2, 3))
+    // a number the restored log never offered
+    assert(append(restored, "e", Seq(5)))
+    intercept[ConcurrentWriterException](append(restored, "stale", Seq(9), Some(stale)))
+    // a number the restored log since gave to its own batches
+    assert(append(restored, "f", Seq(6)) && append(restored, "g", Seq(7)))
+    assert(restored.read()._1.next > stale)
+    intercept[ConcurrentWriterException](append(restored, "stale", Seq(9), Some(stale)))
+    assert(!landed(restored, "stale") && view(restored) == Set(1, 2, 3, 5, 6, 7))
+    compact(restored)
+    assert(orphans(restored).isEmpty && view(restored) == Set(1, 2, 3, 5, 6, 7))
   }
 }
