@@ -166,7 +166,7 @@ object Serve {
         cfg.retentionMs.foreach(r =>
           PointsStore.expire(spark, cfg.storeDir, System.currentTimeMillis() - r))
       } catch { case e: Throwable =>
-        System.err.println(s"[serve] maintenance tick failed: ${e.getMessage}")
+        System.err.println(s"[serve] maintenance tick failed: ${failureLine(e)}")
       }
     }, cfg.maintenanceMs, cfg.maintenanceMs, java.util.concurrent.TimeUnit.MILLISECONDS)
     // in-process scraper (reference: scraping/scraper.go wires the scrape
@@ -188,12 +188,23 @@ object Serve {
             spark, cfg.scrapeTargets, fetch, System.currentTimeMillis())
           PointsStore.append(pts, cfg.storeDir)
         } catch { case e: Throwable =>
-          System.err.println(s"[serve] scrape tick failed: ${e.getMessage}")
+          System.err.println(s"[serve] scrape tick failed: ${failureLine(e)}")
         }
       }, cfg.scrapeIntervalMs, cfg.scrapeIntervalMs,
         java.util.concurrent.TimeUnit.MILLISECONDS)
     }
     Handle(api, boundPort, sched)
+  }
+
+  /** A failed background tick on one line: the exception's class and
+    * message, then its root cause's, so an exception without a message
+    * still says what failed. */
+  private[graft] def failureLine(e: Throwable): String = {
+    def one(t: Throwable) =
+      Option(t.getMessage).fold(t.getClass.getName)(m => s"${t.getClass.getName}: $m")
+    // bounded: a cause chain can loop
+    val root = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(32).toSeq.last
+    if (root eq e) one(e) else s"${one(e)}; root cause: ${one(root)}"
   }
 
   /** The live config as Prometheus-style YAML for /api/v1/status/config

@@ -202,6 +202,14 @@ final class HttpApi(spark: SparkSession, points: DataFrame,
   Telemetry.counterSupplier("graft_codegen_compiles_total",
     "Generated classes compiled by this process (Spark code-cache misses)")(() =>
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount.toDouble)
+  // a query shape is planned once: a repeat rebinds its cached plan's
+  // times, and a write, compaction or delete (a new live file set) misses
+  Telemetry.counterSupplier("graft_plan_cache_hits_total",
+    "PromQL queries that reused an optimized plan with their times rebound")(() =>
+    graft.engine.PlanCache.hits.toDouble)
+  Telemetry.counterSupplier("graft_plan_cache_misses_total",
+    "PromQL queries built and optimized afresh")(() =>
+    graft.engine.PlanCache.misses.toDouble)
 
   /** Per-request `timeout=` (seconds float or Go duration), CAPPED at
     * the server's configured timeout — the vendored API's contract

@@ -163,6 +163,10 @@ object Aggregations {
     * full rows. Output ordered by rank per group (the API layer surfaces
     * this ordering). Tie-break on (name, canonical labels): deterministic
     * AND reproducible by an external oracle (a hash tiebreak would not be). */
+  /** The most winner rows (k × steps, one group) broadcast by topk/bottomk:
+    * about 3 MB, under Spark's default broadcast threshold. */
+  private[engine] val MaxBroadcastWinners = 100000L
+
   private def topBottomK(ae: AggregateExpr, v: VectorVal, ctx: EvalContext): VectorVal = {
     val p = Compiler.eval(ae.param.get, ctx)
     val gsig = if (ae.without) xxhash64(CanonicalLabels.dropColumn(col("labels"), ae.grouping))
@@ -191,8 +195,18 @@ object Aggregations {
         col("_p").cast("double")).as("_sigs"))
       .select(col("_gsig"), col("step").as("_wstep"),
         posexplode(col("_sigs")).as(Seq("_rank", "_wsig")))
+    // the winners hold k rows per group and step. When that is bounded at
+    // build (a literal k, one group, few steps) they are pinned as the
+    // broadcast side, so the join's plan no longer follows the runtime
+    // sizes of its inputs, which flipped the side between two evaluation
+    // times; otherwise (groups or steps unbounded) AQE sizes the join
+    val bounded = !ae.without && ae.grouping.isEmpty && (p match {
+      case ScalarVal(_, Some(k)) => k * ctx.grid.nSteps <= MaxBroadcastWinners
+      case _ => false
+    })
     val out = vRows
-      .join(winners, col("sig") === col("_wsig") && col("step") === col("_wstep"))
+      .join(if (bounded) broadcast(winners) else winners,
+        col("sig") === col("_wsig") && col("step") === col("_wstep"))
       .orderBy(col("step"), col("_gsig"), col("_rank"))
       .drop("_gsig", "_rank", "_wsig", "_wstep")
     VectorVal(out, v.dict)

@@ -213,6 +213,11 @@ object Compiler {
     case AtModifier.At(ts) => ts
   }
 
+  /** The one-step grid a selector pinned by `at` (then moved back by
+    * `offsetMs`) evaluates on. */
+  private def pinnedGrid(at: AtModifier, offsetMs: Long, grid: StepGrid): StepGrid =
+    grid.pinned(pinnedTs(at, grid) - offsetMs, at.isInstanceOf[AtModifier.At])
+
   def evalVectorSelector(vs: VectorSelector, ctx: EvalContext): VectorVal = {
     val pts = selectorPoints(vs, ctx)
     val grid = ctx.grid
@@ -230,13 +235,11 @@ object Compiler {
         if (vs.offsetMs == 0L) {
           VectorVal(sel(grid), dict)
         } else {
-          val shifted = StepGrid(grid.startMs - vs.offsetMs, grid.endMs - vs.offsetMs, grid.stepMs)
-          VectorVal(sel(shifted).withColumn("step", col("step") + vs.offsetMs), dict)
+          VectorVal(sel(grid.shifted(vs.offsetMs)).withColumn("step", col("step") + vs.offsetMs), dict)
         }
       case Some(at) =>
         // step-invariant: evaluate once at the pinned ts, replicate across grid
-        val ts = pinnedTs(at, grid) - vs.offsetMs
-        val once = sel(StepGrid(ts, ts, 1)).drop("step")
+        val once = sel(pinnedGrid(at, vs.offsetMs, grid)).drop("step")
         VectorVal(once.crossJoin(broadcast(grid.df(ctx.spark))), dict)
     }
   }
@@ -257,18 +260,17 @@ object Compiler {
           MatrixVal(Selectors.range(pts, grid, ms.rangeMs, ctx.sampleTally, dict),
             ms.rangeMs, dict = dict, slim = slimOf(grid, 0L))
         } else {
-          val shifted = StepGrid(grid.startMs - vs.offsetMs, grid.endMs - vs.offsetMs, grid.stepMs)
+          val shifted = grid.shifted(vs.offsetMs)
           MatrixVal(Selectors.range(pts, shifted, ms.rangeMs, ctx.sampleTally, dict)
             .withColumn("step", col("step") + vs.offsetMs),
             ms.rangeMs, windowEndMsOffset = vs.offsetMs, dict = dict,
             slim = slimOf(shifted, vs.offsetMs))
         }
       case Some(at) =>
-        val ts = pinnedTs(at, grid) - vs.offsetMs
-        val once = Selectors.range(pts, StepGrid(ts, ts, 1), ms.rangeMs,
-          ctx.sampleTally, dict).drop("step")
+        val pin = pinnedGrid(at, vs.offsetMs, grid)
+        val once = Selectors.range(pts, pin, ms.rangeMs, ctx.sampleTally, dict).drop("step")
         MatrixVal(once.crossJoin(broadcast(grid.df(ctx.spark))), ms.rangeMs,
-          pinnedEndMs = Some(ts), dict = dict)
+          pinned = Some(pin), dict = dict)
     }
   }
 
@@ -293,6 +295,8 @@ object Compiler {
     // the range, and the subquery is empty (the reference's step loop runs
     // zero times); the inner expression is then built on its one step
     val noSteps = innerStart > outerEnd
+    // aligned to the inner step, the inner grid does not move with the
+    // query's times: its parameters are never rebound
     val innerGrid = StepGrid(innerStart, math.max(innerStart, outerEnd), innerStep)
     val inner = evalVector(sq.expr,
       ctx.copy(grid = innerGrid, memo = scala.collection.mutable.Map.empty))
@@ -303,16 +307,15 @@ object Compiler {
     val asPoints = if (noSteps) innerPoints.limit(0) else innerPoints
     sq.at match {
       case Some(at) =>
-        val ts = pinnedTs(at, grid) - sq.offsetMs
-        val once = Selectors.range(asPoints, StepGrid(ts, ts, 1), sq.rangeMs).drop("step")
+        val pin = pinnedGrid(at, sq.offsetMs, grid)
+        val once = Selectors.range(asPoints, pin, sq.rangeMs).drop("step")
         MatrixVal(once.crossJoin(broadcast(grid.df(ctx.spark))), sq.rangeMs,
-          pinnedEndMs = Some(ts))
+          pinned = Some(pin))
       case None =>
         if (sq.offsetMs == 0L) {
           MatrixVal(Selectors.range(asPoints, grid, sq.rangeMs), sq.rangeMs)
         } else {
-          val shifted = StepGrid(grid.startMs - sq.offsetMs, grid.endMs - sq.offsetMs, grid.stepMs)
-          MatrixVal(Selectors.range(asPoints, shifted, sq.rangeMs)
+          MatrixVal(Selectors.range(asPoints, grid.shifted(sq.offsetMs), sq.rangeMs)
             .withColumn("step", col("step") + sq.offsetMs),
             sq.rangeMs, windowEndMsOffset = sq.offsetMs)
         }

@@ -92,34 +92,40 @@ object Engine {
       strictCollision: Boolean = true,
       sampleTally: Option[org.apache.spark.util.LongAccumulator] = None,
       seriesDict: => Option[DataFrame] = None): DataFrame = {
-    val ctx = EvalContext(spark, points, StepGrid(startMs, endMs, stepMs),
-      lookbackMs, defaultSubqueryStepMs, sampleTally = sampleTally,
-      strictCollision = strictCollision, seriesDict = dictFor(points, seriesDict))
-    val ast = Parser.parse(promql)
-    Compiler.eval(ast, ctx) match {
-      case vv: VectorVal =>
-        // collision checks run at each producing materialization inside the
-        // compile ([[Collision]]); the root result is already proven clean
-        val df1 = vv.df
-        val df = presentationOrder(ast) match {
-          case Some(ord) => df1.orderBy(ord: _*)
-          case None => df1
-        }
-        df.select(col("name"), col("labels"), col("step").as("t"), col("value"))
-      case ScalarVal(df, _) => df.select(col("step").as("t"), col("value"))
-      case m: MatrixVal =>
-        // a bare range selector (e.g. `m[5m]` as the whole query): all
-        // window samples, tagged with both step and sample time; the labels
-        // map is rebuilt from the canonical string the matrix carries (or
-        // joined back from the series dictionary on the slim path)
-        val df = m.dict match {
-          case Some(d) => m.df.join(d.select(col("sig"), col("name"), col("_lc")), Seq("sig"))
-          case None => m.df
-        }
-        df.select(col("name"), Labels.fromCanonical(col("_lc")).as("labels"),
-          col("step"), col("t"), col("value"))
-      case StringVal(s) =>
-        spark.range(1).select(LongParam.of(startMs).as("t"), lit(s).as("value"))
+    val dict = dictFor(points, seriesDict)
+    val key = PlanCache.Key(spark, spark.conf.getAll, promql, stepMs, endMs - startMs,
+      lookbackMs, defaultSubqueryStepMs, strictCollision, sampleTally.isDefined,
+      dict, points)
+    PlanCache.query(key, startMs, sampleTally) {
+      val grid = StepGrid(startMs, endMs, stepMs, LongParam.Shifts)
+      val ctx = EvalContext(spark, points, grid, lookbackMs, defaultSubqueryStepMs,
+        sampleTally = sampleTally, strictCollision = strictCollision, seriesDict = dict)
+      val ast = Parser.parse(promql)
+      Compiler.eval(ast, ctx) match {
+        case vv: VectorVal =>
+          // collision checks run at each producing materialization inside the
+          // compile ([[Collision]]); the root result is already proven clean
+          val df1 = vv.df
+          val df = presentationOrder(ast) match {
+            case Some(ord) => df1.orderBy(ord: _*)
+            case None => df1
+          }
+          df.select(col("name"), col("labels"), col("step").as("t"), col("value"))
+        case ScalarVal(df, _) => df.select(col("step").as("t"), col("value"))
+        case m: MatrixVal =>
+          // a bare range selector (e.g. `m[5m]` as the whole query): all
+          // window samples, tagged with both step and sample time; the labels
+          // map is rebuilt from the canonical string the matrix carries (or
+          // joined back from the series dictionary on the slim path)
+          val df = m.dict match {
+            case Some(d) => m.df.join(d.select(col("sig"), col("name"), col("_lc")), Seq("sig"))
+            case None => m.df
+          }
+          df.select(col("name"), Labels.fromCanonical(col("_lc")).as("labels"),
+            col("step"), col("t"), col("value"))
+        case StringVal(s) =>
+          spark.range(1).select(grid.param(grid.startMs).as("t"), lit(s).as("value"))
+      }
     }
   }
 

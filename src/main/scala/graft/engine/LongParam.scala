@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.LeafExpression
+import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -21,16 +21,26 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * The price: a filter on it is not a data-source filter, so it does not
   * reach parquet's row-group statistics. A scan that needs pruning by
   * time must carry its own literal bounds.
+  *
+  * `rebind` says how the value follows the query's times when a cached
+  * plan is reused at other times ([[PlanCache]]); `id` tells apart two
+  * parameters of one value, so the cache can see that every parameter a
+  * build made is still in its optimized plan. Canonicalization drops the
+  * id: plans that differ only in it compare equal, as they did without it.
   */
-final case class LongParam(value: Long) extends LeafExpression {
+final case class LongParam(value: Long, rebind: LongParam.Rebind = LongParam.Never,
+                           id: Long = LongParam.nextId()) extends LeafExpression {
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = false
   override def foldable: Boolean = false
   override def prettyName: String = "param"
   override def sql: String = s"param(${value}L)"
+  override def toString: String = s"param($value)"
 
   override def eval(input: InternalRow): Any = value
+
+  override lazy val canonicalized: Expression = copy(id = 0L)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("param", java.lang.Long.valueOf(value), "java.lang.Long")
@@ -41,6 +51,21 @@ final case class LongParam(value: Long) extends LeafExpression {
 }
 
 object LongParam {
+  /** How a parameter's value follows the query's times. */
+  sealed trait Rebind
+  /** Moves by as much as the query's start and end do: the times
+    * themselves, an `offset` from them, a window edge. */
+  case object Shifts extends Rebind
+  /** The same at every query time: a step count, an absolute `@`. */
+  case object Fixed extends Rebind
+  /** Follows the times some other way (a subquery's step-aligned grid),
+    * or is not a query time at all: a plan holding one is not reused. */
+  case object Never extends Rebind
+
+  private val ids = new java.util.concurrent.atomic.AtomicLong
+  private def nextId(): Long = ids.incrementAndGet()
+
   /** The parameter as a Column. */
-  def of(value: Long): Column = ColumnBridge.column(LongParam(value))
+  def of(value: Long, rebind: Rebind = Never): Column =
+    ColumnBridge.column(LongParam(value, rebind))
 }

@@ -9,15 +9,28 @@ import graft.model.Points
   * degenerate grid `start == end` (reference: instant = 1-step range eval,
   * vendor/.../promql/engine.go:686-742).
   */
-final case class StepGrid(startMs: Long, endMs: Long, stepMs: Long) {
+final case class StepGrid(startMs: Long, endMs: Long, stepMs: Long,
+                          times: LongParam.Rebind = LongParam.Never) {
   require(stepMs > 0, "step must be positive")
   require(endMs >= startMs, "end must be >= start")
   val nSteps: Long = (endMs - startMs) / stepMs + 1
 
+  /** A value derived from this grid's times, as a parameter that follows
+    * them when a cached plan is rebound ([[PlanCache]]). */
+  def param(value: Long): Column = LongParam.of(value, times)
+
+  /** This grid moved back by `offsetMs` (an `offset` modifier). */
+  def shifted(offsetMs: Long): StepGrid = copy(startMs - offsetMs, endMs - offsetMs)
+
+  /** The one-step grid of an `@` pin at `ts`: it follows the query's times
+    * for `@ start()`/`@ end()` and is fixed for an absolute timestamp. */
+  def pinned(ts: Long, absolute: Boolean): StepGrid =
+    StepGrid(ts, ts, 1, if (absolute) LongParam.Fixed else times)
+
   /** One-row-per-step DataFrame: (step: Long). The start is a
     * [[LongParam]]: the generated code is the same at every time. */
   def df(spark: SparkSession): DataFrame =
-    spark.range(nSteps).select((LongParam.of(startMs) + col("id") * stepMs).as("step"))
+    spark.range(nSteps).select((param(startMs) + col("id") * stepMs).as("step"))
 }
 
 /** PromQL selectors over the canonical points relation.
@@ -53,9 +66,9 @@ object Selectors {
     // compiles once whatever its times; only the step and the window (the
     // query's shape) stay literals
     val tMax = if (grid.nSteps == 1) grid.startMs else grid.endMs
-    val start = LongParam.of(grid.startMs)
-    val bounded = points.where(col("t") >= LongParam.of(grid.startMs - windowMs) &&
-      col("t") <= LongParam.of(tMax))
+    val start = grid.param(grid.startMs)
+    val bounded = points.where(col("t") >= grid.param(grid.startMs - windowMs) &&
+      col("t") <= grid.param(tMax))
     // the MaxSamples meter wraps the step column: it is evaluated exactly
     // once per (sample, window) row — the reference's per-step sample
     // accounting — inside the same codegen'd pipeline (no second scan),
@@ -78,7 +91,7 @@ object Selectors {
       val withK = bounded
         .withColumn("_kLo", greatest(lit(0L),
           floor((col("t") - start + grid.stepMs - 1) / grid.stepMs).cast("long")))
-        .withColumn("_kHi", least(LongParam.of(grid.nSteps - 1),
+        .withColumn("_kHi", least(LongParam.of(grid.nSteps - 1, LongParam.Fixed),
           floor((col("t") + windowMs - start) / grid.stepMs).cast("long")))
         .where(col("_kLo") <= col("_kHi"))
       withK

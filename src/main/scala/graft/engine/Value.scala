@@ -49,12 +49,13 @@ final case class VectorVal(raw: DataFrame, dict: Option[DataFrame] = None)
   * `step - windowEndMsOffset` in sample time (non-zero for `offset`
   * selectors, where the output step is shifted back to query time but the
   * samples — and the extrapolation window — live at selector time). `@`
-  * pins make the offset step-invariant via `pinnedEndMs`. */
+  * pins make the offset step-invariant via `pinned`, the one-step grid
+  * the pinned window ends on. */
 final case class MatrixVal(
     df: DataFrame,
     rangeMs: Long,
     windowEndMsOffset: Long = 0L,
-    pinnedEndMs: Option[Long] = None,
+    pinned: Option[StepGrid] = None,
     /** When set (store-backed reads with a series dictionary), `df`
       * carries ONLY (sig, step, t, value) — no name/_lc strings — and
       * consumers join (name, _lc) back from this dictionary on their
@@ -72,8 +73,8 @@ final case class MatrixVal(
       * the cheaper order for them. */
     slim: Option[SlimRange] = None) extends Value {
   /** Column expression for the true window end (sample-time ms). */
-  def windowEnd: org.apache.spark.sql.Column = pinnedEndMs match {
-    case Some(ts) => LongParam.of(ts)
+  def windowEnd: org.apache.spark.sql.Column = pinned match {
+    case Some(g) => g.param(g.startMs)
     case None => org.apache.spark.sql.functions.col("step") - windowEndMsOffset
   }
 }

@@ -360,9 +360,11 @@ object PointsStore {
     def dictRead(files: Seq[String]) =
       spark.read.schema(sampleFooterSchema(spark, files.head)(
         spark.read.parquet(files.head).schema)).parquet(files: _*)
+    // through the relation cache: its files are under `_dict`, so they
+    // never share a key with a day's read
     if (live.isEmpty) None
-    else if (live.length == 1) Some(dictRead(live))
-    else Some(dedupDict(dictRead(live)))
+    else Some(cachedRelation(RelationKey(spark, live, None, None, None, guard = false))(
+      if (live.length == 1) dictRead(live) else dedupDict(dictRead(live))))
   }
 
   /** Read back, pruning day partitions to [startMs-slackMs, endMs]. The
@@ -379,20 +381,25 @@ object PointsStore {
     * one, both complete, never half of each. The date predicates are still
     * applied on the partition column, so the plan shows the same
     * PartitionFilters a path-based read had (and the driver-side day
-    * pruning already restricted the listing). Reads of an unchanged live
-    * file set share one relation ([[queryRelation]]). */
+    * pruning already restricted the listing). The bounds are whole UTC
+    * days, the unit the store partitions by, so reads of an unchanged live
+    * file set over the same days return the same DataFrame
+    * ([[cachedRelation]]). */
   def read(spark: SparkSession, path: String,
            startMs: Long, endMs: Long, slackMs: Long = 0L,
            lww: Boolean = true): DataFrame = {
-    val conds = Seq(
-      if (startMs == Long.MinValue) None
-      else Some(col("date") >= to_date(timestamp_millis(lit(startMs - slackMs)))),
-      if (endMs == Long.MaxValue) None
-      else Some(col("date") <= to_date(timestamp_millis(lit(endMs))))
-    ).flatten
-    val (base, mayDuplicate) = readLiveInfo(spark, path, startMs, endMs, slackMs)
-    val bounded = conds.foldLeft(base)(_.where(_))
-    (if (lww && mayDuplicate) lwwGuard(bounded) else bounded).drop("date")
+    val lo = if (startMs == Long.MinValue) None else Some(dayOf(startMs - slackMs))
+    val hi = if (endMs == Long.MaxValue) None else Some(dayOf(endMs))
+    readLiveInfo(spark, path, startMs, endMs, slackMs) match {
+      case Right((files, mayDuplicate)) =>
+        val guard = lww && mayDuplicate
+        cachedRelation(RelationKey(spark, files, Some(path), lo, hi, guard)) {
+          val bounded = Seq(lo.map(col("date") >= lit(_)), hi.map(col("date") <= lit(_)))
+            .flatten.foldLeft(readPointFiles(spark, files, Some(path)))(_.where(_))
+          (if (guard) lwwGuard(bounded) else bounded).drop("date")
+        }
+      case Left(empty) => empty.drop("date")
+    }
   }
 
   /** Read-time last-write-wins guard: keep the newest-`_seq` row per
@@ -502,37 +509,40 @@ object PointsStore {
     normalizeStale(reader.schema(schema).parquet(files: _*))
   }
 
-  /** Query-path relations, one per (session, live file set, basePath).
-    * Building one samples a footer and lists every file (the per-query
-    * `sources.read_ms`), but live files are immutable once a commit lists
-    * them, so the same set always reads the same rows: an append, a
-    * compaction or a delete changes the set, and with it the key. Only
-    * the relation is reused, never a result, and nothing is keyed by
-    * time. A small fixed LRU: a server reads a handful of day windows. */
+  /** Query-path relations: a bounded read ([[read]]) per (session, live
+    * file set, basePath, first day, last day, LWW guard), and the series
+    * dictionary ([[readDict]]) per (session, live `_dict` files). Building
+    * one samples a footer, lists every file (the per-query
+    * `sources.read_ms`) and analyzes the bounds, but live files are
+    * immutable once a commit lists them, so the same key always reads the
+    * same rows: an append, a compaction or a delete changes the set, and
+    * with it the key. A repeated read returns the same DataFrame, which
+    * the plan cache keys on ([[graft.engine.PlanCache]]). Only the relation
+    * is reused, never a result, and nothing finer than a day is keyed. A
+    * small fixed LRU: a server reads a handful of day windows. */
+  private final case class RelationKey(spark: SparkSession, files: Seq[String],
+      basePath: Option[String], lo: Option[java.time.LocalDate],
+      hi: Option[java.time.LocalDate], guard: Boolean)
   private val RelationCacheSize = 16
-  private val relationCache = new java.util.LinkedHashMap[
-    (SparkSession, Seq[String], Option[String]), DataFrame](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        (SparkSession, Seq[String], Option[String]), DataFrame]): Boolean =
+  private val relationCache = new java.util.LinkedHashMap[RelationKey, DataFrame](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[RelationKey, DataFrame]): Boolean =
       size > RelationCacheSize
   }
   private val relationHits = new java.util.concurrent.atomic.LongAdder
   private val relationMisses = new java.util.concurrent.atomic.LongAdder
 
-  /** [[readPointFiles]] through the relation cache. Compaction and delete
-    * rewrites call [[readPointFiles]] directly: they read each set once. */
-  private def queryRelation(spark: SparkSession, files: Seq[String],
-                            basePath: Option[String]): DataFrame = {
-    val key = (spark, files, basePath)
+  /** The relation of `key`, built by `build` when the cache lacks it.
+    * Compaction and delete rewrites read their files directly: they read
+    * each set once. */
+  private def cachedRelation(key: RelationKey)(build: => DataFrame): DataFrame =
     relationCache.synchronized(Option(relationCache.get(key))) match {
       case Some(df) => relationHits.increment(); df
       case None =>
         relationMisses.increment()
-        val df = readPointFiles(spark, files, basePath)
+        val df = build
         relationCache.synchronized(relationCache.put(key, df))
         df
     }
-  }
 
   // ---- commit-gated file visibility --------------------------------------
   //
@@ -700,13 +710,14 @@ object PointsStore {
     fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
 
+  private def dayOf(ms: Long): java.time.LocalDate =
+    java.time.Instant.ofEpochMilli(ms).atZone(java.time.ZoneOffset.UTC).toLocalDate
+
   /** The day dirs whose UTC day intersects [loMs, hiMs]; `Long.MinValue` /
     * `Long.MaxValue` leave that side open. */
   private def daysWithin(fs: org.apache.hadoop.fs.FileSystem,
                          root: org.apache.hadoop.fs.Path,
                          loMs: Long, hiMs: Long): Seq[org.apache.hadoop.fs.FileStatus] = {
-    def dayOf(ms: Long): java.time.LocalDate =
-      java.time.Instant.ofEpochMilli(ms).atZone(java.time.ZoneOffset.UTC).toLocalDate
     val lo = if (loMs == Long.MinValue) None else Some(dayOf(loMs))
     val hi = if (hiMs == Long.MaxValue) None else Some(dayOf(hiMs))
     dayDirs(fs, root).filter { s =>
@@ -746,10 +757,11 @@ object PointsStore {
       } finally pool.shutdown()
     }
 
-  /** DataFrame over the commit-visible files of the days intersecting
-    * [startMs-slackMs, endMs] — `basePath` keeps the `date` partition
-    * column derivable so callers' date predicates still show as
-    * PartitionFilters — plus the duplicate-possibility signal for the
+  /** The commit-visible files of the days intersecting
+    * [startMs-slackMs, endMs] (read them with `basePath` = `path`, which
+    * keeps the `date` partition column derivable so callers' date
+    * predicates still show as PartitionFilters), or, when none is live, an
+    * empty relation with the store's schema; plus the duplicate-possibility signal for the
     * read-time LWW guard: a day's live set can hold (sig, t) duplicates only when it
     * mixes at least one plain append file with any other file — all live
     * `compacted-` files belong to ONE generation (the tip commit +lists
@@ -764,10 +776,10 @@ object PointsStore {
     * equality into the scan. */
   private def readLiveInfo(spark: SparkSession, path: String,
                            startMs: Long, endMs: Long, slackMs: Long)
-      : (DataFrame, Boolean) = {
+      : Either[DataFrame, (Seq[String], Boolean)] = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return (spark.read.parquet(path), false) // preserve error
+    if (!fs.exists(root)) return Left(spark.read.parquet(path)) // preserve error
     val days = daysWithin(fs, root,
       if (startMs == Long.MinValue) startMs else startMs - slackMs, endMs)
     val perDay = days.map(d => livePaths(fs, d.getPath))
@@ -785,7 +797,7 @@ object PointsStore {
       val anyLive = allDays.iterator.map(d => livePaths(fs, d.getPath))
         .find(_.nonEmpty).getOrElse(Nil)
       if (anyLive.nonEmpty)
-        (readPointFiles(spark, anyLive, Some(path)).where(lit(false)), false)
+        Left(readPointFiles(spark, anyLive, Some(path)).where(lit(false)))
       else {
         // no live file ANYWHERE (all expired, or only unpublished
         // rewrite outputs): derive the schema from any parquet file
@@ -797,7 +809,7 @@ object PointsStore {
           .find(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
           .map(_.getPath.toString).toSeq
         if (anyFile.nonEmpty)
-          (readPointFiles(spark, anyFile, Some(path)).where(lit(false)), false)
+          Left(readPointFiles(spark, anyFile, Some(path)).where(lit(false)))
         else {
           // a never-written (or day-dirs-deleted) store: fall back to a
           // snapshot day for the schema when one exists, else preserve
@@ -812,15 +824,15 @@ object PointsStore {
             .headOption
           snapDay match {
             case Some((snapRoot, day)) =>
-              (normalizeStale(spark.read.option("basePath", snapRoot).parquet(day))
-                .where(lit(false)), false)
+              Left(normalizeStale(spark.read.option("basePath", snapRoot).parquet(day))
+                .where(lit(false)))
             case None =>
-              (normalizeStale(spark.read.parquet(path)).where(lit(false)), false)
+              Left(normalizeStale(spark.read.parquet(path)).where(lit(false)))
           }
         }
       }
     }
-    else (queryRelation(spark, files, Some(path)), mayDuplicate)
+    else Right((files, mayDuplicate))
   }
 
   /** Hot-label flattening: selected label keys are ALSO stored as physical
@@ -841,7 +853,10 @@ object PointsStore {
                     startMs: Long, endMs: Long,
                     hotFilters: Map[String, String],
                     slackMs: Long = 0L): DataFrame = {
-    val (base0, mayDuplicate) = readLiveInfo(spark, path, startMs, endMs, slackMs)
+    val (base0, mayDuplicate) = readLiveInfo(spark, path, startMs, endMs, slackMs) match {
+      case Right((files, d)) => (readPointFiles(spark, files, Some(path)), d)
+      case Left(empty) => (empty, false)
+    }
     val base = base0
       .where(col("date") >= to_date(timestamp_millis(lit(startMs - slackMs))) &&
         col("date") <= to_date(timestamp_millis(lit(endMs))))

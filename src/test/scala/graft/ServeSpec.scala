@@ -88,6 +88,15 @@ class ServeSpec extends AnyFunSuite with SharedSpark {
       assert(counterOf("graft_codegen_compiles_total") >= 1.0)
       assert(counterOf("graft_store_relation_reuse_misses_total") >= 1.0)
       assert(counterOf("graft_store_relation_reuse_hits_total") >= 1.0)
+      // plan cache: the warmed shape at a fresh time reuses its plan
+      def planCache(): (Double, Double) = {
+        val m = get(handle.port, "/metrics").linesIterator.toSeq
+        def v(name: String) = m.find(_.startsWith(name + " ")).map(_.split(" ")(1).toDouble).get
+        (v("graft_plan_cache_hits_total"), v("graft_plan_cache_misses_total"))
+      }
+      val (hits0, misses0) = planCache()
+      assert(get(handle.port, "/api/v1/query?query=up&time=61.5").contains("\"value\":[61.5,\"1\"]"))
+      assert(planCache() == ((hits0 + 1, misses0)))
 
       // DOGFOOD: the engine's own Scrape source scrapes the engine's own
       // /metrics (httpFetch hits $target/metrics), retains HELP/TYPE in a
@@ -117,6 +126,15 @@ class ServeSpec extends AnyFunSuite with SharedSpark {
         assert(md.contains("\"graft_query_duration_seconds\":[{\"type\":\"histogram\""))
       } finally metaApi.stop()
     } finally { handle.stop(); graft.engine.Guards.disableQueryLog() }
+  }
+
+  test("serve: a failed tick names the exception and its root cause, even without a message") {
+    val e = new IllegalStateException(null: String,
+      new RuntimeException("wrapped", new java.io.IOException("disk gone")))
+    assert(Serve.failureLine(e) ==
+      "java.lang.IllegalStateException; root cause: java.io.IOException: disk gone")
+    assert(Serve.failureLine(new java.io.IOException("no cause")) ==
+      "java.io.IOException: no cause")
   }
 
   test("serve: in-process scraper feeds the store; ?stats= reports query statistics") {

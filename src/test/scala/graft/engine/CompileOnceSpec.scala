@@ -122,6 +122,9 @@ class CompileOnceSpec extends AnyFunSuite with SharedSpark {
       }
       // the check above is not vacuous: most fresh runs repeat a plan
       assert(runs.map(_._2).distinct.length <= 2, runs.map(_._2).distinct.mkString("\n"))
+      // topk's join has its build side pinned: one plan at every time
+      if (name == "topk")
+        assert(runs.map(_._2).distinct.length == 1, runs.map(_._2).distinct.mkString("\n"))
       // the parameterized plan answers as the in-memory relation does
       for (t <- times) {
         val (rs, want) = (got(t), answer(Engine.rangeQuery(spark, mem, q, t - range, t, step)))
@@ -134,6 +137,20 @@ class CompileOnceSpec extends AnyFunSuite with SharedSpark {
         }
       }
     }
+
+  test("topk pins its winners as the broadcast side only while their count is bounded") {
+    def broadcastHinted(q: String, range: Long, step: Long): Boolean =
+      served(dir, q, warmAt, range, step).queryExecution.optimizedPlan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j.hint
+      }.exists(h => (h.leftHint ++ h.rightHint)
+        .exists(_.strategy.contains(org.apache.spark.sql.catalyst.plans.logical.BROADCAST)))
+    assert(broadcastHinted("topk(3, m)", 0L, 1000L))
+    assert(broadcastHinted("bottomk(2, m)", 3600000L, M))
+    // two days at a 1 s step: 3 × 172,801 winners, left to AQE's sizing
+    assert(!broadcastHinted("topk(3, m)", 2 * 24 * 60 * M, 1000L))
+    // one winner set per group: the group count is unknown at build
+    assert(!broadcastHinted("topk(3, m) by (instance_id)", 0L, 1000L))
+  }
 
   test("the server's working set stays compiled: every shape and an append, interleaved") {
     // all the shapes above and an append, round after round at fresh
