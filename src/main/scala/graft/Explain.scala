@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.FileIndex
+import org.apache.spark.sql.catalyst.plans.logical.Repartition
+import org.apache.spark.sql.execution.datasources.{FileIndex, LogicalRelation}
 
 import graft.engine.Engine
 
@@ -46,11 +47,11 @@ object Explain {
     spark.stop()
   }
 
-  /** The selector plan a store-backed query took, read off its own scans
-    * (slim when it reads the `_dict` sidecar), beside the rule's choice
-    * for the bytes of the store point files it touches. None when the
-    * query reads no store. */
-  private def storePlan(df: DataFrame): Option[String] = {
+  /** The plan a store-backed query took, read off its own plan (slim when
+    * it reads the `_dict` sidecar, single when a scan is coalesced to one
+    * partition), beside the rule's choice for the bytes of the store point
+    * files it touches at one step. None when the query reads no store. */
+  private[graft] def storePlan(df: DataFrame): Option[String] = {
     val indexes = Engine.fileIndexes(df.queryExecution.analyzed)
     def inDir(pred: String => Boolean)(i: FileIndex) =
       i.rootPaths.exists(p => p.getParent != null && pred(p.getParent.getName))
@@ -59,7 +60,13 @@ object Explain {
     else {
       val rule = Engine.PlanChoice(points.map(_.sizeInBytes).sum, Engine.planThreshold(df.sparkSession))
       val slim = indexes.exists(inDir(_ == "_dict"))
-      Some(s"store plan: ${if (slim) "slim" else "full"}; rule: $rule" +
+      // the optimizer pushes filters and projections below the coalesce
+      val single = df.queryExecution.optimizedPlan.exists {
+        case Repartition(1, false, c) => c.collectLeaves().exists(_.isInstanceOf[LogicalRelation])
+        case _ => false
+      }
+      val taken = if (slim) "slim" else if (single) "single" else "partitioned"
+      Some(s"store plan: $taken; rule at one step: $rule" +
         (if (slim != rule.slim) " (this query pins its plan)" else ""))
     }
   }

@@ -210,6 +210,16 @@ final class HttpApi(spark: SparkSession, points: DataFrame,
   Telemetry.counterSupplier("graft_plan_cache_misses_total",
     "PromQL queries built and optimized afresh")(() =>
     graft.engine.PlanCache.misses.toDouble)
+  // the plan each query took (Engine.PlanChoice): a dashboard over a small
+  // store runs single-partition; a long grid or an in-memory relation
+  // stays partitioned; a large read goes slim
+  for ((plan, help) <- Seq(
+      "single" -> "one-partition read: no shuffle, one job",
+      "partitioned" -> "label-carrying plan, shuffled per aggregation",
+      "slim" -> "series-dictionary plan over a large read"))
+    Telemetry.counterSupplier(s"graft_plan_${plan}_total",
+      s"PromQL queries on the $plan plan ($help)")(() =>
+      graft.engine.Engine.planCount(plan).toDouble)
 
   /** Per-request `timeout=` (seconds float or Go duration), CAPPED at
     * the server's configured timeout — the vendored API's contract

@@ -199,13 +199,20 @@ object Aggregations {
     // build (a literal k, one group, few steps) they are pinned as the
     // broadcast side, so the join's plan no longer follows the runtime
     // sizes of its inputs, which flipped the side between two evaluation
-    // times; otherwise (groups or steps unbounded) AQE sizes the join
+    // times; otherwise (groups or steps unbounded) AQE sizes the join. On
+    // the single plan both sides are one partition already: the winners
+    // are pinned as a shuffled hash join's build side, which needs no
+    // exchange, where a broadcast would cost a job
     val bounded = !ae.without && ae.grouping.isEmpty && (p match {
       case ScalarVal(_, Some(k)) => k * ctx.grid.nSteps <= MaxBroadcastWinners
       case _ => false
     })
+    val pinned =
+      if (ctx.singlePartition) winners.hint("shuffle_hash")
+      else if (bounded) broadcast(winners)
+      else winners
     val out = vRows
-      .join(if (bounded) broadcast(winners) else winners,
+      .join(pinned,
         col("sig") === col("_wsig") && col("step") === col("_wstep"))
       .orderBy(col("step"), col("_gsig"), col("_rank"))
       .drop("_gsig", "_rank", "_wsig", "_wstep")

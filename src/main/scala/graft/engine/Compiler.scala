@@ -274,12 +274,17 @@ object Compiler {
     }
   }
 
-  /** Subquery `expr[range:step]`: evaluate the inner expr on its own finer
-    * grid (absolute-aligned, reference engine.go:1313-1344), then treat the
-    * inner result as a points relation feeding the outer range window. */
-  def evalSubquery(sq: SubqueryExpr, ctx: EvalContext): MatrixVal = {
-    val innerStep = sq.stepMs.getOrElse(ctx.defaultSubqueryStepMs)
-    val grid = ctx.grid
+  /** The grid a subquery's inner expression evaluates on, when the
+    * subquery itself is evaluated on `grid`, and whether no inner step
+    * falls in its range. The inner steps sit at absolute multiples of the
+    * inner step (reference engine.go:1327-1331), so the inner grid does not
+    * move with the query's times: its parameters are never rebound. The
+    * aligned start can pass the outer end: the subquery is then empty (the
+    * reference's step loop runs zero times), and the inner expression is
+    * built on its one step. */
+  def subqueryGrid(sq: SubqueryExpr, grid: StepGrid,
+                   defaultSubqueryStepMs: Long): (StepGrid, Boolean) = {
+    val innerStep = sq.stepMs.getOrElse(defaultSubqueryStepMs)
     val (outerStart, outerEnd) = sq.at match {
       case Some(at) =>
         val ts = pinnedTs(at, grid) - sq.offsetMs
@@ -287,17 +292,18 @@ object Compiler {
       case None => (grid.startMs - sq.offsetMs, grid.endMs - sq.offsetMs)
     }
     var innerStart = outerStart - sq.rangeMs
-    // align to absolute multiples of the inner step (engine.go:1327-1331)
     if (innerStart % innerStep != 0) {
       innerStart = innerStart - Math.floorMod(innerStart, innerStep) + innerStep
     }
-    // the aligned start can pass the outer end: no inner step falls in
-    // the range, and the subquery is empty (the reference's step loop runs
-    // zero times); the inner expression is then built on its one step
-    val noSteps = innerStart > outerEnd
-    // aligned to the inner step, the inner grid does not move with the
-    // query's times: its parameters are never rebound
-    val innerGrid = StepGrid(innerStart, math.max(innerStart, outerEnd), innerStep)
+    (StepGrid(innerStart, math.max(innerStart, outerEnd), innerStep), innerStart > outerEnd)
+  }
+
+  /** Subquery `expr[range:step]`: evaluate the inner expr on its own finer
+    * grid (absolute-aligned, reference engine.go:1313-1344), then treat the
+    * inner result as a points relation feeding the outer range window. */
+  def evalSubquery(sq: SubqueryExpr, ctx: EvalContext): MatrixVal = {
+    val grid = ctx.grid
+    val (innerGrid, noSteps) = subqueryGrid(sq, grid, ctx.defaultSubqueryStepMs)
     val inner = evalVector(sq.expr,
       ctx.copy(grid = innerGrid, memo = scala.collection.mutable.Map.empty))
     // inner vector -> points: the sample time is the inner step

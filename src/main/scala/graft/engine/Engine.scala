@@ -1,11 +1,12 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Repartition}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.promql.Parser
+import graft.promql.{AggregateExpr, BinaryExpr, Call, Expr, ParenExpr, Parser, SubqueryExpr, UnaryExpr}
 
 /** Public query API: PromQL text + points relation + time bounds →
   * DataFrame. Mirrors the reference's two query entry points
@@ -26,25 +27,59 @@ object Engine {
     * price for the fixed cost of opening one more file. */
   private val PlanThresholdConf = "spark.sql.files.openCostInBytes"
 
-  /** Which selector plan a store read gets, and the numbers behind it.
-    * The series-dictionary ("slim") plan shuffles 8-byte sigs and joins
-    * the labels back at result size, but its dictionary scans, shuffles
-    * and broadcasts cost jobs on every query; the label-carrying ("full")
-    * plan reads the canonical label string with the points and runs fewer
-    * (3 jobs against 8 for a rate aggregation over a 2 MB read). The slim
-    * plan wins only once the read is large, so it is taken when the
-    * touched bytes exceed the threshold. */
-  final case class PlanChoice(touchedBytes: Long, thresholdBytes: Long) {
+  /** Which plan a query over `points` gets, and the numbers behind it.
+    * There are three:
+    *  - slim (series dictionary): the selectors shuffle 8-byte sigs and
+    *    join the labels back at result size, but the dictionary's scans,
+    *    shuffles and broadcasts cost jobs on every query, so it is taken
+    *    only once the read is large: when the touched bytes exceed the
+    *    threshold.
+    *  - single: a store read of at most [[SingleMaxBytes]], whose largest
+    *    grid ([[gridSteps]]: a subquery's inner grid counts) has at most
+    *    `stepBound` steps, is one task's worth of data. Its file scan
+    *    is coalesced to one partition ([[singlePartition]]), which
+    *    satisfies every distribution an aggregation, window, join or sort
+    *    asks for, so the plan holds no shuffle, adaptive execution adds no
+    *    stages, and a dashboard query runs as one job.
+    *  - partitioned (labels): everything else, the label-carrying plan
+    *    with a shuffle before each aggregation. In-memory relations touch
+    *    no files (0 bytes) and keep it, and so does a small read over a
+    *    long grid, whose kernel work grows with the steps although the
+    *    bytes do not (a day at 1 m steps touches the same day file as the
+    *    last hour, and explodes ~24× the rows).
+    */
+  final case class PlanChoice(touchedBytes: Long, thresholdBytes: Long,
+                              steps: Long = 1L, stepBound: Long = SingleMaxSteps) {
     def slim: Boolean = touchedBytes > thresholdBytes
+    def single: Boolean =
+      !slim && touchedBytes > 0 && touchedBytes <= SingleMaxBytes && steps <= stepBound
+    def name: String = if (slim) "slim" else if (single) "single" else "partitioned"
     override def toString: String =
-      s"${if (slim) "slim (series dictionary)" else "full (labels)"} plan: " +
-        s"$touchedBytes bytes touched, threshold $thresholdBytes bytes ($PlanThresholdConf)"
+      s"$name plan: $touchedBytes bytes touched, threshold $thresholdBytes bytes " +
+        s"($PlanThresholdConf), single-plan bound $SingleMaxBytes bytes; " +
+        s"$steps steps, single-plan bound $stepBound"
   }
 
-  /** The plan choice for a query over `points`, from the live files of
-    * the (already pruned) read. */
-  def planChoice(points: DataFrame): PlanChoice =
-    PlanChoice(touchedBytes(points), planThreshold(points.sparkSession))
+  /** The single plan's bounds: the most bytes one task scans, and the most
+    * grid steps it evaluates. A file is one scan task in the partitioned
+    * plan, so over several files that plan scans in parallel, and the
+    * single plan's one task loses once the scan or the explode outweighs
+    * the jobs it saves. Measured in process on a compacted 32-series store
+    * at 1 m samples (one ~0.4 MB file a day), 4 cores, median of 9 runs,
+    * partitioned → single: the last-hour dashboard shapes 138→99,
+    * 157→104, 180→108 and 313→164 ms; `rate` at 1 m over 12 h (one file,
+    * 721 steps) 300→236 ms but over 24 h (two files, 1441 steps)
+    * 362→423 ms; an instant `count_over_time` over a week (seven files)
+    * 148→392 ms. */
+  val SingleMaxBytes: Long = 1L << 20
+  val SingleMaxSteps: Long = 720L
+
+  private val stepBound = ThreadLocal.withInitial[Long](() => SingleMaxSteps)
+
+  /** The plan choice for a query over `points` on grids of up to `steps` steps,
+    * from the live files of the (already pruned) read. */
+  def planChoice(points: DataFrame, steps: Long = 1L): PlanChoice =
+    PlanChoice(touchedBytes(points), planThreshold(points.sparkSession), steps, stepBound.get)
 
   /** The threshold in bytes, from the session's conf. */
   def planThreshold(spark: SparkSession): Long =
@@ -80,6 +115,48 @@ object Engine {
     try f finally spark.conf.set(PlanThresholdConf, prev)
   }
 
+  /** Evaluate `f` with the single plan's step bound at `steps` for the
+    * queries this thread builds: 0 pins small store reads to the
+    * partitioned plan, for checks of that plan on test-sized stores. */
+  private[graft] def withSingleStepBound[A](steps: Long)(f: => A): A = {
+    val prev = stepBound.get
+    stepBound.set(steps)
+    try f finally stepBound.set(prev)
+  }
+
+  /** `points` with every file scan coalesced to one partition, directly
+    * above the scan: below the store's LWW guard window and the day
+    * filters, which the optimizer still pushes into the scan. Built only
+    * when a plan is: the plan cache keys the original `points`. */
+  private def singlePartition(points: DataFrame): DataFrame =
+    PlanBridge.ofAnalyzed(points.sparkSession, points.queryExecution.analyzed.transformUp {
+      case r: LogicalRelation if r.relation.isInstanceOf[HadoopFsRelation] =>
+        Repartition(1, shuffle = false, r)
+    })
+
+  /** The most steps a grid of `ast` evaluated on `grid` has: the query's
+    * own, or a subquery's inner grid, which an instant query's single step
+    * can hide (`max_over_time(rate(m[5m])[1d:1m])` evaluates 1441). */
+  private[engine] def gridSteps(ast: Expr, grid: StepGrid, defaultSubqueryStepMs: Long): Long = {
+    def steps(e: Expr, g: StepGrid): Long = e match {
+      case sq: SubqueryExpr =>
+        math.max(g.nSteps, steps(sq.expr, Compiler.subqueryGrid(sq, g, defaultSubqueryStepMs)._1))
+      case ParenExpr(x) => steps(x, g)
+      case UnaryExpr(_, x) => steps(x, g)
+      case AggregateExpr(_, x, p, _, _) => (x +: p.toSeq).map(steps(_, g)).max
+      case BinaryExpr(_, l, r, _, _) => math.max(steps(l, g), steps(r, g))
+      case Call(_, args) => (g.nSteps +: args.map(steps(_, g))).max
+      case _ => g.nSteps
+    }
+    steps(ast, grid)
+  }
+
+  private val planCounts = Seq("single", "partitioned", "slim")
+    .map(_ -> new java.util.concurrent.atomic.LongAdder).toMap
+
+  /** Queries run per plan taken ("single", "partitioned", "slim"). */
+  def planCount(name: String): Long = planCounts(name).sum
+
   def rangeQuery(
       spark: SparkSession,
       points: DataFrame,
@@ -92,15 +169,20 @@ object Engine {
       strictCollision: Boolean = true,
       sampleTally: Option[org.apache.spark.util.LongAccumulator] = None,
       seriesDict: => Option[DataFrame] = None): DataFrame = {
-    val dict = dictFor(points, seriesDict)
+    val grid = StepGrid(startMs, endMs, stepMs, LongParam.Shifts)
+    val ast = Parser.parse(promql)
+    val choice = planChoice(points, gridSteps(ast, grid, defaultSubqueryStepMs))
+    val dict = if (choice.slim) seriesDict else None
+    // a slim choice without a dictionary runs the partitioned plan
+    planCounts(if (dict.nonEmpty) "slim" else if (choice.single) "single" else "partitioned")
+      .increment()
     val key = PlanCache.Key(spark, spark.conf.getAll, promql, stepMs, endMs - startMs,
       lookbackMs, defaultSubqueryStepMs, strictCollision, sampleTally.isDefined,
-      dict, points)
+      choice.single, dict, points)
     PlanCache.query(key, startMs, sampleTally) {
-      val grid = StepGrid(startMs, endMs, stepMs, LongParam.Shifts)
-      val ctx = EvalContext(spark, points, grid, lookbackMs, defaultSubqueryStepMs,
-        sampleTally = sampleTally, strictCollision = strictCollision, seriesDict = dict)
-      val ast = Parser.parse(promql)
+      val ctx = EvalContext(spark, if (choice.single) singlePartition(points) else points,
+        grid, lookbackMs, defaultSubqueryStepMs, sampleTally = sampleTally,
+        strictCollision = strictCollision, seriesDict = dict, singlePartition = choice.single)
       Compiler.eval(ast, ctx) match {
         case vv: VectorVal =>
           // collision checks run at each producing materialization inside the

@@ -139,25 +139,10 @@ object Guards {
       case vs: VectorSelector => weight(vs, lookbackMs, g)
       case MatrixSelector(vs, rangeMs) => weight(vs, rangeMs, g)
       case sq: SubqueryExpr =>
-        // mirror Compiler.evalSubquery: the inner expr evaluates over its
-        // own absolute-aligned finer grid; only the inner selectors carry
-        // the meter (the outer re-window over the inner RESULT does not)
-        val innerStep = sq.stepMs.getOrElse(defaultSubqueryStepMs)
-        val (outerStart, outerEnd) = sq.at match {
-          case Some(at) =>
-            val ts = (at match {
-              case AtModifier.Start => g.startMs
-              case AtModifier.End => g.endMs
-              case AtModifier.At(t) => t
-            }) - sq.offsetMs
-            (ts, ts)
-          case None => (g.startMs - sq.offsetMs, g.endMs - sq.offsetMs)
-        }
-        var innerStart = outerStart - sq.rangeMs
-        if (innerStart % innerStep != 0) {
-          innerStart = innerStart - Math.floorMod(innerStart, innerStep) + innerStep
-        }
-        walk(sq.expr, StepGrid(innerStart, math.max(innerStart, outerEnd), innerStep))
+        // the inner expr evaluates over its own absolute-aligned finer
+        // grid; only the inner selectors carry the meter (the outer
+        // re-window over the inner RESULT does not)
+        walk(sq.expr, Compiler.subqueryGrid(sq, g, defaultSubqueryStepMs)._1)
       case ParenExpr(inner) => walk(inner, g)
       case UnaryExpr(_, inner) => walk(inner, g)
       case AggregateExpr(_, inner, param, _, _) =>
@@ -201,22 +186,7 @@ object Guards {
       case vs: VectorSelector => add(vs, lookbackMs, g)
       case MatrixSelector(vs, rangeMs) => add(vs, rangeMs, g)
       case sq: SubqueryExpr =>
-        val innerStep = sq.stepMs.getOrElse(defaultSubqueryStepMs)
-        val (outerStart, outerEnd) = sq.at match {
-          case Some(at) =>
-            val ts = (at match {
-              case AtModifier.Start => g.startMs
-              case AtModifier.End => g.endMs
-              case AtModifier.At(t) => t
-            }) - sq.offsetMs
-            (ts, ts)
-          case None => (g.startMs - sq.offsetMs, g.endMs - sq.offsetMs)
-        }
-        var innerStart = outerStart - sq.rangeMs
-        if (innerStart % innerStep != 0) {
-          innerStart = innerStart - Math.floorMod(innerStart, innerStep) + innerStep
-        }
-        walk(sq.expr, StepGrid(innerStart, math.max(innerStart, outerEnd), innerStep))
+        walk(sq.expr, Compiler.subqueryGrid(sq, g, defaultSubqueryStepMs)._1)
       case ParenExpr(x) => walk(x, g)
       case UnaryExpr(_, x) => walk(x, g)
       case AggregateExpr(_, x, p, _, _) => walk(x, g); p.foreach(walk(_, g))

@@ -32,7 +32,10 @@ private[graft] object PlanCache {
     * session's set confs are in it because the optimizer reads them. The
     * points and the slim plan's dictionary compare by reference: the store
     * returns one DataFrame per live file set (`PointsStore.read`,
-    * `readDict`), so a repeat keys the same and a write does not. */
+    * `readDict`), so a repeat keys the same and a write does not. `single`
+    * is the single-partition plan ([[Engine.PlanChoice]]): it is built over
+    * a coalesced copy of `points`, and its plans run without adaptive
+    * execution's wrapper when they hold no exchange. */
   final case class Key(
       spark: SparkSession,
       conf: Map[String, String],
@@ -43,6 +46,7 @@ private[graft] object PlanCache {
       subqueryStepMs: Long,
       strictCollision: Boolean,
       tallied: Boolean,
+      single: Boolean,
       dict: Option[DataFrame],
       points: DataFrame)
 
@@ -77,18 +81,26 @@ private[graft] object PlanCache {
     * the cached plan rebound, or else `build`, kept when it can be. */
   def query(key: Key, startMs: Long, tally: Option[LongAccumulator])(
       build: => DataFrame): DataFrame =
-    if (bypassed.get) build
+    if (bypassed.get) run(key, build)
     else cache.synchronized(Option(cache.get(key))) match {
       case Some(e) =>
         hitCount.increment()
-        PlanBridge.ofOptimized(key.spark, rebind(e, startMs, tally))
+        PlanBridge.ofOptimized(key.spark, rebind(e, startMs, tally), adaptive = !key.single)
       case None =>
         missCount.increment()
         val df = build
         reusable(df).foreach(p =>
           cache.synchronized(cache.put(key, Entry(p, startMs, tally))))
-        df
+        run(key, df)
     }
+
+  /** A fresh build as it runs: a single-partition plan from its optimized
+    * plan, like a hit, so both run the same way (a plan that fails to
+    * optimize is left to fail when it runs, as any other). */
+  private def run(key: Key, df: DataFrame): DataFrame =
+    if (!key.single) df
+    else scala.util.Try(df.queryExecution.optimizedPlan).toOption
+      .fold(df)(PlanBridge.ofOptimized(key.spark, _, adaptive = false))
 
   /** The cached plan moved to a query starting at `startMs`: every
     * parameter that follows the times shifts by the same amount, and the

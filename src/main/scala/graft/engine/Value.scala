@@ -122,4 +122,8 @@ final case class EvalContext(
       * selectors aggregate on the 8-byte sig alone and join the labels
       * back at result size — no label string rides the selector's
       * exchange. */
-    seriesDict: Option[DataFrame] = None)
+    seriesDict: Option[DataFrame] = None,
+    /** The points relation is one partition ([[Engine.PlanChoice]]'s
+      * single plan): a join pinned to a side must not broadcast it, which
+      * would add a job, where a shuffle-free join needs none. */
+    singlePartition: Boolean = false)

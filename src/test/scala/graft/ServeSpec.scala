@@ -128,6 +128,35 @@ class ServeSpec extends AnyFunSuite with SharedSpark {
     } finally { handle.stop(); graft.engine.Guards.disableQueryLog() }
   }
 
+  test("serve: /metrics counts the plan each query took") {
+    val dir = java.nio.file.Files.createTempDirectory("serve_plans").toString
+    PointsStore.append(pts((0 until 120).map(m =>
+      ("up", Map("job" -> "a"), 60000L * m, m.toDouble)): _*), dir)
+    val handle = Serve.start(spark, Serve.Config(storeDir = dir, port = 0,
+      maintenanceMs = 3600000L))
+    try {
+      def plans(): Map[String, Double] = {
+        val m = get(handle.port, "/metrics").linesIterator.toSeq
+        Seq("single", "partitioned", "slim").map { p =>
+          p -> m.find(_.startsWith(s"graft_plan_${p}_total ")).map(_.split(" ")(1).toDouble).get
+        }.toMap
+      }
+      val before = plans()
+      // a last-hour selector over the small store: one partition
+      assert(get(handle.port, "/api/v1/query?query=up&time=7000").contains("success"))
+      val afterSelector = plans()
+      assert(afterSelector("single") == before("single") + 1)
+      assert(afterSelector("partitioned") == before("partitioned"))
+      // a wide range at 1 s steps: past the single plan's step bound
+      assert(get(handle.port, "/api/v1/query_range?query=up&start=0&end=7000&step=1")
+        .contains("success"))
+      val afterRange = plans()
+      assert(afterRange("partitioned") == afterSelector("partitioned") + 1)
+      assert(afterRange("single") == afterSelector("single"))
+      assert(afterRange("slim") == before("slim"))
+    } finally handle.stop()
+  }
+
   test("serve: a failed tick names the exception and its root cause, even without a message") {
     val e = new IllegalStateException(null: String,
       new RuntimeException("wrapped", new java.io.IOException("disk gone")))

@@ -139,17 +139,81 @@ class CompileOnceSpec extends AnyFunSuite with SharedSpark {
     }
 
   test("topk pins its winners as the broadcast side only while their count is bounded") {
-    def broadcastHinted(q: String, range: Long, step: Long): Boolean =
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, SHUFFLE_HASH}
+    def hinted(strategy: Any)(q: String, range: Long, step: Long): Boolean =
       served(dir, q, warmAt, range, step).queryExecution.optimizedPlan.collect {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j.hint
-      }.exists(h => (h.leftHint ++ h.rightHint)
-        .exists(_.strategy.contains(org.apache.spark.sql.catalyst.plans.logical.BROADCAST)))
-    assert(broadcastHinted("topk(3, m)", 0L, 1000L))
-    assert(broadcastHinted("bottomk(2, m)", 3600000L, M))
-    // two days at a 1 s step: 3 × 172,801 winners, left to AQE's sizing
-    assert(!broadcastHinted("topk(3, m)", 2 * 24 * 60 * M, 1000L))
-    // one winner set per group: the group count is unknown at build
-    assert(!broadcastHinted("topk(3, m) by (instance_id)", 0L, 1000L))
+        case j: Join => j.hint
+      }.exists(h => (h.leftHint ++ h.rightHint).exists(_.strategy.contains(strategy)))
+    val broadcastHinted = hinted(BROADCAST) _
+    withPartitionedPlan {
+      assert(broadcastHinted("topk(3, m)", 0L, 1000L))
+      assert(broadcastHinted("bottomk(2, m)", 3600000L, M))
+      // two days at a 1 s step: 3 × 172,801 winners, left to AQE's sizing
+      assert(!broadcastHinted("topk(3, m)", 2 * 24 * 60 * M, 1000L))
+      // one winner set per group: the group count is unknown at build
+      assert(!broadcastHinted("topk(3, m) by (instance_id)", 0L, 1000L))
+    }
+    // on the single plan the winners are a shuffled hash join's build side
+    assert(!broadcastHinted("topk(3, m)", 0L, 1000L))
+    assert(hinted(SHUFFLE_HASH)("topk(3, m)", 0L, 1000L))
+  }
+
+  test("the dashboard shapes run single-partition: one job, no exchange, the same scan filters") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(df: DataFrame): Long = {
+      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      val before = jobs.get
+      df.collect()
+      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      jobs.get - before
+    }
+    // the store scans' pushed and partition filters, expression ids blanked
+    val helper = new AdaptiveSparkPlanHelper {}
+    def scanFilters(plan: SparkPlan): Seq[String] =
+      helper.collect(plan) { case s: FileSourceScanExec => s }
+        .map(s => Seq("PushedFilters", "PartitionFilters").map(s.metadata).mkString(" "))
+        .map(_.replaceAll("#\\d+", "#N"))
+    def shuffled(plan: SparkPlan): Boolean =
+      plan.exists(p => p.isInstanceOf[Exchange] || p.isInstanceOf[AdaptiveSparkPlanExec])
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for ((name, q, range, step) <- shapes.take(4)) {
+        val single = served(dir, q, warmAt, range, step)
+        val part = withPartitionedPlan(served(dir, q, warmAt, range, step))
+        val (sp, pp) = (single.queryExecution.executedPlan, part.queryExecution.executedPlan)
+        assert(!shuffled(sp), s"$name:\n$sp")
+        assert(shuffled(pp), s"$name:\n$pp")
+        assert(scanFilters(sp).nonEmpty && scanFilters(sp) == scanFilters(pp), name)
+        assert(graft.Explain.storePlan(single).exists(_.startsWith("store plan: single;")), name)
+        assert(graft.Explain.storePlan(part).exists(_.startsWith("store plan: partitioned;")), name)
+        // warm, then count a fresh time's run (a reused plan)
+        jobsOf(single)
+        assert(jobsOf(served(dir, q, times.head, range, step)) == 1, name)
+      }
+      // two appends leave two files a day, which arms the store's LWW
+      // guard: its window sits above the coalesced scan, so it needs no
+      // exchange either
+      val guarded = Files.createTempDirectory("compile_once_guarded").toString
+      for (_ <- 1 to 2) PointsStore.append(frame(rows(0 until Minutes, T0)), guarded)
+      val g = served(guarded, "sum by (instance_id) (rate(m[5m]))", warmAt, 0L, 1000L)
+        .queryExecution.executedPlan
+      assert(helper.find(g)(_.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec]).nonEmpty)
+      assert(!shuffled(g), g)
+      // a day at a 1 m step: past the single plan's step bound, and so is
+      // an instant query whose subquery evaluates a day at 1 m
+      val long = served(dir, "sum by (instance_id) (rate(m[5m]))", warmAt, 24 * 60 * M, M)
+      assert(shuffled(long.queryExecution.executedPlan))
+      def instant(q: String) = served(dir, q, warmAt, 0L, 1000L).queryExecution.executedPlan
+      assert(shuffled(instant("max_over_time(sum(rate(m[5m]))[1d:1m])")))
+      assert(!shuffled(instant("max_over_time(sum(rate(m[5m]))[1h:1m])")))
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("the server's working set stays compiled: every shape and an append, interleaved") {

@@ -282,4 +282,24 @@ class EngineSpec extends AnyFunSuite with SharedSpark {
     assert(evaluations(bytes) == 0)     // not past the threshold: full plan
     assert(evaluations(bytes - 1) == 1) // one byte past it: slim plan
   }
+
+  test("plan choice: the single plan for a small store read over a short grid") {
+    val threshold = 4L * 1024 * 1024
+    def plan(bytes: Long, steps: Long) = Engine.PlanChoice(bytes, threshold, steps).name
+    assert(plan(Engine.SingleMaxBytes, Engine.SingleMaxSteps) == "single")
+    // in-memory points, a long grid, more bytes than one task should scan
+    assert(plan(0L, 1L) == "partitioned")
+    assert(plan(1L, Engine.SingleMaxSteps + 1) == "partitioned")
+    assert(plan(Engine.SingleMaxBytes + 1, 1L) == "partitioned")
+    assert(plan(threshold + 1, 1L) == "slim")
+    // the pin: a step bound of 0 keeps every read partitioned
+    assert(Engine.PlanChoice(1L, threshold, 1L, stepBound = 0L).name == "partitioned")
+    // the steps are the largest grid evaluated: a subquery's inner one counts
+    def steps(q: String, rangeMs: Long, stepMs: Long) = Engine.gridSteps(
+      graft.promql.Parser.parse(q), StepGrid(0L, rangeMs, stepMs), 60000L)
+    assert(steps("rate(m[5m])", 0L, 1000L) == 1L)
+    assert(steps("rate(m[5m])", 3600000L, 60000L) == 61L)
+    assert(steps("max_over_time(rate(m[5m])[1d:1m])", 0L, 1000L) == 1441L)
+    assert(steps("1 + max_over_time(rate(m[5m])[1h:])", 3600000L, 600000L) == 121L)
+  }
 }

@@ -17,7 +17,9 @@ import graft.testkit.SharedSpark
   * ([[PlanCache]]). Every answer a reused plan gives must equal the one a
   * fresh build gives at the same time on the same store
   * ([[PlanCache.bypass]]); a write, a compaction or a delete must miss, and
-  * a plan whose parameters cannot all be rebound must never be reused. */
+  * a plan whose parameters cannot all be rebound must never be reused.
+  * The test stores are small, so their queries take the single-partition
+  * plan unless pinned to another ([[withPartitionedPlan]], [[withSlimPlan]]). */
 class PlanCacheSpec extends AnyFunSuite with SharedSpark {
 
   private val schema = StructType(Seq(
@@ -108,6 +110,33 @@ class PlanCacheSpec extends AnyFunSuite with SharedSpark {
   for ((name, q, range, step) <- shapes)
     test(s"a reused slim plan answers as a fresh build at fresh times: $name") {
       withSlimPlan(checkShape(name, q, range, step))
+    }
+
+  // The single plan (a small store read, one partition) against the
+  // partitioned plan pinned for the same queries: a fresh build, a reused
+  // plan at a shifted time, and a reused plan after an append, whose two
+  // files arm the store's LWW guard below the coalesced scan
+  for ((name, q, range, step) <- shapes)
+    test(s"the single plan answers as the partitioned plan, fresh and reused: $name") {
+      val d = store()
+      def run(t: Long) = answer(served(d, q, t, range, step))
+      def partitioned(t: Long) = withPartitionedPlan(PlanCache.bypass(run(t)))
+      val singles = Engine.planCount("single")
+      val fresh = PlanCache.bypass(run(warmAt))
+      assert(fresh.nonEmpty && fresh == partitioned(warmAt), s"$name: fresh build")
+      run(warmAt)
+      val (hit, hits, _) = counted(run(times(0)))
+      assert(hit == partitioned(times(0)), s"$name: reused at ${times(0)}")
+      val before = run(times(2))
+      PointsStore.append(frame(rows(0 until Minutes, T0, 8 until 10)), d)
+      run(times(1))
+      val (appended, appendedHits, _) = counted(run(times(2)))
+      assert(appended != before, s"$name: the appended series are missing")
+      assert(appended == partitioned(times(2)), s"$name: reused after the append")
+      // the one-step subquery is built every time (see above)
+      if (name != "subquery_one_step") assert(hits == 1 && appendedHits == 1, name)
+      // all six unpinned queries took the single plan
+      assert(Engine.planCount("single") - singles >= 6, name)
     }
 
   test("an append, a compaction and a delete each miss and give the new answer") {

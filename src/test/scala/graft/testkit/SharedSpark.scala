@@ -14,6 +14,12 @@ trait SharedSpark {
     * below the size at which the engine would choose it. */
   protected def withSlimPlan[A](f: => A): A = graft.engine.Engine.withPlanThreshold(spark, 0L)(f)
 
+  /** Build the store-backed queries in `f` on the partitioned plan, with
+    * the single plan's step bound at 0 for this thread
+    * ([[graft.engine.Engine.withSingleStepBound]]): test stores are small
+    * enough that the engine would run them single-partition. */
+  protected def withPartitionedPlan[A](f: => A): A = graft.engine.Engine.withSingleStepBound(0L)(f)
+
   /** Does a plan read the series-dictionary sidecar (`_dict/`)? Checked on
     * the analyzed plan: the optimizer may prune an empty result's scans. */
   protected def readsDict(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
