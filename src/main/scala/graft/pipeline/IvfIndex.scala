@@ -11,14 +11,14 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
   * cell-partitioned layout (which is rebuild-only):
   *
   * {{{
-  * dir/_commit.<n>                    the index's commits (highest wins)
+  * dir/_log/_commit.<n>               the index's commits (highest wins)
   * dir/gen-<gid>[-<uniq>]/centroids/  the generation's coarse quantizer
   * dir/gen-.../codebooks/             PQ codebooks (product-quantized mode)
   * dir/gen-.../batch=<name>/cell=<i>/ one append, partitioned by cell
   * dir/gen-.../_hist.<name>           the batch's per-cell row counts
   * }}}
   *
-  * The commit protocol is ONE [[MarkerLog.IndexLog]] at the root: every
+  * The commit protocol is ONE [[MarkerLog.IndexLog]] per index: every
   * commit names the generation (its id and directory), the live batches
   * with their first publish times and the folded names — atomic publish,
   * idempotent replay of a batch name, the sequential-writer guard

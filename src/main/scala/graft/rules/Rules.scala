@@ -206,71 +206,23 @@ object Rules {
   }
 
   /** Newest persisted `for:` state for `alert` under `stateDir` older than
-    * `beforeTs`, or the empty state. Reads the batched all-rules table when
-    * one exists (the batched tick is the deployment path), falling back to
-    * the per-rule layout `stateDir/<alert>/v=<ts>`. */
+    * `beforeTs` (its rows of the batched all-rules table), or the empty
+    * state. */
   def loadAlertState(spark: SparkSession, stateDir: String, alert: String,
-                     beforeTs: Long = Long.MaxValue): DataFrame = {
-    val batched = new org.apache.hadoop.fs.Path(s"$stateDir/$BatchedStateDir")
-    newestVersion(spark, batched, beforeTs) match {
-      case Some(v) =>
-        spark.read.parquet(s"$batched/v=$v")
-          .where(col("alert") === alert)
-          .select(col("sig"), col("labels"), col("since"), col("value"))
-      case None =>
-        val base = new org.apache.hadoop.fs.Path(s"$stateDir/$alert")
-        newestVersion(spark, base, beforeTs) match {
-          case Some(v) => spark.read.parquet(s"$base/v=$v")
-          case None => emptyState(spark)
-        }
-    }
-  }
+                     beforeTs: Long = Long.MaxValue): DataFrame =
+    loadBatchedState(spark, stateDir, beforeTs)
+      .where(col("alert") === alert)
+      .select(col("sig"), col("labels"), col("since"), col("value"))
 
   /** Newest batched state (alert, sig, labels, since, value) older than
-    * `beforeTs`; when only legacy per-rule state exists (an upgraded
-    * deployment), the per-rule tables are unioned under their alert names
-    * so `since` windows survive the layout migration. */
+    * `beforeTs`, or the empty state. */
   private def loadBatchedState(spark: SparkSession, stateDir: String,
-                               rules: Seq[AlertingRule],
                                beforeTs: Long): DataFrame = {
     val batched = new org.apache.hadoop.fs.Path(s"$stateDir/$BatchedStateDir")
     newestVersion(spark, batched, beforeTs) match {
       case Some(v) => spark.read.parquet(s"$batched/v=$v")
-      case None =>
-        rules.map { r =>
-          val base = new org.apache.hadoop.fs.Path(s"$stateDir/${r.alert}")
-          val legacy = newestVersion(spark, base, beforeTs) match {
-            case Some(v) => spark.read.parquet(s"$base/v=$v")
-            case None => emptyState(spark)
-          }
-          legacy.select(lit(r.alert).as("alert"), col("sig"), col("labels"),
-            col("since"), col("value"))
-        }.reduce(_.unionByName(_))
+      case None => emptyState(spark).select(lit("").as("alert"), col("*"))
     }
-  }
-
-  /** One PERSISTED alerting tick: load newest state, run [[alertingTick]],
-    * write the successor state as `stateDir/<alert>/v=<tsMs>` (idempotent
-    * on replay of the same tick — the reference's rule manager re-reads
-    * its persisted alert state on restart, prom_manager.go:34-143 /
-    * acceptance metric_store_test.go:1509), prune all but the two newest
-    * versions, and return the firing set. */
-  def persistedAlertingTick(spark: SparkSession, points: DataFrame,
-                            rule: AlertingRule, stateDir: String, tsMs: Long,
-                            lookbackMs: Long = 300000L): DataFrame = {
-    val st = loadAlertState(spark, stateDir, rule.alert, beforeTs = tsMs)
-    val (newState, firing) = alertingTick(spark, points, rule, st, tsMs, lookbackMs)
-    val out = firing.cache()
-    out.count() // one materialization serves both the write and the caller
-    newState.write.mode("overwrite").parquet(s"$stateDir/${rule.alert}/v=$tsMs")
-    val base = new org.apache.hadoop.fs.Path(s"$stateDir/${rule.alert}")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions = fs.listStatus(base).toSeq
-      .filter(_.getPath.getName.startsWith("v="))
-      .map(s => (s.getPath.getName.drop(2).toLong, s.getPath))
-      .sortBy(-_._1)
-    versions.drop(2).foreach { case (_, p) => fs.delete(p, true) }
-    out
   }
 
   /** `writeStream.foreachBatch` sink running arbitrary-PromQL alerting on a
@@ -381,15 +333,16 @@ object Rules {
   }
 
   /** Persisted deployment of [[batchedAlertingTick]]: load the newest
-    * batched state (migrating legacy per-rule tables on first use), tick,
-    * write the successor as `stateDir/__all__/v=<tsMs>` (idempotent on
-    * replay), prune all but the two newest versions, and return the
-    * (cached) firing rows — caller unpersists. */
+    * batched state, tick, write the successor as `stateDir/__all__/v=<tsMs>`
+    * (idempotent on replay — the reference's rule manager re-reads its
+    * persisted alert state on restart, prom_manager.go:34-143), prune all
+    * but the two newest versions, and return the (cached) firing rows —
+    * caller unpersists. */
   def batchedPersistedTick(spark: SparkSession, points: DataFrame,
                            rules: Seq[AlertingRule], stateDir: String, tsMs: Long,
                            lookbackMs: Long = 300000L,
                            seriesDict: => Option[DataFrame] = None): DataFrame = {
-    val st = loadBatchedState(spark, stateDir, rules, beforeTs = tsMs)
+    val st = loadBatchedState(spark, stateDir, beforeTs = tsMs)
     val (newState, firing) = batchedAlertingTick(spark, points, rules, st, tsMs,
       lookbackMs, seriesDict)
     val out = firing.cache()

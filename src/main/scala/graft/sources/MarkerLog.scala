@@ -27,10 +27,16 @@ final class ConcurrentWriterException(owner: String, dir: String, seq: Long)
   *
   *  - [[CommitLog]]: the numbered commits of one directory, bodies as
   *    lines; every PointsStore day dir and `_dict` is one.
-  *  - [[IndexLog]]: a [[CommitLog]] whose every body is the WHOLE state of
-  *    a pipeline index ([[IndexState]]: live batches, folded names, the
-  *    current generation, ledger or state directory) — SigIndex, IvfIndex
-  *    and the incremental diversity sampler.
+  *  - [[IndexLog]]: a [[CommitLog]] in the index's own `_log/` directory
+  *    whose every body is the WHOLE state of a pipeline index
+  *    ([[IndexState]]: live batches, folded names, the current generation,
+  *    ledger or state directory) — SigIndex, IvfIndex and the incremental
+  *    diversity sampler.
+  *
+  * One layout per structure, no migration: an index root holding commits
+  * beside its data, or the stamped markers of the protocol before the
+  * commit log, fails loud ([[IndexLog.read]]), as does a store dir holding
+  * only manifests (`PointsStore`).
   *
   * GRACE WINDOW: a reader plans against a state lazily, so nothing it may
   * still scan is deleted early. A commit goes once a NEWER one is older than
@@ -317,22 +323,33 @@ private[graft] object MarkerLog {
     }
   }
 
-  /** The commit log of a pipeline index at `root`: every commit body is the
-    * index's whole [[IndexState]]. `owner` names the index in errors;
+  /** The directory under an index root that holds its commits. */
+  val LogDir = "_log"
+
+  /** Names at an index root that only the protocol before the commit log
+    * wrote: stamped batch, slot and version markers. */
+  private val PreCommitMarkers =
+    Seq("_live.", "_seen.", "_slot.", "_gen.", "_state.", "_decled.", "_decfold.")
+
+  /** The commit log of a pipeline index at `root`, kept in `root/_log/`: a
+    * read lists commits and staged bodies only, never the data directories,
+    * so its cost does not grow with the live batches. Every commit body is
+    * the index's whole [[IndexState]]. `owner` names the index in errors;
     * `dirs` lists the directories (relative to `root`) a state names, and
     * `sweep` the glob patterns (relative to `root`) of the data directories
     * [[vacuum]] may delete once no remaining commit names them. */
   final class IndexLog(val fs: FileSystem, val root: Path, owner: String,
                        dirs: IndexState => Seq[String], sweep: Seq[String]) {
 
-    private val log = new CommitLog(fs, root)
+    private val log = new CommitLog(fs, new Path(root, LogDir))
 
-    /** One listing and the state it names: the tip commit's body, or, in an
-      * index written before the commit log, [[legacyState]]. */
+    /** One listing of `_log/` and the state its tip names; empty before the
+      * first commit, unless the root holds an earlier layout
+      * ([[requireLogLayout]]). */
     def read(): (CommitView, IndexState) = {
       val v = log.view()
       v.tip match {
-        case None => (v, legacyState(fs, root, v.entries))
+        case None => requireLogLayout(); (v, IndexState.empty)
         case Some(c) =>
           // at grace 0 a racing vacuum may retire a tip that a newer commit
           // just superseded: list again
@@ -342,6 +359,21 @@ private[graft] object MarkerLog {
     }
 
     def state: IndexState = read()._2
+
+    /** Throw when the root holds commits beside the data (the layout before
+      * `_log/`) or stamped markers (the protocol before the commit log):
+      * such an index would otherwise read as empty. */
+    private def requireLogLayout(): Unit = {
+      val names = try fs.listStatus(root).toSeq.map(_.getPath.getName)
+                  catch { case _: java.io.FileNotFoundException => Nil }
+      names.collectFirst {
+        case n if n.startsWith(CommitPrefix) =>
+          s"a commit at its root ($n), the layout before `$LogDir/`"
+        case n if PreCommitMarkers.exists(n.startsWith) =>
+          s"a stamped marker ($n), the layout before the commit log"
+      }.foreach(format => throw new IllegalStateException(
+        s"$owner at $root holds $format; only commits under `$LogDir/` are read: rebuild the index"))
+    }
 
     /** Publish `update(view, tip state)` as the next commit; on a lost
       * number re-read and apply `update` to the new tip. `update` returns
@@ -408,11 +440,10 @@ private[graft] object MarkerLog {
 
     /** Retire commits superseded for `graceMs`, then delete every data
       * directory matching `sweep` that no remaining commit names once it is
-      * itself that old (`onSweep` hears each), and, once a commit is that
-      * old, the markers of an index written before the commit log. The
-      * remaining commits name what the tip names plus the directories
-      * retired by a commit younger than `graceMs` (an older one has
-      * superseded every commit naming them for the window). */
+      * itself that old (`onSweep` hears each). The remaining commits name
+      * what the tip names plus the directories retired by a commit younger
+      * than `graceMs` (an older one has superseded every commit naming them
+      * for the window). */
     def vacuum(graceMs: Long, onSweep: Path => Unit = _ => ()): Unit = {
       val now = System.currentTimeMillis()
       log.vacuum(log.view(), graceMs)
@@ -431,8 +462,6 @@ private[graft] object MarkerLog {
           onSweep(st.getPath)
         }
       }
-      if (v.commits.exists(_.mtime <= now - graceMs))
-        legacyMarkers(fs, root).foreach(p => step("sweep", p)(fs.delete(p, false)))
     }
 
     /** Snapshot the index: `capture` links what the tip state names into the
@@ -445,54 +474,8 @@ private[graft] object MarkerLog {
       MarkerLog.snapshot(fs, root, name) { out =>
         val (v, s) = read()
         val kept = capture(s, out)
-        new CommitLog(fs, out).publishAt(v.tip.fold(1L)(_.n),
+        new CommitLog(fs, new Path(out, LogDir)).publishAt(v.tip.fold(1L)(_.n),
           kept.copy(facts = kept.facts - Retired).lines)
       }
   }
-
-  // ---- indexes written before the commit log --------------------------------
-
-  private val LegacyMarkers = "_{live,seen,slot,gen,decled,decfold,state}.*"
-
-  /** `<prefix><ts>.<name>` markers of an index written before the commit
-    * log, as (ts, name). */
-  private def stamps(es: Seq[FileStatus], prefix: String): Seq[(Long, String)] =
-    es.map(_.getPath.getName).filter(_.startsWith(prefix)).flatMap { n =>
-      val rest = n.drop(prefix.length)
-      val dot = rest.indexOf('.')
-      if (dot < 0) None else rest.take(dot).toLongOption.map(ts => (ts, rest.substring(dot + 1)))
-    }
-
-  /** The state an index written before the commit log names, read-only,
-    * from the marker files `es` lists in its root: `_live.<ts>.<n>` and
-    * `_seen.<ts>.<n>` batch markers (a batch's first stamp is its time),
-    * `_decfold.<ts>.<n>` names, and the newest `_decled.`, `_state.` or
-    * `_gen.<ts>.<gid>` version — an IvfIndex's batch markers live in its
-    * `gen-<gid>/`. Slot-claim files carry nothing a commit needs. The first
-    * commit carries this state forward; [[IndexLog.vacuum]] deletes the
-    * markers once that commit is past the grace window. */
-  private def legacyState(fs: FileSystem, root: Path, es: Seq[FileStatus]): IndexState = {
-    def first(xs: Seq[(Long, String)]): Map[String, Long] =
-      xs.groupBy(_._2).map { case (n, ts) => n -> ts.map(_._1).min }
-    def newest(prefix: String): Option[(Long, String)] =
-      stamps(es, prefix).maxByOption { case (ts, n) => (ts, n.toLongOption, n) }
-    val gen = newest("_gen.")
-    val batchEs = gen.fold(es) { case (_, g) =>
-      val gp = new Path(root, s"gen-$g")
-      if (fs.exists(gp)) fs.listStatus(gp).toSeq else Nil
-    }
-    val facts = Map(
-      Live -> first(stamps(batchEs, "_live.")),
-      Seen -> first(stamps(batchEs, "_seen.")),
-      DecFold -> first(stamps(es, "_decfold."))) ++
-      newest("_decled.").map { case (ts, g) => Ledger -> Map(s"decled-$g" -> ts) } ++
-      newest("_state.").map { case (ts, g) => StateDir -> Map(s"state-$g" -> ts) } ++
-      gen.map { case (_, g) => Gen -> Map(s"gen-$g" -> g.toLong) }
-    IndexState(facts.filter(_._2.nonEmpty), -1L)
-  }
-
-  /** Every marker file of an index written before the commit log. */
-  private def legacyMarkers(fs: FileSystem, root: Path): Seq[Path] =
-    Seq(LegacyMarkers, s"gen-*/$LegacyMarkers").flatMap(g =>
-      Option(fs.globStatus(new Path(root, g))).toSeq.flatten.filter(_.isFile).map(_.getPath))
 }

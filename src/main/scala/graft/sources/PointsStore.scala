@@ -555,12 +555,6 @@ object PointsStore {
   // files are vacuumed by a LATER compaction once the commit that killed
   // them is older than the grace window, so in-flight plans keep their
   // files.
-  //
-  // Stores written before the commit log hold `_manifest.<gen>` or chained
-  // `_manifest.<gen>_p_<parent>` files instead. A dir holding no commit
-  // resolves its manifest tip read-only ([[resolveTip]]); the first commit
-  // carries that tip's lists forward, and the manifests go once that commit
-  // is older than the grace window.
 
   private val CompactedPrefix = "compacted-"
   private val ManifestPrefix = "_manifest."
@@ -604,75 +598,9 @@ object PointsStore {
   private def isHidden(name: String): Boolean =
     name.startsWith("_") || name.startsWith(".")
 
-  /** One legacy manifest file: stamp ts, own generation, parent generation
-    * (None for the pre-chain `_manifest.<gen>` name), file name, and the
-    * file's modification time, which orders manifests by PUBLISH time (the
-    * staged manifest was renamed into place, which preserves it). */
-  private[sources] final case class MEnt(ts: Long, gen: String, parent: Option[String],
-                                name: String, mtime: Long)
-
-  private val ParentSep = "_p_"
-  private val RootToken = "root"
-
-  /** Parse a legacy manifest name; None for a stray `_manifest.*` file
-    * that does not start with a timestamp (ignored, not fatal). */
-  private def legacyManifest(st: org.apache.hadoop.fs.FileStatus): Option[MEnt] = {
-    val name = st.getPath.getName
-    val suffix = name.drop(ManifestPrefix.length)
-    val digits = suffix.takeWhile(_.isDigit)
-    val i = suffix.indexOf(ParentSep)
-    if (!name.startsWith(ManifestPrefix) || digits.isEmpty || digits.length > 18) None
-    else if (i < 0) Some(MEnt(digits.toLong, suffix, None, name, st.getModificationTime))
-    else Some(MEnt(digits.toLong, suffix.substring(0, i),
-      Some(suffix.substring(i + ParentSep.length)), name, st.getModificationTime))
-  }
-
-  /** Resolve a legacy dir's current manifest by walking the parent chain.
-    *
-    * Start: the chained manifest whose parent is `root` or no longer
-    * present (a vacuumed ancestor leaves a single fragment head); else the
-    * newest pre-chain manifest (the first chained publish named it as
-    * parent). At each step the child with the EARLIEST (mtime, name) wins a
-    * fork: mtime tracks rename order, so a racer that renamed after the
-    * winner deterministically loses. Cycle-guarded (a cycle would need a
-    * forged name); falls back to stamp order if the walk cannot start. */
-  private[sources] def resolveTip(ents: Seq[MEnt]): Option[MEnt] = {
-    if (ents.isEmpty) return None
-    val chained = ents.filter(_.parent.isDefined)
-    val byStamp = ents.maxBy(e => (e.ts, e.name))
-    if (chained.isEmpty) return Some(byStamp) // pure legacy dir
-    val gens = ents.map(_.gen).toSet
-    val roots = chained.filter(e =>
-      e.parent.contains(RootToken) || !gens.contains(e.parent.get))
-    val legacyTip = ents.filter(_.parent.isEmpty) match {
-      case l if l.nonEmpty => Some(l.maxBy(e => (e.ts, e.name)))
-      case _ => None
-    }
-    val start = if (roots.nonEmpty) Some(roots.minBy(e => (e.mtime, e.name)))
-                else legacyTip
-    start match {
-      case None => Some(byStamp) // unreachable without forged names
-      case Some(s) =>
-        var cur = s
-        var steps = 0
-        while (steps <= ents.size) {
-          chained.filter(_.parent.get == cur.gen) match {
-            case cs if cs.isEmpty => return Some(cur)
-            case cs => cur = cs.minBy(e => (e.mtime, e.name))
-          }
-          steps += 1
-        }
-        Some(cur)
-    }
-  }
-
-  /** One listing of a commit-managed dir: the commit view, the file holding
-    * the current lists (the tip commit, or the legacy manifest tip of a dir
-    * holding no commit) with its publish time, the +live and -dead lists,
-    * and the dir's data files. */
+  /** One listing of a commit-managed dir: the commit view, the tip's +live
+    * and -dead lists, and the dir's data files. */
   private final case class DirState(view: MarkerLog.CommitView,
-                                    tip: Option[org.apache.hadoop.fs.Path],
-                                    tipMtime: Option[Long],
                                     plus: Set[String], minus: Set[String]) {
     val files: Seq[org.apache.hadoop.fs.FileStatus] =
       view.entries.filter(s => s.isFile && !isHidden(s.getPath.getName))
@@ -687,15 +615,19 @@ object PointsStore {
     }
   }
 
+  /** The dir's state. A dir holding `_manifest.*` files and no commit was
+    * written before the commit log: it throws rather than read every file
+    * as live. */
   private def dirState(fs: org.apache.hadoop.fs.FileSystem,
                        dir: org.apache.hadoop.fs.Path): DirState = {
     val log = new MarkerLog.CommitLog(fs, dir)
     val view = log.view()
-    val tip = view.tip.map(c => (c.path, c.mtime)).orElse(
-      resolveTip(view.entries.filter(_.isFile).flatMap(legacyManifest))
-        .map(m => (new org.apache.hadoop.fs.Path(dir, m.name), m.mtime)))
-    val lines = tip.fold(Seq.empty[String])(t => log.read(t._1))
-    DirState(view, tip.map(_._1), tip.map(_._2),
+    if (view.tip.isEmpty)
+      view.entries.map(_.getPath.getName).find(_.startsWith(ManifestPrefix)).foreach(m =>
+        throw new IllegalStateException(s"$dir holds the manifest $m and no `_commit.<n>`: " +
+          "a store written before the commit log, which this version does not read"))
+    val lines = view.tip.fold(Seq.empty[String])(c => log.read(c.path))
+    DirState(view,
       lines.filter(_.startsWith("+")).map(_.drop(1)).toSet,
       lines.filter(_.startsWith("-")).map(_.drop(1)).toSet)
   }
@@ -1001,25 +933,19 @@ object PointsStore {
   /** Vacuum one commit-managed dir past the grace window (any reader that
     * planned against what goes has finished): the tip's dead files and
     * unpublished `compacted-` outputs once the tip is that old, superseded
-    * commits and staged commit bodies ([[MarkerLog.CommitLog.vacuum]]),
-    * and the legacy manifests once a commit is that old. */
+    * commits and staged commit bodies ([[MarkerLog.CommitLog.vacuum]]). */
   private def vacuum(fs: org.apache.hadoop.fs.FileSystem,
                      dir: org.apache.hadoop.fs.Path, graceMs: Long): Unit = {
     val now = System.currentTimeMillis()
     val st = dirState(fs, dir)
-    def sweep(p: org.apache.hadoop.fs.Path): Unit =
-      MarkerLog.step("sweep", p)(fs.delete(p, false))
-    if (st.tipMtime.forall(_ <= now - graceMs))
+    if (st.view.tip.forall(_.mtime <= now - graceMs))
       st.files.foreach { f =>
         val n = f.getPath.getName
         if (st.minus.contains(n) || n.startsWith(CompactedPrefix) && !st.plus.contains(n) &&
-            f.getModificationTime <= now - graceMs) sweep(f.getPath)
+            f.getModificationTime <= now - graceMs)
+          MarkerLog.step("sweep", f.getPath)(fs.delete(f.getPath, false))
       }
     new MarkerLog.CommitLog(fs, dir).vacuum(st.view, graceMs)
-    if (st.view.commits.exists(_.mtime <= now - graceMs))
-      st.view.entries.map(_.getPath)
-        .filter(p => p.getName.startsWith(ManifestPrefix) || p.getName.startsWith(s".$ManifestPrefix"))
-        .foreach(sweep)
   }
 
   /** Staging dirs of day rewrites, beside the dir they rewrite; swept with
@@ -1164,9 +1090,9 @@ object PointsStore {
         MarkerLog.step("mkdirs", out)(fs.mkdirs(out))
         // the tip rides along so the snapshot's `compacted-` files stay
         // visible under the same rules (its -listed dead names simply don't
-        // exist there); a legacy chained tip resolves there as a root
+        // exist there)
         val st = dirState(fs, d.getPath)
-        for (f <- st.live.map(_.getPath) ++ st.tip)
+        for (f <- st.live.map(_.getPath) ++ st.view.tip.map(_.path))
           MarkerLog.link(fs, f, new org.apache.hadoop.fs.Path(out, f.getName))
       }
     }

@@ -14,9 +14,9 @@ import graft.testkit.SharedSpark
 /** Crash leftovers of the persisted indexes are swept: what a crashed
   * append, fold, retrain, ledger fold or sampler merge leaves behind never
   * outlives the grace window, never blocks a retry, and a retry lands
-  * exactly once. Every index keeps one commit log at its root, and an
-  * index written before the commit log (stamped marker files) stays
-  * readable until its first commit. */
+  * exactly once. Every index keeps one commit log in its `_log/`, and an
+  * index root in an earlier layout (commits beside the data, or the
+  * stamped markers of the protocol before the commit log) fails loud. */
 class IndexRecoverySpec extends AnyFunSuite with SharedSpark {
 
   /** 400 deterministic 64-dim vectors. */
@@ -215,19 +215,17 @@ class IndexRecoverySpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  /** Names at an index root that only a marker-protocol index writes. */
-  private val markerNames = Seq("_live.", "_seen.", "_slot.", "_gen.", "_state.", "_decled.", "_decfold.")
-
-  /** The root holds commits, data directories and sidecars — no marker. */
+  /** The root holds the commit log and data directories only, and the
+    * log one commit. */
   private def onlyCommitsAndData(dir: String, dataPrefixes: String*): Unit = {
     val ns = names(dir)
-    assert(!ns.exists(n => markerNames.exists(n.startsWith)), ns)
     ns.foreach { n =>
-      val isDir = new File(dir, n).isDirectory
-      assert(if (isDir) n == "snapshots" || dataPrefixes.exists(n.startsWith)
-             else n.startsWith("_commit."), s"unexpected $n in ${ns.mkString(",")}")
+      assert(new File(dir, n).isDirectory &&
+        (n == MarkerLog.LogDir || n == "snapshots" || dataPrefixes.exists(n.startsWith)),
+        s"unexpected $n in ${ns.mkString(",")}")
     }
-    assert(ns.count(_.startsWith("_commit.")) == 1, ns)
+    val log = names(s"$dir/${MarkerLog.LogDir}")
+    assert(log.length == 1 && log.head.startsWith("_commit."), log)
   }
 
   test("index lifecycle: append, fold, retrain or ledger fold, snapshot, vacuum leave commits and data only") {
@@ -262,55 +260,45 @@ class IndexRecoverySpec extends AnyFunSuite with SharedSpark {
     onlyCommitsAndData(div, "state-")
   }
 
-  /** Turn an index written through the commit log back into the layout
-    * an index written before it had: the commits go, and `markers` (paths
-    * relative to the root) name what the tip named. */
-  private def toLegacy(dir: String, markers: String*): Unit = {
-    names(dir).filter(_.startsWith("_commit.")).foreach(n => new File(dir, n).delete())
+  /** Move an index's commits out of `_log/` to its root: the layout before
+    * `_log/`. */
+  private def commitsToRoot(dir: String): Unit = {
+    val log = new File(dir, MarkerLog.LogDir)
+    log.list().foreach(n => assert(new File(log, n).renameTo(new File(dir, n))))
+    assert(log.delete())
+  }
+
+  /** Replace an index's commit log with stamped `markers`: the protocol
+    * before the commit log. */
+  private def logToMarkers(dir: String, markers: String*): Unit = {
+    FileUtil.fullyDelete(new File(dir, MarkerLog.LogDir))
     markers.foreach(m => Files.createFile(new File(dir, m).toPath))
   }
 
-  test("legacy marker indexes read, append and search, and their markers vacuum past the grace") {
-    val sig = tmp("legacy_sig")
-    Dedup.incremental(docs(1L -> "the quick brown fox jumps over the lazy dog " * 3), sig, name = "a")
-    toLegacy(sig, "_live.1000.a", "_slot.0")
-    assert(SigIndex.contains(spark, sig, "a") && SigIndex.liveNames(spark, sig) == Seq("a"))
-    // the probe finds the legacy batch: a duplicate drops, fresh text lands
-    assert(Dedup.incremental(docs(2L -> "the quick brown fox jumps over the lazy dog " * 3),
-      sig, name = "b").count() == 0)
-    assert(Dedup.incremental(docs(3L -> "a wholly different text about tides and moons " * 3),
-      sig, name = "c").count() == 1)
-    SigIndex.compact(spark, sig, graceMs = 60 * 60 * 1000L)
-    assert(names(sig).contains("_live.1000.a"), "markers went inside the grace window")
-    SigIndex.compact(spark, sig, graceMs = 0L)
-    onlyCommitsAndData(sig, "batch-")
-    Seq("a", "b", "c").foreach(n => assert(SigIndex.contains(spark, sig, n)))
-
-    val ivf = builtIvf()
-    val q = emb.where(col("vec_id") < 10)
-    val before = resultSet(IvfIndex.search(spark, ivf, q, 3, nProbe = 3))
-    toLegacy(ivf, "_gen.1000.0", "gen-0/_live.1000.b0", "gen-0/_live.1001.b1",
-      "gen-0/_slot.1")
-    assert(IvfIndex.currentGen(spark, ivf) == Some(0L))
-    assert(resultSet(IvfIndex.search(spark, ivf, q, 3, nProbe = 3)) == before)
-    assert(!IvfIndex.append(emb.where(col("vec_id") % 2 === 0), ivf, "b0"))
-    val more = emb.where(col("vec_id") < 10).select(col("vec_id") + 1000, col("embedding"))
-      .toDF("vec_id", "embedding")
-    assert(IvfIndex.append(more, ivf, "b2"))
-    assert(IvfIndex.read(spark, ivf).count() == 410)
-    IvfIndex.compact(spark, ivf, graceMs = 0L)
-    onlyCommitsAndData(ivf, "gen-")
-    assert(!new File(ivf, "gen-0").list().exists(n => markerNames.exists(n.startsWith)))
-    assert(IvfIndex.read(spark, ivf).count() == 410 && IvfIndex.contains(spark, ivf, "b1"))
-
-    val div = tmp("legacy_div")
-    Similarity.diversitySampleIncremental(emb.where(col("vec_id") % 2 === 0), div, cents, 4)
-    val st = names(div).find(_.startsWith("state-")).get
-    assert(new File(div, st).renameTo(new File(div, "state-old")))
-    toLegacy(div, "_state.1000.old")
-    val got = Similarity.diversitySampleIncremental(emb.where(col("vec_id") % 2 === 1), div,
-      cents, 4, graceMs = 0L).collect().map(_.toSeq).toSet
-    assert(got == Similarity.diversitySample(emb, cents, 4).collect().map(_.toSeq).toSet)
-    onlyCommitsAndData(div, "state-")
+  test("an index root in an earlier layout fails loud, naming the layout") {
+    def fails(read: => Any): Unit = {
+      val m = intercept[IllegalStateException](read).getMessage
+      assert(m.contains("the layout before") && m.contains("rebuild the index"), m)
+    }
+    def sig(): String = {
+      val dir = tmp("old_sig")
+      assert(SigIndex.append(sigs(1L -> 10L), dir, "a"))
+      dir
+    }
+    def div(): String = {
+      val dir = tmp("old_div")
+      Similarity.diversitySampleIncremental(emb.where(col("vec_id") < 40), dir, cents, 4)
+      dir
+    }
+    val s1 = sig(); commitsToRoot(s1); fails(SigIndex.contains(spark, s1, "a"))
+    val s2 = sig(); logToMarkers(s2, "_live.1000.a", "_slot.0"); fails(SigIndex.read(spark, s2))
+    val i1 = builtIvf(); commitsToRoot(i1); fails(IvfIndex.currentGen(spark, i1))
+    val i2 = builtIvf(); logToMarkers(i2, "_gen.1000.0"); fails(IvfIndex.read(spark, i2))
+    val d1 = div(); commitsToRoot(d1)
+    fails(Similarity.diversitySampleIncremental(emb, d1, cents, 4))
+    val d2 = div(); logToMarkers(d2, "_state.1000.old")
+    fails(Similarity.diversitySampleIncremental(emb, d2, cents, 4))
+    // nothing was published over the old layout
+    Seq(s1, s2, i1, i2, d1, d2).foreach(d => assert(!new File(d, MarkerLog.LogDir).exists(), d))
   }
 }

@@ -261,7 +261,9 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     val names = f.listStatus(new org.apache.hadoop.fs.Path(dir))
       .map(_.getPath.getName)
     assert(names.count(_.startsWith("state-")) == 1, names.mkString(","))
-    assert(names.count(_.startsWith("_commit.")) == 1, names.mkString(","))
+    val commits = f.listStatus(new org.apache.hadoop.fs.Path(dir, "_log"))
+      .map(_.getPath.getName)
+    assert(commits.count(_.startsWith("_commit.")) == 1, commits.mkString(","))
   }
 
   test("multi-probe lsh lifts recall over single-probe") {

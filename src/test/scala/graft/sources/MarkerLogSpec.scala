@@ -7,7 +7,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
-import MarkerLog.{IndexLog, Live, Retired, Seen, StateDir}
+import MarkerLog.{IndexLog, Live, Retired, StateDir}
 import graft.testkit.Faults
 
 /** Fault injection for [[MarkerLog.IndexLog]]: every file-system step of
@@ -50,6 +50,14 @@ class MarkerLogSpec extends AnyFunSuite {
 
   private def under(root: Path, s: MarkerLog.Step): Boolean =
     s.path.toUri.getPath.startsWith(root.toUri.getPath)
+
+  /** The commit log's own steps (stage, commit, unstage, retire) all
+    * touch a `_log/` directory, never the data directories beside it. */
+  private def assertLogSteps(steps: Seq[MarkerLog.Step]): Unit = {
+    val logSteps = steps.filter(s => Set("stage", "commit", "unstage", "retire")(s.op))
+    assert(logSteps.nonEmpty && logSteps.forall(_.path.getParent.getName == MarkerLog.LogDir),
+      logSteps)
+  }
 
   private def writeRows(p: Path, rows: Seq[Int]): Unit = {
     fs.mkdirs(p)
@@ -119,6 +127,7 @@ class MarkerLogSpec extends AnyFunSuite {
   test("append: a crash at any step leaves the old or the new live set; a retry lands once") {
     val steps = { val log = seeded(); stepsOf(log.root)(append(log, "c", Seq(3, 4))) }
     assert(steps.map(_.op) == Seq("write", "stage", "commit", "unstage"))
+    assertLogSteps(steps)
     for (k <- steps.indices) {
       val log = seeded()
       val before = view(log)
@@ -187,6 +196,7 @@ class MarkerLogSpec extends AnyFunSuite {
     val steps = { val log = grown(); stepsOf(log.root)(compact(log)) }
     assert(steps.map(_.op).take(4) == Seq("write", "stage", "commit", "unstage") &&
       steps.count(_.op == "retire") == 3 && steps.count(_.op == "sweep") == 3, steps.map(_.op))
+    assertLogSteps(steps)
     for (k <- steps.indices) {
       val log = grown()
       val before = view(log)
@@ -229,6 +239,21 @@ class MarkerLogSpec extends AnyFunSuite {
     assert(orphans(log).isEmpty && view(log) == Set(1))
   }
 
+  test("read: an index read lists only `_log/`, however many batches the root holds") {
+    def readAfter(batches: Int): Seq[String] = {
+      val log = logAt(freshRoot())
+      (0 until batches).foreach(i => assert(append(log, s"b$i", Seq(i))))
+      log.vacuum(0L) // retires the superseded commits; every batch stays live
+      val es = log.read()._1.entries
+      val logDir = new Path(log.root, MarkerLog.LogDir).toUri.getPath
+      assert(es.forall(_.getPath.getParent.toUri.getPath == logDir), es.map(_.getPath))
+      assert(log.state.live.length == batches && view(log) == (0 until batches).toSet)
+      es.map(_.getPath.getName)
+    }
+    assert(readAfter(1) == Seq("_commit.1"))
+    assert(readAfter(60) == Seq("_commit.60"))
+  }
+
   /** Flip the state to a fresh version directory holding `rows`. */
   private def flip(log: IndexLog, rows: Seq[Int]): Unit = {
     val dir = s"state-${MarkerLog.freshName()}"
@@ -248,6 +273,7 @@ class MarkerLogSpec extends AnyFunSuite {
     def seededFlip(): IndexLog = { val log = logAt(freshRoot()); flip(log, Seq(1)); log }
     val steps = { val log = seededFlip(); stepsOf(log.root)(flip(log, Seq(2))) }
     assert(steps.map(_.op) == Seq("write", "stage", "commit", "unstage"))
+    assertLogSteps(steps)
     for (k <- steps.indices) {
       val log = seededFlip()
       crashAt(log.root, k)(flip(log, Seq(2)))
@@ -276,43 +302,6 @@ class MarkerLogSpec extends AnyFunSuite {
     assert(value(log) == Some(Set(2)))
   }
 
-  test("legacy markers read until the first commit, which vacuums them past the grace window") {
-    val log = logAt(freshRoot())
-    // an index written before the commit log: stamped markers, a batch
-    // re-stamped by a retrain (its FIRST stamp is its time), a folded
-    // name, a slot claim and a newest-wins version
-    writeRows(batchPath(log, "a"), Seq(1))
-    writeRows(batchPath(log, "b"), Seq(2))
-    writeRows(new Path(log.root, "state-old"), Seq(7))
-    writeRows(new Path(log.root, "state-new"), Seq(8))
-    Seq("_live.100.a", "_live.300.b", "_live.200.b", "_seen.50.z", "_slot.4",
-        "_state.10.old", "_state.20.new").foreach(n => fs.create(new Path(log.root, n)).close())
-    val st = log.state
-    assert(st(Live) == Map("a" -> 100L, "b" -> 200L) && st(Seen) == Map("z" -> 50L))
-    assert(view(log) == Set(1, 2) && value(log) == Some(Set(8)) && landed(log, "z"))
-    // nothing is named by a commit yet, and nothing the markers name goes
-    log.vacuum(0L)
-    assert(view(log) == Set(1, 2) && value(log) == Some(Set(8)))
-    // the first commit carries the marker state forward
-    assert(append(log, "c", Seq(3)))
-    assert(log.state(Live) == Map("a" -> 100L, "b" -> 200L, "c" -> log.state(Live)("c")))
-    log.vacuum(60 * 60 * 1000L)
-    assert(fs.exists(new Path(log.root, "_live.100.a")), "markers went inside the grace window")
-    log.vacuum(0L)
-    assert(!fs.listStatus(log.root).map(_.getPath.getName).exists(n =>
-      n.startsWith("_live.") || n.startsWith("_seen.") || n.startsWith("_slot.") ||
-        n.startsWith("_state.")))
-    assert(view(log) == Set(1, 2, 3) && value(log) == Some(Set(8)) && landed(log, "z"))
-    assert(versions(log) == Seq("state-new"))
-  }
-
-  test("legacy versions: a millisecond tie breaks on the name, numerically") {
-    val log = logAt(freshRoot())
-    Seq(9, 10).foreach(g => writeRows(new Path(log.root, s"state-$g"), Seq(g)))
-    Seq("_state.100.9", "_state.100.10").foreach(n => fs.create(new Path(log.root, n)).close())
-    assert(log.state.only(StateDir).map(_._1) == Some("state-10") && value(log) == Some(Set(10)))
-  }
-
   /** Snapshot `log` as `name`, linking its live batches. */
   private def snapshot(log: IndexLog, name: String): Unit =
     log.snapshot(name) { (st, out) =>
@@ -331,6 +320,9 @@ class MarkerLogSpec extends AnyFunSuite {
     val steps = { val log = grown(); stepsOf(log.root)(snapshot(log, "s0")) }
     assert(steps.count(_.op == "link") == 2 && steps.count(_.op == "commit") == 1 &&
       steps.last.op == "publish", steps.map(_.op))
+    // the snapshot's one commit goes into its own `_log/`
+    assertLogSteps(steps)
+    assert(steps.find(_.op == "commit").exists(_.path.getParent.getParent.getName == ".s0"))
     for (k <- steps.indices) {
       val log = grown()
       val before = view(log)

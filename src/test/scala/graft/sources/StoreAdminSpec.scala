@@ -269,37 +269,6 @@ class StoreAdminSpec extends AnyFunSuite with SharedSpark {
     assert(readAll(dir).count() == 6)
   }
 
-  test("pre-chain (legacy) manifest names still resolve; new publishes chain onto them") {
-    val dir = seed()
-    PointsStore.append(Points.withSig(spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(
-        Row("cpu", Map("user" -> "7"), T0, 77.0)), 1), schema)), dir)
-    assert(PointsStore.compact(spark, dir, graceMs = 0L).nonEmpty)
-    // replace each compacted day's commit with the manifests a store written
-    // before the commit log holds: a pre-chain `_manifest.<gen>` hiding every
-    // file, and a chained `_manifest.<gen>_p_<parent>` on top of it holding
-    // the commit's lists — the tip only if the chain is walked
-    val days = new java.io.File(dir).listFiles().filter(_.getName.startsWith("date="))
-    val converted = days.toSeq.flatMap { day =>
-      val names = day.list().toSeq
-      names.filter(_.startsWith("_commit.")).map { c =>
-        val body = Files.readAllBytes(new java.io.File(day, c).toPath)
-        val hideAll = names.filterNot(n => n.startsWith("_") || n.startsWith("."))
-          .map("-" + _).mkString("", "\n", "\n")
-        Files.write(new java.io.File(day, "_manifest.1000-a").toPath, hideAll.getBytes("UTF-8"))
-        Files.write(new java.io.File(day, "_manifest.2000-b_p_1000-a").toPath, body)
-        new java.io.File(day, c).delete()
-      }
-    }
-    assert(converted.nonEmpty && converted.forall(identity))
-    assert(readAll(dir).count() == 61, "legacy manifest names unreadable")
-    // a rewrite on top of the legacy layout chains onto the legacy tip
-    PointsStore.deleteSeries(spark, dir, """cpu{user="7"}""", graceMs = 0L)
-    assert(readAll(dir).count() == 60)
-    PointsStore.compact(spark, dir, graceMs = 0L)
-    assert(readAll(dir).count() == 60)
-  }
-
   test("non-selector input is rejected") {
     val dir = seed()
     intercept[IllegalArgumentException] {

@@ -158,17 +158,20 @@ class StoreCommitSpec extends AnyFunSuite with SharedSpark {
     assert(log.view().tip.map(_.n) == Some(1L) && log.read(log.view().tip.get.path) == Seq("-nothing"))
   }
 
-  test("legacy manifests read until the first commit, which vacuums them past the grace window") {
-    val dir = freshStore()
-    assert(PointsStore.compact(spark, dir, graceMs = 0L).nonEmpty)
-    val dayDir = new File(dir, "date=2024-01-01")
-    val commit = dayDir.list().filter(_.startsWith("_commit.")).head
-    assert(new File(dayDir, commit).renameTo(new File(dayDir, "_manifest.1000-a")))
-    assert(rows(dir).length == 9)
-    PointsStore.deleteSeries(spark, dir, """cpu{user="1"}""")
-    assert(rows(dir).length == 6 && dayDir.list().contains("_commit.1"))
-    PointsStore.compact(spark, dir, graceMs = 0L)
-    assert(!dayDir.list().exists(_.startsWith("_manifest.")))
-    assert(rows(dir).length == 6)
+  test("a dir holding manifests and no commit fails loud, naming the format") {
+    def plant(dir: String, d: String): Unit =
+      Files.write(new File(new File(dir, d), "_manifest.1000-a").toPath, Array.emptyByteArray)
+    def fails(op: => Any): Unit = {
+      val m = intercept[IllegalStateException](op).getMessage
+      assert(m.contains("_manifest.1000-a") && m.contains("before the commit log"), m)
+    }
+    val day = freshStore()
+    plant(day, "date=2024-01-01")
+    fails(rows(day))
+    fails(PointsStore.compact(spark, day))
+    val dictOnly = freshStore()
+    plant(dictOnly, "_dict")
+    fails(dict(dictOnly))
+    fails(PointsStore.compact(spark, dictOnly))
   }
 }

@@ -587,28 +587,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val versions = new java.io.File(stateDir, "__all__").listFiles()
       .map(_.getName).filter(_.startsWith("v=")).sorted.toList
     assert(versions == List(s"v=$t1", s"v=${t1 + 60000L}"))
-    // per-alert state remains readable through the compat loader
+    // one alert's rows of the batched table read back on their own
     assert(Rules.loadAlertState(spark, stateDir, "R0").count() == 1)
-  }
-
-  test("batched tick migrates legacy per-rule state (since survives)") {
-    val stateDir = Files.createTempDirectory("mig_state").toString
-    val t1 = 1704067200000L
-    val schema = StructType(Seq(
-      StructField("name", StringType), StructField("labels", MapType(StringType, StringType)),
-      StructField("t", LongType), StructField("value", DoubleType)))
-    def pts(t: Long) = graft.model.Points.withSig(spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row("load", Map("job" -> "x"), t, 50.0)), 1), schema))
-    val rule = Rules.AlertingRule("HighLoad", "load > 10", forMs = 120000L)
-    // legacy layout: a per-rule tick persisted pending state at t1
-    Rules.persistedAlertingTick(spark, pts(t1), rule, stateDir, t1).unpersist()
-    assert(new java.io.File(stateDir, "HighLoad").exists())
-    // batched tick at t1+2min picks up the legacy `since` and fires
-    val firing = Rules.batchedPersistedTick(spark, pts(t1 + 120000L), Seq(rule),
-      stateDir, t1 + 120000L)
-    val rows = firing.collect()
-    firing.unpersist()
-    assert(rows.length == 1 && rows.head.getAs[Long]("since") == t1)
   }
 
   test("recording backfill equals the per-step tick union (one plan, not a loop)") {

@@ -35,9 +35,17 @@ def changes(base, head):
                 pass
 
 
+def resolves(rev):
+    return subprocess.run(("git", "rev-parse", "--verify", "--quiet", rev + "^{commit}"),
+                          capture_output=True).returncode == 0
+
+
 def main(argv):
-    if len(argv) not in (2, 3):
+    if len(argv) not in (2, 3) or argv[1] in ("-h", "--help"):
         sys.exit(__doc__.strip())
+    bad = [rev for rev in argv[1:] if not resolves(rev)]
+    if bad:
+        sys.exit(f"not a revision: {' '.join(bad)}\n\n{__doc__.strip()}")
     per_dir = collections.defaultdict(lambda: [0, 0])
     for path, added, removed in changes(argv[1], argv[2] if len(argv) == 3 else None):
         if path.startswith(ROOTS):
